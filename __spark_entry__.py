@@ -1410,8 +1410,9 @@ def _q_s5_latest_publications(spark, sf_dir):
 def _run_stream_aggregation(spark, sf_dir, which: str):
     """Shared harness for the P7-P12 streaming twins: the analog corpus
     replayed as a chunked JSONL stream (2 micro-batches) through
-    parse+validate (P1+P5) into an update-mode aggregation with the keyed
-    parquet upsert sink (S6); returns the converged result table."""
+    parse+validate (P1+P5) into the stateless keyed upsert sink (S6),
+    which folds each micro-batch's batch-twin aggregate into the stored
+    table; returns the converged result table."""
     import tempfile
 
     from scipi_spark.streaming import (
@@ -1457,9 +1458,9 @@ def _run_stream_aggregation(spark, sf_dir, which: str):
 
 def _q_stream_keyword_count(spark, sf_dir):
     """P7 in true Structured Streaming: 2 micro-batches through
-    parse+validate into an update-mode aggregation with the keyed parquet
-    upsert sink; returns the converged table. Oracle = the batch P7
-    answer on cleaned keywords."""
+    parse+validate, each folded into the keyed parquet table by the
+    upsert sink (the second adds its counts to the first's); returns the
+    converged table. Oracle = the batch P7 answer on cleaned keywords."""
     return _run_stream_aggregation(spark, sf_dir, "keyword_count")
 
 
@@ -1467,9 +1468,9 @@ def _q_stream_yrwise_dist(spark, sf_dir):
     """P9's streaming twin (round-5 verdict #3): the same replay harness
     driving the yr-wise single/joint authorship distribution — a
     MULTI-COLUMN reduce (counts + derived percentages) through
-    ``run_aggregation_upsert``'s year-keyed upsert, where P7's map-shaped
-    pipeline was previously the only driver-gated use of the sink.
-    Converged state = the batch P9 answer, so the oracle is identical."""
+    ``run_aggregation_upsert``'s year-keyed fold, which sums the
+    single/joint counts per year and derives the percentages again.
+    Converged table = the batch P9 answer, so the oracle is identical."""
     return _run_stream_aggregation(spark, sf_dir, "yrwise_dist")
 
 

@@ -208,12 +208,20 @@ def fos_count(pubs: DataFrame) -> DataFrame:
 
 def yrwise_dist(pubs: DataFrame) -> DataFrame:
     n_auth = F.size("authors")
-    agg = pubs.groupBy("year").agg(
-        F.count(F.when(n_auth == 1, 1)).alias("single"),
-        F.count(F.when(n_auth > 1, 1)).alias("joint"),
+    return yrwise_derived(
+        pubs.groupBy("year").agg(
+            F.count(F.when(n_auth == 1, 1)).alias("single"),
+            F.count(F.when(n_auth > 1, 1)).alias("joint"),
+        )
     )
+
+
+def yrwise_derived(counts: DataFrame) -> DataFrame:
+    """P9's derived columns from its additive per-year ``single``/``joint``
+    counts (shared with the streaming fold, which sums the counts of two
+    partial tables and derives again)."""
     total = F.col("single") + F.col("joint")
-    return agg.select(
+    return counts.select(
         "year",
         "single",
         "joint",
@@ -229,14 +237,19 @@ def yrwise_dist(pubs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def authorship_pattern(pubs: DataFrame) -> DataFrame:
-    return (
-        pubs.groupBy(F.size("authors").cast("long").alias("author_unit"))
-        .agg(F.count(F.lit(1)).alias("no_articles"))
-        .select(
-            "author_unit",
-            "no_articles",
-            (F.col("author_unit") * F.col("no_articles")).alias("no_authors"),
+    return authorship_pattern_derived(
+        pubs.groupBy(F.size("authors").cast("long").alias("author_unit")).agg(
+            F.count(F.lit(1)).alias("no_articles")
         )
+    )
+
+
+def authorship_pattern_derived(counts: DataFrame) -> DataFrame:
+    """P10's ``no_authors`` from its additive per-unit ``no_articles``."""
+    return counts.select(
+        "author_unit",
+        "no_articles",
+        (F.col("author_unit") * F.col("no_articles")).alias("no_authors"),
     )
 
 
@@ -245,20 +258,24 @@ def authorship_pattern(pubs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def avg_authors_per_paper(pubs: DataFrame) -> DataFrame:
-    return (
-        pubs.groupBy("year")
-        .agg(
+    return avg_authors_derived(
+        pubs.groupBy("year").agg(
             F.count(F.lit(1)).alias("no_articles"),
             F.sum(F.size("authors")).alias("no_authors"),
         )
-        .select(
-            "year",
-            "no_articles",
-            "no_authors",
-            (F.col("no_authors") / F.col("no_articles"))
-            .cast("double")
-            .alias("avg_author_paper"),
-        )
+    )
+
+
+def avg_authors_derived(counts: DataFrame) -> DataFrame:
+    """P11's ``avg_author_paper`` from its additive per-year
+    ``no_articles``/``no_authors``."""
+    return counts.select(
+        "year",
+        "no_articles",
+        "no_authors",
+        (F.col("no_authors") / F.col("no_articles"))
+        .cast("double")
+        .alias("avg_author_paper"),
     )
 
 

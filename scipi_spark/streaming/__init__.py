@@ -1,5 +1,4 @@
 from scipi_spark.streaming.pipelines import (
-    parquet_upsert,
     read_publications_stream,
     run_aggregation_to_memory,
     run_aggregation_upsert,
@@ -12,7 +11,6 @@ from scipi_spark.streaming.pipelines import (
 
 __all__ = [
     "streaming_dedup",
-    "parquet_upsert",
     "read_publications_stream",
     "run_aggregation_to_memory",
     "run_aggregation_upsert",

@@ -3,11 +3,12 @@ plus windowed/watermarked extensions beyond the reference surface.
 
 Reference semantics (``ScipiStream.java:127-207``, SURVEY §1.4): unwindowed
 per-key running aggregates whose every update upserts into a keyed store —
-last-write-wins convergent totals, no watermarks, no event time. The Spark
-mapping is ``groupBy(...).agg(...)`` in **update** output mode with a
-``foreachBatch`` keyed upsert; the batch twins in
-``operators.analytics`` are the golden answers the stream must converge to
-(equivalence-tested in tests/test_streaming.py).
+convergent totals, no watermarks, no event time. The Spark mapping is a
+stateless ``foreachBatch`` query: each micro-batch runs the batch twin from
+``operators.analytics`` and folds it into the stored table by summing the
+additive base columns per key (all six tables are sums or counts), then
+deriving the ratio columns again. The batch twins are the golden answers
+the stream must converge to (equivalence-tested in tests/test_streaming.py).
 
 Kafka note: the source here is a file/JSONL stream (the test harness has no
 brokers); swapping ``readStream.text`` for
@@ -16,15 +17,16 @@ brokers); swapping ``readStream.text`` for
 validation, aggregation, and sinks are source-agnostic (S1/S2 in SURVEY
 §2.1).
 
-Scale: streaming state lives in the executor StateStore partitioned by the
-group key — the same hash partitioning as the batch aggregation; update
-mode emits only changed keys per micro-batch, so sink traffic is bounded
-by key churn, not stream volume.
+Scale: the running totals live only in the result table, which is bounded
+by its distinct keys (keywords, years, team sizes), so no query keeps a
+state store. Each fold reads that table once and writes it once; the
+micro-batch itself is aggregated map-side before its one shuffle.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,9 +35,8 @@ from pyspark.sql import functions as F
 from scipi_spark import ingest
 from scipi_spark.operators import analytics
 
-#: name -> batch-twin aggregation applicable to a streaming Publication DF.
-#: (yrwise/aap derived columns are computed post-aggregate and work
-#: identically in update mode.)
+#: name -> batch-twin aggregation: run on each micro-batch by the upsert
+#: sink, and as a streaming aggregation by the complete-mode memory sink
 STREAMING_AGGREGATIONS: dict[str, Callable[[DataFrame], DataFrame]] = {
     "keyword_count": analytics.keyword_count,
     "fos_count": analytics.fos_count,
@@ -54,6 +55,26 @@ AGGREGATION_KEYS: dict[str, list[str]] = {
     "avg_authors_per_paper": ["year"],
     "hyper_authorship": ["hyper_authorship_year"],
 }
+
+#: additive base columns of each table, which the fold sums per key, and
+#: the analytics finisher that derives the remaining columns from them
+AGGREGATION_BASE: dict[
+    str, tuple[list[str], Callable[[DataFrame], DataFrame] | None]
+] = {
+    "keyword_count": (["keyword_count"], None),
+    "fos_count": (["field_study_count"], None),
+    "yrwise_dist": (["single", "joint"], analytics.yrwise_derived),
+    "authorship_pattern": (["no_articles"], analytics.authorship_pattern_derived),
+    "avg_authors_per_paper": (
+        ["no_articles", "no_authors"],
+        analytics.avg_authors_derived,
+    ),
+    "hyper_authorship": (["hyper_authorship_count"], None),
+}
+
+#: file inside a result table holding the id of the last batch folded in;
+#: ``_``-prefixed, so Spark, pyarrow and ``*.parquet`` globs skip it
+BATCH_MARKER = "_committed_batch"
 
 
 def read_kafka_stream(
@@ -105,39 +126,63 @@ def read_publications_stream(
 # sinks
 # ---------------------------------------------------------------------------
 
-def parquet_upsert(
-    spark: SparkSession, batch_df: DataFrame, keys: list[str], path: str
-) -> None:
-    """Keyed last-write-wins upsert into a parquet table (the Cassandra-
-    upsert stand-in, S5/S6): existing rows whose key appears in the batch
-    are replaced; everything else is kept.
+def _table_siblings(path: str) -> tuple[str, str]:
+    """The staging and previous-version directories beside a result table."""
+    parent, name = os.path.split(path)
+    return (
+        os.path.join(parent, f"_{name}.staging"),
+        os.path.join(parent, f"_{name}.previous"),
+    )
 
-    NOT transactional: the merge is staged to a temp dir (so the final
-    write never reads the table it overwrites), but the final overwrite
-    is a second full write — a crash between the two writes, or a
-    concurrent reader mid-overwrite, can observe a partial table. The
-    single-writer foreachBatch loop this serves tolerates that (the next
-    micro-batch rewrites); anything needing real atomicity should sink to
-    a table format with MERGE (Delta/Iceberg) instead. The rewrite cost
-    is fine for the bounded result tables it serves (distinct keywords/
-    years/team sizes — not fact data)."""
-    import shutil
 
-    batch_df = batch_df.dropDuplicates(keys)
-    if os.path.exists(path):
-        current = spark.read.parquet(path)
-        merged = current.join(
-            batch_df.select(*keys), keys, "left_anti"
-        ).unionByName(batch_df)
-    else:
-        merged = batch_df
-    tmp = path.rstrip("/") + "._tmp"
+def _recover_table(path: str) -> None:
+    """Finish or undo a swap a crashed writer left half done: a table
+    caught between its two renames gets its previous version back, and
+    any leftover staging or previous directory is removed."""
+    staging, previous = _table_siblings(path)
+    if os.path.exists(previous):
+        if os.path.exists(path):
+            shutil.rmtree(previous)
+        else:
+            os.rename(previous, path)
+    shutil.rmtree(staging, ignore_errors=True)
+
+
+def _committed_batch(path: str) -> int:
+    """Id of the last batch folded into the table at ``path``, -1 if none."""
     try:
-        merged.write.mode("overwrite").parquet(tmp)
-        final = spark.read.parquet(tmp)
-        final.write.mode("overwrite").parquet(path)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        with open(os.path.join(path, BATCH_MARKER), encoding="utf-8") as fh:
+            return int(fh.read())
+    except FileNotFoundError:
+        return -1
+
+
+def _swap_in(staging: str, path: str) -> None:
+    """Replace the table at ``path`` with the complete one in ``staging``."""
+    _, previous = _table_siblings(path)
+    if os.path.exists(path):
+        os.rename(path, previous)
+    os.rename(staging, path)
+    shutil.rmtree(previous, ignore_errors=True)
+
+
+def _fold(
+    spark: SparkSession, which: str, batch_agg: DataFrame, path: str
+) -> DataFrame:
+    """The stored table plus one micro-batch's partial table: base columns
+    summed per key, derived columns computed again."""
+    if not os.path.exists(path):
+        return batch_agg
+    keys, (base, derive) = AGGREGATION_KEYS[which], AGGREGATION_BASE[which]
+    batch_base = batch_agg.select(*keys, *base)
+    merged = (
+        spark.read.schema(batch_base.schema)
+        .parquet(path)
+        .unionByName(batch_base)
+        .groupBy(*keys)
+        .agg(*[F.sum(c).alias(c) for c in base])
+    )
+    return derive(merged) if derive else merged
 
 
 def run_aggregation_upsert(
@@ -148,17 +193,42 @@ def run_aggregation_upsert(
     checkpoint_path: str,
     **agg_kwargs,
 ):
-    """P7-P12 streaming pipeline in update mode with the keyed upsert sink.
-    Returns the StreamingQuery (caller awaits/stops)."""
-    agg = STREAMING_AGGREGATIONS[which](pubs_stream, **agg_kwargs)
-    keys = AGGREGATION_KEYS[which]
+    """P7-P12 streaming pipeline with the keyed upsert sink (S6). Returns
+    the StreamingQuery (caller awaits/stops).
+
+    The query keeps no state store. Each micro-batch runs the batch twin
+    ``STREAMING_AGGREGATIONS[which]`` and folds it into the table at
+    ``out_path``, which holds the running totals: one Spark job reads the
+    table, merges the batch and writes the result as one parquet file into
+    a staging directory beside it. The staging directory gets a
+    ``_committed_batch`` marker with the batch id, and two renames swap it
+    in for the live table.
+
+    Replay contract (``foreachBatch`` is at-least-once): a batch whose id is
+    at or below the live table's marker is already folded in and does
+    nothing, so a batch replayed after a crash between the swap and the
+    checkpoint commit is counted once. A crash before the swap leaves only
+    a staging directory, and a crash between the two renames leaves the
+    previous table beside the staging one; the next fold restores the last
+    complete table and folds the replayed batch again. One query writes
+    each ``out_path``. A reader may find no table while the two renames run,
+    but it never sees a partial one."""
+    aggregate = STREAMING_AGGREGATIONS[which]
+    live = out_path.rstrip("/")
+    staging, _ = _table_siblings(live)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        parquet_upsert(spark, batch_df, keys, out_path)
+        _recover_table(live)
+        if batch_id <= _committed_batch(live):
+            return
+        batch_agg = aggregate(batch_df, **agg_kwargs)
+        _fold(spark, which, batch_agg, live).coalesce(1).write.parquet(staging)
+        with open(os.path.join(staging, BATCH_MARKER), "w", encoding="utf-8") as fh:
+            fh.write(f"{batch_id}\n")
+        _swap_in(staging, live)
 
     return (
-        agg.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_path)
+        pubs_stream.writeStream.option("checkpointLocation", checkpoint_path)
         .foreachBatch(sink)
         .start()
     )
@@ -200,8 +270,7 @@ def run_streaming_dedup_against_store(
     that sees the marker skips the fold, so the batch's signatures enter
     the store once. Residual window: a crash between the append and the
     marker write replays the append, duplicating that batch's rows in
-    the store (same class as parquet_upsert's documented non-atomicity)
-    — a :func:`scipi_spark.operators.dedup.write_signature_store`
+    the store — a :func:`scipi_spark.operators.dedup.write_signature_store`
     compaction repairs it; a MERGE-capable table format makes the fold
     exact. The batch's shingle/minhash/band state is computed ONCE
     (:func:`~scipi_spark.operators.dedup.batch_lsh_state`) and shared by

@@ -5,6 +5,7 @@ groupBy answers; windowed extensions match their batch twins."""
 from __future__ import annotations
 
 import json
+import os
 import random
 
 import pytest
@@ -14,7 +15,7 @@ from scipi_spark import ingest
 from scipi_spark.operators import analytics
 from scipi_spark.streaming import (
     STREAMING_AGGREGATIONS,
-    parquet_upsert,
+    pipelines,
     read_publications_stream,
     run_aggregation_to_memory,
     run_aggregation_upsert,
@@ -79,19 +80,118 @@ def test_stream_converges_to_batch(spark, fixture_dir, which, tmp_path):
     assert got == want
 
 
-def test_stream_upsert_sink_converges(spark, fixture_dir, tmp_path):
-    out = str(tmp_path / "kw_table")
-    ckpt = str(tmp_path / "ckpt")
-    stream = read_publications_stream(spark, fixture_dir, max_files_per_trigger=1)
-    q = run_aggregation_upsert(spark, stream, "keyword_count", out, ckpt)
+#: per-aggregation arguments: P12's default threshold of 100 authors
+#: would leave the fixture's table empty
+UPSERT_KWARGS = {"hyper_authorship": {"threshold": 2}}
+
+
+def _run_upsert(spark, src, which, out, ckpt):
+    stream = read_publications_stream(spark, src, max_files_per_trigger=1)
+    q = run_aggregation_upsert(
+        spark, stream, which, out, ckpt, **UPSERT_KWARGS.get(which, {})
+    )
     try:
         q.processAllAvailable()
+        return q.lastProgress
     finally:
         q.stop()
+
+
+def _batch_answer(spark, src, which):
+    pubs = _batch_pubs(spark, src)
+    return STREAMING_AGGREGATIONS[which](pubs, **UPSERT_KWARGS.get(which, {}))
+
+
+@pytest.mark.parametrize("which", list(STREAMING_AGGREGATIONS))
+def test_stream_upsert_sink_converges(spark, fixture_dir, tmp_path, which):
+    """Each of the fixture's 4 micro-batches after the first folds into an
+    existing table; the converged table is the batch answer, with the
+    batch twin's schema, and the query keeps no state store."""
+    out = str(tmp_path / "table")
+    progress = _run_upsert(spark, fixture_dir, which, out, str(tmp_path / "ckpt"))
+    assert progress["stateOperators"] == []
+    assert pipelines._committed_batch(out) == 3
+    got = spark.read.parquet(out)
+    want = _batch_answer(spark, fixture_dir, which)
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in want.schema
+    ]
+    assert len([n for n in os.listdir(out) if n.endswith(".parquet")]) == 1
+    rows = sorted(map(tuple, got.collect()))
+    assert rows and rows == sorted(map(tuple, want.collect()))
+
+
+FAULTS = ["after_staging_write", "between_renames", "after_swap"]
+
+
+@pytest.mark.parametrize("fault", FAULTS)
+def test_upsert_fold_exactly_once_across_crash(
+    spark, fixture_dir, tmp_path, monkeypatch, fault
+):
+    """Crash the third fold (batch 2, merging into the table of batches 0
+    and 1) at one point of its commit, then restart from the same
+    checkpoint, which replays batch 2:
+
+    - after_staging_write: the merged table is staged, the live table is
+      untouched, and the replay folds the batch again;
+    - between_renames: the live table was moved aside and the staged one
+      not yet moved in, so the replay first restores the previous table;
+    - after_swap: the table holds batch 2 but the checkpoint never
+      committed it, so the replay finds its id in the marker and skips.
+
+    Every count must come out exactly once, and no staging or previous
+    directory may outlive the next successful fold."""
+    which = "yrwise_dist"
+    out, ckpt = str(tmp_path / "table"), str(tmp_path / "ckpt")
+    staging, previous = pipelines._table_siblings(out)
+    calls = []
+
+    def crash():
+        raise RuntimeError("injected fault")
+
+    if fault == "between_renames":
+        rename = os.rename
+
+        def faulty_rename(src, dst):
+            if src == staging:
+                calls.append(src)
+                if len(calls) == 3:
+                    crash()
+            rename(src, dst)
+
+        monkeypatch.setattr(os, "rename", faulty_rename)
+    else:
+        swap_in = pipelines._swap_in
+
+        def faulty_swap_in(src, dst):
+            calls.append(src)
+            if len(calls) == 3 and fault == "after_staging_write":
+                crash()
+            swap_in(src, dst)
+            if len(calls) == 3 and fault == "after_swap":
+                crash()
+
+        monkeypatch.setattr(pipelines, "_swap_in", faulty_swap_in)
+
+    with pytest.raises(Exception, match="injected fault"):
+        _run_upsert(spark, fixture_dir, which, out, ckpt)
+    commits = {n for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit()}
+    assert commits == {"0", "1"}
+    if fault == "after_staging_write":
+        assert os.path.exists(staging) and pipelines._committed_batch(out) == 1
+    elif fault == "between_renames":
+        assert os.path.exists(staging) and os.path.exists(previous)
+        assert not os.path.exists(out)
+    else:
+        assert pipelines._committed_batch(out) == 2
+
+    _run_upsert(spark, fixture_dir, which, out, ckpt)
+    commits = {n for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit()}
+    assert commits == {"0", "1", "2", "3"}
+    assert pipelines._committed_batch(out) == 3
+    assert not os.path.exists(staging) and not os.path.exists(previous)
     got = sorted(map(tuple, spark.read.parquet(out).collect()))
-    want = sorted(
-        map(tuple, analytics.keyword_count(_batch_pubs(spark, fixture_dir)).collect())
-    )
+    want = sorted(map(tuple, _batch_answer(spark, fixture_dir, which).collect()))
     assert got == want
 
 
@@ -102,8 +202,8 @@ def test_checkpoint_restart_resumes_without_reprocessing(spark, tmp_path):
     resume at the next batch id — the commit log shows batch 0 committed
     before the restart and batch 1 only after, so the first file is never
     re-read — and (b) converge to the full-corpus batch answer, which
-    requires the aggregation state recovered from the state store (batch
-    0's counts) to flow into batch 1's updates."""
+    requires batch 1 to fold into the running totals of batch 0 that the
+    stored table holds (the query keeps no state store)."""
     import os
 
     recs = _fixture_records()
@@ -224,16 +324,6 @@ def test_watermark_finalizes_windows_once_and_drops_post_eviction_data(
         (("2024-01-01 00:00:00", "click"), 2),
         (("2024-01-01 05:00:00", "click"), 1),
     ], emitted
-
-
-def test_parquet_upsert_semantics(spark, tmp_path):
-    path = str(tmp_path / "t")
-    df1 = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v long")
-    parquet_upsert(spark, df1, ["k"], path)
-    df2 = spark.createDataFrame([("b", 9), ("c", 3)], "k string, v long")
-    parquet_upsert(spark, df2, ["k"], path)
-    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert got == {"a": 1, "b": 9, "c": 3}
 
 
 def test_stateful_user_stats_converges_to_batch(spark, tmp_path):
