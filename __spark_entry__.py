@@ -1327,7 +1327,7 @@ def _q_stream_graph_store_fold(spark, sf_dir):
     slice A of the corpus builds the bucketed edge store once, slice
     B's publications arrive as two real micro-batches; each extracts
     its edges, aggregates the portable-hashed mirrored partials, and
-    FOLDS into the store through a marker-guarded ``foreachBatch``
+    FOLDS into the store through a replay-safe ``foreachBatch``
     sink, publishing a per-batch graph summary. Edge weights fold as
     exact sums, so after both batches the merged store is bit-identical
     to a from-scratch build over the FULL corpus and the 5-superstep
@@ -4258,7 +4258,7 @@ def _q_stream_bm25_store_fold(spark, sf_dir):
     (dedup/ANN/ER/SCD2 streaming folds are already gated): the 80%
     corpus is indexed once, the remaining docs arrive as two real
     micro-batches (doc_id parity split), and each batch FOLDS into the
-    bucketed index through a marker-guarded ``foreachBatch`` sink, then
+    bucketed index through a replay-safe ``foreachBatch`` sink, then
     serves the fixed query against the just-published version. After
     both batches the index is bit-identical to a from-scratch build
     over ALL documents (stats recompute exactly — sum/count of longs),

@@ -357,6 +357,8 @@ def append_graph_store(
     build_key: str | None = None,
     keep: int = 1,
     retain_s: float = storectl.RETAIN_SECONDS,
+    *,
+    fold: tuple[str, int] | None = None,
 ) -> None:
     """Fold a NEW publication batch's edges into an existing graph
     store — the incremental shape every other persisted family here
@@ -382,7 +384,9 @@ def append_graph_store(
     The bucket count is inherited from the version marker (explicit
     mismatches raise); ``build_key`` defaults to the cloned version's
     own key. Atomicity via clone -> append -> publish under
-    ``append_lock`` with ``expect_base``, like every sibling store."""
+    ``append_lock`` with ``expect_base``, like every sibling store.
+    ``fold``: the streaming sink's ``(query_key, batch_id)`` stamp,
+    recorded in the published version (``storectl.publish``)."""
     rel = aggregate_undirected(edges) if mirrored is None else mirrored
     spark = rel.sparkSession
     root = path.rstrip("/")
@@ -413,6 +417,7 @@ def append_graph_store(
             retain_s=retain_s,
             expect_base=os.path.basename(cur),
             params=params,
+            fold=fold,
         )
     storectl.register_bucketed(
         spark, table, ver + "/edges", ["src"], ["src"], nb

@@ -1150,6 +1150,8 @@ def append_signature_store(
     batch_state: tuple[DataFrame, DataFrame, DataFrame] | None = None,
     keep: int = 1,
     retain_s: float = storectl.RETAIN_SECONDS,
+    *,
+    fold: tuple[str, int] | None = None,
 ) -> None:
     """Fold a new batch into an existing signature store: postings/sizes
     append to their parquet tables, band rows append to the bucketed
@@ -1167,8 +1169,9 @@ def append_signature_store(
     until the store is compacted with :func:`write_signature_store`.
     This is the LSM trade: cheap monotone appends daily, one compaction
     when a duplicate slips in or bloat warrants it. The streaming sink
-    (``run_streaming_dedup_against_store``) guards this path with a
-    per-batch fold marker so micro-batch replays skip the second append.
+    (``run_streaming_dedup_against_store``) passes ``fold``, the
+    ``(query_key, batch_id)`` stamp :func:`storectl.publish` records in
+    the same version, so a replayed micro-batch skips the second append.
 
     ``batch_state``: a precomputed :func:`batch_lsh_state` triple — pass
     it when the caller already probed with the same batch so the
@@ -1208,6 +1211,7 @@ def append_signature_store(
             retain_s=retain_s,
             expect_base=os.path.basename(cur),
             params=persist,
+            fold=fold,
         )
     storectl.register_bucketed(
         batch.sparkSession,
@@ -1240,12 +1244,12 @@ def compact_signature_store(
     store's hashed postings, not the corpus.
 
     The deduped postings are materialized (localCheckpoint) BEFORE the
-    overwrite so the write never reads the files it replaces. Fold
-    markers under ``<path>/_folded`` stay valid: compaction preserves
-    which batches are incorporated, it only removes row-level
-    duplication. The signature recipe is inherited from the store's
-    version marker (explicit mismatches raise) — recompacting under
-    different coefficients would orphan every probe."""
+    overwrite so the write never reads the files it replaces. The
+    streaming sinks' fold records carry over (``storectl.publish``):
+    compaction keeps which batches are incorporated, it only removes
+    row-level duplication. The signature recipe is inherited from the
+    store's version marker (explicit mismatches raise) — recompacting
+    under different coefficients would orphan every probe."""
     root = path.rstrip("/")
     k, num_perm, bands, n_buckets, persist = _resolve_sig_params(
         root, None, num_perm, bands, n_buckets

@@ -438,7 +438,8 @@ def _er_probe(
 
     Contract: batch record ids must be NEW (not already stored) — ids
     double as graph node ids, so a replayed id would alias two nodes;
-    the streaming sink guards replays with per-batch fold markers.
+    the streaming sink folds each micro-batch once (its batch id is
+    recorded in the version it publishes) and only probes a replay.
 
     ``strict``: raise (instead of warn) when the match-graph closure
     does not converge within its iteration budget. The FOLD path
@@ -643,6 +644,8 @@ def append_entity_store(
     n_buckets: int | None = None,
     keep: int = 1,
     retain_s: float = storectl.RETAIN_SECONDS,
+    *,
+    fold: tuple[str, int] | None = None,
 ) -> DataFrame:
     """Fold ``batch`` into an existing entity store: block rows append
     to the bucketed table (same bucket spec — the probe's shuffle-free
@@ -661,7 +664,9 @@ def append_entity_store(
     Append-only contract: batch record ids must be new (see
     :func:`_er_probe`). Atomicity and concurrency as in every store
     family: clone -> append/rewrite -> publish under ``append_lock``,
-    with ``expect_base`` backstopping a bypassed lock.
+    with ``expect_base`` backstopping a bypassed lock. ``fold``: the
+    streaming sink's ``(query_key, batch_id)`` stamp, recorded in the
+    published version (``storectl.publish``).
 
     Returns the folded full (rec_id, entity_id) assignment (the same
     DataFrame :func:`er_increment_from_store` would produce), so a
@@ -715,6 +720,7 @@ def append_entity_store(
             retain_s=retain_s,
             expect_base=os.path.basename(cur),
             params=persist,
+            fold=fold,
         )
     storectl.register_bucketed(
         spark, table, ver + "/blocks", ["blk"], ["blk"], params["n_buckets"]
@@ -732,13 +738,13 @@ def compact_entity_store(
     retain_s: float = storectl.RETAIN_SECONDS,
 ) -> None:
     """Rewrite the store's three artifacts with duplicate rows dropped —
-    the repair for a crash between an append and its fold marker (the
-    same residual window every LSM-style store family here documents;
-    ``dedup.compact_signature_store`` / ``similarity.compact_ann_store``
-    are the siblings). Probe CORRECTNESS survives duplicated block rows
-    without this (the candidate join dedups (brid, rid) pairs), so
-    compaction here is a space/probe-cost repair plus the id-universe
-    fix: a replayed id-append would double-count records in
+    the repair for a re-ingested record id (the LSM maintenance every
+    store family here carries; ``dedup.compact_signature_store`` /
+    ``similarity.compact_ann_store`` are the siblings). Probe
+    CORRECTNESS survives duplicated block rows without this (the
+    candidate join dedups (brid, rid) pairs), so compaction here is a
+    space/probe-cost repair plus the id-universe fix: a replayed
+    id-append would double-count records in
     :func:`entity_store_assignment` joins. One distinct per artifact,
     proportional to the store, never re-matching the corpus; the entity
     assignment itself is folded state and carries over unchanged.

@@ -576,6 +576,8 @@ def append_ann_store(
     n_buckets: int | None = None,
     keep: int = 1,
     retain_s: float = storectl.RETAIN_SECONDS,
+    *,
+    fold: tuple[str, int] | None = None,
 ) -> None:
     """Fold a new embedding batch into an existing ANN store: signature
     rows and vectors append under the SAME bucket specs, so the probe's
@@ -599,7 +601,9 @@ def append_ann_store(
     Atomicity: the append hardlink-clones the current version (metadata
     only — no data bytes copy), adds the batch's files to the clone, and
     publishes it as a NEW version; concurrent readers keep the old
-    complete version until the pointer flips."""
+    complete version until the pointer flips. ``fold``: the streaming
+    sink's ``(query_key, batch_id)`` stamp, recorded in that version
+    (``storectl.publish``)."""
     root = path.rstrip("/")
     stored = storectl.current_params(root)
     requested = {"bits": bits, "tables": tables, "dim": dim, "seed": seed,
@@ -650,6 +654,7 @@ def append_ann_store(
             retain_s=retain_s,
             expect_base=os.path.basename(cur),
             params=persist,
+            fold=fold,
         )
     if persist is not None:
         _ANN_PARAMS[table] = persist

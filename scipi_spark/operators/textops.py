@@ -826,6 +826,8 @@ def append_text_index_store(
     n_buckets: int | None = None,
     keep: int = 1,
     retain_s: float = storectl.RETAIN_SECONDS,
+    *,
+    fold: tuple[str, int] | None = None,
 ) -> None:
     """Fold a new document batch into an existing BM25 index — the
     last persisted store family to gain the incremental shape (dedup
@@ -848,7 +850,9 @@ def append_text_index_store(
     :func:`write_text_index_store` rebuild. The bucket count is
     inherited from the version marker (explicit mismatches raise);
     atomicity via clone -> append -> publish under ``append_lock`` with
-    ``expect_base``, like every sibling store."""
+    ``expect_base``, like every sibling store. ``fold``: the streaming
+    sink's ``(query_key, batch_id)`` stamp, recorded in the published
+    version (``storectl.publish``)."""
     spark = batch.sparkSession
     root = path.rstrip("/")
     toks = F.filter(
@@ -904,6 +908,7 @@ def append_text_index_store(
                 storectl.params_of(cur), {"n_buckets": n_buckets},
                 {"n_buckets": nb},
             ),
+            fold=fold,
         )
     storectl.register_bucketed(
         spark, table, ver + "/postings", ["term"], ["term"], nb

@@ -22,7 +22,6 @@ primitives because the only metadata a bucketed-parquet store needs is
         _STORE_COMPLETE          # json marker, written LAST before publish
         bands/ postings/ ...     # the family's artifacts
       v_000002_99f0e1d2/
-      _folded/                   # streaming fold markers (version-independent)
 
 Invariants:
   - a version directory is referenced by CURRENT only after every
@@ -37,6 +36,11 @@ Invariants:
     input identity), so a process reuses an on-disk store only when it
     was built with the same recipe — this replaces the process-local
     "already written" flag with cross-process on-disk truth.
+  - the marker also maps each streaming query that folds into the store
+    to the last batch id it folded (``folds``, stamped by
+    ``publish(fold=...)`` and read by :func:`folded_batch`), so a
+    micro-batch's rows and its "folded" record go live in the same
+    CURRENT flip; every publish carries the map forward.
 
 Concurrency contract: any number of READERS run against any number of
 writers; two concurrent REBUILDS both publish complete versions and the
@@ -276,6 +280,7 @@ def publish(
     retain_s: float = RETAIN_SECONDS,
     expect_base: str | None = None,
     params: dict | None = None,
+    fold: tuple[str, int] | None = None,
 ) -> str:
     """Atomically publish ``build_dir`` as the next version of the store
     at ``root`` and return the final version directory.
@@ -303,9 +308,14 @@ def publish(
     probes SELF-CONFIGURE from the store instead of trusting the caller
     to re-supply matching values (a mis-paired probe silently
     under-recalls; see :func:`resolve_params`). Append/compact paths
-    carry the live version's params forward via :func:`current_meta`."""
+    carry the live version's params forward via :func:`current_meta`.
+
+    ``fold``: ``(query_key, batch_id)``, set by a streaming sink whose
+    micro-batch this version folds in. The marker's ``folds`` map is the
+    live version's map with this entry added, so appends, compactions and
+    rebuilds all keep every query's record (:func:`folded_batch`)."""
+    cur, cur_meta = _current(root)
     if expect_base is not None:
-        cur = current_dir(root)
         if cur is None or os.path.basename(cur) != expect_base:
             shutil.rmtree(build_dir, ignore_errors=True)
             raise StoreConflictError(
@@ -316,6 +326,12 @@ def publish(
     marker: dict = {"build_key": build_key, "layout": 1}
     if params is not None:
         marker["params"] = params
+    folds = dict((cur_meta or {}).get("folds", {}))
+    if fold is not None:
+        query_key, batch_id = fold
+        folds[query_key] = batch_id
+    if folds:
+        marker["folds"] = folds
     with open(os.path.join(build_dir, MARKER), "w", encoding="utf-8") as fh:
         json.dump(marker, fh)
     existing = _versions(root)
@@ -352,6 +368,19 @@ def publish(
     return final
 
 
+def _current(root: str) -> tuple[str | None, dict | None]:
+    """The live complete version directory and its marker json, or
+    ``(None, None)`` when there is no CURRENT pointer or the pointed-at
+    dir or its marker is missing (crash window / GC race)."""
+    try:
+        with open(os.path.join(root, "CURRENT"), encoding="utf-8") as fh:
+            d = os.path.join(root, fh.read().strip())
+    except OSError:
+        return None, None
+    meta = meta_of(d)
+    return (None, None) if meta is None else (d, meta)
+
+
 def current_dir(root: str, build_key: str | None = None) -> str | None:
     """Resolve the live complete version directory, or None.
 
@@ -359,18 +388,8 @@ def current_dir(root: str, build_key: str | None = None) -> str | None:
     missing (crash window / GC race — treat as absent and rebuild), or
     ``build_key`` is given and does not match the marker (the on-disk
     store was built with a different recipe)."""
-    try:
-        with open(os.path.join(root, "CURRENT"), encoding="utf-8") as fh:
-            name = fh.read().strip()
-    except OSError:
-        return None
-    d = os.path.join(root, name)
-    try:
-        with open(os.path.join(d, MARKER), encoding="utf-8") as fh:
-            meta = json.load(fh)
-    except (OSError, ValueError):
-        return None
-    if build_key is not None and meta.get("build_key") != build_key:
+    d, meta = _current(root)
+    if d is None or build_key is not None and meta.get("build_key") != build_key:
         return None
     return d
 
@@ -394,14 +413,7 @@ def list_versions(root: str) -> list[str]:
 def current_meta(root: str) -> dict | None:
     """The live version's marker json, or None — used by append paths to
     carry the original build_key forward into the version they publish."""
-    d = current_dir(root)
-    if d is None:
-        return None
-    try:
-        with open(os.path.join(d, MARKER), encoding="utf-8") as fh:
-            return json.load(fh)
-    except (OSError, ValueError):
-        return None
+    return _current(root)[1]
 
 
 def current_params(root: str) -> dict | None:
@@ -409,6 +421,13 @@ def current_params(root: str) -> dict | None:
     or None for stores written before params were recorded."""
     meta = current_meta(root)
     return meta.get("params") if meta else None
+
+
+def folded_batch(root: str, query_key: str) -> int:
+    """Id of the last batch of streaming query ``query_key`` that the live
+    version holds (``publish(fold=(query_key, batch_id))``), or -1."""
+    meta = current_meta(root) or {}
+    return meta.get("folds", {}).get(query_key, -1)
 
 
 def meta_of(version_dir: str) -> dict | None:

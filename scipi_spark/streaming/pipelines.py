@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from scipi_spark import ingest
 from scipi_spark.operators import analytics
+from scipi_spark.sources import storectl
 
 #: name -> batch-twin aggregation: run on each micro-batch by the upsert
 #: sink, and as a streaming aggregation by the complete-mode memory sink
@@ -234,6 +235,55 @@ def run_aggregation_upsert(
     )
 
 
+def _start_store_fold(
+    stream: DataFrame,
+    store_path: str,
+    out_path: str,
+    checkpoint_path: str,
+    body: Callable[..., None],
+):
+    """Start the ``foreachBatch`` query of a store-backed sink and return
+    it (caller awaits/stops). ``foreachBatch``, not a stream-stream join,
+    because the corpus is a mutable external index: a stream-stream join
+    would buffer it in the state store without bound.
+
+    ``body(batch_df, stamp, emit)`` runs on each non-empty micro-batch,
+    locally checkpointed so its probe and its fold read it once. It
+    passes ``stamp`` as the ``fold`` argument of its store's ``append_*``
+    and hands its result to ``emit``, which overwrites
+    ``<out_path>/batch_id=N``, in the order its family needs.
+
+    Replay contract (``foreachBatch`` is at-least-once): ``stamp`` is
+    ``(checkpoint_path, batch_id)``, and ``storectl.publish`` records it
+    in the same ``CURRENT`` flip that makes the folded rows live. A batch
+    replayed after that flip finds its record
+    (``storectl.folded_batch``) and gets ``stamp=None``, so it only
+    probes; a batch replayed before it folds into the unchanged store.
+    Each query keeps its checkpoint path across restarts and no two
+    queries share one, so queries sharing a store each fold all their
+    own batches."""
+    root = store_path.rstrip("/")
+    out = out_path.rstrip("/")
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.head(1):
+            return
+        batch_df = batch_df.localCheckpoint(eager=True)
+        folded = storectl.folded_batch(root, checkpoint_path) >= batch_id
+
+        def emit(result: DataFrame) -> None:
+            result.write.mode("overwrite").parquet(f"{out}/batch_id={batch_id}")
+
+        body(batch_df, None if folded else (checkpoint_path, batch_id), emit)
+
+    return (
+        stream.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint_path)
+        .foreachBatch(sink)
+        .start()
+    )
+
+
 def run_streaming_dedup_against_store(
     stream: DataFrame,
     store_path: str,
@@ -251,38 +301,22 @@ def run_streaming_dedup_against_store(
     """Continuous near-dup detection against a persisted corpus: each
     micro-batch (1) probes the bucketed signature store for its near-dup
     pairs — batch-vs-corpus plus batch-vs-batch, corpus side
-    shuffle-free — (2) appends the pairs to the parquet sink, and (3)
+    shuffle-free — (2) writes the pairs to the parquet sink, and (3)
     folds its own signatures into the store, so every later batch sees
     it as corpus. This is the always-on production shape of dedup: the
     expensive corpus state is an external bucketed index maintained
-    incrementally, never recomputed.
-
-    ``foreachBatch`` rather than a stream-stream join BECAUSE the corpus
-    side is a mutable external index, not a stream: stream-stream joins
-    buffer both sides in the state store, which is exactly the
-    unbounded-state shape this design avoids.
-
-    Replay semantics (foreachBatch is at-least-once): the pair sink is
-    idempotent — each batch OVERWRITES its own ``batch_id=N`` partition
-    directory, so a replay rewrites identical rows instead of appending
-    duplicates. The store fold is guarded by a per-batch marker dir
-    (``<store>/_folded/batch_N``) written AFTER the append: a replay
-    that sees the marker skips the fold, so the batch's signatures enter
-    the store once. Residual window: a crash between the append and the
-    marker write replays the append, duplicating that batch's rows in
-    the store — a :func:`scipi_spark.operators.dedup.write_signature_store`
-    compaction repairs it; a MERGE-capable table format makes the fold
-    exact. The batch's shingle/minhash/band state is computed ONCE
+    incrementally, never recomputed. The batch's shingle/minhash/band
+    state is computed ONCE
     (:func:`~scipi_spark.operators.dedup.batch_lsh_state`) and shared by
-    the probe and the append. Returns the StreamingQuery (caller
-    awaits/stops)."""
+    the probe and the append. Replay contract: :func:`_start_store_fold`."""
     from scipi_spark.operators import dedup as dedup_ops
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        spark = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint(eager=True)  # probe + append reuse
+    recipe = dict(
+        table=table, id_col=id_col, text_col=text_col,
+        k=k, num_perm=num_perm, bands=bands,
+    )
+
+    def body(batch_df: DataFrame, stamp, emit) -> None:
         # recipe self-configures from the store marker (explicit
         # mismatches raise) so the batch state below is banded under
         # exactly the stored coefficients
@@ -292,44 +326,19 @@ def run_streaming_dedup_against_store(
         state = dedup_ops.batch_lsh_state(
             batch_df, id_col, text_col, bk, bnum_perm, bbands
         )
-        pairs = dedup_ops.minhash_lsh_increment_from_store(
-            spark,
-            store_path,
-            batch_df,
-            table=table,
-            id_col=id_col,
-            text_col=text_col,
-            k=k,
-            num_perm=num_perm,
-            bands=bands,
-            threshold=threshold,
-            batch_state=state,
-        )
-        pairs.write.mode("overwrite").parquet(
-            out_path.rstrip("/") + f"/batch_id={batch_id}"
-        )
-        marker = os.path.join(store_path, "_folded", f"batch_{batch_id}")
-        if not os.path.exists(marker):
-            dedup_ops.append_signature_store(
-                batch_df,
-                store_path,
-                table=table,
-                id_col=id_col,
-                text_col=text_col,
-                k=k,
-                num_perm=num_perm,
-                bands=bands,
-                n_buckets=n_buckets,
-                batch_state=state,
+        emit(
+            dedup_ops.minhash_lsh_increment_from_store(
+                batch_df.sparkSession, store_path, batch_df,
+                threshold=threshold, batch_state=state, **recipe,
             )
-            os.makedirs(marker, exist_ok=True)
+        )
+        if stamp:
+            dedup_ops.append_signature_store(
+                batch_df, store_path, n_buckets=n_buckets,
+                batch_state=state, fold=stamp, **recipe,
+            )
 
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(sink)
-        .start()
-    )
+    return _start_store_fold(stream, store_path, out_path, checkpoint_path, body)
 
 
 def run_streaming_ann_against_store(
@@ -355,15 +364,7 @@ def run_streaming_ann_against_store(
     sink, and (3) optionally folds its own vectors into the store so
     every later batch can retrieve it (``fold=True`` is the
     index-ingestion shape; ``fold=False`` is pure query serving).
-
-    Same ``foreachBatch`` rationale and replay semantics as
-    :func:`run_streaming_dedup_against_store`: the corpus is a mutable
-    external index (never stream-stream state), the hit sink overwrites
-    its own ``batch_id=N`` partition (idempotent), and the fold is
-    guarded by a per-batch marker dir written after the append — a crash
-    inside the residual window duplicates one batch's vectors until a
-    :func:`~scipi_spark.operators.similarity.compact_ann_store` repairs
-    it. Returns the StreamingQuery (caller awaits/stops).
+    Replay contract: :func:`_start_store_fold`.
 
     The hash recipe defaults to None and self-configures from the
     store's version marker (round-10: concrete defaults would raise
@@ -371,48 +372,19 @@ def run_streaming_ann_against_store(
     loudly through ``storectl.resolve_params``."""
     from scipi_spark.operators import similarity as sim_ops
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        batch_df = batch_df.localCheckpoint(eager=True)  # probe + fold reuse
-        hits = sim_ops.knn_from_store(
-            batch_df,
-            table=table,
-            k=k,
-            bits=bits,
-            tables=tables,
-            dim=dim,
-            seed=seed,
-            id_col=id_col,
-            vec_col=vec_col,
-            path=store_path,
-        )
-        hits.write.mode("overwrite").parquet(
-            out_path.rstrip("/") + f"/batch_id={batch_id}"
-        )
-        if fold:
-            marker = os.path.join(store_path, "_folded", f"batch_{batch_id}")
-            if not os.path.exists(marker):
-                sim_ops.append_ann_store(
-                    batch_df,
-                    store_path,
-                    table=table,
-                    id_col=id_col,
-                    vec_col=vec_col,
-                    bits=bits,
-                    tables=tables,
-                    dim=dim,
-                    seed=seed,
-                    n_buckets=n_buckets,
-                )
-                os.makedirs(marker, exist_ok=True)
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(sink)
-        .start()
+    recipe = dict(
+        table=table, id_col=id_col, vec_col=vec_col,
+        bits=bits, tables=tables, dim=dim, seed=seed,
     )
+
+    def body(batch_df: DataFrame, stamp, emit) -> None:
+        emit(sim_ops.knn_from_store(batch_df, k=k, path=store_path, **recipe))
+        if fold and stamp:
+            sim_ops.append_ann_store(
+                batch_df, store_path, n_buckets=n_buckets, fold=stamp, **recipe
+            )
+
+    return _start_store_fold(stream, store_path, out_path, checkpoint_path, body)
 
 
 def run_streaming_er_against_store(
@@ -438,58 +410,41 @@ def run_streaming_er_against_store(
     converged store assignment equals the one-shot closure over
     corpus + all batches (pytest- and gate-pinned).
 
-    Same ``foreachBatch`` rationale and replay semantics as
-    :func:`run_streaming_dedup_against_store`: the corpus is a mutable
-    external index, the assignment sink overwrites its own
-    ``batch_id=N`` partition (idempotent), and the fold is guarded by a
-    per-batch marker dir written after the append — batch ids double as
-    closure node ids, so an unguarded replay would alias nodes. The
-    matching recipe self-configures from the store's version marker;
-    explicit mismatches raise (``storectl.resolve_params``). Returns
-    the StreamingQuery (caller awaits/stops)."""
+    Replay contract: :func:`_start_store_fold`; batch ids double as
+    closure node ids, so a replayed batch only probes. The matching
+    recipe self-configures from the store's version marker; explicit
+    mismatches raise (``storectl.resolve_params``)."""
     from scipi_spark.operators import linkage as linkage_ops
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        spark = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint(eager=True)  # probe + fold reuse
-        kwargs = dict(
-            table=table,
-            id_col=id_col,
-            name_col=name_col,
-            threshold=threshold,
-            block_cap=block_cap,
-            two_keys=two_keys,
-            n_buckets=n_buckets,
-        )
-        marker = os.path.join(store_path, "_folded", f"batch_{batch_id}")
-        if not os.path.exists(marker):
+    kwargs = dict(
+        table=table,
+        id_col=id_col,
+        name_col=name_col,
+        threshold=threshold,
+        block_cap=block_cap,
+        two_keys=two_keys,
+        n_buckets=n_buckets,
+    )
+
+    def body(batch_df: DataFrame, stamp, emit) -> None:
+        if stamp:
             # fold + probe in one pass (append returns the folded
             # assignment, so the batch is blocked/scored exactly once)
             assignment = linkage_ops.append_entity_store(
-                batch_df, store_path, **kwargs
+                batch_df, store_path, fold=stamp, **kwargs
             )
-            os.makedirs(marker, exist_ok=True)
         else:
             # replay of an already-folded batch: probe only — a second
             # fold would alias the batch's node ids in the closure
             assignment = linkage_ops.er_increment_from_store(
-                spark, store_path, batch_df, **kwargs
+                batch_df.sparkSession, store_path, batch_df, **kwargs
             )
         batch_ids = batch_df.select(
             F.col(id_col).cast("long").alias("rec_id")
         )
-        assignment.join(batch_ids, "rec_id").write.mode("overwrite").parquet(
-            out_path.rstrip("/") + f"/batch_id={batch_id}"
-        )
+        emit(assignment.join(batch_ids, "rec_id"))
 
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(sink)
-        .start()
-    )
+    return _start_store_fold(stream, store_path, out_path, checkpoint_path, body)
 
 
 def run_streaming_text_index_fold(
@@ -513,23 +468,12 @@ def run_streaming_text_index_fold(
     to the parquet sink, so the sink's per-batch partitions show the
     ranking evolve as the corpus grows and the final batch's result
     equals a from-scratch index over everything ingested
-    (equivalence gate-pinned).
-
-    Same ``foreachBatch`` rationale and replay semantics as the sibling
-    sinks: the index is a mutable external store (never stream-stream
-    state), the result sink overwrites its own ``batch_id=N`` partition
-    (idempotent), and the fold is guarded by a per-batch marker dir —
-    a replayed batch would otherwise double its postings and inflate
-    its tf. Returns the StreamingQuery (caller awaits/stops)."""
+    (equivalence gate-pinned). Replay contract:
+    :func:`_start_store_fold`."""
     from scipi_spark.operators import textops as textops_ops
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        spark = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint(eager=True)
-        marker = os.path.join(store_path, "_folded", f"batch_{batch_id}")
-        if not os.path.exists(marker):
+    def body(batch_df: DataFrame, stamp, emit) -> None:
+        if stamp:
             textops_ops.append_text_index_store(
                 batch_df,
                 store_path,
@@ -537,27 +481,21 @@ def run_streaming_text_index_fold(
                 id_col=id_col,
                 text_col=text_col,
                 n_buckets=n_buckets,
+                fold=stamp,
             )
-            os.makedirs(marker, exist_ok=True)
-        hits = textops_ops.bm25_from_store(
-            spark,
-            store_path,
-            query_terms,
-            table=table,
-            topk=topk,
-            id_col=id_col,
-            n_buckets=n_buckets,
-        )
-        hits.write.mode("overwrite").parquet(
-            out_path.rstrip("/") + f"/batch_id={batch_id}"
+        emit(
+            textops_ops.bm25_from_store(
+                batch_df.sparkSession,
+                store_path,
+                query_terms,
+                table=table,
+                topk=topk,
+                id_col=id_col,
+                n_buckets=n_buckets,
+            )
         )
 
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(sink)
-        .start()
-    )
+    return _start_store_fold(stream, store_path, out_path, checkpoint_path, body)
 
 
 def run_streaming_graph_store_fold(
@@ -583,24 +521,14 @@ def run_streaming_graph_store_fold(
     re-scan-Cassandra-every-run batch shape
     (``ScipiBatchCommunity.java:122-133``) with an incremental one.
 
-    Same ``foreachBatch`` rationale and replay semantics as the
-    sibling sinks: the store is a mutable external index (never
-    stream-stream state), the summary sink overwrites its own
-    ``batch_id=N`` partition (idempotent), and the fold is guarded by
-    a per-batch marker dir — an unguarded replay would double the
-    batch's edge weights. ``hash_fn`` must match the base build's
-    vertex hash (default ``community.aggregate_undirected``'s
-    xxhash64). Returns the StreamingQuery (caller awaits/stops)."""
+    Replay contract: :func:`_start_store_fold`. ``hash_fn`` must match
+    the base build's vertex hash (default
+    ``community.aggregate_undirected``'s xxhash64)."""
     from scipi_spark.operators import community as community_ops
 
-    from scipi_spark.sources import storectl
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
+    def body(batch_df: DataFrame, stamp, emit) -> None:
         spark = batch_df.sparkSession
-        marker = os.path.join(store_path, "_folded", f"batch_{batch_id}")
-        if not os.path.exists(marker):
+        if stamp:
             edges = community_ops.extract_edges_hashed(
                 batch_df, **({"hash_fn": hash_fn} if hash_fn else {})
             )
@@ -611,8 +539,8 @@ def run_streaming_graph_store_fold(
                 table=table,
                 mirrored=rel,
                 n_buckets=n_buckets,
+                fold=stamp,
             )
-            os.makedirs(marker, exist_ok=True)
         else:
             # replay of an already-folded batch (possibly in a FRESH
             # session where the append never registered the table):
@@ -624,20 +552,14 @@ def run_streaming_graph_store_fold(
             storectl.register_bucketed(
                 spark, table, ver + "/edges", ["src"], ["src"], nb
             )
-        summary = community_ops.merge_delta_edges(spark.table(table)).agg(
-            F.count(F.lit(1)).cast("long").alias("n_pairs"),
-            F.sum("w_sum").alias("total_weight"),
-        )
-        summary.write.mode("overwrite").parquet(
-            out_path.rstrip("/") + f"/batch_id={batch_id}"
+        emit(
+            community_ops.merge_delta_edges(spark.table(table)).agg(
+                F.count(F.lit(1)).cast("long").alias("n_pairs"),
+                F.sum("w_sum").alias("total_weight"),
+            )
         )
 
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(sink)
-        .start()
-    )
+    return _start_store_fold(stream, store_path, out_path, checkpoint_path, body)
 
 
 def run_aggregation_to_memory(

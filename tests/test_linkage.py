@@ -300,8 +300,8 @@ def test_entity_store_probe_is_corpus_shuffle_free(spark, tmp_path):
 
 
 def test_compact_entity_store_repairs_replayed_append(spark, tmp_path):
-    """A crash between an append and its fold marker replays the
-    append: block rows and id rows land twice. Probe matching survives
+    """Re-appending a batch whose record ids the store already holds
+    lands its block rows and id rows twice. Probe matching survives
     (the candidate join dedups pairs) but the id universe double-counts.
     compact_entity_store drops the duplicates and the store's
     assignment + a follow-up probe are bit-identical to the clean
@@ -322,9 +322,8 @@ def test_compact_entity_store_repairs_replayed_append(spark, tmp_path):
         for r in linkage.entity_store_assignment(spark, root).collect()
     }
 
-    # simulate the crash-replayed append: clone the live version, append
-    # the SAME block/id rows again, publish (exactly what a replayed
-    # append_entity_store does before its marker lands)
+    # simulate the re-ingesting append: clone the live version, append
+    # the SAME block/id rows again, publish
     cur = storectl.current_dir(root)
     blocks = spark.read.parquet(cur + "/blocks").localCheckpoint(eager=True)
     ids = spark.read.parquet(cur + "/ids").localCheckpoint(eager=True)

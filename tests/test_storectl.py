@@ -592,3 +592,36 @@ def test_persistable_params_legacy_vs_authoritative():
     assert storectl.persistable_params(
         old, {"k": None, "bands": None}, res_old
     ) == {"k": 5}
+
+
+def test_fold_records_carry_forward(spark, tmp_path):
+    """``publish(fold=(query_key, batch_id))`` records a streaming query's
+    last folded batch in the version marker, and every later publish
+    keeps the record: an append without a stamp, a compaction and a
+    rebuild. Two queries' records coexist, each under its own key."""
+    from scipi_spark.operators import community
+
+    root = str(tmp_path / "graph")
+    rel = spark.createDataFrame(
+        [(1, 2, 1.0, 1.0), (2, 1, 1.0, 1.0)],
+        "src long, dst long, w_sum double, w_max double",
+    )
+    kw = {"table": "t_fold_carry", "mirrored": rel}
+    try:
+        community.write_graph_store(None, root, **kw)
+        assert storectl.folded_batch(root, "q1") == -1
+        community.append_graph_store(None, root, fold=("q1", 0), **kw)
+        assert storectl.current_meta(root)["folds"] == {"q1": 0}
+        community.append_graph_store(None, root, **kw)
+        assert storectl.current_meta(root)["folds"] == {"q1": 0}
+        community.append_graph_store(None, root, fold=("q2", 3), **kw)
+        community.append_graph_store(None, root, fold=("q1", 1), **kw)
+        assert storectl.current_meta(root)["folds"] == {"q1": 1, "q2": 3}
+        community.compact_graph_store(spark, root, table="t_fold_carry")
+        assert storectl.current_meta(root)["folds"] == {"q1": 1, "q2": 3}
+        community.write_graph_store(None, root, **kw)
+        assert storectl.folded_batch(root, "q1") == 1
+        assert storectl.folded_batch(root, "q2") == 3
+        assert storectl.folded_batch(root, "q3") == -1
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_fold_carry")

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from scipi_spark import ingest
 from scipi_spark.operators import analytics
+from scipi_spark.sources import storectl
 from scipi_spark.streaming import (
     STREAMING_AGGREGATIONS,
     pipelines,
@@ -463,12 +464,49 @@ def test_interval_join_stream_matches_batch(spark, tmp_path):
     assert got == batch
 
 
-def test_streaming_dedup_against_store_folds_batches(spark, tmp_path):
-    """Two-micro-batch replay of the store-backed streaming dedup: batch 1
-    pairs against the persisted corpus; batch 2 pairs against corpus AND
-    batch 1 (proving each batch's signatures were folded into the store);
-    the union of streamed pairs equals the one-shot batch increment over
-    batch1 ∪ batch2."""
+class _StoreCase:
+    """One store-backed streaming sink over a two-file parquet source (two
+    micro-batches): ``start(stream, out, ckpt)`` starts its query,
+    ``check(out)`` asserts the converged answer, and ``assert_unique(ver)``
+    asserts that the store version ``ver`` holds no duplicated id."""
+
+    def __init__(self, spark, store, src, start, check, assert_unique, tables):
+        self.spark, self.store, self.src = spark, store, src
+        self.start, self.check, self.assert_unique = start, check, assert_unique
+        self.tables = tables
+
+    def run(self, out, ckpt, src=None):
+        src = src or self.src
+        stream = (
+            self.spark.readStream.schema(self.spark.read.parquet(src).schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = self.start(stream, out, ckpt)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def drop_tables(self):
+        for t in self.tables:
+            self.spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def _write_batches(src, *batches):
+    for i, b in enumerate(batches):
+        b.coalesce(1).write.mode("append" if i else "error").parquet(src)
+
+
+def _assert_no_duplicate(df, cols):
+    assert df.count() == df.select(*cols).distinct().count()
+
+
+def _dedup_case(spark, tmp_path):
+    """Batch 1 pairs against the persisted corpus; batch 2 pairs against
+    corpus AND batch 1 (proving each batch's signatures were folded into
+    the store); the union of streamed pairs equals the one-shot batch
+    increment over batch1 ∪ batch2."""
     from scipi_spark.operators import dedup as dedup_ops
     from scipi_spark.streaming.pipelines import run_streaming_dedup_against_store
 
@@ -481,38 +519,26 @@ def test_streaming_dedup_against_store_folds_batches(spark, tmp_path):
     )
     corpus = docs.limit(20)
     base5 = docs.orderBy("doc_id").limit(5)
+    base_ids = [r["doc_id"] for r in base5.collect()]
     b1 = base5.select((F.col("doc_id") + 10_000).alias("doc_id"), "text")
     b2 = base5.select((F.col("doc_id") + 20_000).alias("doc_id"), "text")
-
     store = str(tmp_path / "sig_store")
-    out = str(tmp_path / "pairs")
-    ckpt = str(tmp_path / "ckpt")
     src = str(tmp_path / "stream_src")
     dedup_ops.write_signature_store(corpus, store, table="t_stream_store")
-    try:
-        b1.coalesce(1).write.parquet(src)
-        b2.coalesce(1).write.mode("append").parquet(src)
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = run_streaming_dedup_against_store(
+    _write_batches(src, b1, b2)
+
+    def start(stream, out, ckpt):
+        return run_streaming_dedup_against_store(
             stream, store, out, ckpt, table="t_stream_store", threshold=0.5
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
 
+    def check(out):
         got = spark.read.parquet(out)
         pairs = {(r["doc_a"], r["doc_b"]) for r in got.collect()}
         # exact copies: every planted id pairs with its source (corpus-b1,
         # corpus-b2) AND b1-b2 pairs exist only if batch1 was folded in
-        assert all((d, d + 10_000) in pairs for d in
-                   [r["doc_id"] for r in base5.collect()])
-        assert all((d + 10_000, d + 20_000) in pairs for d in
-                   [r["doc_id"] for r in base5.collect()])
+        assert all((d, d + 10_000) in pairs for d in base_ids)
+        assert all((d + 10_000, d + 20_000) in pairs for d in base_ids)
 
         oneshot = dedup_ops.minhash_lsh_increment(
             corpus, b1.unionByName(b2), threshold=0.5
@@ -520,13 +546,30 @@ def test_streaming_dedup_against_store_folds_batches(spark, tmp_path):
         want = {(r["doc_a"], r["doc_b"], r["jaccard"]) for r in oneshot.collect()}
         got3 = {(r["doc_a"], r["doc_b"], r["jaccard"]) for r in got.collect()}
         assert got3 == want
+
+    def assert_unique(ver):
+        _assert_no_duplicate(spark.read.parquet(ver + "/postings"), ["doc", "sh"])
+
+    case = _StoreCase(
+        spark, store, src, start, check, assert_unique, ["t_stream_store"]
+    )
+    case.base5, case.b1, case.b2, case.base_ids = base5, b1, b2, base_ids
+    return case
+
+
+def test_streaming_dedup_against_store_folds_batches(spark, tmp_path):
+    """Two-micro-batch replay of the store-backed streaming dedup (the
+    converged answer is :func:`_dedup_case`'s check)."""
+    case = _dedup_case(spark, tmp_path)
+    try:
+        case.run(str(tmp_path / "pairs"), str(tmp_path / "ckpt"))
+        case.check(str(tmp_path / "pairs"))
     finally:
-        spark.sql("DROP TABLE IF EXISTS t_stream_store")
+        case.drop_tables()
 
 
-def test_streaming_ann_against_store_folds_batches(spark, tmp_path):
-    """Two-micro-batch replay of the store-backed streaming ANN search:
-    batch 1 retrieves its planted originals from the persisted corpus;
+def _ann_case(spark, tmp_path):
+    """Batch 1 retrieves its planted originals from the persisted corpus;
     batch 2 retrieves the originals AND batch 1's folded copies (proving
     each batch's vectors entered the index); batch 1's hits cannot see
     batch 2 (it was not folded yet at that point)."""
@@ -545,32 +588,22 @@ def test_streaming_ann_against_store_folds_batches(spark, tmp_path):
     base_ids = [r["vec_id"] for r in base5.collect()]
 
     store = str(tmp_path / "ann_store")
-    out = str(tmp_path / "hits")
-    ckpt = str(tmp_path / "ckpt")
     src = str(tmp_path / "stream_src")
-    spark.sql("DROP TABLE IF EXISTS t_stream_ann")
-    spark.sql("DROP TABLE IF EXISTS t_stream_ann_vectors")
+    tables = ["t_stream_ann", "t_stream_ann_vectors"]
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
     sim_ops.write_ann_store(emb, store, table="t_stream_ann", bits=6, tables=8)
-    try:
-        b1.coalesce(1).write.parquet(src)
-        b2.coalesce(1).write.mode("append").parquet(src)
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = run_streaming_ann_against_store(
+    _write_batches(src, b1, b2)
+
+    def start(stream, out, ckpt):
+        return run_streaming_ann_against_store(
             stream, store, out, ckpt, table="t_stream_ann", k=5,
             bits=6, tables=8,
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
 
-        got = spark.read.parquet(out).collect()
+    def check(out):
         hits = {}
-        for r in got:
+        for r in spark.read.parquet(out).collect():
             hits.setdefault(r["query_id"], set()).add((r["vec_id"], r["cosine"]))
         for d in base_ids:
             # batch 1 sees its original (cosine 1.0), not batch 2
@@ -579,9 +612,22 @@ def test_streaming_ann_against_store_folds_batches(spark, tmp_path):
             # batch 2 sees the original AND batch 1's folded copy
             assert (d, 1.0) in hits[d + 20_000]
             assert (d + 10_000, 1.0) in hits[d + 20_000]
+
+    def assert_unique(ver):
+        _assert_no_duplicate(spark.read.parquet(ver + "/vectors"), ["vec_id"])
+
+    return _StoreCase(spark, store, src, start, check, assert_unique, tables)
+
+
+def test_streaming_ann_against_store_folds_batches(spark, tmp_path):
+    """Two-micro-batch replay of the store-backed streaming ANN search
+    (the converged answer is :func:`_ann_case`'s check)."""
+    case = _ann_case(spark, tmp_path)
+    try:
+        case.run(str(tmp_path / "hits"), str(tmp_path / "ckpt"))
+        case.check(str(tmp_path / "hits"))
     finally:
-        spark.sql("DROP TABLE IF EXISTS t_stream_ann")
-        spark.sql("DROP TABLE IF EXISTS t_stream_ann_vectors")
+        case.drop_tables()
 
 
 def test_stream_media_decode_matches_batch(spark, tmp_path):
@@ -639,13 +685,12 @@ def test_stream_media_decode_matches_batch(spark, tmp_path):
     assert got == exp and len(got) == 2
 
 
-def test_streaming_er_against_store_folds_and_merges(spark, tmp_path):
-    """Two-micro-batch replay of the store-backed streaming ER: batch 1
-    carries a record that BRIDGES two stored entities (the fold must
-    merge them), batch 2 matches the merged entity and must inherit the
-    post-merge id — proving batch 1 was folded before batch 2 resolved.
-    The converged store assignment equals the one-shot closure over
-    corpus + both batches."""
+def _er_case(spark, tmp_path):
+    """Batch 1 carries a record that BRIDGES two stored entities (the fold
+    must merge them), batch 2 matches the merged entity and must inherit
+    the post-merge id — proving batch 1 was folded before batch 2
+    resolved. The converged store assignment equals the one-shot closure
+    over corpus + both batches."""
     from scipi_spark.operators import linkage
     from scipi_spark.streaming.pipelines import run_streaming_er_against_store
 
@@ -667,29 +712,19 @@ def test_streaming_er_against_store_folds_and_merges(spark, tmp_path):
         [(200, "bb p q u")], "rec_id long, name string"
     )
     store = str(tmp_path / "er_store")
-    out = str(tmp_path / "assign")
-    ckpt = str(tmp_path / "ckpt")
     src = str(tmp_path / "stream_src")
     spark.sql("DROP TABLE IF EXISTS t_er_stream")
     linkage.write_entity_store(
         corpus, store, table="t_er_stream", threshold=0.5, two_keys=1
     )
-    try:
-        b1.coalesce(1).write.parquet(src)
-        b2.coalesce(1).write.mode("append").parquet(src)
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = run_streaming_er_against_store(
+    _write_batches(src, b1, b2)
+
+    def start(stream, out, ckpt):
+        return run_streaming_er_against_store(
             stream, store, out, ckpt, table="t_er_stream"
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
 
+    def check(out):
         combined = corpus.unionByName(b1).unionByName(b2)
         want = {
             r["rec_id"]: r["entity_id"]
@@ -715,22 +750,35 @@ def test_streaming_er_against_store_folds_and_merges(spark, tmp_path):
             for r in spark.read.parquet(out).collect()
         }
         assert sink == {100: 1, 101: 101, 200: 1}
+
+    def assert_unique(ver):
+        _assert_no_duplicate(spark.read.parquet(ver + "/ids"), ["rec_id"])
+
+    return _StoreCase(
+        spark, store, src, start, check, assert_unique, ["t_er_stream"]
+    )
+
+
+def test_streaming_er_against_store_folds_and_merges(spark, tmp_path):
+    """Two-micro-batch replay of the store-backed streaming ER (the
+    converged answer is :func:`_er_case`'s check)."""
+    case = _er_case(spark, tmp_path)
+    try:
+        case.run(str(tmp_path / "assign"), str(tmp_path / "ckpt"))
+        case.check(str(tmp_path / "assign"))
     finally:
-        spark.sql("DROP TABLE IF EXISTS t_er_stream")
+        case.drop_tables()
 
 
-def test_streaming_text_index_fold_converges_and_guards_replay(
-    spark, tmp_path
-):
-    """Two-micro-batch replay of the streaming BM25 index fold: each
-    batch's documents become searchable for the NEXT batch's query (the
-    per-batch sink partitions show the ranking evolve), the converged
-    index scores bit-identical to a from-scratch build over everything,
-    and a simulated replay (marker present) does not double-fold."""
-    import os
+BM25_QUERY = ["join", "hash", "scan"]
 
+
+def _bm25_case(spark, tmp_path):
+    """Each batch's documents become searchable for the NEXT batch's query
+    (the per-batch sink partitions show the ranking evolve), and the
+    converged index scores bit-identical to a from-scratch build over
+    everything."""
     from scipi_spark.operators import textops
-    from scipi_spark.sources import storectl
     from scipi_spark.streaming.pipelines import run_streaming_text_index_fold
 
     docs = (
@@ -742,51 +790,208 @@ def test_streaming_text_index_fold_converges_and_guards_replay(
     )
     corpus = docs.limit(20)
     rest = docs.exceptAll(corpus)
-    b1 = rest.filter(F.col("doc_id") % 2 == 0)
-    b2 = rest.filter(F.col("doc_id") % 2 == 1)
-    q = ["join", "hash", "scan"]
     store = str(tmp_path / "idx")
     src = str(tmp_path / "src")
-    spark.sql("DROP TABLE IF EXISTS t_bm25_stream")
+    tables = ["t_bm25_stream", "t_bm25_scratch"]
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
     textops.write_text_index_store(corpus, store, table="t_bm25_stream")
-    b1.coalesce(1).write.parquet(src)
-    b2.coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema(corpus.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    _write_batches(
+        src,
+        rest.filter(F.col("doc_id") % 2 == 0),
+        rest.filter(F.col("doc_id") % 2 == 1),
     )
-    sq = run_streaming_text_index_fold(
-        stream, store, str(tmp_path / "out"), str(tmp_path / "ckpt"), q,
-        table="t_bm25_stream", topk=50,
-    )
-    try:
-        sq.processAllAvailable()
-    finally:
-        sq.stop()
 
-    folded = sorted(
-        map(tuple, textops.bm25_from_store(
-            spark, store, q, table="t_bm25_stream", topk=50
-        ).collect())
+    def start(stream, out, ckpt):
+        return run_streaming_text_index_fold(
+            stream, store, out, ckpt, BM25_QUERY,
+            table="t_bm25_stream", topk=50,
+        )
+
+    def check(out):
+        folded = sorted(
+            map(tuple, textops.bm25_from_store(
+                spark, store, BM25_QUERY, table="t_bm25_stream", topk=50
+            ).collect())
+        )
+        scratch_root = str(tmp_path / "scratch")
+        textops.write_text_index_store(
+            docs, scratch_root, table="t_bm25_scratch"
+        )
+        want = sorted(
+            map(tuple, textops.bm25_from_store(
+                spark, scratch_root, BM25_QUERY, table="t_bm25_scratch",
+                topk=50,
+            ).collect())
+        )
+        assert folded == want and folded
+
+    def assert_unique(ver):
+        _assert_no_duplicate(spark.read.parquet(ver + "/doclen"), ["doc"])
+
+    return _StoreCase(spark, store, src, start, check, assert_unique, tables)
+
+
+def test_streaming_text_index_fold_converges_and_guards_replay(
+    spark, tmp_path
+):
+    """Two-micro-batch replay of the streaming BM25 index fold (the
+    converged answer is :func:`_bm25_case`'s check); the store records
+    both batches of the query as folded. Replay after a crash is
+    covered by :func:`test_store_fold_exactly_once_across_crash`."""
+    case = _bm25_case(spark, tmp_path)
+    ckpt = str(tmp_path / "ckpt")
+    try:
+        case.run(str(tmp_path / "out"), ckpt)
+        case.check(str(tmp_path / "out"))
+        assert storectl.folded_batch(case.store, ckpt) == 1
+    finally:
+        case.drop_tables()
+
+
+def _graph_case(spark, tmp_path):
+    """Publications folded as edge deltas: the merged store equals the
+    mirrored relation of a one-shot build over corpus + both batches, and
+    the last batch's summary counts that relation's pairs and weight."""
+    from scipi_spark.operators import community
+    from scipi_spark.streaming.pipelines import run_streaming_graph_store_fold
+
+    recs = _fixture_records()
+
+    def pubs(part):
+        return ingest.ingest_oag(
+            spark.createDataFrame([(json.dumps(r),) for r in part], "value string")
+        )
+
+    def mirrored(df):
+        return community.aggregate_undirected_hashed(
+            community.extract_edges_hashed(df)
+        )
+
+    corpus, b1, b2 = pubs(recs[:30]), pubs(recs[30:45]), pubs(recs[45:])
+    want = mirrored(corpus.unionByName(b1).unionByName(b2)).collect()
+    store = str(tmp_path / "graph")
+    src = str(tmp_path / "src")
+    spark.sql("DROP TABLE IF EXISTS t_graph_stream")
+    community.write_graph_store(
+        None, store, table="t_graph_stream", mirrored=mirrored(corpus)
     )
-    spark.sql("DROP TABLE IF EXISTS t_bm25_scratch")
-    scratch_root = str(tmp_path / "scratch")
-    textops.write_text_index_store(docs, scratch_root, table="t_bm25_scratch")
-    want = sorted(
-        map(tuple, textops.bm25_from_store(
-            spark, scratch_root, q, table="t_bm25_scratch", topk=50
-        ).collect())
+    _write_batches(src, b1, b2)
+
+    def start(stream, out, ckpt):
+        return run_streaming_graph_store_fold(
+            stream, store, out, ckpt, table="t_graph_stream"
+        )
+
+    def merged(ver):
+        return community.merge_delta_edges(spark.read.parquet(ver + "/edges"))
+
+    def check(out):
+        ver = storectl.current_dir(store)
+        assert sorted(map(tuple, merged(ver).collect())) == sorted(
+            map(tuple, want)
+        )
+        last = spark.read.parquet(out).filter("batch_id = 1").collect()
+        assert [(r["n_pairs"], r["total_weight"]) for r in last] == [
+            (len(want), sum(r["w_sum"] for r in want))
+        ]
+
+    def assert_unique(ver):
+        got = merged(ver).agg(F.sum("w_sum")).collect()[0][0]
+        assert got == sum(r["w_sum"] for r in want)
+
+    return _StoreCase(
+        spark, store, src, start, check, assert_unique, ["t_graph_stream"]
     )
-    assert folded == want and folded
-    # both fold markers landed; the index took exactly 2 appends
-    assert sorted(os.listdir(os.path.join(store, "_folded"))) == [
-        "batch_0", "batch_1",
-    ]
-    # replay guard: re-running the sink body for an already-folded batch
-    # must not change the index (marker short-circuits the append)
-    ver_before = storectl.current_dir(store)
-    # simulate: the sink checks the marker before appending — verified
-    # by the version pointer staying put across a no-op re-probe
-    textops.bm25_from_store(spark, store, q, table="t_bm25_stream", topk=5)
-    assert storectl.current_dir(store) == ver_before
+
+
+STORE_CASES = {
+    "dedup": _dedup_case,
+    "ann": _ann_case,
+    "er": _er_case,
+    "bm25": _bm25_case,
+    "graph": _graph_case,
+}
+
+
+@pytest.mark.parametrize(
+    "family,fault",
+    [(f, "after_publish") for f in STORE_CASES] + [("dedup", "before_publish")],
+)
+def test_store_fold_exactly_once_across_crash(
+    spark, tmp_path, monkeypatch, family, fault
+):
+    """Crash the fold of batch 1 (the second micro-batch) at its store
+    publish, then restart from the same checkpoint, which replays batch 1:
+
+    - after_publish: the folded version is live but the checkpoint never
+      committed the batch, so the replay finds its stamp and only probes;
+    - before_publish: the store still holds batch 0 only, so the replay
+      folds the batch.
+
+    Either way the converged answer is the family's, the store holds
+    every id once, fsck is clean and the store records batch 1 as the
+    query's last fold."""
+    case = STORE_CASES[family](spark, tmp_path)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    publish, calls = storectl.publish, []
+
+    def faulty_publish(*args, **kwargs):
+        calls.append(kwargs.get("fold"))
+        if len(calls) == 2 and fault == "before_publish":
+            raise RuntimeError("injected fault")
+        ver = publish(*args, **kwargs)
+        if len(calls) == 2 and fault == "after_publish":
+            raise RuntimeError("injected fault")
+        return ver
+
+    monkeypatch.setattr(storectl, "publish", faulty_publish)
+    try:
+        with pytest.raises(Exception, match="injected fault"):
+            case.run(out, ckpt)
+        commits = {
+            n for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit()
+        }
+        assert commits == {"0"}
+
+        case.run(out, ckpt)
+        case.check(out)
+        case.assert_unique(storectl.current_dir(case.store))
+        assert storectl.fsck(case.store)["issues"] == []
+        assert storectl.folded_batch(case.store, ckpt) == 1
+    finally:
+        case.drop_tables()
+
+
+def test_store_fold_two_queries_share_one_store(spark, tmp_path):
+    """Two queries with their own checkpoints fold one batch each into
+    the same signature store, one after the other: both batches enter the
+    store, so a later probe pairs with both, and the store records each
+    query's fold under its own checkpoint."""
+    from scipi_spark.operators import dedup as dedup_ops
+
+    case = _dedup_case(spark, tmp_path)
+    ckpt_a, ckpt_b = str(tmp_path / "ckpt_a"), str(tmp_path / "ckpt_b")
+    try:
+        _write_batches(str(tmp_path / "src_a"), case.b1)
+        _write_batches(str(tmp_path / "src_b"), case.b2)
+        case.run(str(tmp_path / "out_a"), ckpt_a, src=str(tmp_path / "src_a"))
+        case.run(str(tmp_path / "out_b"), ckpt_b, src=str(tmp_path / "src_b"))
+
+        probe = case.base5.select(
+            (F.col("doc_id") + 30_000).alias("doc_id"), "text"
+        )
+        pairs = {
+            (r["doc_a"], r["doc_b"])
+            for r in dedup_ops.minhash_lsh_increment_from_store(
+                spark, case.store, probe, table="t_stream_store",
+                threshold=0.5,
+            ).collect()
+        }
+        for d in case.base_ids:
+            assert (d + 10_000, d + 30_000) in pairs
+            assert (d + 20_000, d + 30_000) in pairs
+        assert storectl.folded_batch(case.store, ckpt_a) == 0
+        assert storectl.folded_batch(case.store, ckpt_b) == 0
+    finally:
+        case.drop_tables()
