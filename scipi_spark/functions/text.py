@@ -7,8 +7,18 @@ Reference semantics (``ScipiStream.java:218-257``):
 - ``validateTopics``: per-element validateStr; drop null/empty or >30-char
   results; dedup.
 
-Implemented as pure Column expressions — they stay inside whole-stage
-codegen (no Python round-trip), so the 100 TB ingest path is JVM-only.
+Implemented as pure Column expressions, the one implementation the ingest
+path (``ingest.validate_publications_with_reasons``) runs. They are not
+all compiled: the array cleans' lambdas run through ``transform`` and
+``filter``, which Spark evaluates interpreted (``CodegenFallback``), one
+regex call per element, and a projection holding them falls out of
+whole-stage codegen. This is still the path wired, because it never
+leaves the JVM. A Python kernel ships every record across Arrow and
+starts Python workers in each micro-batch, and on a small streaming
+batch that start-up is most of the batch's cost. The reference, too,
+validates with plain JVM mappers inside the stream job
+(``ScipiStream.java:465-756``).
+
 ``*_py`` twins are the executable spec used by property tests; both sides
 pin ``\\s`` to the Java-regex ASCII class ``[ \\t\\n\\x0b\\f\\r]`` so the
 JVM and Python agree on unicode inputs.
@@ -20,12 +30,23 @@ import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _WS = " \t\n\x0b\f\r"  # Java regex \s (ASCII-only)
 _STRIP_RE = r"[^a-zA-Z0-9\s]"
-_TRIM_RE = r"^\s+|\s+$"
+_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
 MAX_TOPIC_LEN = 30
+
+
+def _clean(c: Column) -> Column:
+    """The validateStr clean without its empty→null step: "" marks a
+    value that cleans to nothing.
+
+    The strip leaves only ASCII, so lowercasing is an A-Z → a-z
+    ``translate``. ``lower`` gives the same answer, but its first call in
+    a JVM took 1.3-1.6 s (Spark 4.1, 4 vCPU; ``upper`` alike, later calls
+    0.1 s), and every query's first micro-batch waited for it."""
+    stripped = F.btrim(F.regexp_replace(c, _STRIP_RE, ""), F.lit(_WS))
+    return F.translate(stripped, _UPPER, _UPPER.lower())
 
 
 def validate_str(col: Column | str) -> Column:
@@ -37,27 +58,34 @@ def validate_str(col: Column | str) -> Column:
     runs ~45x per record on the ingest path (6 scalar fields + 3 arrays;
     measured ~25% off p1_p5 validation wall at sf0.1)."""
     c = F.col(col) if isinstance(col, str) else col
-    cleaned = F.lower(F.btrim(F.regexp_replace(c, _STRIP_RE, ""), F.lit(_WS)))
-    return F.nullif(cleaned, F.lit(""))
+    return F.nullif(_clean(c), F.lit(""))
 
 
-def validate_topics(col: Column | str, max_len: int = MAX_TOPIC_LEN) -> Column:
-    """P4: clean every element, drop null/empty/too-long, dedup.
+def validate_topics(
+    col: Column | str, max_len: int | None = MAX_TOPIC_LEN
+) -> Column:
+    """P4: clean every element, drop null/empty/too-long, dedup keeping
+    the first occurrence. ``max_len=None`` drops no element for length.
 
     NULL input stays NULL (reference treats a missing set as missing, not
-    empty)."""
+    empty). The element clean runs once: ``transform`` applies the raw
+    clean and ``filter`` drops the "" it leaves for an empty result (a
+    NULL element stays NULL, and ``NULL != ''`` drops it too). Writing
+    ``validate_str`` inside the lambda instead would run the regex twice
+    per element, because ``nullif`` expands to its operand twice."""
     c = F.col(col) if isinstance(col, str) else col
-    cleaned = F.transform(c, lambda x: validate_str(x))
-    kept = F.filter(cleaned, lambda x: x.isNotNull() & (F.length(x) <= max_len))
-    return F.array_distinct(kept)
+
+    def keep(y: Column) -> Column:
+        kept = y != ""
+        return kept if max_len is None else kept & (F.length(y) <= max_len)
+
+    return F.array_distinct(F.filter(F.transform(c, _clean), keep))
 
 
 def clean_authors(col: Column | str) -> Column:
     """Author-set cleaning (``ScipiStream.java:573-597``): per-element
     validateStr, drop nulls, dedup — unlike topics there is NO length cap."""
-    c = F.col(col) if isinstance(col, str) else col
-    cleaned = F.transform(c, lambda x: validate_str(x))
-    return F.array_distinct(F.filter(cleaned, lambda x: x.isNotNull()))
+    return validate_topics(col, max_len=None)
 
 
 # ---------------------------------------------------------------------------
@@ -72,148 +100,19 @@ def validate_str_py(s: str | None) -> str | None:
     return cleaned or None
 
 
-# ---------------------------------------------------------------------------
-# Arrow-vectorized validation kernels (r12 optimization)
-#
-# The pure-Column versions above are kept as the JVM spec (and for any
-# caller that must stay expression-only), but the ingest hot path uses
-# these pandas_udf twins: profiling the p1_p5 ingest entry showed the
-# validation cleaning dominating (validate_topics 67 task-s, validate_str
-# 21, clean_authors 18 at sf0.1) because each per-element regex runs
-# inside an *interpreted* higher-order function (~12-24us/call), while
-# the JSON parse everyone assumed was the cost is 2.4 task-s. One
-# Arrow batch transfer plus a memoized Python `re` kernel over UNIQUE
-# values is ~4.5x faster end-to-end (task 102.9 -> 23.0 measured on the
-# full entry) and byte-identical: the Python kernel IS the
-# hypothesis-tested executable spec (`validate_str_py`). Guide §4.2
-# (vectorize the Python boundary) applied in reverse: here the batch
-# kernel beats the JVM expression because the JVM path can't memoize and
-# pays interpreted-HOF overhead per element.
-# ---------------------------------------------------------------------------
-
-_STRIP_PAT = re.compile(rf"[^a-zA-Z0-9{_WS}]")
-_MISS = object()
-
-
-def _clean_value(s, _sub=_STRIP_PAT.sub):
-    """The scalar clean (== validate_str_py body, precompiled)."""
-    c = _sub("", s).strip(_WS).lower()
-    return c if c else None
-
-
-def _clean_scalar_batch(s):
-    """Vectorized validate_str over a pandas Series, memoized on unique
-    values (lang is one distinct value per corpus; venues/publishers are
-    heavy-tailed)."""
-    memo = {}
-
-    def f(v):
-        r = memo.get(v, _MISS)
-        if r is _MISS:
-            r = _clean_value(v)
-            memo[v] = r
-        return r
-
-    return s.map(f, na_action="ignore")
-
-
-def _clean_array_batch(s, max_len):
-    """Vectorized validate_topics (max_len=30) / clean_authors
-    (max_len=None) over a Series of string-arrays: per-element memoized
-    clean, drop null/empty (and too-long when capped) results, dedup
-    keeping first occurrence — exactly transform+filter+array_distinct."""
-    import pandas as pd
-
-    memo = {}
-    res = []
-    for lst in s:
-        if lst is None:
-            res.append(None)
-            continue
-        out = []
-        seen = set()
-        for x in lst:
-            if x is None:
-                continue
-            c = memo.get(x, _MISS)
-            if c is _MISS:
-                c = _clean_value(x)
-                memo[x] = c
-            if c is None or (max_len is not None and len(c) > max_len):
-                continue
-            if c not in seen:
-                seen.add(c)
-                out.append(c)
-        res.append(out)
-    return pd.Series(res, dtype=object)
-
-
-def _topics_batch(s):
-    return _clean_array_batch(s, MAX_TOPIC_LEN)
-
-
-def _authors_batch(s):
-    return _clean_array_batch(s, None)
-
-
-def _as_col(col):
-    return F.col(col) if isinstance(col, str) else col
-
-
-# The kernels are pure functions, but they are registered
-# ``asNondeterministic`` on purpose: a deterministic Python UDF lets
-# PushDownPredicates substitute the validation filter's references
-# through the cleaned projection, which re-materializes ALL NINE cleans
-# (plus nine single-field ``from_json`` re-parses of the raw document)
-# in a second ArrowEvalPython node below the filter — every surviving
-# row then cleans and parses twice. Measured plan: 10 from_json + 2
-# ArrowEvalPython without the flag, 1 + 1 with it. Correctness is
-# unaffected (same inputs → same outputs); the flag only pins WHERE the
-# optimizer may evaluate them.
-
-#: lazily-built UDF objects, one per kernel (r13, r12 advice: building
-#: them at import time made importing this module require pandas+pyarrow,
-#: contradicting the promise that the pure-Column API stays usable
-#: without the Arrow stack — ``F.pandas_udf`` checks pandas/pyarrow
-#: versions at decoration time). Built on first arrow_* call and cached;
-#: DataType objects, not DDL strings, so no SparkSession is needed.
-_ARROW_UDFS: dict[str, object] = {}
-
-
-def _arrow_udf(name, kernel, rt):
-    u = _ARROW_UDFS.get(name)
-    if u is None:
-        u = F.pandas_udf(kernel, rt).asNondeterministic()
-        _ARROW_UDFS[name] = u
-    return u
-
-
-def arrow_validate_str(col: Column | str) -> Column:
-    """P3 via the Arrow kernel — same results as ``validate_str``."""
-    return _arrow_udf("str", _clean_scalar_batch, T.StringType())(_as_col(col))
-
-
-def arrow_validate_topics(col: Column | str) -> Column:
-    """P4 via the Arrow kernel — same results as ``validate_topics``."""
-    return _arrow_udf("topics", _topics_batch, T.ArrayType(T.StringType()))(
-        _as_col(col)
-    )
-
-
-def arrow_clean_authors(col: Column | str) -> Column:
-    """Author cleaning via the Arrow kernel — same as ``clean_authors``."""
-    return _arrow_udf("authors", _authors_batch, T.ArrayType(T.StringType()))(
-        _as_col(col)
-    )
-
-
-def validate_topics_py(items: list[str] | None, max_len: int = MAX_TOPIC_LEN):
+def validate_topics_py(
+    items: list[str] | None, max_len: int | None = MAX_TOPIC_LEN
+):
+    """Spec of ``validate_topics``; ``max_len=None`` (no length cap) is
+    the spec of ``clean_authors``."""
     if items is None:
         return None
     out: list[str] = []
     for s in items:
         c = validate_str_py(s)
-        if c is not None and len(c) <= max_len and c not in out:
+        if c is None or (max_len is not None and len(c) > max_len):
+            continue
+        if c not in out:
             out.append(c)
     return out
 

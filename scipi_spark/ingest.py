@@ -17,9 +17,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scipi_spark.functions.text import (
-    arrow_clean_authors,
-    arrow_validate_str,
-    arrow_validate_topics,
+    clean_authors,
+    validate_str,
+    validate_topics,
 )
 from scipi_spark.schemas import DBLP_RAW_SCHEMA, OAG_RAW_SCHEMA
 
@@ -101,28 +101,30 @@ def validate_publications_with_reasons(parsed: DataFrame) -> DataFrame:
     quarantine sink instead of silently dropping them, so ingest loss is
     auditable.
 
-    The cleans run through the Arrow-vectorized kernels
-    (``functions/text.py``): profiled at sf0.1 the pure-Column versions
-    spend their time in per-element regex inside *interpreted*
-    higher-order functions (validate_topics 67 task-s, validate_str 21,
-    clean_authors 18 vs 2.4 for the JSON parse); one Arrow transfer plus
-    a unique-value-memoized Python kernel is ~4.5x faster end-to-end and
-    byte-identical (the kernel is the hypothesis-tested spec). The nine
-    udf calls fuse into ONE ArrowEvalPython node, which is also a
-    pushdown barrier: the reason CASE below can never be rewritten in
-    terms of the raw JSON column, so the document parses exactly once
-    (plan pinned by test_ingest_parses_json_exactly_once)."""
+    The cleans are the Column expressions of ``functions/text.py``, so
+    validation runs inside the JVM with no Python worker; the module
+    docstring there says why that is the wired path.
+
+    The result passes through ``inline(array(struct(...)))``, one row out
+    per row in. That generator is a barrier: no predicate is pushed
+    through it, so a Filter on ``reject_reason`` (``validate_publications``,
+    or a caller's reject audit) cannot be rewritten into the cleans by
+    PushDownPredicates, with OptimizeJsonExprs then pruning each
+    substituted ``from_json`` to its own schema. Without it the plain
+    validator parsed each document 16 times and the reject audit 31;
+    with it the document parses once (plan pinned by
+    test_ingest_parses_json_exactly_once)."""
     df = parsed.select(
-        arrow_validate_str("doi").alias("doi"),
-        arrow_validate_str("title").alias("title"),
-        arrow_validate_str("publisher").alias("publisher"),
-        arrow_validate_str("venue").alias("venue"),
-        arrow_validate_str("lang").alias("lang"),
-        arrow_validate_topics("keywords").alias("keywords"),
+        validate_str("doi").alias("doi"),
+        validate_str("title").alias("title"),
+        validate_str("publisher").alias("publisher"),
+        validate_str("venue").alias("venue"),
+        validate_str("lang").alias("lang"),
+        validate_topics("keywords").alias("keywords"),
         F.col("year").alias("year"),
-        arrow_validate_str("year").alias("_year_clean"),
-        arrow_clean_authors("authors").alias("authors"),
-        arrow_validate_topics("fos").alias("fos"),
+        validate_str("year").alias("_year_clean"),
+        clean_authors("authors").alias("authors"),
+        validate_topics("fos").alias("fos"),
         F.col("dataset"),
     )
 
@@ -148,7 +150,8 @@ def validate_publications_with_reasons(parsed: DataFrame) -> DataFrame:
         .when(fails(F.length("_year_clean") == 4), "year")
         .when(fails(F.coalesce(F.size("authors"), F.lit(0)) > 0), "authors")
     )
-    return df.select("*", reason.alias("reject_reason")).drop("_year_clean")
+    checked = df.select("*", reason.alias("reject_reason")).drop("_year_clean")
+    return checked.select(F.inline(F.array(F.struct(*checked.columns))))
 
 
 def ingest_oag(raw: DataFrame, json_col: str = "value") -> DataFrame:

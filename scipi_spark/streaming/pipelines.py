@@ -78,6 +78,16 @@ AGGREGATION_BASE: dict[
 BATCH_MARKER = "_committed_batch"
 
 
+def _ingest_for(source: str) -> Callable[[DataFrame], DataFrame]:
+    """The ingest path of a stream source. An unknown name raises
+    ``ValueError`` here, before any stream is built."""
+    if source == "oag":
+        return ingest.ingest_oag
+    if source == "dblp":
+        return ingest.ingest_dblp
+    raise ValueError(f"unknown source {source!r}")
+
+
 def read_kafka_stream(
     spark: SparkSession,
     brokers: str,
@@ -89,6 +99,7 @@ def read_kafka_stream(
     stream. Identical pipeline to the file shim from the value column on;
     requires the spark-sql-kafka connector package on the classpath (not
     present in the test container, which is why tests use the file shim)."""
+    ingest_source = _ingest_for(source)
     raw = (
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", brokers)
@@ -97,9 +108,7 @@ def read_kafka_stream(
         .load()
         .selectExpr("CAST(value AS STRING) AS value")
     )
-    if source == "oag":
-        return ingest.ingest_oag(raw)
-    return ingest.ingest_dblp(raw)
+    return ingest_source(raw)
 
 
 def read_publications_stream(
@@ -112,15 +121,12 @@ def read_publications_stream(
 
     ``max_files_per_trigger=1`` replays one file per micro-batch, so a
     directory of chunked fixtures simulates arrival order."""
+    ingest_source = _ingest_for(source)
     raw = (
         spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
         .text(path)
     )
-    if source == "oag":
-        return ingest.ingest_oag(raw)
-    if source == "dblp":
-        return ingest.ingest_dblp(raw)
-    raise ValueError(f"unknown source {source!r}")
+    return ingest_source(raw)
 
 
 # ---------------------------------------------------------------------------

@@ -37,15 +37,12 @@ def test_stable_repr_rejects_address_reprs():
 
 def test_fingerprint_reaches_cross_module_code():
     """p1_p5_ingest_oag never names functions/text.py, but reaches the
-    validation kernels through ingest.validate_publications — the
-    reachable source set must include them (the round-3 staleness gap).
-    Since the r12 Arrow vectorization the executed kernel is the
-    pandas_udf-wrapped ``_clean_scalar_batch``/``_clean_value`` (hidden
-    behind a module-level UDF object — the v5 ``_unwrap_udf`` hole)."""
+    validation cleans through ingest.validate_publications — the
+    reachable source set must include them (the round-3 staleness gap)."""
     src = gfp.reachable_sources(QUERIES["p1_p5_ingest_oag"])
-    assert "def _clean_scalar_batch" in src
-    assert "def _clean_value" in src
-    assert "def _clean_array_batch" in src
+    assert "def validate_str" in src
+    assert "def validate_topics" in src
+    assert "def clean_authors" in src
     assert "_poisoned_oag_raw" in src  # entry-module helper closure
 
 
@@ -197,19 +194,19 @@ def test_unwrap_udf_requires_a_pyspark_udf():
     branch) silently drop out of the fingerprint."""
     import functools
 
-    from scipi_spark.functions.text import _clean_value
+    from scipi_spark.functions.text import validate_str_py
 
-    part = functools.partial(_clean_value, 3)
-    assert part.func is _clean_value  # the v5 trap: traceable .func
+    part = functools.partial(validate_str_py, 3)
+    assert part.func is validate_str_py  # the v5 trap: traceable .func
     assert gfp._unwrap_udf(part) is None
 
     class FakeUDF:  # the shape pyspark's _wrapped()/UDF objects expose
-        func = staticmethod(_clean_value)
+        func = staticmethod(validate_str_py)
         evalType = 200
         returnType = "string"
         deterministic = False
 
-    assert gfp._unwrap_udf(FakeUDF()) is _clean_value
+    assert gfp._unwrap_udf(FakeUDF()) is validate_str_py
 
 
 def test_udf_flags_change_fingerprint():
@@ -217,11 +214,11 @@ def test_udf_flags_change_fingerprint():
     are built in module-level statements outside any reachable function
     source — removing ``asNondeterministic()`` or changing a returnType
     must invalidate archived stamps, not just kernel edits."""
-    from scipi_spark.functions.text import _clean_value
+    from scipi_spark.functions.text import validate_str_py
 
     def make(det):
         class FakeUDF:
-            func = staticmethod(_clean_value)
+            func = staticmethod(validate_str_py)
             evalType = 200
             returnType = "string"
             deterministic = det
@@ -235,7 +232,7 @@ def test_udf_flags_change_fingerprint():
         return _FP_TEST_UDF
 
     src_nondet = gfp.reachable_sources(probe)
-    assert "def _clean_value" in src_nondet  # kernel still reached (v5)
+    assert "def validate_str_py" in src_nondet  # kernel still reached (v5)
     _FP_TEST_UDF = make(True)
     src_det = gfp.reachable_sources(probe)
     del _FP_TEST_UDF

@@ -10,13 +10,17 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from pyspark.sql import functions as F
+
 from scipi_spark import ingest
 from scipi_spark.functions.text import (
+    clean_authors,
+    validate_str,
     validate_str_py,
+    validate_topics,
     validate_topics_py,
 )
-from pyspark.sql import functions as F
-from scipi_spark.functions.text import clean_authors, validate_str, validate_topics
+from scipi_spark.streaming.pipelines import read_publications_stream
 
 TEXTISH = st.text(
     alphabet=st.characters(codec="utf-8", exclude_characters="\x00"), max_size=40
@@ -45,6 +49,26 @@ def test_validate_topics_matches_spec(spark, arrays):
     got = [r[0] for r in df.select(validate_topics("a")).collect()]
     want = [validate_topics_py(a) for a in arrays]
     # row order is preserved for a parallelized local collection
+    assert got == want
+
+
+@settings(max_examples=20, deadline=None)
+@given(
+    st.lists(
+        st.one_of(
+            st.none(),
+            st.lists(st.one_of(st.none(), TEXTISH, st.just("z" * 45)), max_size=6),
+        ),
+        min_size=1,
+        max_size=20,
+    )
+)
+def test_clean_authors_matches_spec(spark, arrays):
+    """clean_authors is validate_topics with no length cap; its spec is
+    validate_topics_py(items, max_len=None)."""
+    df = spark.createDataFrame([(a,) for a in arrays], "a array<string>")
+    got = [r[0] for r in df.select(clean_authors("a")).collect()]
+    want = [validate_topics_py(a, max_len=None) for a in arrays]
     assert got == want
 
 
@@ -162,55 +186,103 @@ def test_reject_reasons_first_failing_rule(spark):
     assert kept == {d for d, why in by_doi.items() if why is None}
 
 
-def test_ingest_parses_json_exactly_once(spark):
-    """Plan-shape pin for the r12 Arrow validation path: without a
-    barrier between the 7-rule filter and the cleaned projection,
-    PushDownPredicates rewrites the filter in terms of the raw json
-    column and OptimizeJsonExprs prunes each substituted from_json to a
-    different single-field schema — 31 from_json nodes in the executed
-    plan (each a full document re-parse per row). The Arrow kernels are
-    that barrier for free (a predicate over Python-UDF outputs cannot be
-    pushed through the ArrowEvalPython node that computes them): exactly
-    ONE from_json survives, the cleaning runs once per row, and the
-    Python boundary is Arrow-batched, never row-pickling."""
-    lines = [json.dumps(r) for r in OAG_FIXTURE]
-    raw = spark.createDataFrame([(l,) for l in lines], "value string")
-    out = ingest.ingest_oag(raw)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("from_json") == 1, plan
-    assert "ArrowEvalPython" in plan, plan
-    assert "BatchEvalPython" not in plan, plan
+def _stream_batch_plan(spark, tmp_path, lines):
+    """Executed plan of the micro-batch of a read_publications_stream over
+    one file of ``lines``, captured inside foreachBatch. The batch
+    DataFrame handed to the function is a scan of the already planned
+    RDD, so the plan is read from the query's current execution."""
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "part-0.jsonl").write_text("\n".join(lines) + "\n")
+    plans = []
 
+    def capture(_df, _batch_id):
+        (query,) = [s for s in spark.streams.active if s.name == "ingest_plan_pin"]
+        execution = query._jsq.streamingQuery().lastExecution()
+        plans.append(execution.executedPlan().toString())
 
-def test_arrow_kernels_match_column_spec(spark):
-    """The Arrow validation kernels must agree with the pure-Column
-    P3/P4 expressions (which are themselves hypothesis-pinned to the
-    _py spec) on nulls, empties, whitespace, length caps, dedup order
-    and null elements."""
-    from scipi_spark.functions.text import (
-        arrow_clean_authors,
-        arrow_validate_str,
-        arrow_validate_topics,
+    q = (
+        read_publications_stream(spark, str(src))
+        .writeStream.queryName("ingest_plan_pin")
+        .foreachBatch(capture)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
     )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert len(plans) == 1
+    return plans[0]
 
+
+@pytest.mark.parametrize(
+    "path", ["ingest_oag", "ingest_dblp", "stream", "reject_audit"]
+)
+def test_ingest_parses_json_exactly_once(spark, tmp_path, path):
+    """Plan-shape pin for the Column validation path. Without a barrier,
+    a Filter on ``reject_reason`` is rewritten by PushDownPredicates in
+    terms of the raw json column, and OptimizeJsonExprs prunes each
+    substituted from_json to its own single-field schema (16 from_json
+    nodes for the valid rows, 31 for the rejected ones, each a full
+    re-parse per row). validate_publications_with_reasons ends in a
+    generator, which no predicate passes, so exactly ONE from_json
+    survives, in batch, in a stream micro-batch and in a reject audit
+    that filters the annotated rows itself. No Python
+    node: validation never starts a Python worker. On OAG the regex
+    strip runs once per cleaned field (6 scalars + 3 arrays), not
+    twice per array element as a nullif inside the lambda would. No
+    ``lower``: its first call in a JVM costs about 1.5 s, which every
+    query's first micro-batch would wait for."""
+    if path == "ingest_dblp":
+        lines = [json.dumps({"key": "conf/x/1", "title": "T", "year": "2010",
+                             "conference": "C", "authors": ["A One"]})]
+    else:
+        lines = [json.dumps(r) for r in OAG_FIXTURE]
+    if path == "stream":
+        plan = _stream_batch_plan(spark, tmp_path, lines)
+    else:
+        raw = spark.createDataFrame([(l,) for l in lines], "value string")
+        if path == "reject_audit":
+            checked = ingest.validate_publications_with_reasons(ingest.parse_oag(raw))
+            out = checked.filter(F.col("reject_reason").isNotNull())
+        else:
+            out = getattr(ingest, path)(raw)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("from_json") == 1, plan
+    assert "EvalPython" not in plan, plan
+    assert "lower(" not in plan, plan
+    if path != "ingest_dblp":
+        assert plan.count("regexp_replace") == 9, plan
+
+
+def test_column_cleans_match_spec_on_edge_cases(spark):
+    """Hand-picked cases for the Column cleans against the _py specs:
+    unicode, None elements, "" and whitespace-only input, the 30/31
+    character topic cap, and first-occurrence dedup order."""
     rows = [
         ("  A!b C ", ["Top#1", "top1", None, "x" * 31, "", "  "], ["A.", "a", None]),
         (None, None, None),
         ("", [], []),
         ("\t\n", ["ok topic", "OK  topic!", "y" * 30 + "!!"], ["Zed", "zed!"]),
-        ("ünïcode-Ω", ["ünï", "Ω" * 40], ["ß"]),
+        ("ünïcode-Ω", ["ünï", "Ω" * 40], ["ß", "x" * 31]),
+        ("  ", ["b", "A", "b!", "a"], ["  ", "", None]),
     ]
     df = spark.createDataFrame(
         rows, "s string, topics array<string>, auth array<string>"
     )
     got = df.select(
-        arrow_validate_str("s").alias("s"),
-        arrow_validate_topics("topics").alias("t"),
-        arrow_clean_authors("auth").alias("a"),
-    ).collect()
-    want = df.select(
         validate_str("s").alias("s"),
         validate_topics("topics").alias("t"),
         clean_authors("auth").alias("a"),
     ).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    want = [
+        (validate_str_py(s), validate_topics_py(t), validate_topics_py(a, max_len=None))
+        for s, t, a in rows
+    ]
+    assert [tuple(r) for r in got] == want
+    # the cases reach each edge they name
+    assert want[0] == ("ab c", ["top1"], ["a"])
+    assert want[3][1] == ["ok topic", "ok  topic", "y" * 30]
+    assert want[4] == ("ncode", ["n"], ["x" * 31])
+    assert want[5] == (None, ["b", "a"], [])

@@ -44,6 +44,13 @@ def test_kafka_source_reaches_connector_boundary(spark):
         read_kafka_stream(spark, "localhost:9092", "pubs")
 
 
+def test_kafka_source_rejects_unknown_source(spark):
+    """An unknown source raises before the stream is built, so no kafka
+    connector is needed to see it."""
+    with pytest.raises(ValueError, match="unknown source 'xml'"):
+        read_kafka_stream(spark, "h:9092", "t", source="xml")
+
+
 def test_kafka_sink_shape_is_connector_ready(spark):
     """to_kafka_json output is exactly the (key, value) contract the kafka
     writer requires — verified structurally without a broker."""
