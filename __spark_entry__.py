@@ -16,7 +16,6 @@ unchanged over real publication corpora (see ``tests/test_ingest.py``).
 from __future__ import annotations
 
 import os
-import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -778,19 +777,6 @@ def _q_quantize_embeddings(spark, sf_dir):
     every element via exact integer aggregates + reconstruction error."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.quantize_embeddings_stats(emb)
-
-
-def pending_next_window() -> list[str]:
-    """Entries with no still-current archived driver evidence that sit
-    beyond the 50-slot gate window, DERIVED from the fingerprint stamps
-    (round-5 verdict #1: the old hand-maintained set went stale the
-    moment the driver proved its members; a computed set cannot).
-    ``_gate_order`` fronts every fresh entry, so this is non-empty only
-    on genuine window overflow (>50 fresh entries at once) — the
-    evidence-holes test asserts exactly that contiguous-prefix shape."""
-    q = queries()
-    archived = archived_green_entries(q, oracle_sql())
-    return [k for k in list(q)[50:] if k not in archived]
 
 
 # Deterministically-trained k-means quantizers, keyed by (purpose,
@@ -4791,213 +4777,8 @@ def _q_emb_neardup_planted(spark, sf_dir):
     )
 
 
-_FINGERPRINT_FILE = "GATE_FINGERPRINTS.json"
-
-
-def _archive_eval_commit(here: str, base: str) -> str | None:
-    """The commit whose TREE the driver evaluated for archive file
-    ``base``: the parent of the commit that added the archive (the
-    driver commits the end-of-round snapshot first, then the
-    verdict/correctness files on top of it). None when unresolvable."""
-    import subprocess
-
-    try:
-        r = subprocess.run(
-            ["git", "log", "--diff-filter=A", "--format=%H", "-n", "1",
-             "--", base],
-            cwd=here, capture_output=True, text=True, timeout=30,
-        )
-        commit = r.stdout.strip()
-        if r.returncode != 0 or not commit:
-            return None
-        p = subprocess.run(
-            ["git", "rev-parse", commit + "^"],
-            cwd=here, capture_output=True, text=True, timeout=30,
-        )
-        return p.stdout.strip() if p.returncode == 0 else None
-    except Exception:
-        return None
-
-
-def _stamp_rounds_from_git(here: str, missing: list[str]) -> dict:
-    """Stamp each un-stamped archive against the tree the driver actually
-    evaluated: `git worktree` of the snapshot commit + tools/stamp_round.py
-    in a subprocess (current fingerprint ALGORITHM over the ARCHIVED
-    code). Rounds that can't be resolved are simply omitted — the caller
-    falls back to live-code stamping for those."""
-    import json as _json
-    import subprocess
-    import tempfile as _tempfile
-
-    out: dict[str, dict] = {}
-    for base in missing:
-        commit = _archive_eval_commit(here, base)
-        if commit is None:
-            continue
-        with _tempfile.TemporaryDirectory(prefix="scipi_stamp_") as td:
-            wt = os.path.join(td, "wt")
-            try:
-                subprocess.run(
-                    ["git", "worktree", "add", "--detach", wt, commit],
-                    cwd=here, check=True, capture_output=True, timeout=120,
-                )
-                env = dict(os.environ)
-                # the worktree's own queries() must not recurse into
-                # another worktree stamping pass
-                env["SCIPI_NO_WORKTREE_STAMP"] = "1"
-                r = subprocess.run(
-                    [sys.executable, os.path.join(here, "tools", "stamp_round.py"),
-                     wt, os.path.join(here, base)],
-                    capture_output=True, text=True, timeout=600, env=env,
-                )
-                if r.returncode == 0 and r.stdout.strip():
-                    out.update(_json.loads(r.stdout))
-            except Exception:
-                continue
-            finally:
-                subprocess.run(
-                    ["git", "worktree", "remove", "--force", wt],
-                    cwd=here, capture_output=True, timeout=60,
-                )
-    return out
-
-
-def archived_green_entries(entries: dict, oracles: dict) -> set[str]:
-    """Entries with a still-current archived green row — see
-    :func:`archived_green_rounds` (this is its key set)."""
-    return set(archived_green_rounds(entries, oracles))
-
-
-def archived_green_rounds(entries: dict, oracles: dict) -> dict[str, int]:
-    """Map of entry -> NEWEST round number with a driver-archived GREEN
-    row (CORRECTNESS_r*.json beside this file) whose recorded code
-    fingerprint still matches the current code. Green requires
-    ``hash_match`` when the entry has an oracle (the
-    round-3 ``train_shards`` red row counted rows_match as green and could
-    never re-enter the window); rows-only entries need ``rows_match``.
-
-    Rounds are stamped on the first call that sees an un-stamped
-    CORRECTNESS_r*.json. Stamps are computed against the ARCHIVED tree
-    the driver actually evaluated — a `git worktree` of the parent of the
-    commit that added the archive file (the end-of-round snapshot), via
-    tools/stamp_round.py in a subprocess (round-4 verdict #3: the old
-    live-code stamping raced with session edits — an operator edited
-    before the first queries() call was stamped as if the driver had
-    evaluated the edit, keeping a stale archive). Falls back to live-code
-    stamping only when git can't resolve the archive commit (fresh repo,
-    uncommitted archive). A later edit to an entry or its operator
-    modules changes the fingerprint, the stamp no longer matches, and the
-    entry re-fronts."""
-    import glob as _glob
-    import json as _json
-    import tempfile as _tempfile
-
-    import gate_fingerprints as _gfp
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    fps = _gfp.entry_fingerprints(entries, oracles)
-
-    fp_path = os.path.join(here, _FINGERPRINT_FILE)
-    try:
-        with open(fp_path) as fh:
-            stamps = _json.load(fh)
-    except Exception:
-        stamps = {}
-    # stamps from a different fingerprint algorithm never match — drop
-    # them (regenerate against the archived trees via tools/stamp_round.py)
-    if stamps.get("_algo") != _gfp.ALGO_VERSION:
-        stamps = {"_algo": _gfp.ALGO_VERSION}
-
-    recs = {}
-    for rec in sorted(_glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        base = os.path.basename(rec)
-        try:
-            with open(rec) as fh:
-                recs[base] = _json.load(fh)
-        except Exception:
-            continue
-
-    dirty = False
-    missing = [b for b in recs if b not in stamps]
-    if missing and not os.environ.get("SCIPI_NO_WORKTREE_STAMP"):
-        for base, m in _stamp_rounds_from_git(here, missing).items():
-            stamps[base] = m
-            dirty = True
-    for base, rows in recs.items():
-        if base not in stamps:
-            # fallback: live-code stamping (pre-round-6 behavior) — only
-            # reached when the archive isn't in git history yet
-            stamps[base] = {
-                n: fps[n] for n in rows if isinstance(rows.get(n), dict) and n in fps
-            }
-            dirty = True
-    if dirty:
-        try:
-            fd, tmp = _tempfile.mkstemp(dir=here, suffix=".fp.tmp")
-            with os.fdopen(fd, "w") as fh:
-                _json.dump(stamps, fh, indent=1, sort_keys=True)
-            os.replace(tmp, fp_path)
-        except OSError:
-            pass
-
-    import re as _re
-
-    archived: dict[str, int] = {}
-    for base, rows in recs.items():
-        m = _re.search(r"_r(\d+)", base)
-        rnd = int(m.group(1)) if m else 0
-        stamp = stamps.get(base, {})
-        for name, row in rows.items():
-            if not isinstance(row, dict) or name not in fps:
-                continue
-            green = row.get("err") in (None, "") and (
-                row.get("hash_match")
-                if name in oracles
-                else row.get("rows_match")
-            )
-            if green and stamp.get(name) == fps[name]:
-                archived[name] = max(archived.get(name, 0), rnd)
-    return archived
-
-
-def _gate_order(entries: dict) -> dict:
-    """Self-healing evaluation window: the driver's correctness gate
-    evaluates only the FIRST 50 dict keys per round, so entries without a
-    GREEN, still-current archived row sort to the front — declaration order
-    preserved within each block. A past failure, error, hash mismatch, or a
-    code edit to the entry / its operator modules (fingerprint change) all
-    count as not-archived, so the entry is automatically re-evaluated next
-    round. Manual rotation (the round-2 judge's #1 finding) is thereby
-    permanently unnecessary.
-
-    Round-10 (r9 verdict #5): window slots the fresh block leaves free
-    are filled with the OLDEST-evidenced archived entries (by last
-    green round then name), so stale archive rows continuously rotate
-    back through live driver evaluation and no entry's newest driver
-    row ages indefinitely behind a fingerprint match. Fresh entries
-    always front — rotation only consumes slack. Round-11 (r10 verdict
-    #3 asked the tail kept rotating): EVERY free slot rotates — the
-    driver evaluates 50 entries regardless of which, so capping
-    rotation below the slack (the old 12) only slowed the tail's
-    turnover for zero saved work."""
-    rounds = archived_green_rounds(entries, oracle_sql())
-    fresh = [k for k in entries if k not in rounds]
-    slots = max(0, 50 - len(fresh))
-    rotate = sorted(
-        (k for k in entries if k in rounds), key=lambda k: (rounds[k], k)
-    )[:slots]
-    rot_set = set(rotate)
-    rest = [k for k in entries if k in rounds and k not in rot_set]
-    return {k: entries[k] for k in fresh + rotate + rest}
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _gate_order({
-        # -- front block: entries needing a driver CORRECTNESS row this round
-        # (never evaluated in r1/r2, or code changed this round; the driver
-        # gate evaluates only the first 50 dict keys -- see VERDICT r2 #1).
-        # NOTE: _gate_order re-sorts this dict every round — the layout
-        # below documents THIS round's window; it self-corrects later.
+    return {
         "tpch_q2": relational.q2_min_cost_supplier,
         "tpch_q7": relational.q7_volume_shipping,
         "tpch_q8": relational.q8_market_share,
@@ -5073,10 +4854,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_kneser_ney": _q_text_kneser_ney,
         "train_shards": _q_train_shards,
         "dedup_store_increment": _q_dedup_store_increment,
-        # -- declaration order below is historical; _gate_order re-sorts
-        # every round (fresh entries front, archived-green behind). The
-        # round-3 late additions and the round-4 operators are all fresh
-        # this round and self-sort into the window.
         "source_mixture": _q_source_mixture,
         "text_boilerplate": _q_text_boilerplate,
         "text_quality_classifier": _q_text_quality_classifier,
@@ -5116,7 +4893,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "length_buckets": _q_length_buckets,
         "knn_store_search": _q_knn_store_search,
         # round 9: ANN store compaction repair, gated end-to-end
-        # (round-8 verdict #4; fresh — _gate_order fronts it)
+        # (round-8 verdict #4)
         "ann_store_compact": _q_ann_store_compact,
         # round 9: ORC + JSONL sinks under the hash gate; hive-partition
         # write + pruned read (the O(source)-not-O(corpus) mechanism)
@@ -5140,14 +4917,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stream_bm25_store_fold": _q_stream_bm25_store_fold,
         "neardup_safe_split": _q_neardup_safe_split,
         "dedup_clusters_star": _q_dedup_clusters_star,
-        # -- positions 50+: green in CORRECTNESS_r01/r02 (archived evidence).
-        # c8/c16 planted twins and dedup_increment rotated out this round to
-        # admit the three new ops: their r2 rows are the archived evidence,
-        # and the code paths they exercise stay in-window via the organic
-        # c8/c16 entries (now fully oracled) and dedup_store_increment.
         "c8_lpa_planted": _q_c8_lpa_planted,
         "c16_strength_planted": _q_c16_strength_planted,
-        # round 6: composed C1->C14 lifecycle (fresh — _gate_order fronts it)
+        # round 6: composed C1->C14 lifecycle
         "community_pipeline": _q_community_pipeline,
         "c8_store_lpa": _q_c8_store_lpa,
         # round 12: graph-store fold + compaction (r11 verdict #1 — the
@@ -5222,8 +4994,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "window_order_deltas": relational.window_order_deltas,
         "rollup_order_volume": relational.rollup_order_volume,
         "distinct_agg_supplier": relational.distinct_agg_supplier_reach,
-        # -- registered while round 5's window was exactly full; driver-
-        # proven in CORRECTNESS_r05 — _gate_order keeps them archived.
         "perplexity_buckets": _q_perplexity_buckets,
         "emb_norm_screen": _q_emb_norm_screen,
         "events_anomaly_mad": relational.events_anomaly_mad,
@@ -5236,7 +5006,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rfm_segments": relational.rfm_segments,
         "skew_profile_events": _q_skew_profile,
         "tokenizer_fertility": _q_tokenizer_fertility,
-    })
+    }
 
 
 # ---------------------------------------------------------------------------

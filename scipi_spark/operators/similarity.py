@@ -76,8 +76,8 @@ def cosine_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
 
     r13 NEGATIVE RESULT (r12 verdict #7): an Arrow-batched GEMM-form
     kernel for this dot product (dimension-major accumulation,
-    bit-identical doubles) was built and A/B'd at sf1 via
-    tools/ab_gemm_rerank.py — it LOST on every scoring-heavy entry
+    bit-identical doubles) was built and A/B'd at sf1 — it LOST on
+    every scoring-heavy entry
     (knn_cosine_brute 0.29x, knn_cosine_pq 0.65x, knn_cosine_lsh
     0.88x): shipping both 64-dim vectors across the Python boundary
     (~1 KB/pair) costs more than the interpreted JVM fold it replaces,

@@ -1,6 +1,7 @@
 """SparkSession factory tuned for the scipi-spark engine.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32); the same
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the cores this
+process may run on), with a driver heap sized to the host; the same
 configuration is designed to hold on a multi-executor cluster: AQE handles
 runtime coalescing and skew joins, shuffle partition count scales with
 parallelism, and broadcast thresholds keep dimension joins shuffle-free.
@@ -11,6 +12,29 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def host_sizing(
+    env_cpus: str | None, affinity_cpus: int, mem_total_kib: int
+) -> tuple[int, str]:
+    """Cores and driver heap for a local session on this host.
+
+    Cores come from ``SPARK_GRAFT_CPUS`` when it is set, else from the
+    process's CPU affinity. The heap is a sixth of ``MemTotal``, between
+    1g and 8g: in local mode the driver is every executor, and the
+    host's memory is shared with the Python workers and other processes.
+    """
+    cores = int(env_cpus) if env_cpus else affinity_cpus
+    heap_gb = max(1, min(8, int(mem_total_kib / 2**20 / 6)))
+    return cores, f"{heap_gb}g"
+
+
+def _mem_total_kib() -> int:
+    with open("/proc/meminfo", encoding="utf-8") as fh:
+        for line in fh:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1])
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
 
 
 def get_spark(
@@ -28,9 +52,16 @@ def get_spark(
     - Arrow enabled: every pandas UDF path ships columnar batches.
     - session timezone UTC: deterministic timestamp semantics matching the
       DuckDB oracle (naive timestamps).
+    - cores (when ``cpus`` is None) and the driver heap from
+      :func:`host_sizing`; ``extra_conf`` may set ``spark.driver.memory``.
     """
+    host_cpus, heap = host_sizing(
+        os.environ.get("SPARK_GRAFT_CPUS"),
+        len(os.sched_getaffinity(0)),
+        _mem_total_kib(),
+    )
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = host_cpus
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cpus, 8)
 
@@ -48,12 +79,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # local mode: driver == all executors; a 25-query bench pass
-        # accumulates cached/checkpointed blocks and a 16g heap put full
-        # GCs inside timed queries (observed as one random multi-second
-        # stall per pass). The container has 128 GiB; 32g keeps old-gen
-        # headroom without inflating GC pause length unreasonably.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # the events table stores TIMESTAMP(NANOS) which Spark rejects by

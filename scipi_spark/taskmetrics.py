@@ -24,7 +24,7 @@ Implementation: snapshot ``AppStatusStore.stageList`` (the store behind
 the UI/REST API — public, stable across Spark 3.x/4.x) before and after
 the query and sum the per-stage deltas. Stage IDs are monotonically
 increasing per SparkContext, so new-or-grown stages are exactly the
-query's own stages when queries run sequentially (as in bench.py).
+query's own stages when queries run one after another in one session.
 The store is fed by the async listener bus, so :func:`quiesce` polls
 until no stage is active and two consecutive snapshots agree.
 """

@@ -1,6 +1,5 @@
 from __future__ import annotations
 
-import os
 import sys
 from pathlib import Path
 
@@ -18,8 +17,5 @@ SF_ORACLE = "/root/testdata/sf0.01"
 def spark():
     from scipi_spark.session import get_spark
 
-    # get_spark's 32g default heap lets the JVM of a full session grow past
-    # the memory of a 16 GB host; the whole suite runs within 4g
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
     spark = get_spark(app_name="scipi-spark-tests", cpus=8, shuffle_partitions=8)
     yield spark

@@ -112,3 +112,11 @@ def compare(spark_df, sql: str, sf_dir: str) -> None:
                 )
             else:
                 assert x == y, f"row {i}: {a} != {b}"
+
+
+def formatted_plan(df) -> str:
+    """The physical plan of ``df`` as ``EXPLAIN FORMATTED`` prints it."""
+    jvm = df.sparkSession._jvm
+    return df._jdf.queryExecution().explainString(
+        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )

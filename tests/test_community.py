@@ -11,6 +11,7 @@ from collections import defaultdict
 from pyspark.sql import functions as F
 
 from scipi_spark.operators import community as comm
+from tests.oracle import formatted_plan
 
 PUB_SCHEMA = (
     "title string, publisher string, venue string, authors array<string>, "
@@ -274,10 +275,7 @@ def test_graph_store_lpa_matches_direct(spark, tmp_path):
             ).hint("shuffle_hash"),
             "src",
         )
-        jvm = msgs.sparkSession._jvm
-        plan = msgs._jdf.queryExecution().explainString(
-            jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
+        plan = formatted_plan(msgs)
         assert len(re.findall(r"\(\d+\) Exchange\b", plan)) == 0
         assert "Bucketed: true" in plan
     finally:
@@ -384,13 +382,7 @@ def test_graph_store_append_fold_matches_rebuild(spark, tmp_path):
 
         # the merge aggregate consumes the bucket partitioning: no
         # Exchange anywhere in its plan
-        plan = comm.merge_delta_edges(
-            spark.table("t_gs_app")
-        )._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
+        plan = formatted_plan(comm.merge_delta_edges(spark.table("t_gs_app")))
         assert len(re.findall(r"\(\d+\) Exchange\b", plan)) == 0
         assert "Bucketed: true" in plan
 

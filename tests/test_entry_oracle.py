@@ -35,110 +35,6 @@ def test_every_oracle_has_query():
     assert set(ORACLES) <= set(QUERIES)
 
 
-def test_bench_headliners_are_registered():
-    """bench.py must never name a query that queries() doesn't expose —
-    a rename would silently break the driver's per-round bench run."""
-    import bench
-
-    missing = [n for n in bench.HEADLINERS if n not in QUERIES]
-    assert not missing, missing
-
-
-def test_bench_output_line_fits_driver_buffer():
-    """The driver archives only the last 2000 chars of bench stdout and
-    parses the final line as JSON (BENCH_r04/r05 were "parsed": null once
-    the line outgrew that). The printed line must stay under budget even
-    with every headliner reporting a 4-digit-seconds timing."""
-    import json
-
-    import bench
-
-    fake = {n: 9999.999 for n in bench.HEADLINERS}
-    spread = {n: [9999.999, 9999.999, 9999.999] for n in bench.HEADLINERS}
-    line, detail = bench.build_output(
-        fake, fake, fake, "0.1",
-        task=fake, task_spread=spread, task_cold=fake, cpu=fake,
-    )
-    assert len(line) <= bench._LINE_BUDGET
-    parsed = json.loads(line)
-    assert parsed["unit"] == "sec"
-    # r8: the hot-cache warm total is named for its methodology so it can
-    # never again be compared to r1-r6's rebuild-per-sample totals
-    assert parsed["metric"] == "headline_queries_hot_cache_total"
-    # r13 (r12 verdict #1): the per-query WALL dict is what the driver's
-    # PERF gate diffs — it must survive shedding COMPLETE, even at
-    # 4-digit timings; queries_task is the one shed (entry-by-entry,
-    # full dict in BENCH_DETAIL.json), and its shedding is counted
-    assert set(parsed["queries"]) == set(bench.HEADLINERS)
-    assert parsed.get("task_omitted", 0) + len(
-        parsed.get("queries_task", {})
-    ) == len(bench.HEADLINERS)
-    # the detail dict keeps the full warm/median/cold/spread resolution
-    assert set(detail["queries"]) == set(bench.HEADLINERS)
-    assert set(detail["queries_cold"]) == set(bench.HEADLINERS)
-    assert set(detail["queries_task"]) == set(bench.HEADLINERS)
-    # r9 (round-8 advice): the trimmed spread is labeled as such and the
-    # untrimmed per-query max is published alongside it
-    assert set(detail["queries_task_spread_trimmed"]) == set(bench.HEADLINERS)
-    assert "queries_task_max" in detail
-    assert "queries_task_spread" not in detail  # old ambiguous name gone
-
-    # legacy call shape (no task dicts) still produces a valid line
-    line2, _ = bench.build_output(fake, fake, fake, "0.1")
-    assert len(line2) <= bench._LINE_BUDGET
-    assert json.loads(line2)["queries"]
-
-
-def test_bench_warm_spread_bar_verdict_is_self_contained():
-    """Round-10 verdict #1: the warm-spread bar verdict must be computed
-    and persisted inside the SAME artifact bench.py emits (SCALE.md once
-    cited a different run's number than the shipping BENCH_rN.json), and
-    the WITHIN test is the trimmed MEDIAN <= 1.3x min — robust to a
-    single residual stall — with the max-based rate published alongside
-    for cross-round continuity."""
-    import json
-
-    import bench
-
-    names = [f"q{i}" for i in range(10)]
-    fake = {n: 5.0 for n in names}
-    # 7/10 entries: median within 1.3x of min; 3: median beyond it.
-    # One entry (q0) has max >> min but median tight — under the old
-    # max-based metric it would read over-bar; under the noise model it
-    # is within (the stall is one sample, not the query).
-    spread = {}
-    for i, n in enumerate(names):
-        if i == 0:
-            spread[n] = [2.0, 2.1, 9.9]
-        elif i < 7:
-            spread[n] = [2.0, 2.2, 2.5]
-        else:
-            spread[n] = [2.0, 3.5, 4.0]
-    line, detail = bench.build_output(
-        fake, fake, fake, "0.1",
-        task={n: s[0] for n, s in spread.items()},
-        task_spread=spread, task_cold=fake, cpu=fake,
-    )
-    ws = detail["warm_spread"]
-    assert ws["metric"] == "trimmed_median_over_min"
-    assert ws["n_eligible"] == 10 and ws["n_within"] == 7
-    assert ws["pct_within"] == 70.0
-    assert ws["bar_pct"] == 60.0 and ws["bar_met"] is True
-    # max-based continuity rate: q0's stall makes it 6/10
-    assert ws["pct_within_max"] == 60.0
-    assert set(ws["over_bar"]) == {"q7", "q8", "q9"}
-    parsed = json.loads(line)
-    assert parsed["warm_spread_pct"] == 70.0
-    assert parsed["warm_spread_bar_met"] is True
-    # below-bar case is reported as failed, not hidden
-    bad = {n: [2.0, 4.0, 4.1] for n in names}
-    _, detail2 = bench.build_output(
-        fake, fake, fake, "0.1",
-        task=fake, task_spread=bad, task_cold=fake, cpu=fake,
-    )
-    assert detail2["warm_spread"]["bar_met"] is False
-
-
 def test_scaling_curves_artifact_near_linear():
     """SCALING.json (tools/scaling_curves.py) must cover the declared
     curve cohort (round-10: the full heavy cohort — the 10 most
@@ -193,32 +89,6 @@ def test_coverage_totals_match_registry():
     assert int(r.group(1)) == len(QUERIES), (
         f"README says {r.group(1)} entries, registry has {len(QUERIES)}"
     )
-
-
-def test_no_driver_evidence_holes():
-    """The driver's correctness gate evaluates only the FIRST 50 keys of
-    queries() dict order per round. Every entry without a still-current
-    archived green row (per archived_green_entries — hash-green AND code
-    fingerprint unchanged) must be fronted by _gate_order into a
-    CONTIGUOUS PREFIX of queries() — never hiding behind an archived
-    entry — and the prefix must fit the 50-slot window, else some entry
-    silently waits an extra round. The pending set is derived from the
-    stamps (round-5 verdict #1: the old hand-list went stale the moment
-    the driver proved its members), so staleness is impossible."""
-    archived = entrymod.archived_green_entries(QUERIES, ORACLES)
-    keys = list(QUERIES)
-    fresh = [k for k in keys if k not in archived]
-    assert keys[: len(fresh)] == fresh, (
-        "_gate_order must front every entry lacking current driver "
-        f"evidence; out-of-prefix: "
-        f"{[k for i, k in enumerate(keys) if (k in archived) != (i >= len(fresh))]}"
-    )
-    assert len(fresh) <= 50, (
-        f"window overflow: {len(fresh)} fresh entries exceed the 50-slot "
-        f"driver gate — entries beyond slot 50 stay unproven a round: "
-        f"{fresh[50:]}"
-    )
-    assert entrymod.pending_next_window() == fresh[50:]
 
 
 def test_session_caches_are_bounded():

@@ -4,6 +4,7 @@ transitive closure beyond the gate fixture's pair-only components."""
 from __future__ import annotations
 
 from scipi_spark.operators import linkage
+from tests.oracle import formatted_plan
 
 
 def test_match_pairs_blocks_and_scores(spark):
@@ -281,12 +282,7 @@ def test_entity_store_probe_is_corpus_shuffle_free(spark, tmp_path):
 
         def n_exchanges(index_df):
             probe = batch_rows.join(index_df, "blk")
-            jvm = spark._jvm
-            plan = probe._jdf.queryExecution().explainString(
-                jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
-            )
+            plan = formatted_plan(probe)
             assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
             return len(re.findall(r"\(\d+\) Exchange\b", plan)), plan
 

@@ -10,14 +10,9 @@ import re
 
 from pyspark.sql import functions as F
 
+from tests.oracle import formatted_plan
+
 SF = "/root/testdata/sf0.001"
-
-
-def _plan(df) -> str:
-    jvm = df.sparkSession._jvm
-    return df._jdf.queryExecution().explainString(
-        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
 
 
 def _count(plan: str, pattern: str) -> int:
@@ -31,7 +26,7 @@ def test_stratified_sample_is_pure_scan_filter(spark):
     out = sampling.stratified_sample(
         docs, rates={"src0": 1.0, "src1": 0.25}, strata_col="source"
     )
-    plan = _plan(out.select("doc_id", "source"))
+    plan = formatted_plan(out.select("doc_id", "source"))
     assert _count(plan, r"\bExchange\b") == 0          # fused into the scan
     assert "ReadSchema: struct<doc_id:bigint,source:string>" in plan  # pruned
 
@@ -43,7 +38,7 @@ def test_token_budget_cap_single_exchange(spark):
         "doc_id", "source", F.length("text").alias("n_tokens")
     )
     out = sampling.token_budget_cap(docs, budget=1000)
-    plan = _plan(out)
+    plan = formatted_plan(out)
     # exactly the window's hash partitioning on the group column
     assert _count(plan, r"\(\d+\) Exchange\b") == 1
 
@@ -52,7 +47,7 @@ def test_tfidf_scans_text_once(spark):
     from scipi_spark.operators import textops
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(textops.tfidf_top_terms(docs, k=3))
+    plan = formatted_plan(textops.tfidf_top_terms(docs, k=3))
     # tf is materialized (localCheckpoint), so the final plan holds at
     # most one full text scan (the n_docs count prunes to zero columns);
     # the regression this guards: dfreq recomputing the explode chain
@@ -64,7 +59,7 @@ def test_bm25_filters_postings_at_the_scan(spark):
     from scipi_spark.operators import textops
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(textops.bm25_search(docs, ["join", "hash"], topk=5))
+    plan = formatted_plan(textops.bm25_search(docs, ["join", "hash"], topk=5))
     # ranking is top-k, never a global sort
     assert "TakeOrderedAndProject" in plan
     # the df table and the corpus stats are broadcast, not shuffled
@@ -80,7 +75,7 @@ def test_asof_join_single_shuffle_per_side(spark):
     ev = spark.read.parquet(f"{SF}/events.parquet")
     left = ev.select("event_id", "user_id", "ts")
     right = ev.select("user_id", "ts", "value")
-    plan = _plan(asof_join(left, right, on="ts", by=["user_id"]))
+    plan = formatted_plan(asof_join(left, right, on="ts", by=["user_id"]))
     # union -> ONE window exchange; no join operator at all
     assert _count(plan, r"SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin") == 0
     assert _count(plan, r"\(\d+\) Exchange\b") == 1
@@ -89,7 +84,7 @@ def test_asof_join_single_shuffle_per_side(spark):
 def test_cohort_retention_reuses_user_partitioning(spark):
     from scipi_spark.plans.relational import events_cohort_retention
 
-    plan = _plan(events_cohort_retention(spark, SF))
+    plan = formatted_plan(events_cohort_retention(spark, SF))
     # distinct (shuffle 1, on user+week), window min reuses... then the
     # rollup (shuffle 2, on cohort/offset): never more than 3 exchanges
     assert _count(plan, r"\(\d+\) Exchange\b") <= 3
@@ -99,7 +94,7 @@ def test_quantize_embeddings_no_exchange(spark):
     from scipi_spark.operators import similarity
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    plan = _plan(similarity.quantize_embeddings_stats(emb))
+    plan = formatted_plan(similarity.quantize_embeddings_stats(emb))
     # a narrow per-row map: must fuse into the scan with zero shuffles
     assert _count(plan, r"\bExchange\b") == 0
 
@@ -108,7 +103,7 @@ def test_paragraph_dedup_single_content_shuffle(spark):
     from scipi_spark.operators import dedup
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(dedup.paragraph_dedup_stats(docs, words=8))
+    plan = formatted_plan(dedup.paragraph_dedup_stats(docs, words=8))
     # first-occurrence window on chunk + per-doc rollup: the rollup agg
     # may add one doc-keyed exchange; anything more means the explode or
     # window shuffled twice
@@ -119,7 +114,7 @@ def test_c4_filter_is_pure_scan_map(spark):
     from scipi_spark.operators import textops
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(textops.c4_gopher_filter(docs))
+    plan = formatted_plan(textops.c4_gopher_filter(docs))
     assert _count(plan, r"\bExchange\b") == 0          # narrow map, no shuffle
     assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan  # pruned
 
@@ -133,7 +128,7 @@ def test_train_shards_single_agg_exchange(spark):
         .groupBy("shard")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
-    plan = _plan(out)
+    plan = formatted_plan(out)
     # one partial/final hash-agg pair around exactly one exchange on shard
     assert _count(plan, r"\(\d+\) Exchange\b") == 1
     assert _count(plan, r"\(\d+\) HashAggregate") == 2
@@ -149,7 +144,7 @@ def test_pq_adc_scan_is_narrow_until_final_topk(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     qids = [r["vec_id"] for r in emb.select("vec_id").orderBy("vec_id").limit(2).collect()]
     out = sim.knn_cosine_pq(emb, qids, k=3, rerank=None)
-    plan = _plan(out)
+    plan = formatted_plan(out)
     # ops are numbered bottom-up: Exchanges numbered BELOW the MapInPandas
     # kernel belong to _spread's one-time cached corpus repartition, not
     # the scoring path. Downstream of the kernel there must be exactly
@@ -173,7 +168,7 @@ def test_source_mixture_cap_no_corpus_shuffle(spark):
     out = sampling.source_mixture_cap(
         docs, {"src0": 0.6, "src1": 0.4}, 10_000, plan=plan_df
     )
-    plan = _plan(out)
+    plan = formatted_plan(out)
     # the corpus side must reach the admission filter shuffle-free: the
     # only exchanges belong to the tiny plan aggregation / its broadcast
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
@@ -188,7 +183,7 @@ def test_nb_classifier_trains_once(spark):
         "is_pos", F.col("source").isin("src0", "src1")
     )
     score = docs.filter(F.col("doc_id") % 2 == 1)
-    plan = _plan(textops.nb_quality_scores(train, score))
+    plan = formatted_plan(textops.nb_quality_scores(train, score))
     # counts is checkpoint-materialized: the final plan may scan text for
     # the score side and the prior, but the TRAIN explode->agg chain must
     # not appear twice (it would without the barrier, feeding both the
@@ -269,7 +264,7 @@ def test_market_basket_pair_expansion_is_codegen_explodes(spark):
     reappear in the plan."""
     from scipi_spark.plans import relational
 
-    plan = _plan(relational.market_basket_pairs(spark, SF))
+    plan = formatted_plan(relational.market_basket_pairs(spark, SF))
     assert "flatten(transform" not in plan
     assert _count(plan, r"Arguments: explode\(parts") == 2
 
@@ -284,13 +279,13 @@ def test_market_basket_size_gated_materialization(spark):
 
     key = "spark.scipi.basket.materializeMinBytes"
     base = relational.market_basket_pairs(spark, SF)
-    plan = _plan(base)
+    plan = formatted_plan(base)
     assert _count(plan, r"Scan parquet") >= 2  # re-scan shape by default
     ungated = sorted(map(tuple, base.collect()))
     spark.conf.set(key, "1")
     try:
         gated_df = relational.market_basket_pairs(spark, SF)
-        gplan = _plan(gated_df)
+        gplan = formatted_plan(gated_df)
         # every consumer reads the one checkpointed basket table
         assert _count(gplan, r"Scan parquet") == 0
         assert _count(gplan, r"Scan ExistingRDD") >= 3
@@ -367,7 +362,7 @@ def test_hive_partitioned_read_prunes_at_planning(spark, tmp_path):
     back = spark.read.parquet(str(tmp_path / "p")).filter(
         F.col("source") == "src3"
     )
-    plan = _plan(back)
+    plan = formatted_plan(back)
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "src3" in m.group(1), plan[:600]
     # the partition predicate must NOT degrade into a row-level filter
@@ -421,7 +416,7 @@ def test_range_sorted_layout_enables_row_group_skipping(spark, tmp_path):
         df = spark.read.parquet(path).filter(
             (F.col("value") >= 10.0) & (F.col("value") < 12.0)
         )
-        plan = _plan(df)
+        plan = formatted_plan(df)
         assert re.search(r"PushedFilters: \[[^\]]*value[^\]]*\]", plan)
         df.collect()
         node = df._jdf.queryExecution().executedPlan()
@@ -499,7 +494,7 @@ def test_zorder_layout_skips_on_both_dimensions(spark, tmp_path):
     assert ev.filter(upred).count() <= du < total
 
     keyed, z = zorder_key(ev, ["user_id", "value"])
-    assert "BatchEvalPython" not in _plan(keyed.select(z))
+    assert "BatchEvalPython" not in formatted_plan(keyed.select(z))
 
 
 def test_scd2_apply_semantics(spark):

@@ -12,15 +12,9 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from scipi_spark.operators.ranking import with_percent_rank
+from tests.oracle import formatted_plan
 
 SF = "/root/testdata/sf0.001"
-
-
-def _plan(df) -> str:
-    jvm = df.sparkSession._jvm
-    return df._jdf.queryExecution().explainString(
-        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
 
 
 def _window_truth(df, order, parts):
@@ -133,7 +127,7 @@ def test_plan_no_group_keyed_window_and_reused_exchange(spark):
         ["lang"],
     )
     out.collect()  # AQE only materializes ReusedExchange in the final plan
-    plan = _plan(out)
+    plan = formatted_plan(out)
     # every row-level Window partitions on the slice id; the only other
     # window runs over the tiny per-(slice, group) count table
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
@@ -166,7 +160,7 @@ def test_quality_percentile_plan_and_values(spark):
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(400)
     out = textops.quality_percentile(docs, group_col="source")
-    plan = _plan(out)
+    plan = formatted_plan(out)
     assert _weak_window_free(plan)
     assert "rangepartitioning" in plan
     # value parity with the window form
@@ -189,7 +183,7 @@ def test_perplexity_buckets_plan_and_values(spark):
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(300)
     out = textops.perplexity_buckets(docs)
-    plan = _plan(out)
+    plan = formatted_plan(out)
     assert _weak_window_free(plan)
     xent = textops.bigram_cross_entropy(docs, "doc_id", "text")
     langs = docs.select("doc_id", "lang")
@@ -215,7 +209,7 @@ def test_rfm_segments_plan(spark):
     from scipi_spark.plans import relational
 
     out = relational.rfm_segments(spark, SF)
-    plan = _plan(out)
+    plan = formatted_plan(out)
     # no row-level window partitioned by a bare group key: every Window
     # plan line must belong to the ranking helper (slice-id partitioned,
     # or the tiny per-(slice, group) offsets aggregation — both carry an
@@ -238,7 +232,7 @@ def test_skew_profile_takeordered_plan_and_approx_path(spark):
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
     out = skew_profile(ev, "user_id", k=5)
-    plan = _plan(out)
+    plan = formatted_plan(out)
     assert "TakeOrderedAndProject" in plan, plan[:3000]
     # the only window runs over the k post-limit rows
     rows = sorted(

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from scipi_spark.operators import similarity as sim
 from tests.conftest import SF_SMOKE
+from tests.oracle import formatted_plan
 
 
 def test_knn_brute_shape_and_selfexclusion(spark):
@@ -357,12 +358,7 @@ def test_ann_store_probe_is_corpus_shuffle_free(spark, tmp_path):
                 .select("query_id", "vec_id")
                 .distinct()
             )
-            jvm = spark._jvm
-            plan = cand._jdf.queryExecution().explainString(
-                jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
-            )
+            plan = formatted_plan(cand)
             assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
             return len(re.findall(r"\(\d+\) Exchange\b", plan)), plan
 

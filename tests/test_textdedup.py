@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from scipi_spark.operators import dedup, textops
 from tests.conftest import SF_SMOKE
+from tests.oracle import formatted_plan
 
 
 def _docs(spark, rows):
@@ -436,12 +437,7 @@ def test_signature_store_probe_is_corpus_shuffle_free(spark, tmp_path):
 
         def n_exchanges(index_df):
             probe = dedup._probe_candidates(b_bands, index_df)
-            jvm = spark._jvm
-            plan = probe._jdf.queryExecution().explainString(
-                jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
-            )
+            plan = formatted_plan(probe)
             assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
             return len(re.findall(r"\(\d+\) Exchange\b", plan)), plan
 
@@ -494,10 +490,7 @@ def test_bm25_store_scan_bucket_prunes_to_query_terms(spark, tmp_path):
         spark, str(tmp_path / "idx"), ["join", "hash", "scan"],
         table="bm25store_plan", topk=10,
     )
-    jvm = spark._jvm
-    plan = out._jdf.queryExecution().explainString(
-        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    plan = formatted_plan(out)
     m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
     assert m, plan[:3000]
     assert int(m.group(1)) <= 3 < int(m.group(2)) == 16, m.groups()
@@ -920,11 +913,7 @@ def test_winnow_overlap_pair_expansion_is_codegen_explodes(spark):
         ],
     )
     out = dedup.winnow_overlap_pairs(df, k=8, w=4, threshold=0.1)
-    plan = out._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
+    plan = formatted_plan(out)
     assert "flatten(transform" not in plan
     # two chained pair explodes + the sizes explode
     assert len(re.findall(r"Arguments: explode\(", plan)) >= 3
@@ -1359,12 +1348,7 @@ def test_lm_store_score_is_store_shuffle_free(spark, tmp_path):
 
         def n_exchanges(bc_df, uc_df):
             j = bi.join(bc_df, ["w1", "w2"], "left").join(uc_df, "w1", "left")
-            jvm = spark._jvm
-            plan = j._jdf.queryExecution().explainString(
-                jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
-            )
+            plan = formatted_plan(j)
             assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
             return len(re.findall(r"\(\d+\) Exchange\b", plan)), plan
 

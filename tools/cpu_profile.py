@@ -3,7 +3,7 @@
 Task run-time at sf0.1 is dominated by per-task fixed overheads (32-way
 fan-out of sub-second stages) and host contention; task CPU is the
 contention-robust signal for "is there real compute to optimize here".
-Usage: python tools/cpu_profile.py entry [entry...]   (default: top bench)
+Usage: python tools/cpu_profile.py entry [entry...]
 """
 
 from __future__ import annotations

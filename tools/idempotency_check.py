@@ -3,7 +3,8 @@ in one session and must return identical rows -- catches cache-dependent
 second-invocation bugs (session stores, persisted fixtures) that the
 single-shot oracle sweep cannot see. Usage: python3 tools/idempotency_check.py"""
 import os, sys
-os.chdir('/root/repo'); sys.path.insert(0,'/root/repo')
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+os.chdir(REPO); sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession
 import __spark_entry__ as e
 spark = (SparkSession.builder.master('local[8]')

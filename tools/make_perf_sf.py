@@ -27,7 +27,7 @@ Replica transforms (replica 0 is always the untouched original):
   cosines decorrelate, so ANN/near-dup pair structure scales linearly.
 
 NOT oracle data: results at this SF are never correctness-checked (the
-DuckDB oracle runs at sf0.01); this exists so tools/bench_one.py can be
+DuckDB oracle runs at sf0.01); this exists so tools/cpu_profile.py can be
 pointed at it via SPARK_GRAFT_SF_DIR. Deterministic end to end — no
 rand(), row order fixed by (replica, source order), files hashed by
 primary key into a fixed file count.

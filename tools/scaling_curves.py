@@ -13,7 +13,7 @@ largest SFs is the headline: slope 1.0 = linear, 2.0 = quadratic.
 tests/test_entry_oracle.py pins SCALING.json to the live registry and
 asserts every slope stays under the near-linear band.
 
-Deliberately UNLIKE bench.py's warm samples, each timed run here
+Deliberately UNLIKE warm re-count samples, each timed run here
 rebuilds and re-executes the query: the curves exist to show how the
 WORK grows with rows, and measuring re-counts of one primed DataFrame
 would mostly time cache hits (verified: under the primed methodology
