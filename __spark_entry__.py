@@ -2447,9 +2447,8 @@ def _q_er_store_increment(spark, sf_dir):
     materializes its block/closure state eagerly (localCheckpoint — the
     closure's superstep loop cannot be lazy), so a bench WARM re-count
     measures only the residual assignment assembly; the full
-    probe-per-batch cost is the SCALING curve's rebuild-per-sample
-    number (110 task-s at sf0.1, slope 0.63) and the one-time store
-    build lands in the cold column."""
+    probe-per-batch cost is a rebuild per sample (110 task-s at sf0.1)
+    and the one-time store build lands in the cold column."""
     from scipi_spark.operators import linkage
 
     recs = _er_records(spark, sf_dir)
@@ -4313,8 +4312,8 @@ def _q_graph_kcore(spark, sf_dir):
     """k-core decomposition by synchronous degree peeling
     (``operators/graph.py:kcore_peel`` — the Matula-Beck iterative
     prune in Pregel-superstep form, k=2, cap 12). The co-author graph
-    here is adversarially dense (near-clique, SCALE.md), so the
-    fixture is a PLANTED sparse graph with known core structure,
+    here is adversarially dense (sf0.01 is the complete graph K100), so
+    the fixture is a PLANTED sparse graph with known core structure,
     derived arithmetically from doc_ids: blocks of 25 vertices, each a
     15-node ring (the 2-core — every vertex keeps degree 2 forever)
     with a 10-node pendant chain hanging off ring node 14 (peels one
@@ -4343,7 +4342,7 @@ def _q_graph_kcore(spark, sf_dir):
 
 def _q_graph_triangles(spark, sf_dir):
     """Per-author triangle counts over the co-authorship graph
-    (degree-oriented wedge closure).  Caveat recorded in SCALE.md: the
+    (degree-oriented wedge closure).  Caveat: the
     TPC-H-analog co-author graph is adversarially DENSE (sf0.01 is the
     complete graph K100; sf0.1 holds 91% of all possible pairs), so
     exact per-vertex counting is Ω(#triangles) for any algorithm here —
@@ -4657,8 +4656,7 @@ def _q_knn_store_search(spark, sf_dir):
     recipe args — it self-configures from the store. Measured recall at
     16 tables + 1-bit multiprobe is 1.0 on the test embeddings, so the
     brute-force SQL oracle verifies the whole auto-sized store path
-    end-to-end; tools/ann_scale_curve.py carries the >=2-decade
-    sublinear-probe evidence on a 100K-vector fixture."""
+    end-to-end."""
     import os as _os
 
     emb = load_table(spark, sf_dir, "embeddings")

@@ -280,8 +280,7 @@ def aggregate_undirected(edges: DataFrame) -> DataFrame:
       land in one group).
     - Mirror via explode, NOT a union of two references to the aggregate
       — union branches don't share subplans, so that would run the
-      aggregation twice (measured 2x on the build; pitfall #2 in
-      SCALE.md)."""
+      aggregation twice (measured 2x on the build)."""
     return aggregate_undirected_hashed(
         edges.select(
             F.xxhash64("src").alias("src"),

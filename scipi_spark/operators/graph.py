@@ -38,8 +38,9 @@ def connected_components(
     ``stats``: pass a dict to receive {"rounds", "converged"} — the
     round count is the scale-governing quantity (it tracks component
     DIAMETER, a structural property, not vertex count; the per-round
-    cost is what grows with n), so scale evidence reports both
-    (tools/graph_scale_curve.py)."""
+    cost is what grows with n); ``tests/test_graph_store.py`` checks
+    that the round count is the same at n and 2n on a fixed-structure
+    fixture."""
     bidir = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(
@@ -296,13 +297,13 @@ def triangle_counts(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFra
     one — a total acyclic order, so each triangle is enumerated exactly
     once as lo -> mid -> hi.  Orientation by DEGREE (not id) bounds the
     out-degree of every vertex at O(sqrt(m)), so hub vertices cannot
-    explode the wedge join (measured 28.5s -> see SCALE.md with id
-    orientation on the sf0.1 co-author graph, where 1000 authors share
-    dense order cliques).  The oriented wedge self-join groups by the
-    wedge CENTER, and the closing edge lookup is an equi-join on the
-    oriented pair.  Triangle membership is emitted with one explode
-    (NOT a triple self-union, which would execute the join chain three
-    times)."""
+    explode the wedge join (measured 28.5 s with id orientation against
+    21.7 s with degree orientation on the sf0.1 co-author graph, where
+    1000 authors share dense order cliques).  The oriented wedge
+    self-join groups by the wedge CENTER, and the closing edge lookup
+    is an equi-join on the oriented pair.  Triangle membership is
+    emitted with one explode (NOT a triple self-union, which would
+    execute the join chain three times)."""
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     deg = (
         e.select(F.explode(F.array("u", "v")).alias("x"))

@@ -110,8 +110,8 @@ def with_percent_rank(
     # 3. tiny offsets table: rows-per-(slice, group); cumulative over
     #    earlier slices of the same group = the slice's starting rank.
     #    Derived from `ranged`, NOT `local`: the count does not depend on
-    #    the local row_number. COSMETIC, not a plan change (r13 evidence,
-    #    plans/r13/{rfm_segments,quality_percentile,perplexity_buckets}):
+    #    the local row_number. COSMETIC, not a plan change (checked on
+    #    the rfm_segments, quality_percentile and perplexity_buckets plans):
     #    Catalyst's ColumnPruning already removed the unused Window (and
     #    its sort) from the count branch when it was derived from
     #    `local` — the pre-/post-change physical plans are identical

@@ -74,7 +74,7 @@ def cosine_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
     the dense all-pairs/candidate joins (P >> N) a ~3x on the scoring
     stage, at 100 TB exactly as at sf0.1.
 
-    r13 NEGATIVE RESULT (r12 verdict #7): an Arrow-batched GEMM-form
+    NEGATIVE RESULT: an Arrow-batched GEMM-form
     kernel for this dot product (dimension-major accumulation,
     bit-identical doubles) was built and A/B'd at sf1 — it LOST on
     every scoring-heavy entry
@@ -82,7 +82,7 @@ def cosine_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
     0.88x): shipping both 64-dim vectors across the Python boundary
     (~1 KB/pair) costs more than the interpreted JVM fold it replaces,
     and that ratio is scale-invariant (both sides linear in pairs).
-    The kernel was reverted; OPTIMIZATION_r13.md records the numbers."""
+    The kernel was reverted."""
     return dot(a, b) / (na * nb)
 
 

@@ -1,7 +1,7 @@
 """Contention-robust query cost measurement: executor task time.
 
 Wall clock on a shared host is a lottery draw — same-code bench passes
-have spanned 49.5-82.6 s warm totals on this box (SCALE.md), because an
+have spanned 49.5-82.6 s warm totals on one 4-vCPU host, because an
 external load burst stretches wall time while Spark's cores sit idle.
 The metric that survives contention is the *sum of executor task time*
 attributed to the query's stages:

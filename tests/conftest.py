@@ -17,5 +17,5 @@ SF_ORACLE = "/root/testdata/sf0.01"
 def spark():
     from scipi_spark.session import get_spark
 
-    spark = get_spark(app_name="scipi-spark-tests", cpus=8, shuffle_partitions=8)
+    spark = get_spark(app_name="scipi-spark-tests")
     yield spark

@@ -120,3 +120,9 @@ def formatted_plan(df) -> str:
     return df._jdf.queryExecution().explainString(
         jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+
+
+def executed_plan(df) -> str:
+    """The executed physical plan of ``df`` as its tree string; after an
+    action on ``df`` itself this is the final (post-AQE) plan."""
+    return df._jdf.queryExecution().executedPlan().toString()

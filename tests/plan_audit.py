@@ -1,12 +1,12 @@
-"""Automated scale anti-pattern sweep over EVERY gate entry's physical plan.
+"""Scale anti-pattern audit of an executed physical plan.
 
-Builds each ``queries()`` entry at sf0.001 and greps its executed plan for
-the anti-patterns that kill 100 TB jobs:
+``audit_plan`` greps a plan string for the anti-patterns that kill large
+jobs:
 
 - ``CartesianProduct``             — an all-pairs join that made it to the
                                      physical plan (never acceptable);
 - ``BroadcastNestedLoopJoin``      — acceptable ONLY when one side is a
-                                      1-row aggregate (the scalar-broadcast
+                                     1-row aggregate (the scalar-broadcast
                                      crossJoin pattern); flagged for review
                                      otherwise;
 - ``BatchEvalPython``              — a row-at-a-time Python UDF in the plan
@@ -23,31 +23,17 @@ the anti-patterns that kill 100 TB jobs:
                                      aggregate tables, ...).
 
 Known-benign (entry, kind) pairs are whitelisted EXPLICITLY below with the
-reason, so a new flag is always a diff against an empty set. Exit code 1 on
-any unwhitelisted flag.
-
-The ``exchanges`` count per entry is ADVISORY: it is a raw count over the
-plan string, which re-prints the full build lineage of every cached
-subtree (``InMemoryRelation``) — an entry reusing a persisted graph shows
-its extraction shuffles once per cached-scan reference even though they
-executed once (checked for graph_triangles/c14: the live top-level plan
-is one hash Exchange + broadcast joins over InMemoryTableScans).
-
-Usage: python tools/plan_audit.py [sf_dir]   (writes PLAN_AUDIT.json)
+reason, so a new flag is always a diff against an empty set.
+``tests/test_entry_oracle.py`` audits every registry entry's plan after its
+oracle compare has executed it, and fails on any pair not listed here.
 """
 
 from __future__ import annotations
 
-import json
-import os
 import re
-import sys
-
-HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, HERE)
 
 # (entry, kind) -> reason. Keep reasons honest: every row here was read
-# against the actual plan before being admitted (round-6 sweep).
+# against the actual plan before being admitted.
 _SCALAR_BNLJ = (
     "crossJoin of a 1-row aggregate (corpus/scalar stats broadcast back); "
     "build side is exactly one row"
@@ -96,7 +82,7 @@ WHITELIST: dict[tuple[str, str], str] = {
         "(<= distinct author-count buckets, tens of rows by construction)"
     ),
     ("source_mixture_temperature", "global_window"): (
-        "largest-remainder allocation (round-9 advice): leftover-budget "
+        "largest-remainder allocation: leftover-budget "
         "sum + fractional-part rank run over the per-SOURCE weight "
         "table — one row per source, never the corpus (the corpus-side "
         "admission stays a source-partitioned window)"
@@ -140,55 +126,3 @@ def audit_plan(plan: str) -> list[dict]:
         ):
             flags.append({"kind": "global_window", "line": s[:200]})
     return flags
-
-
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    import __spark_entry__ as E
-    from scipi_spark.session import get_spark
-
-    spark = get_spark(app_name="scipi-plan-audit")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    qs = E.queries()
-    report: dict[str, dict] = {}
-    bad: list[str] = []
-    for name in qs:
-        try:
-            df = qs[name](spark, sf_dir)
-            df.count()  # executed plan (post-AQE) is the honest one
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as exc:  # noqa: BLE001 — record, keep sweeping
-            report[name] = {"error": str(exc)[:300]}
-            bad.append(name)
-            continue
-        flags = audit_plan(plan)
-        kept = []
-        for f in flags:
-            why = WHITELIST.get((name, f["kind"]))
-            if why:
-                f["whitelisted"] = why
-            else:
-                kept.append(f)
-        report[name] = {
-            "flags": flags,
-            "exchanges": plan.count("Exchange "),
-        }
-        if kept:
-            bad.append(name)
-            print(f"FLAGGED {name}: {[f['kind'] for f in kept]}")
-    with open(os.path.join(HERE, "PLAN_AUDIT.json"), "w") as fh:
-        json.dump(
-            {"sf_dir": sf_dir, "entries": report, "flagged": sorted(bad)},
-            fh,
-            indent=1,
-            sort_keys=True,
-        )
-        fh.write("\n")
-    print(f"audited {len(report)} entries; flagged: {sorted(bad)}")
-    return 1 if bad else 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())

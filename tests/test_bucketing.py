@@ -1,10 +1,12 @@
-"""Evidence for the SCALE.md bucketing claim: two tables bucketed on the
-join key join WITHOUT any Exchange in the physical plan — the shuffle is
-paid once at write time and amortized over every subsequent join."""
+"""Bucketing: two tables bucketed on the join key join WITHOUT any
+Exchange in the physical plan — the shuffle is paid once at write time
+and amortized over every subsequent join."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+
+from tests.oracle import executed_plan
 
 
 def _set(spark, key, value):
@@ -34,14 +36,14 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     saved_aqe = _set(spark, "spark.sql.adaptive.enabled", "false")
     try:
         j = spark.table("bkt_left").join(spark.table("bkt_right"), on="k")
-        plan = j._jdf.queryExecution().executedPlan().toString()
+        plan = executed_plan(j)
         assert "Exchange" not in plan, plan
         assert j.count() == 3334  # ids 0,3,...,9999
         # same join on plain (unbucketed) parquet DOES shuffle
         pl = spark.read.parquet(str(tmp_path / "bkt_left"))
         pr = spark.read.parquet(str(tmp_path / "bkt_right"))
         plain = pl.join(pr, on="k")
-        plain_plan = plain._jdf.queryExecution().executedPlan().toString()
+        plain_plan = executed_plan(plain)
         assert "Exchange" in plain_plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved_thresh)

@@ -191,7 +191,10 @@ def test_star_cc_converges_where_hashmin_budget_splits(spark):
     """The deep-graph claim: on a 41-node chain (diameter 40), hash-min
     with a 7-round budget provably leaves split labels, while the star
     contraction finishes inside 7 ROUNDS (O(log n), fixpoint detection
-    included — measured exactly 7 for this chain)."""
+    included — measured exactly 7 for this chain), within 3 of
+    log2(depth)."""
+    import math
+
     import pytest
 
     from scipi_spark.operators.graph import connected_components_star
@@ -201,11 +204,63 @@ def test_star_cc_converges_where_hashmin_budget_splits(spark):
     )
     with pytest.warns(RuntimeWarning, match="did not converge"):
         connected_components(edf, max_iterations=7)
+    st: dict = {}
     got = {
         r["id"]: r["comp"]
-        for r in connected_components_star(edf, max_rounds=7).collect()
+        for r in connected_components_star(
+            edf, max_rounds=7, stats=st
+        ).collect()
     }
     assert set(got.values()) == {0} and len(got) == 41
+    assert abs(st["rounds"] - math.log2(40)) <= 3, st
+
+
+def _shallow_edges(spark, n: int):
+    """Communities of 10 over vertex ids 0..n-1: vertex 10c is the hub
+    with spokes 10c+1..10c+6 (pairs (1,2)(3,4)(5,6) ring-linked so they
+    survive a k=2 peel) and a pendant chain 10c+6 - 10c+7 - 10c+8 -
+    10c+9 (tendril depth 2 for the peel; diameter ~5 for hash-min CC).
+    Structure — and therefore every algorithm's round count — is
+    identical at every n; only the volume grows."""
+    from pyspark.sql import functions as F
+
+    v = spark.range(n).withColumn("j", F.col("id") % 10)
+    spoke = v.filter(F.col("j").between(1, 6)).select(
+        (F.col("id") - F.col("j")).alias("src"), F.col("id").alias("dst")
+    )
+    chain = v.filter(F.col("j").isin([2, 4, 6, 7, 8, 9])).select(
+        (F.col("id") - 1).alias("src"), F.col("id").alias("dst")
+    )
+    return spoke.unionByName(chain).localCheckpoint(eager=True)
+
+
+def test_graph_round_counts_track_structure_not_size(spark):
+    """Rounds of the iterative graph operators track a structural
+    property (diameter, log-diameter, tendril depth), never n: on the
+    fixed-structure fixture they are identical at n and 2n."""
+    from pyspark.sql import functions as F
+
+    from scipi_spark.operators.graph import (
+        connected_components_star,
+        kcore_peel,
+    )
+
+    def rounds(n):
+        edges = _shallow_edges(spark, n)
+        hm: dict = {}
+        connected_components(edges, stats=hm).count()
+        star: dict = {}
+        connected_components_star(edges, stats=star).count()
+        peel = (
+            kcore_peel(edges, k=2, max_rounds=12)
+            .agg(F.max(F.when(~F.col("in_core"), F.col("survived_rounds"))))
+            .first()[0]
+        )
+        edges.unpersist()
+        return hm["rounds"], star["rounds"], peel
+
+    small, large = rounds(200), rounds(400)
+    assert small == large, (small, large)
 
 
 def test_kcore_peel_structure(spark):

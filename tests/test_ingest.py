@@ -21,6 +21,7 @@ from scipi_spark.functions.text import (
     validate_topics_py,
 )
 from scipi_spark.streaming.pipelines import read_publications_stream
+from tests.oracle import executed_plan
 
 TEXTISH = st.text(
     alphabet=st.characters(codec="utf-8", exclude_characters="\x00"), max_size=40
@@ -248,7 +249,7 @@ def test_ingest_parses_json_exactly_once(spark, tmp_path, path):
             out = checked.filter(F.col("reject_reason").isNotNull())
         else:
             out = getattr(ingest, path)(raw)
-        plan = out._jdf.queryExecution().executedPlan().toString()
+        plan = executed_plan(out)
     assert plan.count("from_json") == 1, plan
     assert "EvalPython" not in plan, plan
     assert "lower(" not in plan, plan

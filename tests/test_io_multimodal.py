@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from scipi_spark import ingest
 from scipi_spark.operators import multimodal as mm
 from scipi_spark.sources import io
+from tests.oracle import executed_plan
 
 
 def test_write_csv_roundtrip(spark, tmp_path):
@@ -312,7 +313,7 @@ def test_registered_udtf_lateral_sql(spark):
     )
     rows = sorted(map(tuple, df.collect()))
     assert rows == [(1, 0, 1), (1, 1, 2), (1, 2, 3)]  # NULL text -> 0 rows
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     assert "ArrowEvalPythonUDTF" in plan and "BatchEvalPython " not in plan
 
 
@@ -330,7 +331,7 @@ def test_registered_udaf_grouped_sql(spark):
     ).createOrReplaceTempView("udaf_t")
     df = spark.sql("SELECT k, median_val(v) AS med FROM udaf_t GROUP BY k")
     assert sorted(map(tuple, df.collect())) == [("a", 2.0), ("b", 5.0)]
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     assert "AggregatePython" in plan and "Arrow" in plan
 
 

@@ -1,14 +1,10 @@
 """Unit tests for the plan-audit anti-pattern heuristics (pure string
-functions — the full sweep over live plans is tools/plan_audit.py)."""
+functions — the sweep over live plans runs in
+tests/test_entry_oracle.py:test_query_matches_oracle)."""
 
 from __future__ import annotations
 
-import sys
-from pathlib import Path
-
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-
-from plan_audit import _window_partition_free, audit_plan  # noqa: E402
+from tests.plan_audit import _window_partition_free, audit_plan
 
 
 def test_partitioned_window_not_flagged():
@@ -63,27 +59,3 @@ def test_bnlj_flagged():
     plan = "BroadcastNestedLoopJoin BuildRight, Inner"
     assert [f["kind"] for f in audit_plan(plan)] == ["bnlj"]
 
-
-def test_audit_artifact_current_and_clean():
-    """PLAN_AUDIT.json must cover the live registry with zero
-    unwhitelisted flags — a new entry (or a plan change that trips a
-    flag) requires re-running tools/plan_audit.py, exactly like the
-    COVERAGE totals guard keeps documented counts honest."""
-    import json
-
-    import __spark_entry__ as E
-
-    audit = json.loads(
-        (Path(__file__).resolve().parent.parent / "PLAN_AUDIT.json").read_text()
-    )
-    assert audit["flagged"] == [], (
-        "unwhitelisted plan flags — adjudicate via tools/plan_audit.py"
-    )
-    live = set(E.queries())
-    audited = set(audit["entries"])
-    assert live == audited, (
-        f"registry drift vs PLAN_AUDIT.json — re-run tools/plan_audit.py "
-        f"(missing: {sorted(live - audited)}; stale: {sorted(audited - live)})"
-    )
-    errs = {k: v for k, v in audit["entries"].items() if "error" in v}
-    assert not errs, errs

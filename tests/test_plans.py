@@ -1,6 +1,6 @@
 """Physical-plan shape assertions for the scale-critical operators:
-the promises SCALE.md makes (zero-shuffle filters, single-exchange
-windows, no duplicate scans, broadcast dimensions) asserted as code
+zero-shuffle filters, pruned ``ReadSchema`` scans, single-exchange
+windows, no duplicate scans and broadcast dimensions, asserted as code
 against .explain output, so a regression that silently adds an
 exchange or a second scan of the text column fails the suite."""
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from scipi_spark.operators import sampling
+from tests.oracle import executed_plan
 
 
 def _docs(spark, n):
@@ -219,7 +220,7 @@ def test_weighted_sample_ungrouped_plan_is_take_ordered(spark):
     sf = "/root/testdata/sf0.001"
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     out = sampling.weighted_sample(docs, n=5, weight_col="n_chars")
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     assert "TakeOrderedAndProject" in plan, plan[:2000]
     assert "Window" not in plan, plan[:2000]
     assert out.count() == 5

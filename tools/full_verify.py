@@ -1,9 +1,12 @@
-"""Full driver-contract verification: entry() smoke + every queries()
-entry vs its oracle_sql() at sf0.01, with the driver-exact compare
+"""Driver-contract verification: entry() smoke + every queries() entry
+vs its oracle_sql() at sf0.01, with the driver-exact compare
 (column-name-sorted values AND the pandas dtype-kind audit that catches
 the DuckDB HUGEINT -> float64 hash-mismatch class).
 
-Usage (fresh process, any cwd):  python3 tools/full_verify.py
+Usage (fresh process, any cwd):
+  python3 tools/full_verify.py                  # entry() smoke + every entry
+  python3 tools/full_verify.py name1 [name2 ...]  # only the named entries
+Env:   SPARK_GRAFT_VERIFY_SF (default /root/testdata/sf0.01)
 Writes per-entry lines + a final "FAILS: [...]" to stdout.
 """
 import os
@@ -26,8 +29,12 @@ spark = (
 )
 spark.sparkContext.setLogLevel("ERROR")
 
-df = e.entry(spark)
-print("entry rows:", len(df.collect()), df.schema.simpleString(), flush=True)
+qs, osql = e.queries(), e.oracle_sql()
+names = sys.argv[1:]
+if not names:
+    names = list(qs)
+    df = e.entry(spark)
+    print("entry rows:", len(df.collect()), df.schema.simpleString(), flush=True)
 
 import duckdb  # noqa: E402
 
@@ -40,11 +47,17 @@ for t in TABLES:
         f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
     )
 
-qs, osql = e.queries(), e.oracle_sql()
 fails = []
-for name in list(qs):
+for name in names:
+    if name not in qs:
+        print(name, "ERROR: not in registry", flush=True)
+        fails.append(name)
+        continue
     try:
         sdf = qs[name](spark, SF_DIR)
+        if name not in osql:
+            print(name, "rows-only:", len(sdf.collect()), flush=True)
+            continue
         duck_pdf = con.execute(osql[name]).df()
         _dtype_kind_audit(sdf, duck_pdf)
         srows = sorted(
@@ -67,7 +80,7 @@ for name in list(qs):
         if not ok:
             fails.append(name)
     except Exception as ex:  # noqa: BLE001 - report and continue
-        print(name, "ERROR:", repr(ex)[:200], flush=True)
+        print(name, "ERROR:", repr(ex)[:300], flush=True)
         fails.append(name)
 print("FAILS:", fails, flush=True)
 sys.exit(1 if fails else 0)
