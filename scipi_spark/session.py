@@ -69,12 +69,12 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.adaptive.enabled", "true")
+        # with no minimum partition count set, AQE coalesces toward
+        # defaultParallelism partitions (cpus on local[cpus]), so small-
+        # input/large-compute stages (shingle self-joins, band-bucket
+        # joins) are not collapsed onto one task by byte size alone
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # floor AQE coalescing at the core count: byte-based coalescing
-        # collapses small-input/large-compute stages (shingle self-joins,
-        # band-bucket joins) onto one task
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", str(cpus))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")

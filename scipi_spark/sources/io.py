@@ -4,11 +4,13 @@
   ``writeAsCsv(OVERWRITE)``; S3 is the same call with an s3a:// path).
 - JSONL read/write for publication corpora.
 - DBLP XML ingest (S9/S10): the reference SAX-parses dblp.xml in a
-  single producer JVM and emits JSON to Kafka. Here the same role is an
-  iterparse generator -> DataFrame (driver-side, mirroring the
-  single-node producer), plus ``to_kafka_json`` shaping rows into
-  Kafka-ready (key, value-JSON) — actually writing needs the Kafka
-  connector package at runtime.
+  single producer JVM and emits JSON to Kafka. Here the same role is
+  ``read_dblp_xml``, which parses record-boundary-split XML files in
+  parallel with Spark's built-in ``from_xml``, its inverse
+  ``write_dblp_xml_chunks`` (Spark's XML writer), and
+  ``to_kafka_json`` shaping rows into Kafka-ready (key, value-JSON) —
+  actually writing needs the Kafka connector package at runtime.
+  ``iter_dblp_records`` (iterparse) is the reader's test oracle.
 """
 
 from __future__ import annotations
@@ -16,10 +18,9 @@ from __future__ import annotations
 import xml.etree.ElementTree as ET
 from collections.abc import Iterator
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from scipi_spark.schemas import DBLP_RAW_SCHEMA
 
 
 def write_csv(df: DataFrame, path: str, header: bool = True) -> None:
@@ -241,7 +242,9 @@ _DBLP_PUB_TAGS = {
 def iter_dblp_records(xml_path: str) -> Iterator[dict]:
     """S9: streaming SAX-style parse of dblp-shaped XML. Yields raw dicts
     in the producer's JSON shape; records missing title/conference/year
-    are dropped exactly like ``DblpParser.java:142-146``."""
+    are dropped exactly like ``DblpParser.java:142-146``. The venue is
+    ``booktitle`` when present, else ``journal``. The pure-Python
+    reference that :func:`read_dblp_xml` is tested against."""
     for _, elem in ET.iterparse(xml_path, events=("end",)):
         if elem.tag not in _DBLP_PUB_TAGS:
             continue
@@ -254,155 +257,126 @@ def iter_dblp_records(xml_path: str) -> Iterator[dict]:
             "authors": [],
             "citations": [],
         }
+        venue = {}
         for child in elem:
+            # itertext: inline <i>/<sub>/<sup> in a title are part of it
+            text = "".join(child.itertext())
             if child.tag == "title":
-                rec["title"] = child.text
+                rec["title"] = text
             elif child.tag == "year":
-                rec["year"] = child.text
+                rec["year"] = text
             elif child.tag in ("booktitle", "journal"):
-                rec["conference"] = child.text
+                venue[child.tag] = text
             elif child.tag == "publisher":
-                rec["publisher"] = child.text
+                rec["publisher"] = text
             elif child.tag == "author":
-                if child.text:
-                    rec["authors"].append(child.text)
+                if text:
+                    rec["authors"].append(text)
             elif child.tag == "cite":
-                if child.text and child.text != "...":
-                    rec["citations"].append(child.text)
+                if text and text != "...":
+                    rec["citations"].append(text)
+        rec["conference"] = venue.get("booktitle", venue.get("journal"))
         elem.clear()
         # producer-side validation (DblpParser.java:142-146)
         if rec["title"] and rec["year"] and rec["conference"]:
             yield rec
 
 
-def read_dblp_xml(spark: SparkSession, xml_path: str, batch_size: int = 10_000) -> DataFrame:
-    """DBLP XML -> raw DataFrame in the DBLP JSON shape (feed to
-    ``ingest.parse_dblp``/``validate_publications`` via a value column, or
-    use directly). Mirrors the reference's single-JVM producer role; for
-    distributed XML at scale, pre-split the archive into per-record files
-    or use a spark-xml package."""
-    rows = list(iter_dblp_records(xml_path))
-    return spark.createDataFrame(rows, DBLP_RAW_SCHEMA)
+def read_dblp_xml(spark: SparkSession, xml_path: str) -> DataFrame:
+    """S9: DBLP XML -> raw DataFrame in the ``DBLP_RAW_SCHEMA`` shape,
+    parsed in the JVM by Spark's ``from_xml`` (the reference producer is
+    ``DblpParser.java:40-160``). On well-formed XML, the rows of
+    :func:`iter_dblp_records`.
+
+    ``xml_path`` is a path or a glob. Each file is read as ONE string, so
+    files parse in parallel, and a multi-GB archive must first be split
+    at record boundaries into rooted chunks (the layout
+    :func:`write_dblp_xml_chunks` writes). A zero-byte file holds no
+    records. Inline ``<i>``/``<sub>``/``<sup>``/``<tt>`` title markup is
+    stripped to its text.
+
+    Only XML's predefined entities are known: a record holding an
+    undeclared one such as ``&uuml;`` (declared in ``dblp.dtd``) parses
+    to a null title and is dropped alone, where iterparse raises
+    ``ParseError`` for the whole file."""
+    try:
+        files = spark.read.text(xml_path, wholetext=True)
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            raise FileNotFoundError(f"no XML files match {xml_path!r}") from e
+        raise
+    text = F.regexp_replace("value", "</?(i|sub|sup|tt)>", "")
+    tags = "|".join(sorted(_DBLP_PUB_TAGS))
+    rec = F.from_xml(
+        "rec",
+        "_key string, author array<string>, title string, year string,"
+        " booktitle string, journal string, publisher string, cite array<string>",
+        {"ignoreSurroundingSpaces": "false"},
+    )
+    pubs = (
+        files.select(
+            F.explode(F.regexp_extract_all(text, F.lit(f"(?s)(<({tags})\\b.*?</\\2>)"), 1))
+            .alias("rec")
+        )
+        # the generator keeps one from_xml: without it the filters below
+        # are pushed into the parse and re-run it once per reference
+        .select(F.inline(F.array(F.struct(rec.alias("r")))))
+        .select(
+            F.col("r._key").alias("key"),
+            "r.title",
+            "r.year",
+            F.coalesce("r.booktitle", "r.journal").alias("conference"),
+            "r.publisher",
+            F.coalesce(F.filter("r.author", lambda a: a != ""), F.array()).alias("authors"),
+            F.coalesce(F.filter("r.cite", lambda c: c != "..."), F.array()).alias("citations"),
+        )
+    )
+    # producer-side validation (DblpParser.java:142-146)
+    return pubs.filter("title != '' AND year != '' AND conference != ''")
 
 
-def read_dblp_xml_distributed(
-    spark: SparkSession, chunks_glob: str
-) -> DataFrame:
-    """Distributed S9: parse pre-split DBLP XML chunks in parallel.
-
-    The single-JVM producer (``read_dblp_xml``, mirroring
-    ``DblpParser.java:40-160``) cannot scale past one core or one
-    machine's memory for the multi-GB dblp archive. The standard fix is
-    record-boundary splitting: cut the archive between top-level records
-    and wrap each chunk in a root element — then every chunk is
-    independently well-formed and this reader parses them all in
-    parallel. Only the file LISTING happens on the driver; each executor
-    task streams its chunk files through the same incremental parser as
-    the single-JVM path (Arrow-batched ``mapInPandas``), so the output
-    rows are identical up to order. On a cluster the glob would point at
-    shared storage (s3a://...), and parallelism = number of chunks."""
-    import glob as globmod
-
-    import pandas as pd
-
-    files = sorted(globmod.glob(chunks_glob))
-    if not files:
-        raise FileNotFoundError(f"no XML chunks match {chunks_glob!r}")
-    paths = spark.createDataFrame([(f,) for f in files], "path string")
-    n = min(len(files), spark.sparkContext.defaultParallelism)
-
-    def parse(batches):
-        cols = [f.name for f in DBLP_RAW_SCHEMA.fields]
-        for batch in batches:
-            for path in batch["path"]:
-                recs = list(iter_dblp_records(path))
-                yield pd.DataFrame(
-                    {c: [r[c] for r in recs] for c in cols}
-                )
-
-    return paths.repartition(n).mapInPandas(parse, DBLP_RAW_SCHEMA)
+def read_dblp_xml_distributed(spark: SparkSession, chunks_glob: str) -> DataFrame:
+    """Distributed S9: :func:`read_dblp_xml` over a glob of chunk files."""
+    return read_dblp_xml(spark, chunks_glob)
 
 
 def write_dblp_xml_chunks(
     df: DataFrame, out_dir: str, records_per_chunk: int = 5000
-) -> DataFrame:
-    """Distributed XML chunk sink — the inverse of
-    :func:`read_dblp_xml_distributed` and the writer half of the
-    record-boundary-splitting scheme that makes the multi-GB dblp archive
-    parallelizable: every executor task serializes its rows into
-    independently well-formed ``<dblp>...</dblp>`` chunk files (values
-    XML-escaped via ``xml.sax.saxutils``), at most ``records_per_chunk``
-    records per file.
-
-    No driver collect anywhere: each Arrow batch writes its own chunk
-    (tmp-file + atomic rename), so the write scales with executors, not
-    driver memory — on a cluster ``out_dir`` is shared storage. Returns
-    a (path, n) DataFrame; trigger with ``.count()``.
+) -> None:
+    """Distributed XML chunk sink, the inverse of :func:`read_dblp_xml`:
+    Spark's XML writer overwrites ``out_dir`` with ``<dblp>``-rooted
+    files of at most ``records_per_chunk`` ``<article>`` records, one or
+    more per task. ``conference`` is written as ``<journal>``; the
+    characters XML 1.0 forbids are stripped from every string.
 
     Input columns: key, title, year, conference, publisher,
     authors (array<string>) — the DBLP_RAW_SCHEMA shape minus citations
     (optional column, written as ``<cite>`` elements when present)."""
-    import os
-    import re
-    import uuid
-    from xml.sax.saxutils import escape as _sax_escape, quoteattr as _sax_quoteattr
 
-    import pandas as pd
+    def clean(c):
+        return F.regexp_replace(
+            c, "[^\\x09\\x0A\\x0D\\x20-\\x{D7FF}\\x{E000}-\\x{FFFD}\\x{10000}-\\x{10FFFF}]", ""
+        )
 
-    os.makedirs(out_dir, exist_ok=True)
-    has_cites = "citations" in df.columns
-
-    # xml.sax.saxutils escapes markup but passes XML-1.0-INVALID control
-    # characters (e.g. \x00-\x08) through verbatim, producing chunks
-    # iterparse cannot re-read; strip them before escaping (round-7 advice).
-    _xml_bad = re.compile(
-        "[^\x09\x0a\x0d\x20-\ud7ff\ue000-\ufffd"
-        "\U00010000-\U0010ffff]"
+    cols = [
+        clean("key").alias("_key"),  # the key attribute
+        F.transform("authors", clean).alias("author"),
+        clean("title").alias("title"),
+        clean("year").alias("year"),
+        clean("conference").alias("journal"),
+        clean("publisher").alias("publisher"),
+    ]
+    if "citations" in df.columns:
+        cols.append(F.transform("citations", clean).alias("cite"))
+    (
+        df.select(cols)
+        .write.mode("overwrite")
+        .format("xml")
+        .option("rootTag", "dblp")
+        .option("rowTag", "article")
+        .option("maxRecordsPerFile", records_per_chunk)
+        .save(out_dir)
     )
-
-    def escape(s):
-        return _sax_escape(_xml_bad.sub("", s))
-
-    def quoteattr(s):
-        return _sax_quoteattr(_xml_bad.sub("", s))
-
-    def dump(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), records_per_chunk):
-                sub = pdf.iloc[start : start + records_per_chunk]
-                if not len(sub):
-                    continue
-                parts = ["<dblp>"]
-                for _, r in sub.iterrows():
-                    parts.append(f"<article key={quoteattr(str(r['key']))}>")
-                    for a in r["authors"] if r["authors"] is not None else []:
-                        parts.append(f"<author>{escape(str(a))}</author>")
-                    for col, tag in (
-                        ("title", "title"),
-                        ("year", "year"),
-                        ("conference", "journal"),
-                        ("publisher", "publisher"),
-                    ):
-                        if r[col] is not None:
-                            parts.append(
-                                f"<{tag}>{escape(str(r[col]))}</{tag}>"
-                            )
-                    if has_cites and r["citations"] is not None:
-                        for c in r["citations"]:
-                            parts.append(f"<cite>{escape(str(c))}</cite>")
-                    parts.append("</article>")
-                parts.append("</dblp>")
-                name = os.path.join(
-                    out_dir, f"chunk_{uuid.uuid4().hex}.xml"
-                )
-                # explicit utf-8: executors under a C/POSIX locale would
-                # otherwise raise UnicodeEncodeError on non-ASCII titles
-                with open(name + ".tmp", "w", encoding="utf-8") as fh:
-                    fh.write("\n".join(parts))
-                os.rename(name + ".tmp", name)
-                yield pd.DataFrame({"path": [name], "n": [len(sub)]})
-
-    return df.mapInPandas(dump, "path string, n long")
 
 
 def to_kafka_json(df: DataFrame, key_col: str | None = None) -> DataFrame:

@@ -123,6 +123,10 @@ def formatted_plan(df) -> str:
 
 
 def executed_plan(df) -> str:
-    """The executed physical plan of ``df`` as its tree string; after an
-    action on ``df`` itself this is the final (post-AQE) plan."""
-    return df._jdf.queryExecution().executedPlan().toString()
+    """The executed physical plan of ``df`` as its tree string. Under AQE
+    it is the adaptive plan's current plan, without the initial plan
+    printed beside it: after an action on ``df`` itself, the final one."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return plan.toString()

@@ -3,12 +3,15 @@
 from __future__ import annotations
 
 import json
+import re
+import xml.etree.ElementTree as ET
 
 import pytest
 from pyspark.sql import functions as F
 
 from scipi_spark import ingest
 from scipi_spark.operators import multimodal as mm
+from scipi_spark.schemas import DBLP_RAW_SCHEMA
 from scipi_spark.sources import io
 from tests.oracle import executed_plan
 
@@ -90,6 +93,12 @@ def _dblp_record(i: int) -> str:
     )
 
 
+def _oracle_rows(path) -> list[tuple]:
+    """``iter_dblp_records`` rows as sorted tuples in DBLP_RAW_SCHEMA order."""
+    cols = [f.name for f in DBLP_RAW_SCHEMA.fields]
+    return sorted(tuple(r[c] for c in cols) for r in io.iter_dblp_records(str(path)))
+
+
 def test_dblp_xml_distributed_matches_single_jvm(spark, tmp_path):
     records = [_dblp_record(i) for i in range(30)]
     # single file with every record
@@ -103,7 +112,7 @@ def test_dblp_xml_distributed_matches_single_jvm(spark, tmp_path):
             "<dblp>" + "".join(records[ci * 10 : (ci + 1) * 10]) + "</dblp>"
         )
 
-    want = sorted(map(tuple, io.read_dblp_xml(spark, str(single)).collect()))
+    want = _oracle_rows(single)
     got = sorted(
         map(
             tuple,
@@ -113,6 +122,121 @@ def test_dblp_xml_distributed_matches_single_jvm(spark, tmp_path):
         )
     )
     assert got == want and len(got) == 30
+    with pytest.raises(FileNotFoundError, match="nomatch"):
+        io.read_dblp_xml_distributed(spark, str(chunks / "nomatch*.xml"))
+
+
+#: one edge case per record, named by its key
+DBLP_EDGE_XML = """<?xml version="1.0"?>
+<dblp>
+<article key="e/amp"><author>Jane &amp; Roe</author><title>A &lt;b&gt; &amp; C</title><journal>J</journal><year>2001</year></article>
+<article key="e/novenue"><author>X</author><title>Dropped</title><year>2001</year></article>
+<article key="e/cite"><author>X</author><title>Cites</title><journal>J</journal><year>2001</year><cite>...</cite><cite>e/amp</cite></article>
+<article key="e/orcid"><author orcid="0000-0001">Orc Id</author><author></author><title>Orcid</title><journal>J</journal><year>2002</year></article>
+<article key="e/space"><author>X</author><title>  Spaced title  </title><journal>J</journal><year>2003</year></article>
+<inproceedings key="e/both"><author>X</author><title>Both</title><journal>JOURNAL</journal><booktitle>BOOKTITLE</booktitle><year>2004</year></inproceedings>
+<phdthesis key="e/inline"><author>X</author><title>Thesis <i>with</i> H<sub>2</sub>O &lt;i&gt; kept</title><journal>J</journal><year>2005</year><publisher>ACM</publisher></phdthesis>
+</dblp>
+"""
+
+
+def test_dblp_xml_edge_cases_match_oracle(spark, tmp_path):
+    """The JVM reader against the iterparse oracle, one edge case per
+    record, plus a zero-byte file that must hold no records."""
+    (tmp_path / "edge.xml").write_text(DBLP_EDGE_XML)
+    (tmp_path / "empty.xml").write_text("")
+    got = sorted(map(tuple, io.read_dblp_xml(spark, str(tmp_path / "*.xml")).collect()))
+    assert got == _oracle_rows(tmp_path / "edge.xml")
+    rows = {r[0]: r for r in got}
+    assert set(rows) == {"e/amp", "e/cite", "e/orcid", "e/space", "e/both", "e/inline"}
+    assert rows["e/amp"][1] == "A <b> & C" and rows["e/amp"][5] == ["Jane & Roe"]
+    assert rows["e/cite"][6] == ["e/amp"]
+    assert rows["e/orcid"][5] == ["Orc Id"]
+    assert rows["e/space"][1] == "  Spaced title  "
+    assert rows["e/both"][3] == "BOOKTITLE"
+    assert rows["e/inline"][1] == "Thesis with H2O <i> kept"
+
+
+def test_dblp_xml_undeclared_entity_drops_one_record(spark, tmp_path):
+    """DBLP's DTD entities (``&uuml;``) are not declared without
+    ``dblp.dtd``: the JVM reader drops only the record that holds one,
+    while iterparse rejects the whole file. No parity is claimed."""
+    xml = tmp_path / "entity.xml"
+    xml.write_text(
+        "<dblp>"
+        + _dblp_record(1)
+        + '<article key="e/uml"><author>J&uuml;rgen</author><title>T</title>'
+        "<journal>J</journal><year>2001</year></article>"
+        + _dblp_record(2)
+        + "</dblp>"
+    )
+    got = io.read_dblp_xml(spark, str(xml)).collect()
+    assert sorted(r["key"] for r in got) == ["journals/x/1", "journals/x/2"]
+    with pytest.raises(ET.ParseError, match="undefined entity"):
+        list(io.iter_dblp_records(str(xml)))
+
+
+def test_dblp_xml_reader_plan_is_jvm_only(spark, tmp_path):
+    """One from_xml per plan, also under a downstream filter (the inline
+    barrier), and no Python node anywhere."""
+    (tmp_path / "a.xml").write_text(
+        "<dblp>" + "".join(_dblp_record(i) for i in range(10)) + "</dblp>"
+    )
+    df = io.read_dblp_xml_distributed(spark, str(tmp_path / "*.xml"))
+    for q in (df, df.filter("year = '2001'")):
+        q.collect()
+        plan = executed_plan(q)
+        assert plan.count("from_xml") == 1, plan
+        for node in ("EvalPython", "MapInPandas", "MapInArrow", "PythonUDF"):
+            assert node not in plan, plan
+
+
+def test_dblp_xml_chunks_write_read_roundtrip(spark, tmp_path):
+    """write_dblp_xml_chunks -> files iterparse can read, at most
+    records_per_chunk records each, with XML-invalid control characters
+    stripped; the reader returns the input after the producer rule."""
+    rows = [
+        (
+            f"k/{i}\x01",
+            f"Title\x00 {i} & <b>",
+            "" if i % 5 == 0 else str(2000 + i),
+            None if i % 7 == 0 else f"Venue\x0b{i % 3}",
+            "ACM" if i % 2 else None,
+            [f"Author {i}", "Co\x1fauthor"],
+            [f"c/{i}"],
+        )
+        for i in range(23)
+    ]
+    df = spark.createDataFrame(rows, DBLP_RAW_SCHEMA).repartition(3)
+    out = tmp_path / "chunks"
+    assert io.write_dblp_xml_chunks(df, str(out), records_per_chunk=4) is None
+
+    def clean(v):
+        if isinstance(v, list):
+            return [clean(x) for x in v]
+        return v if v is None else re.sub("[\x00-\x08\x0b\x0c\x0e-\x1f]", "", v)
+
+    want = sorted(
+        tuple(clean(v) for v in r) for r in rows if r[2] and r[3] is not None
+    )
+    files = sorted(out.glob("*.xml"))
+    oracle = []
+    for f in files:
+        if not f.stat().st_size:
+            continue
+        text = f.read_text()
+        assert not re.search("[\x00-\x08\x0b\x0c\x0e-\x1f]", text)
+        assert len(ET.parse(f).getroot()) <= 4
+        oracle += _oracle_rows(f)
+    assert sorted(oracle) == want
+    got = sorted(map(tuple, io.read_dblp_xml(spark, str(out / "*.xml")).collect()))
+    assert got == want and len(got) == 15
+
+    # an empty frame leaves one zero-byte part file, which reads as no records
+    empty = tmp_path / "empty"
+    io.write_dblp_xml_chunks(df.limit(0), str(empty), records_per_chunk=4)
+    assert [f.stat().st_size for f in empty.glob("*.xml")] == [0]
+    assert io.read_dblp_xml(spark, str(empty / "*.xml")).count() == 0
 
 
 def _media_df(spark):

@@ -72,6 +72,9 @@ def test_get_spark_defaults_come_from_the_host(monkeypatch):
     assert conf["master"] == f"local[{cores}]"
     assert conf["spark.driver.memory"] == heap
     assert conf["spark.sql.shuffle.partitions"] == str(max(2 * cores, 8))
+    # deprecated since Spark 3.2; unset, AQE's coalescing floor is
+    # defaultParallelism, which local[cores] makes equal to cores
+    assert "spark.sql.adaptive.coalescePartitions.minPartitionNum" not in conf
 
     assert _conf(monkeypatch, env_cpus="3")["master"] == "local[3]"
     # an explicit cpus and an explicit heap both win over the host
