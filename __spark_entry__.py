@@ -984,38 +984,17 @@ _LPA_LABELS_CACHE: dict = {}
 
 def _graph_lpa_mirrored(spark, sf_dir):
     """Pre-aggregated mirrored LPA edge table
-    (:func:`community.aggregate_undirected`), repartitioned on ``src`` and
-    persisted once per (app, sf_dir), plus the mirrored-row estimate that
-    sizes the loop's shuffles.
+    (:func:`community.aggregate_undirected`), repartitioned on ``src``
+    with the session's partition count and persisted once per (app,
+    sf_dir).
 
     Built from a FRESH ``extract_edges`` plan over the cached analog — not
     from the persisted raw-edge handle — so a cold LPA call materializes
     only longs-only aggregated pairs and never writes the string-named
-    |E|-multiset cache (that stays a c4/c16-raw-edge-only cost). The row
-    estimate is per-publication arithmetic over the cached analog (no
-    explode): n*(n-1)/2 co-author pairs + author->paper + publisher/venue
-    edges, one 1-row collect."""
+    |E|-multiset cache (that stays a c4/c16-raw-edge-only cost)."""
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _LPA_EDGE_CACHE:
         pubs = _graph_pubs(spark, sf_dir)
-        n = F.size("authors")
-        per_pub = (
-            n * (n - F.lit(1)) / F.lit(2)
-            + F.greatest(n - F.lit(1), F.lit(1))
-            + F.when(
-                F.col("publisher").isNotNull() & (F.col("publisher") != ""), 1
-            ).otherwise(0)
-            + F.when(
-                F.col("venue").isNotNull() & (F.col("venue") != ""), 1
-            ).otherwise(0)
-        )
-        est = pubs.agg(F.sum(per_pub).alias("m")).collect()[0]["m"] or 0
-        n_est = int(2 * est)
-        # partition count must match what community_detection's loop will
-        # pick from the same estimate, or every superstep re-shuffles the
-        # edge side to the loop's layout
-        saved = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        target = max(8, min(saved, n_est // 250_000 + 1))
         # portable md5-prefix hash (not xxhash64): LPA labels ARE vertex
         # hashes, so a cross-engine-replicable hash makes the organic
         # 5-superstep fixpoint checkable by the DuckDB oracle (the same
@@ -1028,15 +1007,15 @@ def _graph_lpa_mirrored(spark, sf_dir):
                     pubs, hash_fn=_portable_feature_hash
                 )
             )
-            .repartition(target, F.col("src"))
+            .repartition(F.col("src"))
             .persist()
         )
-        _cache_put(_LPA_EDGE_CACHE, key, (mirrored, n_est))
-    mirrored, n_est = _LPA_EDGE_CACHE[key]
+        _cache_put(_LPA_EDGE_CACHE, key, mirrored)
+    mirrored = _LPA_EDGE_CACHE[key]
     sl = mirrored.storageLevel
     if not (sl.useMemory or sl.useDisk):
         mirrored.persist()  # re-register after an external clearCache()
-    return mirrored, n_est
+    return mirrored
 
 
 def _lpa_labels(spark, sf_dir):
@@ -1052,14 +1031,12 @@ def _lpa_labels(spark, sf_dir):
     the LPA cold path entirely."""
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _LPA_LABELS_CACHE:
-        mirrored, n_est = _graph_lpa_mirrored(spark, sf_dir)
         labels = community.community_detection(
             vertices=None,
             edges=None,
             iterations=5,
             delta=0.5,
-            mirrored=mirrored,
-            n_edges=n_est,
+            mirrored=_graph_lpa_mirrored(spark, sf_dir),
             restore_names=False,
             portable_rounding=True,
         )
@@ -1100,7 +1077,7 @@ def _q_c8_store_lpa(spark, sf_dir):
     sfname = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     table = "graph_store_lpa_" + sfname.replace(".", "_")
     path = _store_root(table)
-    mirrored, n_est = _graph_lpa_mirrored(spark, sf_dir)
+    mirrored = _graph_lpa_mirrored(spark, sf_dir)
     bkey = "graph-v1:lpa-portable"
     if storectl.current_dir(path, bkey) is None:
         community.write_graph_store(
@@ -1112,35 +1089,20 @@ def _q_c8_store_lpa(spark, sf_dir):
         iterations=5,
         delta=0.5,
         portable_rounding=True,
-        n_edges=n_est,
         path=path,
     )
     return community.community_sizes(labels, min_size=30)
 
 
 def _graph_pub_slices(spark, sf_dir):
-    """(pubs_a, pubs_b, n_est): the graph-analog corpus split in two
-    deterministic slices plus the full-corpus mirrored-row estimate
-    (the same per-publication arithmetic as ``_graph_lpa_mirrored``,
-    one 1-row collect, no explode). The combined slices ARE the full
-    corpus, so every graph-store fold entry built on them inherits
+    """(pubs_a, pubs_b): the graph-analog corpus split in two
+    deterministic slices. The combined slices ARE the full corpus, so
+    every graph-store fold entry built on them inherits
     ``c8_community_lpa``'s unrolled SQL fixpoint oracle verbatim."""
     pubs = _graph_pubs(spark, sf_dir)
     sa = pubs.filter(F.xxhash64("title") % 2 == 0)
     sb = pubs.filter(F.xxhash64("title") % 2 != 0)
-    n = F.size("authors")
-    per_pub = (
-        n * (n - F.lit(1)) / F.lit(2)
-        + F.greatest(n - F.lit(1), F.lit(1))
-        + F.when(
-            F.col("publisher").isNotNull() & (F.col("publisher") != ""), 1
-        ).otherwise(0)
-        + F.when(
-            F.col("venue").isNotNull() & (F.col("venue") != ""), 1
-        ).otherwise(0)
-    )
-    est = pubs.agg(F.sum(per_pub).alias("m")).collect()[0]["m"] or 0
-    return sa, sb, int(2 * est)
+    return sa, sb
 
 
 def _portable_mirrored(df):
@@ -1155,9 +1117,10 @@ def _portable_mirrored(df):
 
 
 def _graph_split_mirrored(spark, sf_dir):
-    """(agg_a, agg_b, n_est) — see :func:`_graph_pub_slices`."""
-    sa, sb, n_est = _graph_pub_slices(spark, sf_dir)
-    return _portable_mirrored(sa), _portable_mirrored(sb), n_est
+    """(agg_a, agg_b): the portable mirrored relations of the two
+    slices of :func:`_graph_pub_slices`."""
+    sa, sb = _graph_pub_slices(spark, sf_dir)
+    return _portable_mirrored(sa), _portable_mirrored(sb)
 
 
 def _q_graph_store_append(spark, sf_dir):
@@ -1182,7 +1145,7 @@ def _q_graph_store_append(spark, sf_dir):
     import shutil as _shutil
     import tempfile as _tempfile
 
-    agg_a, agg_b, n_est = _graph_split_mirrored(spark, sf_dir)
+    agg_a, agg_b = _graph_split_mirrored(spark, sf_dir)
     d = _tempfile.mkdtemp(prefix="scipi_graph_append_")
     table = "graph_app_" + os.path.basename(d)[-8:]
     try:
@@ -1198,7 +1161,6 @@ def _q_graph_store_append(spark, sf_dir):
             iterations=5,
             delta=0.5,
             portable_rounding=True,
-            n_edges=n_est,
             path=f"{d}/graph",
         )
         out = community.community_sizes(labels, min_size=30).localCheckpoint(
@@ -1223,7 +1185,7 @@ def _q_graph_store_compact(spark, sf_dir):
     import shutil as _shutil
     import tempfile as _tempfile
 
-    agg_a, agg_b, n_est = _graph_split_mirrored(spark, sf_dir)
+    agg_a, agg_b = _graph_split_mirrored(spark, sf_dir)
     d = _tempfile.mkdtemp(prefix="scipi_graph_compact_")
     table = "graph_cmp_" + os.path.basename(d)[-8:]
     try:
@@ -1240,7 +1202,6 @@ def _q_graph_store_compact(spark, sf_dir):
             iterations=5,
             delta=0.5,
             portable_rounding=True,
-            n_edges=n_est,
             path=f"{d}/graph",
         )
         out = community.community_sizes(labels, min_size=30).localCheckpoint(
@@ -1273,7 +1234,7 @@ def _q_graph_store_relabel(spark, sf_dir):
     import shutil as _shutil
     import tempfile as _tempfile
 
-    agg_a, agg_b, n_est = _graph_split_mirrored(spark, sf_dir)
+    agg_a, agg_b = _graph_split_mirrored(spark, sf_dir)
     d = _tempfile.mkdtemp(prefix="scipi_graph_relabel_")
     tg = "graph_rlg_" + os.path.basename(d)[-8:]
     tl = "graph_rll_" + os.path.basename(d)[-8:]
@@ -1328,7 +1289,7 @@ def _q_stream_graph_store_fold(spark, sf_dir):
     from scipi_spark.operators.dedup import _portable_feature_hash
     from scipi_spark.streaming.pipelines import run_streaming_graph_store_fold
 
-    pubs_a, pubs_b, n_est = _graph_pub_slices(spark, sf_dir)
+    pubs_a, pubs_b = _graph_pub_slices(spark, sf_dir)
     # parity split WITHIN slice B: pmod(xxhash64, 4) of B's odd hashes
     # is 1 or 3, so the two micro-batches partition B exactly
     quad = F.pmod(F.xxhash64("title"), F.lit(4))
@@ -1365,7 +1326,6 @@ def _q_stream_graph_store_fold(spark, sf_dir):
             iterations=5,
             delta=0.5,
             portable_rounding=True,
-            n_edges=n_est,
             path=f"{d}/graph",
         )
         out = community.community_sizes(labels, min_size=30).localCheckpoint(

@@ -27,9 +27,16 @@ which is the semantically meaningful variant for co-authorship
 communities; bit-parity with the reference's directed wiring is not a
 goal.
 
-Scale design: one iteration = one shuffle (messages groupBy dst) + one
-broadcast-free join back; lineage is cut every iteration with
-``localCheckpoint`` so 10+ iterations don't stack plans. Vertex ids stay
+Scale design: the edge side is hash-partitioned on ``src`` once (a
+persisted repartition, or the graph store's buckets) and every superstep
+reads it in place, with no Exchange of its own. One superstep then runs
+three shuffles: the label state to ``src`` for the message join, the
+messages on ``(id, label)`` for the per-label sums, and the candidates on
+``id`` for the argmax. The ``max(struct)`` argmax runs as a partial and a
+final ``SortAggregate``, each behind its own Sort. The loop writes no
+session conf: the session's AQE sizes these shuffles from runtime
+statistics. Lineage is cut every superstep with ``localCheckpoint`` so
+10+ supersteps don't stack plans. Vertex ids stay
 strings (names) with 64-bit hash labels — no driver-side dictionaries.
 The mid-plan ``collect()`` of top-community labels mirrors the reference's
 two-phase execution (``ScipiBatchCommunity.java:241-250``) and broadcasts
@@ -530,7 +537,6 @@ def write_label_store(
         iterations=iterations,
         delta=delta,
         mirrored=merged,
-        n_edges=merged.count(),
         restore_names=False,
         portable_rounding=portable_rounding,
     )
@@ -671,10 +677,9 @@ def refresh_label_store(
         # re-reference the subgraph every superstep — without the cache
         # each superstep would replay the exchange
         sub_m = sub.repartition(F.col("src")).persist()
-        n_sub = sub.count()
         if stats is not None:
             stats["touched_comps"] = touched_comps.count()
-            stats["sub_edges"] = n_sub
+            stats["sub_edges"] = sub.count()
             stats["total_edges"] = merged.count()
         relabeled = community_detection(
             vertices=None,
@@ -682,7 +687,6 @@ def refresh_label_store(
             iterations=iterations,
             delta=delta,
             mirrored=sub_m,
-            n_edges=n_sub,
             restore_names=False,
             portable_rounding=portable,
         )
@@ -728,9 +732,7 @@ def community_detection_from_store(
     table: str = "graph_edges_mirrored",
     iterations: int = 10,
     delta: float = 0.5,
-    checkpoint: bool = True,
     portable_rounding: bool = False,
-    n_edges: int | None = None,
     path: str | None = None,
     n_buckets: int | None = None,
     merge_deltas: bool = False,
@@ -739,8 +741,7 @@ def community_detection_from_store(
     aggregation, no edge-side repartition — the loop's message join reads
     the store's bucket partitioning directly. Returns hashed ids
     (``restore_names=False``; a vertex's initial label IS its hashed id,
-    so labels are identical to the name-restored variant). ``n_edges``
-    defaults to the store's metadata row count (a footer read, no scan).
+    so labels are identical to the name-restored variant).
     ``path``: store root for reading a store written by ANOTHER process
     (resolves the live version via the atomic CURRENT pointer and
     registers ``table`` here); omit when this session wrote it. The
@@ -770,16 +771,12 @@ def community_detection_from_store(
     mirrored = spark.table(table)
     if merge_deltas:
         mirrored = merge_delta_edges(mirrored)
-    if n_edges is None:
-        n_edges = mirrored.count()
     return community_detection(
         None,
         None,
         iterations=iterations,
         delta=delta,
-        checkpoint=checkpoint,
         mirrored=mirrored,
-        n_edges=n_edges,
         restore_names=False,
         portable_rounding=portable_rounding,
     )
@@ -790,25 +787,25 @@ def community_detection(
     edges: DataFrame | None,
     iterations: int = 10,
     delta: float = 0.5,
-    checkpoint: bool = True,
     mirrored: DataFrame | None = None,
-    n_edges: int | None = None,
     restore_names: bool = True,
     portable_rounding: bool = False,
 ) -> DataFrame:
     """C8: Flink-CommunityDetection-equivalent LPA; returns (id, label).
 
-    Each superstep is one hash aggregation (messages by dst,label) + one
-    fused argmax aggregation — shuffles on vertex id throughout, so the
-    same partitioning is reused stage to stage.
+    The edge side is hash-partitioned on ``src`` and read in place every
+    superstep. A superstep shuffles three times: the label state to
+    ``src`` for the message join, the messages on ``(id, label)`` for the
+    per-label sums, and the candidates on ``id`` for the ``max(struct)``
+    argmax, which runs as two ``SortAggregate``s (partial and final).
+    Shuffle sizes are the session's: AQE coalesces them from runtime
+    statistics, and this function writes no session conf.
 
     ``mirrored``: a pre-built :func:`aggregate_undirected` table, already
     repartitioned on ``src`` and persisted (caller-owned lifecycle — it is
     NOT unpersisted here). Passing it lets callers cache the aggregated
     table across invocations so a cold call never materializes the raw
-    string-named edge multiset at all. ``n_edges`` (the mirrored-message
-    row-count estimate used only for shuffle-partition sizing) must
-    accompany it; magnitude, not precision, is what sizing needs.
+    string-named edge multiset at all.
 
     ``vertices=None`` (requires ``mirrored`` + ``restore_names=False``):
     seed the label state from the mirrored edge endpoints instead of a
@@ -830,68 +827,36 @@ def community_detection(
     bit-replicable by any engine that sums the same messages in any
     order — the property the portable-label SQL oracle needs. Default
     off: the Flink-exact semantics keep the raw double sums."""
-    if vertices is None:
-        assert mirrored is not None and not restore_names, (
+    if vertices is None and (mirrored is None or restore_names):
+        raise ValueError(
             "vertices=None requires a pre-built mirrored edge table and "
             "restore_names=False (names cannot be restored without a "
             "vertex table)"
         )
-        spark = mirrored.sparkSession
-    else:
-        spark = vertices.sparkSession
-    # Size the per-iteration shuffles to the graph, not the session: on a
-    # small graph 64-way stages are pure scheduling overhead (measured 1.7x
-    # end-to-end at sf0.1), while a 100TB graph keeps the session setting.
-    # The mirrored-edge count is estimated as 2x the raw multiset (exact
-    # only without parallel edges) — the estimate avoids materializing the
-    # edge pipeline twice (once to count, once to persist).
-    # NOTE: the tuned confs are session-level — a concurrent query on the
-    # same SparkSession would inherit them for the duration of the loop.
-    if n_edges is None:
-        n_edges = 2 * edges.count()
-    saved_partitions = spark.conf.get("spark.sql.shuffle.partitions")
-    saved_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    target = max(8, min(int(saved_partitions), n_edges // 250_000 + 1))
     own_bidir = mirrored is None
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(target))
-        # AQE replans every superstep's jobs from scratch; the loop's
-        # shuffles are already sized to the graph above, so the replanning
-        # is pure per-iteration latency (measured ~10% of the loop at sf0.1).
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    if own_bidir:
+        # Repartitioned on the message-join key and persisted once: every
+        # superstep joins against it, and the cached hash partitioning
+        # means only the label state shuffles to the join — without this
+        # the whole upstream extraction would replay `iterations` times.
+        bidir = aggregate_undirected(edges).repartition(F.col("src")).persist()
+    else:
+        bidir = mirrored
 
-        if own_bidir:
-            # Repartitioned on the message-join key and persisted once:
-            # every superstep joins against it, and the cached hash
-            # partitioning means only the (small) label state shuffles per
-            # iteration — without this the whole upstream extraction would
-            # replay `iterations` times.
-            bidir = (
-                aggregate_undirected(edges).repartition(F.col("src")).persist()
-            )
-            bidir.count()
-        else:
-            bidir = mirrored
-
-        if vertices is None:
-            # endpoint distinct over the src-partitioned edge cache (no
-            # exchange); a vertex's initial label IS its hashed id, so the
-            # seed state needs nothing but the id column
-            state_h = (
-                bidir.select(F.col("src").alias("id"))
-                .distinct()
-                .select("id", F.col("id").alias("label"), F.lit(1.0).alias("score"))
-            )
-        else:
-            state_h = initial_labels(vertices).select(
-                F.xxhash64("id").alias("id"), "label", "score"
-            )
-        state_h = _lpa_loop(
-            state_h, bidir, iterations, delta, checkpoint, portable_rounding
+    if vertices is None:
+        # endpoint distinct over the src-partitioned edge cache (no
+        # exchange); a vertex's initial label IS its hashed id, so the
+        # seed state needs nothing but the id column
+        state_h = (
+            bidir.select(F.col("src").alias("id"))
+            .distinct()
+            .select("id", F.col("id").alias("label"), F.lit(1.0).alias("score"))
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_partitions)
-        spark.conf.set("spark.sql.adaptive.enabled", saved_aqe)
+    else:
+        state_h = initial_labels(vertices).select(
+            F.xxhash64("id").alias("id"), "label", "score"
+        )
+    state_h = _lpa_loop(state_h, bidir, iterations, delta, portable_rounding)
     if restore_names:
         mapping = vertices.select("id", F.xxhash64("id").alias("h"))
         result = state_h.join(
@@ -909,94 +874,105 @@ def _lpa_loop(
     bidir: DataFrame,
     iterations: int,
     delta: float,
-    checkpoint: bool,
     portable_rounding: bool = False,
 ) -> DataFrame:
-    neg_inf = float("-inf")
     for step in range(1, iterations + 1):
-        # shuffle_hash: the state side is far too big to broadcast at real
-        # scale but always hash-table-buildable per partition; the hint
-        # skips the sort-merge sorts each superstep would otherwise pay.
-        msgs = bidir.join(
-            state.select(
-                F.col("id").alias("src"), F.col("label"), F.col("score")
-            ).hint("shuffle_hash"),
-            "src",
-        ).select(
-            F.col("dst").alias("id"),
-            "label",
-            (F.col("score") * F.col("w_sum")).alias("mscore_sum"),
-            (F.col("score") * F.col("w_max")).alias("mscore_max"),
-        )
-        per_label = msgs.groupBy("id", "label").agg(
-            (
-                F.round(F.sum("mscore_sum"), 9)
-                if portable_rounding
-                else F.sum("mscore_sum")
-            ).alias("sum_score"),
-            F.max("mscore_max").alias("max_single"),
-        )
-        # Fuse the winner argmax AND the state join into one aggregation:
-        # each vertex's current state rides along as a sentinel row with
-        # sum_score = -inf — it never beats a real message in the
-        # max(struct) (argmax by sum desc, label asc via neg_label), but
-        # it carries (old_label, old_score), which max() recovers since
-        # exactly one sentinel exists per vertex and real rows hold NULLs.
-        # This removes the per-superstep winners->state join entirely:
-        # a superstep is now 2 shuffles (message agg, fused argmax).
-        cand = per_label.select(
-            "id",
-            F.struct(
-                "sum_score",
-                (-F.col("label")).alias("neg_label"),
-                "max_single",
-            ).alias("s"),
-            F.lit(None).cast("long").alias("old_label"),
-            F.lit(None).cast("double").alias("old_score"),
-        ).unionByName(
-            state.select(
-                "id",
-                F.struct(
-                    F.lit(neg_inf).alias("sum_score"),
-                    (-F.col("label")).alias("neg_label"),
-                    F.lit(None).cast("double").alias("max_single"),
-                ).alias("s"),
-                F.col("label").alias("old_label"),
-                F.col("score").alias("old_score"),
-            )
-        )
-        # Flink's CommunityDetection subtracts delta/superstep from the
-        # adopted score ONLY when the label actually changes; a vertex
-        # re-confirming its own label keeps the undecayed max message; a
-        # vertex with no messages (sentinel wins) keeps its state as-is.
-        state = (
-            cand.groupBy("id")
-            .agg(
-                F.max("s").alias("s"),
-                F.max("old_label").alias("old_label"),
-                F.max("old_score").alias("old_score"),
-            )
-            .select(
-                "id",
-                (-F.col("s.neg_label")).alias("label"),
-                F.when(F.col("s.max_single").isNull(), F.col("old_score"))
-                .when(
-                    -F.col("s.neg_label") != F.col("old_label"),
-                    F.col("s.max_single") - F.lit(delta) / step,
-                )
-                .otherwise(F.col("s.max_single"))
-                .alias("score"),
-            )
-        )
         # Checkpoint EVERY superstep: `state` feeds TWO places (the
         # message join and the sentinel union branch), and union branches
         # do not share subplans — an unmaterialized state would execute
         # its whole upstream twice per superstep (measured 12.1s vs 7.3s
         # for the 5-step sf0.1 loop when cutting only every 2nd step).
-        if checkpoint:
-            state = state.localCheckpoint(eager=True)
-
+        state = _lpa_superstep(
+            state, bidir, step, delta, portable_rounding
+        ).localCheckpoint(eager=True)
     return state
+
+
+def _lpa_superstep(
+    state: DataFrame,
+    bidir: DataFrame,
+    step: int,
+    delta: float,
+    portable_rounding: bool,
+) -> DataFrame:
+    """Superstep ``step`` (1-based) of the LPA loop: the next
+    (id, label, score) state, not yet materialized."""
+    neg_inf = float("-inf")
+    # shuffle_hash: the state side is far too big to broadcast at real
+    # scale but always hash-table-buildable per partition; the hint
+    # skips the sort-merge sorts each superstep would otherwise pay.
+    msgs = bidir.join(
+        state.select(
+            F.col("id").alias("src"), F.col("label"), F.col("score")
+        ).hint("shuffle_hash"),
+        "src",
+    ).select(
+        F.col("dst").alias("id"),
+        "label",
+        (F.col("score") * F.col("w_sum")).alias("mscore_sum"),
+        (F.col("score") * F.col("w_max")).alias("mscore_max"),
+    )
+    per_label = msgs.groupBy("id", "label").agg(
+        (
+            F.round(F.sum("mscore_sum"), 9)
+            if portable_rounding
+            else F.sum("mscore_sum")
+        ).alias("sum_score"),
+        F.max("mscore_max").alias("max_single"),
+    )
+    # Fuse the winner argmax AND the state join into one aggregation:
+    # each vertex's current state rides along as a sentinel row with
+    # sum_score = -inf — it never beats a real message in the
+    # max(struct) (argmax by sum desc, label asc via neg_label), but
+    # it carries (old_label, old_score), which max() recovers since
+    # exactly one sentinel exists per vertex and real rows hold NULLs.
+    # This removes the per-superstep winners->state join entirely;
+    # the superstep's shuffles are the state->src move, the message
+    # agg and the fused argmax.
+    cand = per_label.select(
+        "id",
+        F.struct(
+            "sum_score",
+            (-F.col("label")).alias("neg_label"),
+            "max_single",
+        ).alias("s"),
+        F.lit(None).cast("long").alias("old_label"),
+        F.lit(None).cast("double").alias("old_score"),
+    ).unionByName(
+        state.select(
+            "id",
+            F.struct(
+                F.lit(neg_inf).alias("sum_score"),
+                (-F.col("label")).alias("neg_label"),
+                F.lit(None).cast("double").alias("max_single"),
+            ).alias("s"),
+            F.col("label").alias("old_label"),
+            F.col("score").alias("old_score"),
+        )
+    )
+    # Flink's CommunityDetection subtracts delta/superstep from the
+    # adopted score ONLY when the label actually changes; a vertex
+    # re-confirming its own label keeps the undecayed max message; a
+    # vertex with no messages (sentinel wins) keeps its state as-is.
+    return (
+        cand.groupBy("id")
+        .agg(
+            F.max("s").alias("s"),
+            F.max("old_label").alias("old_label"),
+            F.max("old_score").alias("old_score"),
+        )
+        .select(
+            "id",
+            (-F.col("s.neg_label")).alias("label"),
+            F.when(F.col("s.max_single").isNull(), F.col("old_score"))
+            .when(
+                -F.col("s.neg_label") != F.col("old_label"),
+                F.col("s.max_single") - F.lit(delta) / step,
+            )
+            .otherwise(F.col("s.max_single"))
+            .alias("score"),
+        )
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -13,6 +13,12 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory that holds the ``scipi_spark`` package
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__))
+)
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+
 
 def host_sizing(
     env_cpus: str | None, affinity_cpus: int, mem_total_kib: int
@@ -54,6 +60,9 @@ def get_spark(
       DuckDB oracle (naive timestamps).
     - cores (when ``cpus`` is None) and the driver heap from
       :func:`host_sizing`; ``extra_conf`` may set ``spark.driver.memory``.
+    - ``spark.executorEnv.PYTHONPATH`` starts with the directory that
+      holds ``scipi_spark``, so a Python worker imports the package from
+      any working directory; a value from ``extra_conf`` follows it.
     """
     host_cpus, heap = host_sizing(
         os.environ.get("SPARK_GRAFT_CPUS"),
@@ -87,6 +96,11 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
     )
-    for k, v in (extra_conf or {}).items():
+    extra = dict(extra_conf or {})
+    worker_path = [_PACKAGE_PARENT, extra.pop(_WORKER_PATH, "")]
+    builder = builder.config(
+        _WORKER_PATH, os.pathsep.join(filter(None, worker_path))
+    )
+    for k, v in extra.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -11,7 +11,7 @@ from collections import defaultdict
 from pyspark.sql import functions as F
 
 from scipi_spark.operators import community as comm
-from tests.oracle import formatted_plan
+from tests.oracle import executed_plan, formatted_plan
 
 PUB_SCHEMA = (
     "title string, publisher string, venue string, authors array<string>, "
@@ -206,7 +206,6 @@ def test_lpa_endpoint_seed_matches_vertex_seed(spark):
         iterations=3,
         delta=0.5,
         mirrored=mirrored,
-        n_edges=edges.count() * 2,
         restore_names=False,
     )
     hist = lambda df: sorted(
@@ -253,7 +252,6 @@ def test_graph_store_lpa_matches_direct(spark, tmp_path):
             iterations=3,
             delta=0.5,
             mirrored=mirrored,
-            n_edges=edges.count() * 2,
             restore_names=False,
         )
         assert sorted(map(tuple, store_lpa.collect())) == sorted(
@@ -485,3 +483,132 @@ def test_label_store_incremental_relabel(spark, tmp_path):
     finally:
         for t in ("t_rl_graph", "t_rl_labels"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_lpa_needs_a_mirrored_table_without_vertices():
+    """The input check is a ValueError, so it holds under ``python -O``;
+    it fires before any plan is built."""
+    import pytest
+
+    with pytest.raises(ValueError, match="pre-built mirrored edge table"):
+        comm.community_detection(None, None, restore_names=False)
+    with pytest.raises(ValueError, match="pre-built mirrored edge table"):
+        comm.community_detection(None, None, mirrored=object())
+
+
+def test_lpa_writes_no_session_conf(spark, tmp_path, monkeypatch):
+    """LPA leaves the session as ``get_spark`` built it: no call of
+    ``RuntimeConfig.set`` from the in-memory loop, the store loop or the
+    label-store build."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    pubs = _pubs(spark)
+    groot = str(tmp_path / "graph")
+    comm.write_graph_store(
+        comm.extract_edges(pubs), groot, table="t_nc_graph", n_buckets=4
+    )
+    calls = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        calls.append((key, value))
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    try:
+        comm.community_detection(
+            comm.extract_vertices(pubs), comm.extract_edges(pubs), iterations=2
+        ).collect()
+        comm.community_detection_from_store(
+            spark, table="t_nc_graph", iterations=2, path=groot
+        ).collect()
+        comm.write_label_store(
+            spark, groot, str(tmp_path / "labels"), graph_table="t_nc_graph",
+            table="t_nc_labels", iterations=2, n_buckets=4,
+        )
+    finally:
+        for t in ("t_nc_graph", "t_nc_labels"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    assert calls == []
+
+
+def _superstep_shuffles(spark, bidir, is_edge_scan):
+    """Run one LPA superstep (the second, over a checkpointed state) under
+    the session's own AQE and read its executed plan. Returns the plan,
+    the edge scans found, the Exchanges between an edge scan and its
+    join, and the superstep's Exchanges. Nodes printed inside a cached
+    relation (its own build plan) are not the superstep's."""
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    state = (
+        bidir.select(F.col("src").alias("id"))
+        .distinct()
+        .select("id", F.col("id").alias("label"), F.lit(1.0).alias("score"))
+        .localCheckpoint(eager=True)
+    )
+    step = comm._lpa_superstep(state, bidir, 2, 0.5, True)
+    step.collect()
+    plan = executed_plan(step)
+    nodes = []  # (depth, text) per node line of the tree string
+    for line in plan.splitlines():
+        text = line.lstrip(" :+-")
+        if text:
+            nodes.append((len(line) - len(text), text))
+    cached = set()
+    for i, (d, text) in enumerate(nodes):
+        if text.startswith("InMemoryTableScan"):
+            for j in range(i + 1, len(nodes)):
+                if nodes[j][0] <= d:
+                    break
+                cached.add(j)
+    own = [(i, d, t) for i, (d, t) in enumerate(nodes) if i not in cached]
+    scans = edge_exchanges = 0
+    for i, d, text in own:
+        if not is_edge_scan(text):
+            continue
+        scans += 1
+        for dj, tj in reversed(nodes[:i]):  # the scan's ancestors
+            if dj >= d:
+                continue
+            d = dj
+            if "Join" in tj:
+                break
+            edge_exchanges += tj.startswith("Exchange")
+    exchanges = sum(t.startswith("Exchange") for _, _, t in own)
+    return plan, scans, edge_exchanges, exchanges
+
+
+def test_lpa_superstep_reads_edges_in_place(spark, tmp_path):
+    """One superstep under the session's AQE: the edge relation reaches
+    the message join with no Exchange of its own, from the in-memory
+    cache and from the bucketed store, and the superstep has at most 3
+    Exchanges (state to ``src``, messages on ``(id, label)``, candidates
+    on ``id``)."""
+    pubs = _pubs(spark)
+    mirrored = (
+        comm.aggregate_undirected_hashed(comm.extract_edges_hashed(pubs))
+        .repartition(F.col("src"))
+        .persist()
+    )
+    try:
+        plan, scans, edge_ex, exchanges = _superstep_shuffles(
+            spark, mirrored, lambda t: t.startswith("InMemoryTableScan")
+        )
+        assert (scans, edge_ex) == (1, 0), plan
+        assert exchanges <= 3, plan
+    finally:
+        mirrored.unpersist()
+
+    comm.write_graph_store(
+        comm.extract_edges(pubs), str(tmp_path / "graph"),
+        table="t_step_graph", n_buckets=4,
+    )
+    try:
+        plan, scans, edge_ex, exchanges = _superstep_shuffles(
+            spark,
+            spark.table("t_step_graph"),
+            lambda t: t.startswith("FileScan") and "Bucketed: true" in t,
+        )
+        assert (scans, edge_ex) == (1, 0), plan
+        assert exchanges <= 3, plan
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_step_graph")

@@ -82,3 +82,13 @@ def test_get_spark_defaults_come_from_the_host(monkeypatch):
                  extra_conf={"spark.driver.memory": "5g"})
     assert conf["master"] == "local[6]"
     assert conf["spark.driver.memory"] == "5g"
+
+
+def test_get_spark_puts_the_package_on_the_worker_path(monkeypatch):
+    parent = os.path.dirname(os.path.dirname(os.path.abspath(session.__file__)))
+    assert os.path.isdir(os.path.join(parent, "scipi_spark"))
+    key = "spark.executorEnv.PYTHONPATH"
+    assert _conf(monkeypatch)[key] == parent
+    # a caller's path is kept, after the package's
+    conf = _conf(monkeypatch, extra_conf={key: "vendor/lib"})
+    assert conf[key] == os.pathsep.join([parent, "vendor/lib"])
