@@ -920,10 +920,9 @@ _GRAPH_CACHE: dict = {}
 def _graph_vertices_edges(spark, sf_dir):
     """Extracted co-authorship graph, persisted once per (app, sf_dir).
 
-    The edge multiset is scanned twice inside ``community_detection``
-    (pair-canonicalization + self-loop branches) and the LPA gate row is
-    re-invoked per bench repeat — without the persist, the explode-heavy
-    extraction re-runs for every scan."""
+    Each relation is one ``inline`` pass over the publications
+    (``community.extract_vertices`` / ``extract_edges``); the persist
+    keeps a repeated c2/c4 call from re-running that extraction."""
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _GRAPH_CACHE:
         pubs = _graph_pubs(spark, sf_dir)
@@ -984,9 +983,9 @@ _LPA_LABELS_CACHE: dict = {}
 
 def _graph_lpa_mirrored(spark, sf_dir):
     """Pre-aggregated mirrored LPA edge table
-    (:func:`community.aggregate_undirected`), repartitioned on ``src``
-    with the session's partition count and persisted once per (app,
-    sf_dir).
+    (:func:`community.aggregate_undirected` over portable-hashed
+    ``extract_edges``), repartitioned on ``src`` with the session's
+    partition count and persisted once per (app, sf_dir).
 
     Built from a FRESH ``extract_edges`` plan over the cached analog — not
     from the persisted raw-edge handle — so a cold LPA call materializes
@@ -1002,10 +1001,8 @@ def _graph_lpa_mirrored(spark, sf_dir):
         from scipi_spark.operators.dedup import _portable_feature_hash
 
         mirrored = (
-            community.aggregate_undirected_hashed(
-                community.extract_edges_hashed(
-                    pubs, hash_fn=_portable_feature_hash
-                )
+            community.aggregate_undirected(
+                community.extract_edges(pubs, hash_fn=_portable_feature_hash)
             )
             .repartition(F.col("src"))
             .persist()
@@ -1107,12 +1104,15 @@ def _graph_pub_slices(spark, sf_dir):
 
 def _portable_mirrored(df):
     """A publication slice's portable-hashed mirrored LPA relation —
-    the aggregate :func:`community.write_graph_store` /
-    ``append_graph_store`` persist for the fold entries."""
+    ``extract_edges`` with the portable hash, then one
+    :func:`community.aggregate_undirected` (which hashes nothing more:
+    the endpoints are already longs) — the relation
+    :func:`community.write_graph_store` / ``append_graph_store`` persist
+    for the fold entries."""
     from scipi_spark.operators.dedup import _portable_feature_hash
 
-    return community.aggregate_undirected_hashed(
-        community.extract_edges_hashed(df, hash_fn=_portable_feature_hash)
+    return community.aggregate_undirected(
+        community.extract_edges(df, hash_fn=_portable_feature_hash)
     )
 
 

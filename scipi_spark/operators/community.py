@@ -27,9 +27,13 @@ which is the semantically meaningful variant for co-authorship
 communities; bit-parity with the reference's directed wiring is not a
 goal.
 
-Scale design: the edge side is hash-partitioned on ``src`` once (a
-persisted repartition, or the graph store's buckets) and every superstep
-reads it in place, with no Exchange of its own. One superstep then runs
+Scale design: each graph relation is one kernel that reads its input
+once. Vertices and edges are each one ``inline`` per publication, and
+the mirrored message relation is one aggregate over unordered endpoint
+pairs (one Exchange, no Union) followed by a narrow mirror. The edge
+side is hash-partitioned on ``src`` once (a persisted repartition, or
+the graph store's buckets) and every superstep reads it in place, with
+no Exchange of its own. One superstep then runs
 three shuffles: the label state to ``src`` for the message join, the
 messages on ``(id, label)`` for the per-label sums, and the candidates on
 ``id`` for the argmax. The ``max(struct)`` argmax runs as a partial and a
@@ -49,6 +53,7 @@ import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from scipi_spark.sources import storectl
 
@@ -83,27 +88,35 @@ def relevance_filter(
 # C2/C3 — vertex extraction
 # ---------------------------------------------------------------------------
 
+def _named(*cols: str):
+    """The values of ``cols`` that are non-null and non-empty, as an
+    array (the reference's "when nonempty" vertex and edge rule)."""
+    return F.filter(F.array(*cols), lambda x: x.isNotNull() & (x != ""))
+
+
 def extract_vertices(pubs: DataFrame) -> DataFrame:
     """(id, vtype) union of PAPER/PUBLISHER/VENUE/AUTHOR vertices
     (``ScipiBatchCommunity.java:371-407``), deduped on id.
 
-    The reference's ``distinct(0)`` keeps an arbitrary type on name
-    collision; here the MIN type wins — deterministic, and identical
-    whenever names don't collide across types."""
-    papers = pubs.select(F.col("title").alias("id"), F.lit("PAPER").alias("vtype"))
-    publishers = pubs.filter(
-        F.col("publisher").isNotNull() & (F.col("publisher") != "")
-    ).select(F.col("publisher").alias("id"), F.lit("PUBLISHER").alias("vtype"))
-    venues = pubs.filter(F.col("venue").isNotNull() & (F.col("venue") != "")).select(
-        F.col("venue").alias("id"), F.lit("VENUE").alias("vtype")
-    )
-    authors = pubs.select(F.explode("authors").alias("id")).select(
-        "id", F.lit("AUTHOR").alias("vtype")
+    One ``inline`` per publication over ``[paper] ++ [publisher]? ++
+    [venue]? ++ authors``, so the input is read once. The reference's
+    ``distinct(0)`` keeps an arbitrary type on name collision; here the
+    MIN type wins — deterministic, and identical whenever names don't
+    collide across types."""
+
+    def vertex(c, vtype):
+        return F.struct(c.alias("id"), F.lit(vtype).alias("vtype"))
+
+    rows = F.concat(
+        F.array(vertex(F.col("title"), "PAPER")),
+        F.transform(_named("publisher"), lambda p: vertex(p, "PUBLISHER")),
+        F.transform(_named("venue"), lambda v: vertex(v, "VENUE")),
+        F.transform(
+            F.coalesce("authors", F.array()), lambda a: vertex(a, "AUTHOR")
+        ),
     )
     return (
-        papers.unionByName(publishers)
-        .unionByName(venues)
-        .unionByName(authors)
+        pubs.select(F.inline(rows))
         .groupBy("id")
         .agg(F.min("vtype").alias("vtype"))
     )
@@ -113,7 +126,7 @@ def extract_vertices(pubs: DataFrame) -> DataFrame:
 # C4 — edge extraction (with the reference's last-author quirk)
 # ---------------------------------------------------------------------------
 
-def extract_edges(pubs: DataFrame) -> DataFrame:
+def extract_edges(pubs: DataFrame, hash_fn=None) -> DataFrame:
     """(src, dst, weight=1.0) multiset (``ScipiBatchCommunity.java:411-462``):
 
     - PAPER -> PUBLISHER and PAPER -> VENUE when nonempty
@@ -122,45 +135,49 @@ def extract_edges(pubs: DataFrame) -> DataFrame:
       replicated from the reference's loop bound ``i < totalAuthors-1``)
     - all co-author pairs (i, j), i < j
 
-    Pure per-row array expressions — a narrow map, no shuffle, no UDFs."""
-    pub_edges = pubs.filter(
-        F.col("publisher").isNotNull() & (F.col("publisher") != "")
-    ).select(F.col("title").alias("src"), F.col("publisher").alias("dst"))
-    ven_edges = pubs.filter(F.col("venue").isNotNull() & (F.col("venue") != "")).select(
-        F.col("title").alias("src"), F.col("venue").alias("dst")
-    )
+    One ``inline`` per publication over ``co-author pairs ++
+    author->paper ++ paper->publisher? ++ paper->venue?``, built from
+    ``coalesce(authors, [])``, so the input is read once and a NULL
+    author list still emits its publisher and venue edges. A narrow
+    map: no shuffle, no UDF.
 
-    n = F.size("authors")
-    # author->paper for indices 0 .. n-2 (index 0 when n == 1)
-    ap_authors = F.when(n == 1, F.col("authors")).otherwise(
-        F.slice("authors", 1, F.greatest(n - 1, F.lit(1)))
-    )
-    ap_edges = pubs.select(
-        F.explode(ap_authors).alias("src"), F.col("title").alias("dst")
-    )
+    ``hash_fn``: None emits names (src, dst: string). A Column -> long
+    Column (e.g. ``F.xxhash64``, or the portable md5-prefix hash in
+    ``dedup`` when the LPA labels must be replayable outside the JVM)
+    hashes each author, title, publisher and venue once, BEFORE the
+    pair explosion, so the explode emits fixed-width longs and
+    :func:`aggregate_undirected` hashes nothing. The result equals the
+    names path followed by ``hash_fn`` on both endpoints
+    (pytest-pinned)."""
+    authors = F.coalesce("authors", F.array())
+    title = F.col("title")
+    named = _named("publisher", "venue")
+    if hash_fn is not None:
+        authors = F.transform(authors, lambda a: hash_fn(a))
+        title = hash_fn(title)
+        named = F.transform(named, lambda x: hash_fn(x))
 
-    # co-author pairs (i < j) as a nested array comprehension (no join)
-    pairs = F.flatten(
+    def edge(s, d):
+        return F.struct(s.alias("src"), d.alias("dst"))
+
+    co = F.flatten(
         F.transform(
-            "authors",
+            authors,
             lambda a, i: F.filter(
-                F.transform(
-                    "authors",
-                    lambda b, j: F.when(i < j, F.struct(a.alias("s"), b.alias("d"))),
-                ),
-                lambda s: s.isNotNull(),
+                F.transform(authors, lambda b, j: F.when(i < j, edge(a, b))),
+                lambda e: e.isNotNull(),
             ),
         )
     )
-    co_edges = pubs.select(F.explode(pairs).alias("p")).select(
-        F.col("p.s").alias("src"), F.col("p.d").alias("dst")
+    # author->paper for indices 0 .. n-2 (index 0 when n == 1)
+    n = F.size(authors)
+    ap = F.transform(
+        F.slice(authors, 1, F.greatest(n - 1, F.lit(1))),
+        lambda a: edge(a, title),
     )
-
-    return (
-        pub_edges.unionByName(ven_edges)
-        .unionByName(ap_edges)
-        .unionByName(co_edges)
-        .select("src", "dst", F.lit(1.0).alias("weight"))
+    pv = F.transform(named, lambda x: edge(title, x))
+    return pubs.select(F.inline(F.concat(co, ap, pv))).select(
+        "src", "dst", F.lit(1.0).alias("weight")
     )
 
 
@@ -178,121 +195,50 @@ def initial_labels(vertices: DataFrame) -> DataFrame:
     )
 
 
-def extract_edges_hashed(pubs: DataFrame, hash_fn=F.xxhash64) -> DataFrame:
-    """(src, dst, weight=1.0) multiset of :func:`extract_edges` with vertex
-    names hashed BEFORE the pair explosion: one hash per
-    author/title/publisher/venue instead of one per emitted edge side
-    (~6x fewer hash calls on a co-author multigraph), and the explode
-    emits fixed-width longs, never strings. Equivalence with
-    ``extract_edges >> xxhash64`` is pytest-pinned.
-
-    ``hash_fn``: Column -> long Column; default xxhash64 (fastest). Pass
-    a portable hash (e.g. the md5-prefix hash in ``dedup``) when the
-    downstream labels must be replicable outside the JVM — LPA labels ARE
-    vertex hashes, so a portable hash makes the whole fixpoint
-    SQL-checkable."""
-    n = F.size("authors")
-    ah = F.transform("authors", lambda a: hash_fn(a))
-    th = hash_fn(F.col("title"))
-
-    def pair(s, d):
-        return F.struct(s.alias("s"), d.alias("d"))
-
-    co = F.flatten(
-        F.transform(
-            ah,
-            lambda a, i: F.filter(
-                F.transform(ah, lambda b, j: F.when(i < j, pair(a, b))),
-                lambda x: x.isNotNull(),
-            ),
-        )
-    )
-    ap_auth = F.when(n == 1, ah).otherwise(
-        F.slice(ah, 1, F.greatest(n - 1, F.lit(1)))
-    )
-    ap = F.transform(ap_auth, lambda a: pair(a, th))
-    empty = F.array().cast("array<struct<s:bigint,d:bigint>>")
-    pub = F.when(
-        F.col("publisher").isNotNull() & (F.col("publisher") != ""),
-        F.array(pair(th, hash_fn(F.col("publisher")))),
-    ).otherwise(empty)
-    ven = F.when(
-        F.col("venue").isNotNull() & (F.col("venue") != ""),
-        F.array(pair(th, hash_fn(F.col("venue")))),
-    ).otherwise(empty)
-    return pubs.select(F.explode(F.concat(co, ap, pub, ven)).alias("e")).select(
-        F.col("e.s").alias("src"),
-        F.col("e.d").alias("dst"),
-        F.lit(1.0).alias("weight"),
-    )
-
-
-def aggregate_undirected_hashed(hedges: DataFrame) -> DataFrame:
-    """:func:`aggregate_undirected` over an already-hashed (src: long,
-    dst: long, weight) multiset — see that docstring for the plan shape."""
-    canon = (
-        hedges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-            "weight",
-        )
-        .groupBy("a", "b")
-        .agg(F.sum("weight").alias("w_sum"), F.max("weight").alias("w_max"))
-    )
-    self_loops = (
-        hedges.filter(F.col("src") == F.col("dst"))
-        .groupBy(F.col("src").alias("a"))
-        .agg(
-            (F.sum("weight") * 2).alias("w_sum"),
-            F.max("weight").alias("w_max"),
-        )
-        .select("a", F.col("a").alias("b"), "w_sum", "w_max")
-    )
-    mirrored = canon.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-                F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
-            )
-        ).alias("e"),
-        "w_sum",
-        "w_max",
-    ).select("e.src", "e.dst", "w_sum", "w_max")
-    return mirrored.unionByName(
-        self_loops.select(
-            F.col("a").alias("src"), F.col("b").alias("dst"), "w_sum", "w_max"
-        )
-    )
-
-
 def aggregate_undirected(edges: DataFrame) -> DataFrame:
     """Hashed, canonicalized, aggregated, mirrored edge table — the exact
     message-fan-out relation the LPA loop joins every superstep.
 
-    - Hash vertex names to 64-bit ids AT THE SCAN, before any shuffle:
-      every exchange from here on carries fixed-width longs, never
-      variable-length name strings. The same xxhash64 seeds labels, so
+    - String endpoints (names) are hashed with xxhash64 AT THE SCAN,
+      before any shuffle; long endpoints (``extract_edges(hash_fn=...)``)
+      are taken as already hashed. Every exchange from here on carries
+      fixed-width longs, and the same xxhash64 seeds labels, so
       (hash -> name) restores ids with one join at the end.
     - Parallel edges collapse into (w_sum, w_max): a vertex's per-label
       SUM of incoming (score*weight) messages equals score*w_sum, and the
       MAX single message equals score*w_max — exactly Flink's semantics
       with ~Nx less message traffic on multigraphs (the co-author
       multiset).
-    - Canonicalize to unordered pairs BEFORE aggregating: grouping the
-      raw doubled union shuffles 2|E| rows, grouping (least, greatest)
-      shuffles |E| and the mirror emission afterwards is a narrow map
-      (both directions of an undirected pair share w_sum/w_max).
-      Self-loops keep the doubled-union semantics (both mirror copies
-      land in one group).
-    - Mirror via explode, NOT a union of two references to the aggregate
-      — union branches don't share subplans, so that would run the
-      aggregation twice (measured 2x on the build)."""
-    return aggregate_undirected_hashed(
-        edges.select(
+    - One aggregate over the unordered pair ``(least, greatest)``, so one
+      Exchange carries |E| rows, not the 2|E| of the doubled union. A
+      self-loop counts each of its weights twice in ``w_sum`` (both
+      mirror copies of the doubled union land in its one group).
+    - Mirror with one ``inline`` after the aggregate, a narrow map: a
+      self-loop emits one row, any other pair both directions, sharing
+      w_sum/w_max. A union of two references to the aggregate would run
+      it twice, since union branches don't share subplans."""
+    if isinstance(edges.schema["src"].dataType, StringType):
+        edges = edges.select(
             F.xxhash64("src").alias("src"),
             F.xxhash64("dst").alias("dst"),
             "weight",
+        )
+    a, b = F.col("a"), F.col("b")
+    fwd = F.struct(a.alias("src"), b.alias("dst"))
+    rev = F.struct(b.alias("src"), a.alias("dst"))
+    loop = F.col("src") == F.col("dst")
+    return (
+        edges.groupBy(
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+        )
+        .agg(
+            F.sum(F.col("weight") * F.when(loop, 2).otherwise(1)).alias("w_sum"),
+            F.max("weight").alias("w_max"),
+        )
+        .select(
+            F.inline(F.when(a == b, F.array(fwd)).otherwise(F.array(fwd, rev))),
+            "w_sum",
+            "w_max",
         )
     )
 
@@ -319,9 +265,9 @@ def write_graph_store(
     the graph outgrows it, not per job.
 
     ``mirrored``: a pre-aggregated mirrored relation to persist as-is
-    (e.g. one built with a portable hash via
-    :func:`aggregate_undirected_hashed` so an external engine can replay
-    the labels); default builds it from the raw ``edges`` multiset."""
+    (e.g. :func:`aggregate_undirected` over ``extract_edges`` with a
+    portable ``hash_fn``, so an external engine can replay the labels);
+    default builds it from the raw ``edges`` multiset."""
     rel = aggregate_undirected(edges) if mirrored is None else mirrored
     root = path.rstrip("/")
     build = storectl.new_build_dir(root)
@@ -486,6 +432,32 @@ def compact_graph_store(
     )
 
 
+def _open_graph_store(
+    spark, path: str, table: str, n_buckets: int | None = None
+) -> DataFrame:
+    """The live version of the graph store under ``path``, registered
+    here as the bucketed ``table``; its delta rows are merged
+    (:func:`merge_delta_edges`) when the version marker records
+    appends. The bucket count comes from the marker (``n_buckets``
+    mismatches raise; a params-less store falls back to 16)."""
+    root = path.rstrip("/")
+    ver = storectl.current_dir(root)
+    if ver is None:
+        raise FileNotFoundError(
+            f"no published graph store under {root!r} — "
+            "write_graph_store first"
+        )
+    stored = storectl.params_of(ver)
+    nb = storectl.resolve_params(
+        stored, {"n_buckets": n_buckets}, {"n_buckets": 16}
+    )["n_buckets"]
+    storectl.register_bucketed(spark, table, ver + "/edges", ["src"], ["src"], nb)
+    mirrored = spark.table(table)
+    if (stored or {}).get("delta_appends", 0):
+        mirrored = merge_delta_edges(mirrored)
+    return mirrored
+
+
 def write_label_store(
     spark,
     graph_path: str,
@@ -516,21 +488,7 @@ def write_label_store(
     computed under different recipes must never mix)."""
     # resolve the graph version ONCE: LPA and the CC pass must read the
     # same store state (the TOCTOU discipline every probe here follows)
-    root_g = graph_path.rstrip("/")
-    gver = storectl.current_dir(root_g)
-    if gver is None:
-        raise FileNotFoundError(
-            f"no published graph store under {root_g!r} — "
-            "write_graph_store first"
-        )
-    gparams = storectl.params_of(gver) or {}
-    gnb = gparams.get("n_buckets", 16)
-    storectl.register_bucketed(
-        spark, graph_table, gver + "/edges", ["src"], ["src"], gnb
-    )
-    merged = spark.table(graph_table)
-    if gparams.get("delta_appends", 0):
-        merged = merge_delta_edges(merged)
+    merged = _open_graph_store(spark, graph_path, graph_table)
     labels = community_detection(
         vertices=None,
         edges=None,
@@ -641,19 +599,7 @@ def refresh_label_store(
             .localCheckpoint(eager=True)
         )
 
-        gver = storectl.current_dir(graph_path.rstrip("/"))
-        if gver is None:
-            raise FileNotFoundError(
-                f"no published graph store under {graph_path!r}"
-            )
-        gparams = storectl.params_of(gver) or {}
-        gnb = gparams.get("n_buckets", 16)
-        storectl.register_bucketed(
-            spark, graph_table, gver + "/edges", ["src"], ["src"], gnb
-        )
-        merged = spark.table(graph_table)
-        if gparams.get("delta_appends", 0):
-            merged = merge_delta_edges(merged)
+        merged = _open_graph_store(spark, graph_path, graph_table)
         # src-side bucketed scan joins the id-bucketed label store; an
         # edge whose src has NO stored comp is a new vertex's edge —
         # touched by definition (comes from the batch fold). One pass:
@@ -751,26 +697,14 @@ def community_detection_from_store(
     :func:`append_graph_store` deltas is collapsed with
     :func:`merge_delta_edges` automatically — an Exchange-free
     aggregate per superstep scan; ``merge_deltas=True`` forces the
-    merge for session-registered tables the marker cannot vouch for."""
+    merge for session-registered tables the marker cannot vouch for
+    (with ``path`` the marker decides)."""
     if path is not None:
-        ver = storectl.current_dir(path.rstrip("/"))
-        if ver is None:
-            raise FileNotFoundError(
-                f"no published graph store under {path!r} — "
-                "write_graph_store first"
-            )
-        stored = storectl.params_of(ver)
-        nb = storectl.resolve_params(
-            stored, {"n_buckets": n_buckets}, {"n_buckets": 16}
-        )["n_buckets"]
-        storectl.register_bucketed(
-            spark, table, ver + "/edges", ["src"], ["src"], nb
-        )
-        if (stored or {}).get("delta_appends", 0):
-            merge_deltas = True
-    mirrored = spark.table(table)
-    if merge_deltas:
-        mirrored = merge_delta_edges(mirrored)
+        mirrored = _open_graph_store(spark, path, table, n_buckets)
+    else:
+        mirrored = spark.table(table)
+        if merge_deltas:
+            mirrored = merge_delta_edges(mirrored)
     return community_detection(
         None,
         None,

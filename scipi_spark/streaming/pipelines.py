@@ -528,17 +528,18 @@ def run_streaming_graph_store_fold(
     (``ScipiBatchCommunity.java:122-133``) with an incremental one.
 
     Replay contract: :func:`_start_store_fold`. ``hash_fn`` must match
-    the base build's vertex hash (default
-    ``community.aggregate_undirected``'s xxhash64)."""
+    the base build's vertex hash (default xxhash64, the hash
+    ``community.aggregate_undirected`` gives name endpoints)."""
     from scipi_spark.operators import community as community_ops
 
     def body(batch_df: DataFrame, stamp, emit) -> None:
         spark = batch_df.sparkSession
         if stamp:
-            edges = community_ops.extract_edges_hashed(
-                batch_df, **({"hash_fn": hash_fn} if hash_fn else {})
+            rel = community_ops.aggregate_undirected(
+                community_ops.extract_edges(
+                    batch_df, hash_fn=hash_fn or F.xxhash64
+                )
             )
-            rel = community_ops.aggregate_undirected_hashed(edges)
             community_ops.append_graph_store(
                 None,
                 store_path,

@@ -168,7 +168,7 @@ def test_community_strength(spark):
 
 
 def test_extract_edges_hashed_equivalence(spark):
-    """extract_edges_hashed must equal extract_edges followed by
+    """extract_edges with a hash_fn must equal extract_edges followed by
     xxhash64 on both endpoints — same multiset, weights included."""
     pubs = _pubs(spark)
     via_strings = sorted(
@@ -183,8 +183,111 @@ def test_extract_edges_hashed_equivalence(spark):
             .collect(),
         )
     )
-    direct = sorted(map(tuple, comm.extract_edges_hashed(pubs).collect()))
+    direct = sorted(
+        map(tuple, comm.extract_edges(pubs, hash_fn=F.xxhash64).collect())
+    )
     assert direct == via_strings
+
+
+def _edges_py(rows):
+    """The reference's edge ``flatMap`` (``ScipiBatchCommunity.java:
+    411-462``) over (title, publisher, venue, authors, ...) rows."""
+    out = []
+    for title, publisher, venue, authors, *_ in rows:
+        out += [(title, x, 1.0) for x in (publisher, venue) if x]
+        a = authors or []
+        for i, ai in enumerate(a):
+            if i == 0 or i < len(a) - 1:
+                out.append((ai, title, 1.0))
+            out += [(ai, aj, 1.0) for aj in a[i + 1:]]
+    return out
+
+
+def _vertices_py(rows):
+    """The reference's vertex ``flatMap`` (``ScipiBatchCommunity.java:
+    371-407``), deduped on id with the min type."""
+    out = {}
+    for title, publisher, venue, authors, *_ in rows:
+        named = [(title, "PAPER"), (publisher, "PUBLISHER"), (venue, "VENUE")]
+        named += [(a, "AUTHOR") for a in authors or []]
+        for vid, vtype in named:
+            if vid:
+                out[vid] = min(out.get(vid, vtype), vtype)
+    return set(out.items())
+
+
+def test_extract_missing_fields_match_reference(spark):
+    """NULL or empty authors, a one-author paper, and '' or NULL
+    publisher/venue: the names path, the hashed path and the vertices
+    follow the reference flatMaps, and a NULL author list keeps its
+    publisher and venue edges on the hashed path too."""
+    rows = [
+        ("m1", "acm", "kdd", None, [], []),
+        ("m2", "ieee", "", [], [], []),
+        ("m3", "", None, ["b1"], [], []),
+        ("m4", None, "vldb", ["b1", "b2", "b3"], [], []),
+        ("m5", "", "", ["b2", "b4"], [], []),
+    ]
+    pubs = spark.createDataFrame(rows, PUB_SCHEMA)
+    multiset = lambda df: sorted(map(tuple, df.collect()))
+    names = comm.extract_edges(pubs)
+    assert multiset(names) == sorted(_edges_py(rows))
+    hashed = comm.extract_edges(pubs, hash_fn=F.xxhash64)
+    assert multiset(hashed) == multiset(
+        names.select(
+            F.xxhash64("src").alias("src"),
+            F.xxhash64("dst").alias("dst"),
+            "weight",
+        )
+    )
+    assert {
+        tuple(r) for r in comm.extract_vertices(pubs).collect()
+    } == _vertices_py(rows)
+
+
+def _mirrored_py(edges):
+    """Mirrored (src, dst, w_sum, w_max) reference: one row per self-loop
+    with each weight counted twice, both directions for any other pair."""
+    agg = {}
+    for s, d, w in edges:
+        key = (min(s, d), max(s, d))
+        w_sum, w_max = agg.get(key, (0.0, w))
+        agg[key] = (w_sum + (2 * w if s == d else w), max(w_max, w))
+    out = []
+    for (a, b), (w_sum, w_max) in agg.items():
+        out.append((a, b, w_sum, w_max))
+        if a != b:
+            out.append((b, a, w_sum, w_max))
+    return sorted(out)
+
+
+def test_aggregate_undirected_self_loops(spark):
+    """Self-loops, reversed duplicates and parallel edges of different
+    weights, with string endpoints (hashed by the aggregate) and with
+    long endpoints (taken as already hashed)."""
+    edges = [
+        ("x", "x", 1.0), ("x", "x", 2.5), ("x", "y", 1.0), ("y", "x", 2.0),
+        ("x", "y", 0.5), ("y", "z", 1.0), ("z", "z", 0.5), ("z", "y", 3.0),
+    ]
+    names = spark.createDataFrame(edges, "src string, dst string, weight double")
+    h = {
+        r["v"]: r["h"]
+        for r in spark.createDataFrame([("x",), ("y",), ("z",)], "v string")
+        .select("v", F.xxhash64("v").alias("h"))
+        .collect()
+    }
+    want = _mirrored_py([(h[s], h[d], w) for s, d, w in edges])
+    got = sorted(map(tuple, comm.aggregate_undirected(names).collect()))
+    assert got == want
+
+    ids = {"x": 1, "y": 2, "z": 3}
+    longs = spark.createDataFrame(
+        [(ids[s], ids[d], w) for s, d, w in edges],
+        "src long, dst long, weight double",
+    )
+    got = sorted(map(tuple, comm.aggregate_undirected(longs).collect()))
+    assert got == _mirrored_py([(ids[s], ids[d], w) for s, d, w in edges])
+    assert (1, 1, 7.0, 2.5) in got and (3, 3, 1.0, 0.5) in got
 
 
 def test_lpa_endpoint_seed_matches_vertex_seed(spark):
@@ -196,7 +299,7 @@ def test_lpa_endpoint_seed_matches_vertex_seed(spark):
     edges = comm.extract_edges(pubs)
     named = comm.community_detection(vertices, edges, iterations=3, delta=0.5)
     mirrored = (
-        comm.aggregate_undirected_hashed(comm.extract_edges_hashed(pubs))
+        comm.aggregate_undirected(comm.extract_edges(pubs, hash_fn=F.xxhash64))
         .repartition(2, F.col("src"))
         .persist()
     )
@@ -242,7 +345,7 @@ def test_graph_store_lpa_matches_direct(spark, tmp_path):
             spark, table="t_graph_store", iterations=3, delta=0.5
         )
         mirrored = (
-            comm.aggregate_undirected_hashed(comm.extract_edges_hashed(pubs))
+            comm.aggregate_undirected(comm.extract_edges(pubs, hash_fn=F.xxhash64))
             .repartition(2, F.col("src"))
             .persist()
         )
@@ -585,7 +688,7 @@ def test_lpa_superstep_reads_edges_in_place(spark, tmp_path):
     on ``id``)."""
     pubs = _pubs(spark)
     mirrored = (
-        comm.aggregate_undirected_hashed(comm.extract_edges_hashed(pubs))
+        comm.aggregate_undirected(comm.extract_edges(pubs, hash_fn=F.xxhash64))
         .repartition(F.col("src"))
         .persist()
     )

@@ -10,7 +10,7 @@ import re
 
 from pyspark.sql import functions as F
 
-from tests.oracle import formatted_plan
+from tests.oracle import executed_plan, formatted_plan
 
 SF = "/root/testdata/sf0.001"
 
@@ -525,3 +525,31 @@ def test_scd2_apply_semantics(spark):
         (2, 50): ("bronze", None, True),    # no-op left open
         (3, 500): ("new", None, True),      # insert
     }
+
+
+def test_graph_relations_read_their_input_once(spark, tmp_path):
+    from scipi_spark.operators import community as comm
+
+    spark.createDataFrame(
+        [
+            ("p1", "acm", "kdd", ["a1", "a2", "a3"]),
+            ("p2", None, "kdd", ["a2"]),
+            ("p3", "acm", "", None),
+        ],
+        "title string, publisher string, venue string, authors array<string>",
+    ).write.parquet(str(tmp_path / "pubs"))
+    pubs = spark.read.parquet(str(tmp_path / "pubs"))
+    # vertices and edges: one inline per publication, one scan each
+    for rel in (comm.extract_vertices(pubs), comm.extract_edges(pubs)):
+        rel.collect()
+        plan = executed_plan(rel)
+        assert _count(plan, r"\bFileScan\b") == 1, plan
+        assert _count(plan, r"\bUnion\b") == 0, plan
+    # the mirrored relation: one aggregate (one Exchange), mirrored by a
+    # narrow inline, no self-loop branch
+    mirrored = comm.aggregate_undirected(comm.extract_edges(pubs))
+    mirrored.collect()
+    plan = executed_plan(mirrored)
+    assert _count(plan, r"\bFileScan\b") == 1, plan
+    assert _count(plan, r"\bExchange\b") == 1, plan
+    assert _count(plan, r"\bUnion\b") == 0, plan

@@ -864,8 +864,8 @@ def _graph_case(spark, tmp_path):
         )
 
     def mirrored(df):
-        return community.aggregate_undirected_hashed(
-            community.extract_edges_hashed(df)
+        return community.aggregate_undirected(
+            community.extract_edges(df, hash_fn=F.xxhash64)
         )
 
     corpus, b1, b2 = pubs(recs[:30]), pubs(recs[30:45]), pubs(recs[45:])
