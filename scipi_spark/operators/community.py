@@ -94,6 +94,10 @@ def _named(*cols: str):
     return F.filter(F.array(*cols), lambda x: x.isNotNull() & (x != ""))
 
 
+#: vertex type names in sort order: a lower index is a smaller name
+_VTYPES = ("AUTHOR", "PAPER", "PUBLISHER", "VENUE")
+
+
 def extract_vertices(pubs: DataFrame) -> DataFrame:
     """(id, vtype) union of PAPER/PUBLISHER/VENUE/AUTHOR vertices
     (``ScipiBatchCommunity.java:371-407``), deduped on id.
@@ -102,10 +106,12 @@ def extract_vertices(pubs: DataFrame) -> DataFrame:
     [venue]? ++ authors``, so the input is read once. The reference's
     ``distinct(0)`` keeps an arbitrary type on name collision; here the
     MIN type wins — deterministic, and identical whenever names don't
-    collide across types."""
+    collide across types. The min is taken over the type's index in the
+    sorted ``_VTYPES`` and mapped back to the name, so the dedup is a
+    hash aggregate (a string min would plan as a sort aggregate)."""
 
     def vertex(c, vtype):
-        return F.struct(c.alias("id"), F.lit(vtype).alias("vtype"))
+        return F.struct(c.alias("id"), F.lit(_VTYPES.index(vtype)).alias("code"))
 
     rows = F.concat(
         F.array(vertex(F.col("title"), "PAPER")),
@@ -115,10 +121,12 @@ def extract_vertices(pubs: DataFrame) -> DataFrame:
             F.coalesce("authors", F.array()), lambda a: vertex(a, "AUTHOR")
         ),
     )
+    names = F.array(*[F.lit(t) for t in _VTYPES])
     return (
         pubs.select(F.inline(rows))
         .groupBy("id")
-        .agg(F.min("vtype").alias("vtype"))
+        .agg(F.min("code").alias("code"))
+        .select("id", F.element_at(names, F.col("code") + 1).alias("vtype"))
     )
 
 

@@ -19,8 +19,10 @@ Scale design (the point of each):
   distance, blocked on 16-bit chunks (pigeonhole: distance<=3 pairs must
   collide on >=1 of 4 chunks).
 
-Everything is built-in Column expressions (murmur3 ``F.hash`` with per-
-permutation seeds); no Python UDFs anywhere on the hot path.
+Everything is built-in Column expressions; no Python UDFs anywhere on
+the hot path. A MinHash signature is one xxhash64 base hash per shingle
+put through ``num_perm`` 2-universal permutations mod 2^31-1; murmur3
+(``F.hash``) hashes only the LSH bands.
 """
 
 from __future__ import annotations
@@ -94,45 +96,44 @@ def _shingle_index(
     text_col: str,
     k: int,
     max_doc_freq: int | None,
-    hash_ids: bool = True,
-    materialize: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """(doc shingle-set sizes, exploded shingle postings) — postings
     optionally truncated at a document-frequency cap.
 
-    ``hash_ids`` replaces each shingle string with its 64-bit xxhash64 —
-    set identity, not content, is all the downstream joins/aggregations
+    Each shingle string is replaced by its 64-bit xxhash64 — set
+    identity, not content, is all the downstream joins/aggregations
     need, and fixed-width longs shuffle and hash-join far cheaper than
     k-word strings. A collision (which would slightly overcount one
     pair's intersection) needs ~2^32 DISTINCT shingles by the birthday
-    bound — at that corpus size flip to ``hash_ids=False`` or a 128-bit
-    hash.
+    bound — at that corpus size switch to a 128-bit hash.
 
-    ``materialize=True`` localCheckpoints the (pre-explode) per-doc
-    shingle ARRAYS once; postings explode narrowly from the checkpoint
-    per consumer and sizes are a pure ``size()`` projection of it.
-    Every downstream consumer then replays a cheap in-memory explode
-    instead of the scan+shingle chain: _jaccard_verify alone consumes
-    postings twice and sizes twice, which un-materialized means FOUR
-    shingle computations per call. (r12: previously the EXPLODED
-    postings were checkpointed and sizes re-AGGREGATED from them with a
-    groupBy(doc) — a full shuffle+hash-agg over every posting row per
-    consumer chain that the array form gets for free as ``size()``;
-    measured 18.5 task-s / 10.4 cpu-s for that aggregation alone on the
-    sf0.1 ngram entry. The array checkpoint also unifies the
-    empty-shingle-set semantics with ``materialize=False``: a doc with
-    no shingles now has an (doc, 0) sizes row in BOTH modes — still
-    invisible to every consumer, which are all inner joins on docs that
-    appear in postings/candidates, and empty sets can't pair.)"""
-    grams = word_shingles(text_col, k)
-    if hash_ids:
-        # hash INSIDE the array, before the explode: the explode then
-        # materializes fixed-width longs instead of k-word strings
-        # (measured ~25% off the shingle-index segment at sf0.1)
-        grams = F.transform(grams, lambda x: F.xxhash64(x))
-    sh = _spread(df).select(F.col(id_col).alias("doc"), grams.alias("shingles"))
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
+    The (pre-explode) per-doc shingle ARRAYS are localCheckpointed
+    once; postings explode narrowly from the checkpoint per consumer
+    and sizes are a pure ``size()`` projection of it. Every downstream
+    consumer then replays a cheap in-memory explode instead of the
+    scan+shingle chain: _jaccard_verify alone consumes postings twice
+    and sizes twice, which un-materialized means FOUR shingle
+    computations per call. Checkpointing the arrays rather than the
+    exploded postings spares each consumer a groupBy(doc) for the sizes
+    (measured 18.5 task-s / 10.4 cpu-s for that aggregation alone on the
+    sf0.1 ngram entry). A doc with no shingles has a (doc, 0) sizes
+    row — invisible to every consumer, which are all inner joins on docs
+    that appear in postings/candidates, and empty sets can't pair.
+
+    Once the arrays are checkpointed the spread copy of the input is
+    released: nothing reads it again, and a streaming sink calling this
+    per micro-batch would otherwise keep one cached copy of every batch
+    in the session."""
+    # hash INSIDE the array, before the explode: the explode then
+    # materializes fixed-width longs instead of k-word strings
+    # (measured ~25% off the shingle-index segment at sf0.1)
+    grams = F.transform(word_shingles(text_col, k), lambda x: F.xxhash64(x))
+    spread = _spread(df)
+    sh = spread.select(
+        F.col(id_col).alias("doc"), grams.alias("shingles")
+    ).localCheckpoint(eager=True)
+    if spread is not df:
+        spread.unpersist()
     postings = sh.select("doc", F.explode("shingles").alias("sh"))
     sizes = sh.select("doc", F.size("shingles").cast("long").alias("n_sh"))
     if max_doc_freq is not None:
@@ -160,12 +161,10 @@ def ngram_jaccard_pairs(
     that many documents before pairing — at corpus scale the exact variant
     is reserved for candidate verification, not all-pairs discovery.
     """
-    # materialized: the self-join reads postings twice and the size join
-    # reads sizes twice — without the checkpoint the shingle chain would
-    # execute four times (measured ~2x end-to-end on the bench entry)
-    sizes, postings = _shingle_index(
-        df, id_col, text_col, k, max_doc_freq, materialize=True
-    )
+    # the self-join reads postings twice and the size join reads sizes
+    # twice — the index's checkpoint keeps the shingle chain from
+    # executing four times (measured ~2x end-to-end on the bench entry)
+    sizes, postings = _shingle_index(df, id_col, text_col, k, max_doc_freq)
     a = postings.alias("a")
     b = postings.alias("b")
     inter = (
@@ -212,9 +211,7 @@ def containment_pairs(
     the 64-bit shingle hash] and one size join back. Output rows are
     (contained, container); at corpus scale the ``max_doc_freq`` posting
     cap bounds the self-join exactly as in the Jaccard variant."""
-    sizes, postings = _shingle_index(
-        df, id_col, text_col, k, max_doc_freq, materialize=True
-    )
+    sizes, postings = _shingle_index(df, id_col, text_col, k, max_doc_freq)
     a = postings.alias("a")
     b = postings.alias("b")
     inter = (
@@ -479,10 +476,6 @@ def winnow_overlap_pairs(
     )
 
 
-# ---------------------------------------------------------------------------
-# MinHash + LSH
-# ---------------------------------------------------------------------------
-
 def duplicate_substring_spans(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -571,33 +564,17 @@ def duplicate_substring_spans(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    num_perm: int = 64,
-) -> DataFrame:
-    """(doc, sig: array<int>) — per-permutation minimum of seeded murmur3
-    over the doc's word-k-shingles. One explode + one groupBy with num_perm
-    min() aggregates: a single shuffle of (doc, shingle) pairs."""
-    # One base hash per shingle, then num_perm 2-universal permutations
-    # h_j = (a_j*h0 + b_j) mod p over the Mersenne prime p = 2^31-1 —
-    # ~64x fewer string hashes than hashing a seeded concat per
-    # permutation, and products stay under 2^62 (no ANSI overflow).
+# ---------------------------------------------------------------------------
+# MinHash + LSH
+# ---------------------------------------------------------------------------
+
+def _minhash_coeffs(num_perm: int) -> tuple[list[tuple[int, int]], int]:
+    """Fixed-seed 2-universal permutation coefficients over the Mersenne
+    prime 2^31-1 — fixed so signatures computed today match a store
+    written yesterday."""
     p = 2_147_483_647
     rng = random.Random(1_000_003)
-    coeffs = [(rng.randrange(1, p), rng.randrange(0, p)) for _ in range(num_perm)]
-    postings = _spread(df).select(
-        F.col(id_col).alias("doc"),
-        F.explode(
-            F.transform(
-                word_shingles(text_col, k),
-                lambda x: F.pmod(F.xxhash64(x), F.lit(p)),
-            )
-        ).alias("h0"),
-    )
-    return _signatures_from_postings(postings, coeffs, p)
+    return [(rng.randrange(1, p), rng.randrange(0, p)) for _ in range(num_perm)], p
 
 
 def _signatures_from_postings(
@@ -617,22 +594,11 @@ def _signatures_from_postings(
     )
 
 
-def _minhash_coeffs(num_perm: int) -> tuple[list[tuple[int, int]], int]:
-    """Fixed-seed 2-universal permutation coefficients over the Mersenne
-    prime 2^31-1 — shared by every minhash entry point so signatures
-    computed today match a store written yesterday."""
-    p = 2_147_483_647
-    rng = random.Random(1_000_003)
-    return [(rng.randrange(1, p), rng.randrange(0, p)) for _ in range(num_perm)], p
-
-
-def _band_rows(sigs: DataFrame, bands: int, r: int, extra: list[str] | None = None) -> DataFrame:
-    """(doc[, extra...], band, bh): one murmur3 hash per r-row signature
-    band, exploded — the LSH bucket keys."""
-    extra = extra or []
+def _band_rows(sigs: DataFrame, bands: int, r: int) -> DataFrame:
+    """(doc, band, bh): one murmur3 hash per r-row signature band,
+    exploded — the LSH bucket keys."""
     return sigs.select(
         "doc",
-        *extra,
         F.explode(
             F.array(
                 *[
@@ -646,7 +612,46 @@ def _band_rows(sigs: DataFrame, bands: int, r: int, extra: list[str] | None = No
                 ]
             )
         ).alias("b"),
-    ).select("doc", *extra, F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
+    ).select("doc", F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
+
+
+def _lsh_band_rows(postings: DataFrame, num_perm: int, bands: int) -> DataFrame:
+    """(doc, band, bh) from (doc, sh) hashed-shingle postings — the one
+    step from postings to LSH bucket keys. Every shingle's xxhash64 is
+    reduced mod 2^31-1, put through the fixed-seed permutations
+    (:func:`_minhash_coeffs`), minimized per doc, and each r-row band of
+    the signature is murmur3-hashed. Lazy: a caller that reads the rows
+    more than once checkpoints them."""
+    if num_perm % bands:
+        raise ValueError(f"num_perm={num_perm} is not a multiple of bands={bands}")
+    coeffs, p = _minhash_coeffs(num_perm)
+    # reduced mod p first, so a*h0 + b stays under 2^62 (no ANSI overflow)
+    sigs = _signatures_from_postings(
+        postings.select("doc", F.pmod(F.col("sh"), F.lit(p)).alias("h0")),
+        coeffs,
+        p,
+    )
+    return _band_rows(sigs, bands, num_perm // bands)
+
+
+def batch_lsh_state(
+    batch: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 3,
+    num_perm: int = 64,
+    bands: int = 16,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(sizes, postings, band_rows) for a set of documents — the one
+    kernel from text to MinHash-LSH state, behind every pair search,
+    store build, probe and append. The shingle arrays are checkpointed
+    (:func:`_shingle_index`), so sizes and postings feed any number of
+    consumers without replaying the text scan. ``band_rows`` is a plan
+    over those postings (one signature aggregation); a caller that reads
+    it twice — a self-join, or a probe followed by an append —
+    localCheckpoints it first."""
+    sizes, postings = _shingle_index(batch, id_col, text_col, k, None)
+    return sizes, postings, _lsh_band_rows(postings, num_perm, bands)
 
 
 def _jaccard_verify(
@@ -686,7 +691,6 @@ def minhash_lsh_pairs(
     num_perm: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
-    verify: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs via banded MinHash-LSH, verified with exact
     Jaccard (precision exact, recall ~ 1-(1-s^r)^b).
@@ -698,24 +702,11 @@ def minhash_lsh_pairs(
     hashes → equi-join on (band, hash) → distinct candidate pairs →
     exact-Jaccard verification restricted to candidates.
     """
-    assert num_perm % bands == 0
-    r = num_perm // bands
-    coeffs, p = _minhash_coeffs(num_perm)
-    # materialized: the signature agg, the verify self-join (2x) and the
-    # size join (2x) all read the one checkpointed postings table (at
-    # real scale: a parquet temp or .persist — localCheckpoint keeps the
-    # local path allocation-cheap)
-    sizes, postings = _shingle_index(
-        df, id_col, text_col, k, None, materialize=verify
+    sizes, postings, band_rows = batch_lsh_state(
+        df, id_col, text_col, k, num_perm, bands
     )
-    sigs = _signatures_from_postings(
-        postings.select("doc", F.pmod(F.col("sh"), F.lit(p)).alias("h0")),
-        coeffs,
-        p,
-    )
-    # materialize: the candidate self-join reads band_rows on both sides
-    band_rows = _band_rows(sigs, bands, r).localCheckpoint(eager=True)
-
+    # the candidate self-join reads band_rows on both sides
+    band_rows = band_rows.localCheckpoint(eager=True)
     a = band_rows.alias("a")
     b = band_rows.alias("b")
     candidates = (
@@ -728,9 +719,6 @@ def minhash_lsh_pairs(
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .distinct()
     )
-    if not verify:
-        return candidates
-
     # verify with exact jaccard over the SAME postings the signatures
     # were built from (hashed shingle ids preserve set identity)
     return _jaccard_verify(candidates, postings, sizes, threshold)
@@ -875,36 +863,23 @@ def minhash_lsh_increment(
     anti-join broadcasts only the batch's ids (an increment is small by
     contract), so the corpus side stays narrow: no corpus shuffle.
     """
-    assert num_perm % bands == 0
-    r = num_perm // bands
-    coeffs, p = _minhash_coeffs(num_perm)
-
     batch_ids = batch.select(F.col(id_col)).distinct()
     corpus_only = corpus.join(F.broadcast(batch_ids), id_col, "left_anti")
     tagged = corpus_only.select(id_col, text_col).unionByName(
         batch.select(id_col, text_col)
     )
-    sizes, postings = _shingle_index(
-        tagged, id_col, text_col, k, None, materialize=True
+    sizes, postings, band_rows = batch_lsh_state(
+        tagged, id_col, text_col, k, num_perm, bands
     )
-    sigs = _signatures_from_postings(
-        postings.select("doc", F.pmod(F.col("sh"), F.lit(p)).alias("h0")),
-        coeffs,
-        p,
-    )
-    # derive the new/old flag from the batch ids alone (broadcast left
-    # join + coalesce) instead of joining a projection of `tagged` back —
-    # `tagged` now feeds exactly one consumer (_shingle_index), so the
-    # corpus+batch base scan executes once, not twice.
-    flags = batch_ids.select(F.col(id_col).alias("doc"), F.lit(True).alias("is_new"))
-    flagged = sigs.join(F.broadcast(flags), "doc", "left").withColumn(
-        "is_new", F.coalesce(F.col("is_new"), F.lit(False))
-    )
-    band_rows = _band_rows(flagged, bands, r, extra=["is_new"])
+    # read as the probe side and as the index side
     band_rows = band_rows.localCheckpoint(eager=True)
-
+    # the probe side is picked by the batch ids alone (broadcast semi
+    # join) instead of joining a projection of `tagged` back — `tagged`
+    # feeds exactly one consumer, so the corpus+batch base scan executes
+    # once, not twice
+    new_ids = F.broadcast(batch_ids.select(F.col(id_col).alias("doc")))
     candidates = _probe_candidates(
-        band_rows.filter(F.col("is_new")), band_rows
+        band_rows.join(new_ids, "doc", "left_semi"), band_rows
     )
     return _jaccard_verify(candidates, postings, sizes, threshold)
 
@@ -961,33 +936,20 @@ def cross_corpus_neardup(
     and its band rows broadcast; the corpus side shuffles once on the
     64-bit shingle hash and once on (band, bh).
     """
-    assert num_perm % bands == 0
-    r = num_perm // bands
-    coeffs, p = _minhash_coeffs(num_perm)
-
     tagged = left.select(id_col, text_col).unionByName(
         right.select(id_col, text_col)
     )
-    sizes, postings = _shingle_index(
-        tagged, id_col, text_col, k, None, materialize=True
+    sizes, postings, band_rows = batch_lsh_state(
+        tagged, id_col, text_col, k, num_perm, bands
     )
-    sigs = _signatures_from_postings(
-        postings.select("doc", F.pmod(F.col("sh"), F.lit(p)).alias("h0")),
-        coeffs,
-        p,
-    )
-    # derive the side flag from the right input's ids alone (broadcast
-    # left join + coalesce) — joining a projection of `tagged` back would
+    # read as the left side and as the right side
+    band_rows = band_rows.localCheckpoint(eager=True)
+    # the sides are split by the right input's ids alone (broadcast
+    # semi/anti joins) — joining a projection of `tagged` back would
     # re-execute the union scan a second time
-    right_ids = right.select(F.col(id_col).alias("doc"), F.lit(1).alias("side"))
-    flagged = sigs.join(F.broadcast(right_ids), "doc", "left").withColumn(
-        "side", F.coalesce(F.col("side"), F.lit(0))
-    )
-    band_rows = _band_rows(flagged, bands, r, extra=["side"]).localCheckpoint(
-        eager=True
-    )
-    lb = band_rows.filter(F.col("side") == 0).alias("a")
-    rb = band_rows.filter(F.col("side") == 1).alias("b")
+    right_ids = F.broadcast(right.select(F.col(id_col).alias("doc")))
+    lb = band_rows.join(right_ids, "doc", "left_anti").alias("a")
+    rb = band_rows.join(right_ids, "doc", "left_semi").alias("b")
     candidates = (
         lb.join(
             rb,
@@ -1040,34 +1002,32 @@ def write_signature_store(
     all three artifacts stage in a private build dir and go live only
     when the CURRENT pointer flips, so a probe concurrent with a rebuild
     reads the old or the new COMPLETE store — never 0 rows."""
-    assert num_perm % bands == 0
-    r = num_perm // bands
     params = {"k": k, "num_perm": num_perm, "bands": bands,
               "n_buckets": n_buckets}
-    coeffs, p = _minhash_coeffs(num_perm)
-    spark = df.sparkSession
-    root = path.rstrip("/")
-    build = storectl.new_build_dir(root)
-    # materialized: both parquet writes drain the one checkpointed table
-    # instead of each replaying the scan+shingle+explode chain
-    sizes, postings = _shingle_index(
-        df, id_col, text_col, k, None, materialize=True
+    _publish_sig_store(
+        df.sparkSession, path.rstrip("/"), table,
+        batch_lsh_state(df, id_col, text_col, k, num_perm, bands),
+        n_buckets, build_key, keep, retain_s, params,
     )
+
+
+def _publish_sig_store(
+    spark, root: str, table: str,
+    state: tuple[DataFrame, DataFrame, DataFrame],
+    n_buckets: int, build_key: str, keep: int, retain_s: float,
+    params: dict | None,
+) -> None:
+    """The tail of a full (re)build: write postings, sizes and the band
+    rows bucketed and sorted on (band, bh) into a private build dir,
+    publish it as the live version, and register the bucketed table.
+    The postings must be checkpointed, so the three writes never
+    replay the work that produced them."""
+    sizes, postings, band_rows = state
+    build = storectl.new_build_dir(root)
     postings.write.mode("overwrite").parquet(build + "/postings")
     sizes.write.mode("overwrite").parquet(build + "/sizes")
-    # signatures from the COMPACT stored postings, not the raw text scan
-    stored = spark.read.parquet(build + "/postings")
-    sigs = _signatures_from_postings(
-        stored.select("doc", F.pmod(F.col("sh"), F.lit(p)).alias("h0")),
-        coeffs,
-        p,
-    )
     storectl.write_bucketed(
-        _band_rows(sigs, bands, r),
-        build + "/bands",
-        ["band", "bh"],
-        ["band", "bh"],
-        n_buckets,
+        band_rows, build + "/bands", ["band", "bh"], ["band", "bh"], n_buckets
     )
     ver = storectl.publish(
         root, build, build_key, keep=keep, retain_s=retain_s, params=params
@@ -1105,36 +1065,6 @@ def _resolve_sig_params(
     p = storectl.resolve_params(stored, requested, _SIG_DEFAULTS)
     persist = storectl.persistable_params(stored, requested, p)
     return p["k"], p["num_perm"], p["bands"], p["n_buckets"], persist
-
-
-def batch_lsh_state(
-    batch: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    num_perm: int = 64,
-    bands: int = 16,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(sizes, postings, band_rows) for a batch — the complete LSH state
-    the store probe AND the store append both need. Computed once here
-    so a caller doing both (the streaming dedup sink) shingles, hashes,
-    and bands the batch a single time instead of twice; postings are
-    materialized (localCheckpoint), band_rows are materialized, and both
-    returned handles can feed any number of downstream consumers without
-    replaying the text scan."""
-    assert num_perm % bands == 0
-    r = num_perm // bands
-    coeffs, p = _minhash_coeffs(num_perm)
-    sizes, postings = _shingle_index(
-        batch, id_col, text_col, k, None, materialize=True
-    )
-    sigs = _signatures_from_postings(
-        postings.select("doc", F.pmod(F.col("sh"), F.lit(p)).alias("h0")),
-        coeffs,
-        p,
-    )
-    band_rows = _band_rows(sigs, bands, r).localCheckpoint(eager=True)
-    return sizes, postings, band_rows
 
 
 def append_signature_store(
@@ -1251,47 +1181,28 @@ def compact_signature_store(
     store's version marker (explicit mismatches raise) — recompacting
     under different coefficients would orphan every probe."""
     root = path.rstrip("/")
-    k, num_perm, bands, n_buckets, persist = _resolve_sig_params(
-        root, None, num_perm, bands, n_buckets
-    )
-    assert num_perm % bands == 0
-    r = num_perm // bands
-    coeffs, p = _minhash_coeffs(num_perm)
     cur = storectl.current_dir(root)
     if cur is None:
         raise FileNotFoundError(f"no published signature store under {root!r}")
+    # recipe and postings from the SAME version
+    _k, num_perm, bands, n_buckets, persist = _resolve_sig_params(
+        root, None, num_perm, bands, n_buckets, stored=storectl.params_of(cur)
+    )
     postings = (
         spark.read.parquet(cur + "/postings")
         .distinct()
         .localCheckpoint(eager=True)
     )
-    build = storectl.new_build_dir(root)
-    postings.write.mode("overwrite").parquet(build + "/postings")
     sizes = postings.groupBy("doc").agg(
         F.count(F.lit(1)).cast("long").alias("n_sh")
-    )
-    sizes.write.mode("overwrite").parquet(build + "/sizes")
-    sigs = _signatures_from_postings(
-        postings.select("doc", F.pmod(F.col("sh"), F.lit(p)).alias("h0")),
-        coeffs,
-        p,
-    )
-    storectl.write_bucketed(
-        _band_rows(sigs, bands, r),
-        build + "/bands",
-        ["band", "bh"],
-        ["band", "bh"],
-        n_buckets,
     )
     if build_key is None:
         meta = storectl.current_meta(root) or {}
         build_key = meta.get("build_key", "sig-v1")
-    ver = storectl.publish(
-        root, build, build_key, keep=keep, retain_s=retain_s,
-        params=persist,
-    )
-    storectl.register_bucketed(
-        spark, table, ver + "/bands", ["band", "bh"], ["band", "bh"], n_buckets
+    _publish_sig_store(
+        spark, root, table,
+        (sizes, postings, _lsh_band_rows(postings, num_perm, bands)),
+        n_buckets, build_key, keep, retain_s, persist,
     )
 
 
@@ -1329,7 +1240,6 @@ def minhash_lsh_increment_from_store(
     k, num_perm, bands, n_buckets, _persist = _resolve_sig_params(
         root, k, num_perm, bands, n_buckets, stored=storectl.params_of(ver)
     )
-    assert num_perm % bands == 0
     storectl.register_bucketed(
         spark, table, ver + "/bands", ["band", "bh"], ["band", "bh"], n_buckets
     )
@@ -1338,10 +1248,13 @@ def minhash_lsh_increment_from_store(
     corpus_sizes = spark.read.parquet(ver + "/sizes")
 
     if batch_state is None:
-        batch_state = batch_lsh_state(
+        b_sizes, b_postings, b_bands = batch_lsh_state(
             batch, id_col, text_col, k, num_perm, bands
         )
-    b_sizes, b_postings, b_bands = batch_state
+        # read by both probe joins below
+        b_bands = b_bands.localCheckpoint(eager=True)
+    else:
+        b_sizes, b_postings, b_bands = batch_state
 
     # TWO probe joins, not one join against a union — a union of the
     # bucketed table with anything loses its bucketing and would shuffle

@@ -329,9 +329,11 @@ def run_streaming_dedup_against_store(
         bk, bnum_perm, bbands, _nb, _persist = dedup_ops._resolve_sig_params(
             store_path.rstrip("/"), k, num_perm, bands, n_buckets
         )
-        state = dedup_ops.batch_lsh_state(
+        sizes, postings, band_rows = dedup_ops.batch_lsh_state(
             batch_df, id_col, text_col, bk, bnum_perm, bbands
         )
+        # the band rows are read by the probe and again by the append
+        state = (sizes, postings, band_rows.localCheckpoint(eager=True))
         emit(
             dedup_ops.minhash_lsh_increment_from_store(
                 batch_df.sparkSession, store_path, batch_df,
@@ -548,19 +550,12 @@ def run_streaming_graph_store_fold(
                 n_buckets=n_buckets,
                 fold=stamp,
             )
-        else:
-            # replay of an already-folded batch (possibly in a FRESH
-            # session where the append never registered the table):
-            # register the live version explicitly before summarizing
-            ver = storectl.current_dir(store_path.rstrip("/"))
-            nb = (storectl.params_of(ver) or {}).get(
-                "n_buckets", n_buckets or 16
-            )
-            storectl.register_bucketed(
-                spark, table, ver + "/edges", ["src"], ["src"], nb
-            )
+        # the live version, registered here: a replay of an already-folded
+        # batch may run in a FRESH session where no append registered it
         emit(
-            community_ops.merge_delta_edges(spark.table(table)).agg(
+            community_ops._open_graph_store(
+                spark, store_path, table, n_buckets
+            ).agg(
                 F.count(F.lit(1)).cast("long").alias("n_pairs"),
                 F.sum("w_sum").alias("total_weight"),
             )

@@ -540,11 +540,16 @@ def test_graph_relations_read_their_input_once(spark, tmp_path):
     ).write.parquet(str(tmp_path / "pubs"))
     pubs = spark.read.parquet(str(tmp_path / "pubs"))
     # vertices and edges: one inline per publication, one scan each
-    for rel in (comm.extract_vertices(pubs), comm.extract_edges(pubs)):
+    vertices = comm.extract_vertices(pubs)
+    for rel in (vertices, comm.extract_edges(pubs)):
         rel.collect()
         plan = executed_plan(rel)
         assert _count(plan, r"\bFileScan\b") == 1, plan
         assert _count(plan, r"\bUnion\b") == 0, plan
+    # the vertex dedup is a hash aggregate: no SortAggregate, no Sort
+    plan = executed_plan(vertices)
+    assert _count(plan, r"\bSortAggregate\b") == 0, plan
+    assert _count(plan, r"\bSort\b") == 0, plan
     # the mirrored relation: one aggregate (one Exchange), mirrored by a
     # narrow inline, no self-loop branch
     mirrored = comm.aggregate_undirected(comm.extract_edges(pubs))

@@ -424,13 +424,8 @@ def test_signature_store_probe_is_corpus_shuffle_free(spark, tmp_path):
         # broadcast size, so force the shuffled-join path the store is
         # designed for
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        coeffs, p = dedup._minhash_coeffs(64)
-        _, b_post = dedup._shingle_index(batch, "doc_id", "text", 3, None)
-        b_sigs = dedup._signatures_from_postings(
-            b_post.select("doc", F.pmod(F.col("sh"), F.lit(p)).alias("h0")),
-            coeffs, p,
-        )
-        b_bands = dedup._band_rows(b_sigs, 16, 4).localCheckpoint(eager=True)
+        _, _, b_bands = dedup.batch_lsh_state(batch)
+        b_bands = b_bands.localCheckpoint(eager=True)
         # plain-parquet copy of the same corpus index for the differential
         plain_path = str(tmp_path / "bands_plain")
         spark.table("sigstore_plan").write.mode("overwrite").parquet(plain_path)
@@ -450,6 +445,101 @@ def test_signature_store_probe_is_corpus_shuffle_free(spark, tmp_path):
     # only difference, and it must remove exactly the corpus-side shuffle
     assert "Bucketed: true" in plan_b
     assert n_bucketed == n_plain - 1, (n_bucketed, n_plain)
+
+
+def test_minhash_kernel_matches_golden_bits(spark, tmp_path):
+    """Postings, signatures and band hashes are pinned bit for bit
+    (tests/minhash_golden.json): a store written by an earlier build must
+    stay probe-compatible. The golden signatures are checked against a
+    pure-Python MinHash over the golden postings and their band hashes
+    against the golden bands; the kernel, a store build and a store
+    compaction must reproduce the postings and the bands."""
+    import json
+    import random
+    from pathlib import Path
+
+    import pytest
+
+    from scipi_spark.sources import storectl
+
+    g = json.loads((Path(__file__).parent / "minhash_golden.json").read_text())
+    docs = _docs(spark, [tuple(d) for d in g["docs"]])
+    want_postings = sorted(
+        (int(d), sh) for d, shs in g["postings"].items() for sh in shs
+    )
+    want_bands = sorted(
+        (int(d), b, bh) for d, bhs in g["bands"].items() for b, bh in enumerate(bhs)
+    )
+    # signatures: each shingle's xxhash64 mod 2^31-1 through 64 fixed-seed
+    # 2-universal permutations, minimized per doc
+    p = 2_147_483_647
+    rng = random.Random(1_000_003)
+    coeffs = [(rng.randrange(1, p), rng.randrange(0, p)) for _ in range(64)]
+    for d, shs in g["postings"].items():
+        if not shs:  # a doc with no shingles has no signature
+            assert d not in g["sigs"], d
+            continue
+        want = [min((a * (sh % p) + b) % p for sh in shs) for a, b in coeffs]
+        assert g["sigs"][d] == want, d
+    # bands: murmur3 over each 4-row slice of the signature
+    sigs = spark.createDataFrame(
+        [(int(d), sig) for d, sig in g["sigs"].items()], "doc long, sig array<long>"
+    )
+    hashed = sigs.select(
+        "doc",
+        F.posexplode(
+            F.array(
+                *[F.hash(*[F.col("sig")[4 * b + j] for j in range(4)]) for b in range(16)]
+            )
+        ),
+    )
+    assert sorted(map(tuple, hashed.collect())) == want_bands
+
+    sizes, postings, bands = dedup.batch_lsh_state(docs)
+    assert sorted(map(list, sizes.collect())) == g["sizes"]
+    with pytest.raises(ValueError):  # bands must divide num_perm
+        dedup.batch_lsh_state(docs, num_perm=64, bands=5)
+    assert sorted(map(tuple, postings.collect())) == want_postings
+    assert sorted(map(tuple, bands.collect())) == want_bands
+
+    root = str(tmp_path / "store")
+
+    def stored():
+        ver = storectl.current_dir(root)
+        return (
+            sorted(map(tuple, spark.read.parquet(ver + "/postings").collect())),
+            sorted(map(tuple, spark.table("sigstore_golden").collect())),
+        )
+
+    spark.sql("DROP TABLE IF EXISTS sigstore_golden")
+    dedup.write_signature_store(docs, root, table="sigstore_golden")
+    assert stored() == (want_postings, want_bands)
+    dedup.compact_signature_store(spark, root, table="sigstore_golden")
+    assert stored() == (want_postings, want_bands)
+    assert storectl.current_meta(root)["build_key"] == "sig-v1"
+
+
+def test_batch_lsh_state_releases_its_spread_copy(spark):
+    """The shingle index caches a spread copy of a narrow input only
+    until the shingle arrays are checkpointed: a streaming sink calling
+    batch_lsh_state per micro-batch must not leave a cached copy of every
+    batch in the session."""
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    target = spark.sparkContext.defaultParallelism
+    batches = [
+        docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 40))
+        for lo in (300, 340, 380)
+    ]
+    # the input is narrower than the session, so the index does spread it
+    assert batches[0].rdd.getNumPartitions() < target
+    for batch in batches:
+        dedup.batch_lsh_state(batch)
+    held = [
+        cache.lookupCachedData(b.repartition(target)._jdf).isDefined()
+        for b in batches
+    ]
+    assert held == [False] * len(batches)
 
 
 def test_bm25_store_matches_direct_search(spark, tmp_path):
