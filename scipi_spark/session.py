@@ -5,6 +5,9 @@ process may run on), with a driver heap sized to the host; the same
 configuration is designed to hold on a multi-executor cluster: AQE handles
 runtime coalescing and skew joins, shuffle partition count scales with
 parallelism, and broadcast thresholds keep dimension joins shuffle-free.
+PySpark's DataFrame call-site capture is off: an analysis error loses
+its Python call site, and building a plan makes 2.3x fewer JVM round
+trips.
 """
 
 from __future__ import annotations
@@ -60,6 +63,12 @@ def get_spark(
       DuckDB oracle (naive timestamps).
     - cores (when ``cpus`` is None) and the driver heap from
       :func:`host_sizing`; ``extra_conf`` may set ``spark.driver.memory``.
+    - ``spark.python.sql.dataFrameDebugging.enabled`` false: PySpark 4
+      otherwise records the Python call site on the JVM around every
+      Column function, about four extra round trips each. An analysis
+      error then names no Python line; plans are built with 2.3x fewer
+      round trips (42.4k to 18.3k over a ``graph_community`` pass).
+      ``extra_conf`` may turn it back on.
     - ``spark.executorEnv.PYTHONPATH`` starts with the directory that
       holds ``scipi_spark``, so a Python worker imports the package from
       any working directory; a value from ``extra_conf`` follows it.
@@ -95,6 +104,9 @@ def get_spark(
         # default; read as long and convert in sources.load_events
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+        # no Python call site in analysis errors, for 2.3x fewer py4j
+        # round trips while plans are built
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     extra = dict(extra_conf or {})
     worker_path = [_PACKAGE_PARENT, extra.pop(_WORKER_PATH, "")]

@@ -92,3 +92,11 @@ def test_get_spark_puts_the_package_on_the_worker_path(monkeypatch):
     # a caller's path is kept, after the package's
     conf = _conf(monkeypatch, extra_conf={key: "vendor/lib"})
     assert conf[key] == os.pathsep.join([parent, "vendor/lib"])
+
+
+def test_get_spark_turns_off_dataframe_call_site_capture(monkeypatch):
+    # PySpark 4 otherwise sends each Column function's Python call site
+    # to the JVM, about four extra round trips per call
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert _conf(monkeypatch)[key] == "false"
+    assert _conf(monkeypatch, extra_conf={key: "true"})[key] == "true"

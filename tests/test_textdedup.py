@@ -424,7 +424,7 @@ def test_signature_store_probe_is_corpus_shuffle_free(spark, tmp_path):
         # broadcast size, so force the shuffled-join path the store is
         # designed for
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        _, _, b_bands = dedup.batch_lsh_state(batch)
+        b_sizes, b_postings, b_bands = dedup.batch_lsh_state(batch)
         b_bands = b_bands.localCheckpoint(eager=True)
         # plain-parquet copy of the same corpus index for the differential
         plain_path = str(tmp_path / "bands_plain")
@@ -438,6 +438,12 @@ def test_signature_store_probe_is_corpus_shuffle_free(spark, tmp_path):
 
         n_bucketed, plan_b = n_exchanges(spark.table("sigstore_plan"))
         n_plain, _ = n_exchanges(spark.read.parquet(plain_path))
+        probe = dedup.minhash_lsh_increment_from_store(
+            spark, str(tmp_path / "store"), batch, table="sigstore_plan",
+            batch_state=(b_sizes, b_postings, b_bands),
+        )
+        probe.collect()
+        nodes = list(_plan_nodes(probe._jdf.queryExecution().executedPlan()))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", old)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
@@ -445,6 +451,46 @@ def test_signature_store_probe_is_corpus_shuffle_free(spark, tmp_path):
     # only difference, and it must remove exactly the corpus-side shuffle
     assert "Bucketed: true" in plan_b
     assert n_bucketed == n_plain - 1, (n_bucketed, n_plain)
+
+    # the whole probe: the batch ids are broadcast as they are to the
+    # anti joins over the stored postings and sizes — duplicate build keys
+    # cannot change an anti join, so no aggregate or shuffle sits below
+    # the broadcast
+    anti = [
+        n for n, _ in nodes
+        if n.nodeName() == "BroadcastHashJoin"
+        and n.joinType().toString() == "LeftAnti"
+    ]
+    stored = {"sizes" if "n_sh:" in n.left().toString() else "postings" for n in anti}
+    assert stored == {"postings", "sizes"}, stored
+    for join in anti:
+        below = {m.nodeName() for m, _ in _plan_nodes(join.right())}
+        assert not below & {"HashAggregate", "Exchange"}, below
+    # the two probe joins' raw pairs take one distinct: between a probe
+    # join and the verify join that reads the candidates, one shuffle
+    # on the pair and the verify's own shuffle on doc_a
+    probe_joins = [
+        (n, up) for n, up in nodes
+        if n.nodeName() == "SortMergeJoin" and "band" in n.leftKeys().toString()
+    ]
+    assert len(probe_joins) == 2
+    for _, up in probe_joins:
+        crossed = []
+        for m in reversed(up):
+            if m.nodeName().endswith("Join"):
+                break
+            if m.nodeName() == "Exchange":
+                crossed.append(m.outputPartitioning().toString())
+        pairs = [p for p in crossed if re.match(r"hashpartitioning\(doc_a#\d+L?, doc_b#", p)]
+        assert len(pairs) == 1 and len(crossed) == 2, crossed
+
+
+def _plan_nodes(plan, up=()):
+    """(node, its ancestors from the root) over a physical plan tree."""
+    yield plan, up
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i), up + (plan,))
 
 
 def test_minhash_kernel_matches_golden_bits(spark, tmp_path):
@@ -523,7 +569,8 @@ def test_batch_lsh_state_releases_its_spread_copy(spark):
     """The shingle index caches a spread copy of a narrow input only
     until the shingle arrays are checkpointed: a streaming sink calling
     batch_lsh_state per micro-batch must not leave a cached copy of every
-    batch in the session."""
+    batch in the session. The other operators that checkpoint what they
+    derive from a spread copy release it the same way."""
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     cache = spark._jsparkSession.sharedState().cacheManager()
     target = spark.sparkContext.defaultParallelism
@@ -533,13 +580,52 @@ def test_batch_lsh_state_releases_its_spread_copy(spark):
     ]
     # the input is narrower than the session, so the index does spread it
     assert batches[0].rdd.getNumPartitions() < target
-    for batch in batches:
-        dedup.batch_lsh_state(batch)
-    held = [
-        cache.lookupCachedData(b.repartition(target)._jdf).isDefined()
-        for b in batches
-    ]
-    assert held == [False] * len(batches)
+    for op in (
+        dedup.batch_lsh_state,
+        dedup.duplicate_substring_spans,
+        dedup.winnow_overlap_pairs,
+        dedup.simhash_pairs,
+    ):
+        for batch in batches:
+            op(batch)
+        held = [
+            cache.lookupCachedData(b.repartition(target)._jdf).isDefined()
+            for b in batches
+        ]
+        assert held == [False] * len(batches), op.__name__
+
+
+def test_lsh_band_rows_plan_costs_no_call_per_permutation(spark, monkeypatch):
+    """Building the signature and band plans is one SQL expression each:
+    the JVM calls it takes do not grow with num_perm."""
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+    from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
+
+    postings = spark.createDataFrame([(1, 5), (1, 7), (2, 5)], "doc long, sh long")
+    # proxies freed by Python are released on the JVM asynchronously;
+    # those commands are not the build's own
+    release = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if not command.startswith(release):
+            sent.append(command)
+        return send(self, command)
+
+    # warm-up; every plan stays referenced, so none is released while
+    # the calls are counted
+    built = [dedup._lsh_band_rows(postings, 64, 16)]
+    calls = {}
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    for num_perm in (64, 256):
+        gc.collect()
+        del sent[:]
+        built.append(dedup._lsh_band_rows(postings, num_perm, 16))
+        calls[num_perm] = len(sent)
+    assert max(calls.values()) <= 100, calls
 
 
 def test_bm25_store_matches_direct_search(spark, tmp_path):
