@@ -33,15 +33,19 @@ the mirrored message relation is one aggregate over unordered endpoint
 pairs (one Exchange, no Union) followed by a narrow mirror. The edge
 side is hash-partitioned on ``src`` once (a persisted repartition, or
 the graph store's buckets) and every superstep reads it in place, with
-no Exchange of its own. One superstep then runs
-three shuffles: the label state to ``src`` for the message join, the
-messages on ``(id, label)`` for the per-label sums, and the candidates on
-``id`` for the argmax. The ``max(struct)`` argmax runs as a partial and a
-final ``SortAggregate``, each behind its own Sort. The loop writes no
-session conf: the session's AQE sizes these shuffles from runtime
-statistics. Lineage is cut every superstep with ``localCheckpoint`` so
-10+ supersteps don't stack plans. Vertex ids stay
-strings (names) with 64-bit hash labels — no driver-side dictionaries.
+no Exchange of its own. The label state is seeded from the distinct
+``src`` endpoints of that relation, so no vertex table enters the loop.
+One superstep then runs two shuffles: the label state to ``src`` for
+the message join, and the joined rows on ``id``. Each joined edge emits
+the sender's message to ``dst`` and the sender's own state back to
+``src``, so the per-``(id, label)`` sums and the per-``id`` argmax both
+run above that one Exchange, with no second read of the state. The
+``max(struct)`` argmax runs as a partial and a final ``SortAggregate``
+behind one Sort. The loop writes no session conf: the session's AQE
+sizes these shuffles from runtime statistics. Lineage is cut every
+superstep with ``localCheckpoint`` so 10+ supersteps don't stack plans.
+Vertex ids stay strings (names) with 64-bit hash labels — no
+driver-side dictionaries.
 The mid-plan ``collect()`` of top-community labels mirrors the reference's
 two-phase execution (``ScipiBatchCommunity.java:241-250``) and broadcasts
 a 3-element set, not data.
@@ -192,16 +196,6 @@ def extract_edges(pubs: DataFrame, hash_fn=None) -> DataFrame:
 # ---------------------------------------------------------------------------
 # C6/C8 — label-propagation community detection (Leung / Flink semantics)
 # ---------------------------------------------------------------------------
-
-def initial_labels(vertices: DataFrame) -> DataFrame:
-    """C6/C7: unique initial labels — 64-bit hash of the vertex name
-    (deterministic and distributed, unlike zipWithUniqueId; collisions at
-    ~4B vertices are the classic birthday bound and merge two labels
-    harmlessly for community purposes)."""
-    return vertices.select(
-        "id", F.xxhash64("id").alias("label"), F.lit(1.0).alias("score")
-    )
-
 
 def aggregate_undirected(edges: DataFrame) -> DataFrame:
     """Hashed, canonicalized, aggregated, mirrored edge table — the exact
@@ -736,12 +730,13 @@ def community_detection(
     """C8: Flink-CommunityDetection-equivalent LPA; returns (id, label).
 
     The edge side is hash-partitioned on ``src`` and read in place every
-    superstep. A superstep shuffles three times: the label state to
-    ``src`` for the message join, the messages on ``(id, label)`` for the
-    per-label sums, and the candidates on ``id`` for the ``max(struct)``
-    argmax, which runs as two ``SortAggregate``s (partial and final).
-    Shuffle sizes are the session's: AQE coalesces them from runtime
-    statistics, and this function writes no session conf.
+    superstep, and the label state is seeded from its distinct ``src``
+    endpoints. A superstep shuffles twice: the label state to ``src`` for
+    the message join, and the joined rows on ``id`` (each edge carries
+    the sender's message to ``dst`` and the sender's own state back to
+    ``src``), above which the per-label sums and the ``max(struct)``
+    argmax run. Shuffle sizes are the session's: AQE coalesces them from
+    runtime statistics, and this function writes no session conf.
 
     ``mirrored``: a pre-built :func:`aggregate_undirected` table, already
     repartitioned on ``src`` and persisted (caller-owned lifecycle — it is
@@ -749,18 +744,15 @@ def community_detection(
     table across invocations so a cold call never materializes the raw
     string-named edge multiset at all.
 
-    ``vertices=None`` (requires ``mirrored`` + ``restore_names=False``):
-    seed the label state from the mirrored edge endpoints instead of a
-    vertex table — a no-exchange distinct over the src-partitioned edge
-    cache, replacing the name-union + groupBy materialization. Isolated
-    vertices (no edges) are then absent from the output; they are
-    singleton communities, so any size-thresholded consumer is
-    unaffected.
+    ``vertices``: the (id) names to restore, joined once after the
+    loop; a vertex with no edge keeps its seed label ``xxhash64(id)``.
+    ``vertices=None`` requires ``mirrored`` and ``restore_names=False``.
 
     ``restore_names=False`` skips the final hash->name mapping join and
-    returns hashed 64-bit ids as ``id``. Because the initial label of a
-    vertex IS its hashed id, label values are identical either way —
-    only the ``id`` column differs (hash vs original name).
+    returns the hashed 64-bit ids of the edge endpoints as ``id``
+    (isolated vertices are absent: they are singleton communities).
+    Because the initial label of a vertex IS its hashed id, label values
+    are identical either way.
 
     ``portable_rounding=True`` rounds each per-label message sum to 9
     decimals before the argmax. Message sums are order-dependent in the
@@ -775,38 +767,32 @@ def community_detection(
             "restore_names=False (names cannot be restored without a "
             "vertex table)"
         )
-    own_bidir = mirrored is None
-    if own_bidir:
-        # Repartitioned on the message-join key and persisted once: every
-        # superstep joins against it, and the cached hash partitioning
-        # means only the label state shuffles to the join — without this
-        # the whole upstream extraction would replay `iterations` times.
+    # Repartitioned on the message-join key and persisted once: every
+    # superstep joins against it, and the cached hash partitioning means
+    # only the label state shuffles to the join — without this the whole
+    # upstream extraction would replay `iterations` times.
+    bidir = mirrored
+    if mirrored is None:
         bidir = aggregate_undirected(edges).repartition(F.col("src")).persist()
-    else:
-        bidir = mirrored
-
-    if vertices is None:
-        # endpoint distinct over the src-partitioned edge cache (no
-        # exchange); a vertex's initial label IS its hashed id, so the
-        # seed state needs nothing but the id column
-        state_h = (
-            bidir.select(F.col("src").alias("id"))
-            .distinct()
-            .select("id", F.col("id").alias("label"), F.lit(1.0).alias("score"))
-        )
-    else:
-        state_h = initial_labels(vertices).select(
-            F.xxhash64("id").alias("id"), "label", "score"
-        )
-    state_h = _lpa_loop(state_h, bidir, iterations, delta, portable_rounding)
+    # C6/C7 seed: the endpoint distinct over the src-partitioned edge side
+    # (no exchange); a vertex's initial label IS its hashed id
+    state = (
+        bidir.select(F.col("src").alias("id"))
+        .distinct()
+        .select("id", F.col("id").alias("label"), F.lit(1.0).alias("score"))
+    )
+    state = _lpa_loop(state, bidir, iterations, delta, portable_rounding)
     if restore_names:
-        mapping = vertices.select("id", F.xxhash64("id").alias("h"))
-        result = state_h.join(
-            mapping.hint("shuffle_hash"), state_h.id == mapping.h
-        ).select(mapping.id, "label")
+        # a vertex with no edge is absent from the state and keeps its
+        # seed label xxhash64(name)
+        named = vertices.select("id", F.xxhash64("id").alias("h"))
+        hashed = state.select(F.col("id").alias("h"), "label").hint("shuffle_hash")
+        result = named.join(hashed, "h", "left").select(
+            "id", F.coalesce("label", "h").alias("label")
+        )
     else:
-        result = state_h.select("id", "label")
-    if own_bidir:
+        result = state.select("id", "label")
+    if mirrored is None:
         bidir.unpersist()
     return result
 
@@ -819,11 +805,10 @@ def _lpa_loop(
     portable_rounding: bool = False,
 ) -> DataFrame:
     for step in range(1, iterations + 1):
-        # Checkpoint EVERY superstep: `state` feeds TWO places (the
-        # message join and the sentinel union branch), and union branches
-        # do not share subplans — an unmaterialized state would execute
-        # its whole upstream twice per superstep (measured 12.1s vs 7.3s
-        # for the 5-step sf0.1 loop when cutting only every 2nd step).
+        # Cut lineage EVERY superstep: each step stacks a join and two
+        # aggregates on the previous one, so without the cut the plan
+        # (and its analysis and optimization time) grows with the step
+        # count and every stage replays the steps before it.
         state = _lpa_superstep(
             state, bidir, step, delta, portable_rounding
         ).localCheckpoint(eager=True)
@@ -839,67 +824,62 @@ def _lpa_superstep(
 ) -> DataFrame:
     """Superstep ``step`` (1-based) of the LPA loop: the next
     (id, label, score) state, not yet materialized."""
-    neg_inf = float("-inf")
     # shuffle_hash: the state side is far too big to broadcast at real
     # scale but always hash-table-buildable per partition; the hint
     # skips the sort-merge sorts each superstep would otherwise pay.
-    msgs = bidir.join(
-        state.select(
-            F.col("id").alias("src"), F.col("label"), F.col("score")
-        ).hint("shuffle_hash"),
-        "src",
-    ).select(
-        F.col("dst").alias("id"),
-        "label",
-        (F.col("score") * F.col("w_sum")).alias("mscore_sum"),
-        (F.col("score") * F.col("w_max")).alias("mscore_max"),
-    )
-    per_label = msgs.groupBy("id", "label").agg(
-        (
-            F.round(F.sum("mscore_sum"), 9)
-            if portable_rounding
-            else F.sum("mscore_sum")
-        ).alias("sum_score"),
-        F.max("mscore_max").alias("max_single"),
-    )
-    # Fuse the winner argmax AND the state join into one aggregation:
-    # each vertex's current state rides along as a sentinel row with
-    # sum_score = -inf — it never beats a real message in the
-    # max(struct) (argmax by sum desc, label asc via neg_label), but
-    # it carries (old_label, old_score), which max() recovers since
-    # exactly one sentinel exists per vertex and real rows hold NULLs.
-    # This removes the per-superstep winners->state join entirely;
-    # the superstep's shuffles are the state->src move, the message
-    # agg and the fused argmax.
-    cand = per_label.select(
-        "id",
-        F.struct(
-            "sum_score",
-            (-F.col("label")).alias("neg_label"),
-            "max_single",
-        ).alias("s"),
-        F.lit(None).cast("long").alias("old_label"),
-        F.lit(None).cast("double").alias("old_score"),
-    ).unionByName(
-        state.select(
-            "id",
-            F.struct(
-                F.lit(neg_inf).alias("sum_score"),
-                (-F.col("label")).alias("neg_label"),
-                F.lit(None).cast("double").alias("max_single"),
-            ).alias("s"),
-            F.col("label").alias("old_label"),
-            F.col("score").alias("old_score"),
+    sender = state.select(F.col("id").alias("src"), "label", "score")
+    joined = bidir.join(sender.hint("shuffle_hash"), "src")
+    score = F.col("score")
+    no_long, no_double = F.lit(None).cast("long"), F.lit(None).cast("double")
+    # Each joined edge emits two rows: the sender's message to ``dst``,
+    # and the sender's own state back to ``src`` (NULL message), so the
+    # state reaches the argmax without a second read of it. Both go
+    # through one Exchange on ``id``, which both aggregates above reuse.
+    rows = joined.select(
+        F.inline(
+            F.array(
+                F.struct(
+                    F.col("dst").alias("id"),
+                    "label",
+                    (score * F.col("w_sum")).alias("m_sum"),
+                    (score * F.col("w_max")).alias("m_max"),
+                    no_long.alias("old_label"),
+                    no_double.alias("old_score"),
+                ),
+                F.struct(
+                    F.col("src").alias("id"),
+                    "label",
+                    no_double.alias("m_sum"),
+                    no_double.alias("m_max"),
+                    F.col("label").alias("old_label"),
+                    score.alias("old_score"),
+                ),
+            )
         )
+    ).repartition("id")
+    per_label = rows.groupBy("id", "label").agg(
+        (
+            F.round(F.sum("m_sum"), 9) if portable_rounding else F.sum("m_sum")
+        ).alias("sum_score"),
+        F.max("m_max").alias("max_single"),
+        F.max("old_label").alias("old_label"),
+        F.max("old_score").alias("old_score"),
     )
+    # argmax by sum desc, label asc (via neg_label); a label that only
+    # the vertex's own state carries has a NULL sum, which sorts below
+    # every real sum, so it wins only for a vertex with no messages.
     # Flink's CommunityDetection subtracts delta/superstep from the
     # adopted score ONLY when the label actually changes; a vertex
     # re-confirming its own label keeps the undecayed max message; a
-    # vertex with no messages (sentinel wins) keeps its state as-is.
+    # vertex with no messages keeps its state as-is.
     return (
-        cand.groupBy("id")
+        per_label.groupBy("id")
         .agg(
-            F.max("s").alias("s"),
+            F.max(
+                F.struct(
+                    "sum_score", (-F.col("label")).alias("neg_label"), "max_single"
+                )
+            ).alias("s"),
             F.max("old_label").alias("old_label"),
             F.max("old_score").alias("old_score"),
         )

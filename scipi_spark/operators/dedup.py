@@ -36,7 +36,12 @@ from pyspark.sql import functions as F
 
 from scipi_spark.sources import storectl
 
-from scipi_spark.operators.textops import fingerprint, normalize_text, word_shingles
+from scipi_spark.operators.textops import (
+    fingerprint,
+    normalize_text,
+    token_chunks,
+    word_shingles,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1322,17 +1327,9 @@ def paragraph_dedup_stats(
     dedup)."""
     from pyspark.sql import Window
 
-    toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
-    n_chunks = F.ceil(F.size(toks) / F.lit(words)).cast("int")
-    chunks = F.when(
-        F.size(toks) > 0,
-        F.transform(
-            F.sequence(F.lit(0), n_chunks - 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i * words + 1, words)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     seg = df.select(
-        F.col(id_col).alias("doc_id"), F.posexplode(chunks).alias("idx", "chunk")
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(token_chunks(text_col, words)).alias("idx", "chunk"),
     )
     w = Window.partitionBy("chunk").orderBy("doc_id", "idx")
     flagged = seg.withColumn(

@@ -212,19 +212,51 @@ def fingerprint(col: Column | str) -> Column:
     return F.md5(normalize_text(col))
 
 
+def _let(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row. A lambda
+    body gets no subexpression elimination, so an expression named
+    inside one is re-evaluated per element (a document re-split once per
+    shingle, O(n^2) in its length); bound to a lambda variable, the one
+    element of a one-element array, it is computed once."""
+    return F.transform(F.array(value), body)[0]
+
+
 def word_shingles(col: Column | str, k: int = 3) -> Column:
     """Distinct word k-shingles (space-joined k-grams of the whitespace
-    tokens); the unit set for Jaccard/MinHash dedup."""
-    toks = tokens(col)
-    # transform over 1-based start indices; sequence() must be guarded:
-    # sequence(1, 0) would generate a DESCENDING range, not an empty one
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - (k - 1)),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-    )
-    return F.when(F.size(toks) >= k, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
+    tokens); the unit set for Jaccard/MinHash dedup. Each document is
+    tokenized once."""
+
+    def shingles(toks):
+        # transform over 1-based start indices; sequence() must be
+        # guarded: sequence(1, 0) would generate a DESCENDING range
+        grams = F.transform(
+            F.sequence(F.lit(1), F.size(toks) - (k - 1)),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
+        )
+        return F.when(F.size(toks) >= k, F.array_distinct(grams)).otherwise(
+            F.array().cast("array<string>")
+        )
+
+    return _let(tokens(col), shingles)
+
+
+def token_chunks(col: Column | str, words: int) -> Column:
+    """The whitespace tokens in non-overlapping chunks of ``words``, each
+    space-joined, in order (the last chunk may be shorter); an empty
+    array for a document with no tokens. Each document is tokenized
+    once."""
+
+    def chunks(toks):
+        n_chunks = F.ceil(F.size(toks) / F.lit(words)).cast("int")
+        return F.when(
+            F.size(toks) > 0,
+            F.transform(
+                F.sequence(F.lit(0), n_chunks - 1),
+                lambda i: F.concat_ws(" ", F.slice(toks, i * words + 1, words)),
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+
+    return _let(tokens(col), chunks)
 
 
 def repetition_features(
@@ -491,17 +523,9 @@ def remove_boilerplate(
     runtime; the explicit plan keeps the big explode on the probe side
     either way. Docs whose every segment is boilerplate return with
     empty ``text_clean``; empty docs return zero counts."""
-    toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
-    n_chunks = F.ceil(F.size(toks) / F.lit(words)).cast("int")
-    chunks = F.when(
-        F.size(toks) > 0,
-        F.transform(
-            F.sequence(F.lit(0), n_chunks - 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i * words + 1, words)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     seg = df.select(
-        F.col(id_col).alias("doc_id"), F.posexplode(chunks).alias("idx", "chunk")
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(token_chunks(text_col, words)).alias("idx", "chunk"),
     )
     boiler = (
         seg.groupBy("chunk")

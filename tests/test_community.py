@@ -118,6 +118,8 @@ def test_lpa_matches_python_reference(spark):
     for _ in range(5):
         a, b = rng.sample(allv, 2)
         edges.append((a, b, 1.0))
+    # a vertex with no edge keeps its seed label through the name join
+    allv.append("isolated")
 
     vdf = spark.createDataFrame([(v,) for v in allv], "id string")
     edf = spark.createDataFrame(edges, "src string, dst string, weight double")
@@ -132,6 +134,7 @@ def test_lpa_matches_python_reference(spark):
     }
     want = _lpa_py(init, edges, iterations=10, delta=0.5)
     assert got == want
+    assert got["isolated"] == init["isolated"]
     # sanity: intra-community agreement dominates
     for c in communities:
         labels = [got[v] for v in c]
@@ -683,9 +686,9 @@ def _superstep_shuffles(spark, bidir, is_edge_scan):
 def test_lpa_superstep_reads_edges_in_place(spark, tmp_path):
     """One superstep under the session's AQE: the edge relation reaches
     the message join with no Exchange of its own, from the in-memory
-    cache and from the bucketed store, and the superstep has at most 3
-    Exchanges (state to ``src``, messages on ``(id, label)``, candidates
-    on ``id``)."""
+    cache and from the bucketed store, and the superstep has at most 2
+    Exchanges (the state to ``src``, the joined rows on ``id``) and no
+    Union."""
     pubs = _pubs(spark)
     mirrored = (
         comm.aggregate_undirected(comm.extract_edges(pubs, hash_fn=F.xxhash64))
@@ -697,7 +700,8 @@ def test_lpa_superstep_reads_edges_in_place(spark, tmp_path):
             spark, mirrored, lambda t: t.startswith("InMemoryTableScan")
         )
         assert (scans, edge_ex) == (1, 0), plan
-        assert exchanges <= 3, plan
+        assert exchanges <= 2, plan
+        assert "Union" not in plan, plan
     finally:
         mirrored.unpersist()
 
@@ -712,6 +716,30 @@ def test_lpa_superstep_reads_edges_in_place(spark, tmp_path):
             lambda t: t.startswith("FileScan") and "Bucketed: true" in t,
         )
         assert (scans, edge_ex) == (1, 0), plan
-        assert exchanges <= 3, plan
+        assert exchanges <= 2, plan
+        assert "Union" not in plan, plan
     finally:
         spark.sql("DROP TABLE IF EXISTS t_step_graph")
+
+
+def test_lpa_jobs_per_superstep(spark):
+    """One more superstep costs at most 3 Spark jobs: the state shuffle,
+    the row shuffle and the checkpoint of the new state."""
+    pubs = _pubs(spark)
+    vertices = comm.extract_vertices(pubs)
+    edges = comm.extract_edges(pubs)
+    sc = spark.sparkContext
+
+    def jobs(iterations):
+        group = f"lpa-jobs-{iterations}"
+        sc.setJobGroup(group, group)
+        try:
+            comm.community_detection(
+                vertices, edges, iterations=iterations
+            ).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one, two = jobs(1), jobs(2)
+    assert two - one <= 3, (one, two)

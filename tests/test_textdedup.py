@@ -35,6 +35,38 @@ def test_word_shingles_edges(spark):
     assert got[4] == ["a b c", "b c a", "c a b"]
 
 
+def _lambda_bodies(plan: str) -> list[str]:
+    """The text of every ``lambdafunction(...)`` in a plan string."""
+    bodies, start = [], plan.find("lambdafunction(")
+    while start != -1:
+        depth = 0
+        for end in range(start + len("lambdafunction"), len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        bodies.append(plan[start : end + 1])
+        start = plan.find("lambdafunction(", start + 1)
+    return bodies
+
+
+def test_shingles_and_chunks_tokenize_once(spark):
+    """A lambda body gets no subexpression elimination, so a body that
+    names the tokenizer re-splits the document once per shingle or
+    chunk. The split runs outside every lambda, once per document; the
+    dedup shingle projection (hashed inside the array) included."""
+    df = _docs(spark, [(1, "a b c d e f g h i j")])
+    for col in (
+        F.transform(textops.word_shingles("text", 3), lambda x: F.xxhash64(x)),
+        textops.token_chunks("text", 4),
+    ):
+        plan = formatted_plan(df.select(col.alias("out")))
+        bodies = _lambda_bodies(plan)
+        assert bodies and "split(" in plan, plan
+        assert not [b for b in bodies if "split(" in b], plan
+    got = df.select(textops.token_chunks("text", 4).alias("c")).first()["c"]
+    assert got == ["a b c d", "e f g h", "i j"]
+
+
 def test_exact_dup_groups_and_dedup(spark):
     df = _docs(
         spark,
