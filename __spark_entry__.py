@@ -1020,7 +1020,7 @@ def _lpa_labels(spark, sf_dir):
     sf_dir): c8 and c16 both project from it, and the loop's checkpoint
     barriers make the re-persist recompute shallow.
 
-    Runs with ``vertices=None, restore_names=False``: both consumers are
+    Runs with ``vertices=None``: both consumers are
     size-thresholded aggregates, so hashed ids are as good as names
     (label values are identical either way) and isolated vertices —
     singleton communities, below every threshold — may be dropped. This
@@ -1034,7 +1034,6 @@ def _lpa_labels(spark, sf_dir):
             iterations=5,
             delta=0.5,
             mirrored=_graph_lpa_mirrored(spark, sf_dir),
-            restore_names=False,
             portable_rounding=True,
         )
         _cache_put(_LPA_LABELS_CACHE, key, labels.persist())

@@ -53,12 +53,12 @@ a 3-element set, not data.
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
+from scipi_spark.operators.textops import _let
 from scipi_spark.sources import storectl
 
 
@@ -164,10 +164,27 @@ def extract_edges(pubs: DataFrame, hash_fn=None) -> DataFrame:
     authors = F.coalesce("authors", F.array())
     title = F.col("title")
     named = _named("publisher", "venue")
-    if hash_fn is not None:
-        authors = F.transform(authors, lambda a: hash_fn(a))
-        title = hash_fn(title)
-        named = F.transform(named, lambda x: hash_fn(x))
+    if hash_fn is None:
+        rows = _edge_rows(authors, title, named)
+    else:
+        # hashed once per publication and bound to a lambda variable: a
+        # lambda body gets no subexpression elimination, so a hashed
+        # list named inside the co-author lambda would be hashed again
+        # for every author
+        hashed = F.struct(
+            F.transform(authors, lambda a: hash_fn(a)).alias("a"),
+            hash_fn(title).alias("t"),
+            F.transform(named, lambda x: hash_fn(x)).alias("n"),
+        )
+        rows = _let(hashed, lambda v: _edge_rows(v["a"], v["t"], v["n"]))
+    return pubs.select(F.inline(rows)).select(
+        "src", "dst", F.lit(1.0).alias("weight")
+    )
+
+
+def _edge_rows(authors, title, named):
+    """The (src, dst) structs of one publication: co-author pairs ++
+    author->paper ++ paper->publisher/venue."""
 
     def edge(s, d):
         return F.struct(s.alias("src"), d.alias("dst"))
@@ -188,9 +205,7 @@ def extract_edges(pubs: DataFrame, hash_fn=None) -> DataFrame:
         lambda a: edge(a, title),
     )
     pv = F.transform(named, lambda x: edge(title, x))
-    return pubs.select(F.inline(F.concat(co, ap, pv))).select(
-        "src", "dst", F.lit(1.0).alias("weight")
-    )
+    return F.concat(co, ap, pv)
 
 
 # ---------------------------------------------------------------------------
@@ -245,6 +260,24 @@ def aggregate_undirected(edges: DataFrame) -> DataFrame:
     )
 
 
+#: the graph store: the aggregated mirrored LPA relation bucketed and
+#: sorted on ``src``
+GRAPH_STORE = storectl.StoreSpec(
+    "graph store", "graph-v1", {"n_buckets": 16},
+    (storectl.Layout("edges", ("src",)),),
+)
+
+#: the label store: (id, label, comp) bucketed and sorted on ``id``,
+#: with the LPA recipe it was computed under
+LABEL_STORE = storectl.StoreSpec(
+    "label store",
+    "labels-v1",
+    {"n_buckets": 16, "iterations": 10, "delta": 0.5,
+     "portable_rounding": 0, "cc_max_iterations": 50},
+    (storectl.Layout("labels", ("id",)),),
+)
+
+
 def write_graph_store(
     edges: DataFrame,
     path: str,
@@ -252,8 +285,6 @@ def write_graph_store(
     n_buckets: int = 16,
     mirrored: DataFrame | None = None,
     build_key: str = "graph-v1",
-    keep: int = 1,
-    retain_s: float = storectl.RETAIN_SECONDS,
 ) -> None:
     """Persist the aggregated mirrored LPA message relation bucketed AND
     sorted on ``src`` — the production shape of iterative graph analytics
@@ -271,20 +302,12 @@ def write_graph_store(
     portable ``hash_fn``, so an external engine can replay the labels);
     default builds it from the raw ``edges`` multiset."""
     rel = aggregate_undirected(edges) if mirrored is None else mirrored
-    root = path.rstrip("/")
-    build = storectl.new_build_dir(root)
-    storectl.write_bucketed(rel, build + "/edges", ["src"], ["src"], n_buckets)
-    ver = storectl.publish(
-        root,
-        build,
-        build_key,
-        keep=keep,
-        retain_s=retain_s,
-        params={"n_buckets": n_buckets, "delta_appends": 0},
-    )
-    storectl.register_bucketed(
-        rel.sparkSession, table, ver + "/edges", ["src"], ["src"], n_buckets
-    )
+    with storectl.rebuild(
+        path.rstrip("/"), GRAPH_STORE,
+        {"n_buckets": n_buckets, "delta_appends": 0}, build_key,
+    ) as b:
+        b.add("edges", rel)
+    GRAPH_STORE.register(rel.sparkSession, table, b.version)
 
 
 def merge_delta_edges(mirrored: DataFrame) -> DataFrame:
@@ -302,6 +325,11 @@ def merge_delta_edges(mirrored: DataFrame) -> DataFrame:
     )
 
 
+def _delta_appends(version: storectl.Version) -> int:
+    """Appends folded into ``version`` since its last full build."""
+    return (version.stored or {}).get("delta_appends", 0)
+
+
 def append_graph_store(
     edges: DataFrame | None,
     path: str,
@@ -309,15 +337,11 @@ def append_graph_store(
     mirrored: DataFrame | None = None,
     n_buckets: int | None = None,
     build_key: str | None = None,
-    keep: int = 1,
-    retain_s: float = storectl.RETAIN_SECONDS,
     *,
     fold: tuple[str, int] | None = None,
 ) -> None:
     """Fold a NEW publication batch's edges into an existing graph
-    store — the incremental shape every other persisted family here
-    has (dedup signatures, ANN vectors, BM25 postings, entity store,
-    SCD2). The reference re-scans its entire Cassandra publications
+    store. The reference re-scans its entire Cassandra publications
     table on every batch community run (``ScipiBatchCommunity.java:
     122-133``); at 100 TB the store is built once and each increment
     costs O(|batch|):
@@ -335,47 +359,18 @@ def append_graph_store(
       per pair) and resets the delta counter — run it before large
       LPA campaigns so the per-superstep scan skips the merge.
 
-    The bucket count is inherited from the version marker (explicit
-    mismatches raise); ``build_key`` defaults to the cloned version's
-    own key. Atomicity via clone -> append -> publish under
-    ``append_lock`` with ``expect_base``, like every sibling store.
-    ``fold``: the streaming sink's ``(query_key, batch_id)`` stamp,
-    recorded in the published version (``storectl.publish``)."""
+    ``build_key`` defaults to the cloned version's own key. ``fold``:
+    the streaming sink's ``(query_key, batch_id)`` stamp."""
     rel = aggregate_undirected(edges) if mirrored is None else mirrored
-    spark = rel.sparkSession
-    root = path.rstrip("/")
-    with storectl.append_lock(root):
-        build, cur = storectl.clone_current(root)
-        # recipe from the CLONED version's own marker, under the lock
-        stored = storectl.params_of(cur)
-        resolved = storectl.resolve_params(
-            stored, {"n_buckets": n_buckets}, {"n_buckets": 16}
-        )
-        nb = resolved["n_buckets"]
-        storectl.append_bucketed(rel, build + "/edges", ["src"], ["src"], nb)
-        params = dict(
-            storectl.persistable_params(
-                stored, {"n_buckets": n_buckets}, resolved
-            )
-            or {}
-        )
+    with storectl.append(
+        path.rstrip("/"), GRAPH_STORE, {"n_buckets": n_buckets},
+        build_key=build_key, fold=fold,
+    ) as b:
+        b.add("edges", rel)
         # the delta counter is derived knowledge (this append happened),
         # so it is always stamped — readers merge iff it is non-zero
-        params["delta_appends"] = (stored or {}).get("delta_appends", 0) + 1
-        meta = storectl.meta_of(cur) or {}
-        ver = storectl.publish(
-            root,
-            build,
-            build_key or meta.get("build_key", "graph-v1"),
-            keep=keep,
-            retain_s=retain_s,
-            expect_base=os.path.basename(cur),
-            params=params,
-            fold=fold,
-        )
-    storectl.register_bucketed(
-        spark, table, ver + "/edges", ["src"], ["src"], nb
-    )
+        b.extra["delta_appends"] = _delta_appends(b.base) + 1
+    GRAPH_STORE.register(rel.sparkSession, table, b.version)
 
 
 def compact_graph_store(
@@ -384,54 +379,25 @@ def compact_graph_store(
     table: str = "graph_edges_mirrored",
     n_buckets: int | None = None,
     build_key: str | None = None,
-    keep: int = 1,
-    retain_s: float = storectl.RETAIN_SECONDS,
 ) -> None:
     """Rewrite an appended graph store with delta rows merged — one row
     per directed pair again, delta counter reset to 0, so every later
     LPA run reads the store directly with no per-superstep merge
-    aggregate (``dedup.compact_signature_store`` /
-    ``similarity.compact_ann_store`` are the siblings). The merge
-    aggregate itself runs Exchange-free over the old version's bucket
-    layout; the rewrite shuffles once into the (unchanged) bucket spec.
-    Result is bit-identical to a from-scratch
+    aggregate. The merge aggregate itself runs Exchange-free over the
+    old version's bucket layout; the rewrite shuffles once into the
+    (unchanged) bucket spec. Result is bit-identical to a from-scratch
     :func:`write_graph_store` over the combined edge multiset
-    (pytest-pinned). Publishes atomically as a new version; the recipe
-    is inherited from the marker (explicit mismatches raise)."""
+    (pytest-pinned)."""
     root = path.rstrip("/")
-    cur = storectl.current_dir(root)
-    if cur is None:
-        raise FileNotFoundError(f"no published graph store under {root!r}")
-    stored = storectl.params_of(cur)
-    resolved = storectl.resolve_params(
-        stored, {"n_buckets": n_buckets}, {"n_buckets": 16}
-    )
-    nb = resolved["n_buckets"]
-    # register over the CURRENT version so the merge reads the bucket
+    cur = storectl.open_store(root, GRAPH_STORE, {"n_buckets": n_buckets})
+    # registered over the read version so the merge reads the bucket
     # partitioning (no Exchange); the write targets a fresh build dir,
     # so it never reads the files it replaces
-    storectl.register_bucketed(
-        spark, table, cur + "/edges", ["src"], ["src"], nb
-    )
-    merged = merge_delta_edges(spark.table(table))
-    build = storectl.new_build_dir(root)
-    storectl.write_bucketed(merged, build + "/edges", ["src"], ["src"], nb)
-    params = dict(
-        storectl.persistable_params(
-            stored, {"n_buckets": n_buckets}, resolved
-        )
-        or {}
-    )
-    params["delta_appends"] = 0
-    if build_key is None:
-        meta = storectl.meta_of(cur) or {}
-        build_key = meta.get("build_key", "graph-v1")
-    ver = storectl.publish(
-        root, build, build_key, keep=keep, retain_s=retain_s, params=params
-    )
-    storectl.register_bucketed(
-        spark, table, ver + "/edges", ["src"], ["src"], nb
-    )
+    GRAPH_STORE.register(spark, table, cur)
+    with storectl.rebuild(root, GRAPH_STORE, build_key=build_key, base=cur) as b:
+        b.add("edges", merge_delta_edges(spark.table(table)))
+        b.extra["delta_appends"] = 0
+    GRAPH_STORE.register(spark, table, b.version)
 
 
 def _open_graph_store(
@@ -440,22 +406,13 @@ def _open_graph_store(
     """The live version of the graph store under ``path``, registered
     here as the bucketed ``table``; its delta rows are merged
     (:func:`merge_delta_edges`) when the version marker records
-    appends. The bucket count comes from the marker (``n_buckets``
-    mismatches raise; a params-less store falls back to 16)."""
-    root = path.rstrip("/")
-    ver = storectl.current_dir(root)
-    if ver is None:
-        raise FileNotFoundError(
-            f"no published graph store under {root!r} — "
-            "write_graph_store first"
-        )
-    stored = storectl.params_of(ver)
-    nb = storectl.resolve_params(
-        stored, {"n_buckets": n_buckets}, {"n_buckets": 16}
-    )["n_buckets"]
-    storectl.register_bucketed(spark, table, ver + "/edges", ["src"], ["src"], nb)
+    appends."""
+    ver = storectl.open_store(
+        path.rstrip("/"), GRAPH_STORE, {"n_buckets": n_buckets}
+    )
+    GRAPH_STORE.register(spark, table, ver)
     mirrored = spark.table(table)
-    if (stored or {}).get("delta_appends", 0):
+    if _delta_appends(ver):
         mirrored = merge_delta_edges(mirrored)
     return mirrored
 
@@ -472,8 +429,6 @@ def write_label_store(
     n_buckets: int = 16,
     cc_max_iterations: int = 50,
     build_key: str = "labels-v1",
-    keep: int = 1,
-    retain_s: float = storectl.RETAIN_SECONDS,
 ) -> None:
     """Persist the LPA RESULT — (id, label, comp) bucketed+sorted on
     ``id`` — next to the graph store, so later batches re-label only
@@ -485,9 +440,9 @@ def write_label_store(
     cross components, so a component with no new edge keeps its labels
     VERBATIM under any fixed iteration budget — the reuse invariant the
     incremental path rests on. The LPA recipe (iterations, delta,
-    portable_rounding) is stamped into the version marker; refresh
-    calls self-configure from it and explicit mismatches raise (labels
-    computed under different recipes must never mix)."""
+    portable_rounding) is recorded in the version; refresh calls
+    inherit it (labels computed under different recipes must never
+    mix)."""
     # resolve the graph version ONCE: LPA and the CC pass must read the
     # same store state (the TOCTOU discipline every probe here follows)
     merged = _open_graph_store(spark, graph_path, graph_table)
@@ -497,7 +452,6 @@ def write_label_store(
         iterations=iterations,
         delta=delta,
         mirrored=merged,
-        restore_names=False,
         portable_rounding=portable_rounding,
     )
     from scipi_spark.operators import graph as graph_ops
@@ -510,26 +464,16 @@ def write_label_store(
     rel = labels.join(
         comps.withColumnRenamed("id", "lid"), labels.id == F.col("lid")
     ).select("id", "label", "comp")
-    root = path.rstrip("/")
-    build = storectl.new_build_dir(root)
-    storectl.write_bucketed(rel, build + "/labels", ["id"], ["id"], n_buckets)
-    ver = storectl.publish(
-        root,
-        build,
-        build_key,
-        keep=keep,
-        retain_s=retain_s,
-        params={
-            "n_buckets": n_buckets,
-            "iterations": iterations,
-            "delta": delta,
-            "portable_rounding": int(portable_rounding),
-            "cc_max_iterations": cc_max_iterations,
-        },
-    )
-    storectl.register_bucketed(
-        spark, table, ver + "/labels", ["id"], ["id"], n_buckets
-    )
+    params = {
+        "n_buckets": n_buckets,
+        "iterations": iterations,
+        "delta": delta,
+        "portable_rounding": int(portable_rounding),
+        "cc_max_iterations": cc_max_iterations,
+    }
+    with storectl.rebuild(path.rstrip("/"), LABEL_STORE, params, build_key) as b:
+        b.add("labels", rel)
+    LABEL_STORE.register(spark, table, b.version)
 
 
 def refresh_label_store(
@@ -539,18 +483,16 @@ def refresh_label_store(
     batch_mirrored: DataFrame,
     graph_table: str = "graph_edges_mirrored",
     table: str = "graph_labels",
-    keep: int = 1,
-    retain_s: float = storectl.RETAIN_SECONDS,
     stats: dict | None = None,
 ) -> DataFrame:
     """Incrementally re-label ONLY the components a folded batch
     touched — the 100 TB answer to re-running community detection over
     the whole graph after every increment (the reference re-runs its
     batch job from a full Cassandra scan,
-    ``ScipiBatchCommunity.java:122-133``; r11 verdict #1 asked for
-    exactly this shape). Call AFTER :func:`append_graph_store` folded
-    the batch's mirrored rows into the graph store; ``batch_mirrored``
-    is that same relation (only its endpoint set is read).
+    ``ScipiBatchCommunity.java:122-133``). Call AFTER
+    :func:`append_graph_store` folded the batch's mirrored rows into
+    the graph store; ``batch_mirrored`` is that same relation (only its
+    endpoint set is read).
 
     Mechanics — exact, not approximate:
 
@@ -568,29 +510,19 @@ def refresh_label_store(
        untouched-rows UNION re-labeled-rows (new component ids
        compose: min over a merged component = min of the mins).
 
-    The LPA recipe comes from the label store's version marker (the one
-    :func:`write_label_store` stamped), so incremental labels can never
-    silently mix iteration budgets with stored ones. Returns the full
-    folded (id, label) assignment — bit-identical to re-running
+    The LPA recipe comes from the label store's version (the one
+    :func:`write_label_store` recorded), so incremental labels can
+    never silently mix iteration budgets with stored ones. Returns the
+    full folded (id, label) assignment — bit-identical to re-running
     :func:`community_detection_from_store` over the merged graph
-    (gate- and pytest-pinned). Publishes the folded label store
-    atomically under ``append_lock``.
+    (pytest-pinned). The folded label store publishes as an append.
 
     ``stats``: pass a dict to receive {"touched_comps", "sub_edges",
     "total_edges"} — the reuse evidence (sub_edges < total_edges means
     untouched components really were skipped, pytest-pinned)."""
-    root = path.rstrip("/")
-    with storectl.append_lock(root):
-        build, cur = storectl.clone_current(root)
-        params = storectl.params_of(cur) or {}
-        nb = params.get("n_buckets", 16)
-        iterations = params.get("iterations", 10)
-        delta = params.get("delta", 0.5)
-        portable = bool(params.get("portable_rounding", 0))
-        cc_max = params.get("cc_max_iterations", 50)
-        storectl.register_bucketed(
-            spark, table, cur + "/labels", ["id"], ["id"], nb
-        )
+    with storectl.append(path.rstrip("/"), LABEL_STORE) as b:
+        p = b.params
+        LABEL_STORE.register(spark, table, b.base)
         stored = spark.table(table)
 
         touched_v = batch_mirrored.select(F.col("src").alias("id")).distinct()
@@ -632,16 +564,17 @@ def refresh_label_store(
         relabeled = community_detection(
             vertices=None,
             edges=None,
-            iterations=iterations,
-            delta=delta,
+            iterations=p["iterations"],
+            delta=p["delta"],
             mirrored=sub_m,
-            restore_names=False,
-            portable_rounding=portable,
+            portable_rounding=bool(p["portable_rounding"]),
         )
         from scipi_spark.operators import graph as graph_ops
 
         newcomps = graph_ops.connected_components(
-            sub_m.select("src", "dst"), max_iterations=cc_max, strict=True
+            sub_m.select("src", "dst"),
+            max_iterations=p["cc_max_iterations"],
+            strict=True,
         )
         refreshed = relabeled.join(
             newcomps.withColumnRenamed("id", "rid"),
@@ -653,25 +586,8 @@ def refresh_label_store(
         folded = untouched.unionByName(refreshed).localCheckpoint(eager=True)
         sub_m.unpersist()
 
-        import shutil
-
-        shutil.rmtree(build + "/labels", ignore_errors=True)
-        storectl.write_bucketed(
-            folded, build + "/labels", ["id"], ["id"], nb
-        )
-        meta = storectl.meta_of(cur) or {}
-        ver = storectl.publish(
-            root,
-            build,
-            meta.get("build_key", "labels-v1"),
-            keep=keep,
-            retain_s=retain_s,
-            expect_base=os.path.basename(cur),
-            params=params,
-        )
-    storectl.register_bucketed(
-        spark, table, ver + "/labels", ["id"], ["id"], nb
-    )
+        b.replace("labels", folded)
+    LABEL_STORE.register(spark, table, b.version)
     return folded.select("id", "label")
 
 
@@ -683,37 +599,27 @@ def community_detection_from_store(
     portable_rounding: bool = False,
     path: str | None = None,
     n_buckets: int | None = None,
-    merge_deltas: bool = False,
 ) -> DataFrame:
     """LPA over a persisted bucketed edge store: no extraction, no edge
     aggregation, no edge-side repartition — the loop's message join reads
-    the store's bucket partitioning directly. Returns hashed ids
-    (``restore_names=False``; a vertex's initial label IS its hashed id,
-    so labels are identical to the name-restored variant).
+    the store's bucket partitioning directly. Returns hashed ids (a
+    vertex's initial label IS its hashed id, so labels are identical to
+    the name-restored variant).
     ``path``: store root for reading a store written by ANOTHER process
     (resolves the live version via the atomic CURRENT pointer and
-    registers ``table`` here); omit when this session wrote it. The
-    bucket count self-configures from the resolved version's marker
-    (explicit mismatches raise; legacy params-less stores fall back to
-    16 or the passed value). A store with outstanding
-    :func:`append_graph_store` deltas is collapsed with
-    :func:`merge_delta_edges` automatically — an Exchange-free
-    aggregate per superstep scan; ``merge_deltas=True`` forces the
-    merge for session-registered tables the marker cannot vouch for
-    (with ``path`` the marker decides)."""
+    registers ``table`` here), whose appended delta rows are merged when
+    the version records any (:func:`merge_delta_edges`); omit it when
+    this session registered ``table``."""
     if path is not None:
         mirrored = _open_graph_store(spark, path, table, n_buckets)
     else:
         mirrored = spark.table(table)
-        if merge_deltas:
-            mirrored = merge_delta_edges(mirrored)
     return community_detection(
         None,
         None,
         iterations=iterations,
         delta=delta,
         mirrored=mirrored,
-        restore_names=False,
         portable_rounding=portable_rounding,
     )
 
@@ -724,7 +630,6 @@ def community_detection(
     iterations: int = 10,
     delta: float = 0.5,
     mirrored: DataFrame | None = None,
-    restore_names: bool = True,
     portable_rounding: bool = False,
 ) -> DataFrame:
     """C8: Flink-CommunityDetection-equivalent LPA; returns (id, label).
@@ -742,17 +647,15 @@ def community_detection(
     repartitioned on ``src`` and persisted (caller-owned lifecycle — it is
     NOT unpersisted here). Passing it lets callers cache the aggregated
     table across invocations so a cold call never materializes the raw
-    string-named edge multiset at all.
+    string-named edge multiset at all. Without it, ``edges`` is
+    aggregated here.
 
     ``vertices``: the (id) names to restore, joined once after the
     loop; a vertex with no edge keeps its seed label ``xxhash64(id)``.
-    ``vertices=None`` requires ``mirrored`` and ``restore_names=False``.
-
-    ``restore_names=False`` skips the final hash->name mapping join and
-    returns the hashed 64-bit ids of the edge endpoints as ``id``
-    (isolated vertices are absent: they are singleton communities).
-    Because the initial label of a vertex IS its hashed id, label values
-    are identical either way.
+    With ``vertices=None`` the result holds the hashed 64-bit ids of the
+    edge endpoints as ``id`` (isolated vertices are absent: they are
+    singleton communities). Because the initial label of a vertex IS its
+    hashed id, label values are identical either way.
 
     ``portable_rounding=True`` rounds each per-label message sum to 9
     decimals before the argmax. Message sums are order-dependent in the
@@ -761,11 +664,10 @@ def community_detection(
     bit-replicable by any engine that sums the same messages in any
     order — the property the portable-label SQL oracle needs. Default
     off: the Flink-exact semantics keep the raw double sums."""
-    if vertices is None and (mirrored is None or restore_names):
+    if mirrored is None and edges is None:
         raise ValueError(
-            "vertices=None requires a pre-built mirrored edge table and "
-            "restore_names=False (names cannot be restored without a "
-            "vertex table)"
+            "community_detection needs edges or a pre-built mirrored edge "
+            "table"
         )
     # Repartitioned on the message-join key and persisted once: every
     # superstep joins against it, and the cached hash partitioning means
@@ -782,7 +684,7 @@ def community_detection(
         .select("id", F.col("id").alias("label"), F.lit(1.0).alias("score"))
     )
     state = _lpa_loop(state, bidir, iterations, delta, portable_rounding)
-    if restore_names:
+    if vertices is not None:
         # a vertex with no edge is absent from the state and keeps its
         # seed label xxhash64(name)
         named = vertices.select("id", F.xxhash64("id").alias("h"))

@@ -28,7 +28,6 @@ put through ``num_perm`` 2-universal permutations mod 2^31-1; murmur3
 from __future__ import annotations
 
 import functools
-import os
 import random
 
 from pyspark.sql import DataFrame, Window
@@ -966,6 +965,29 @@ def cross_corpus_neardup(
     return _jaccard_verify(candidates, postings, sizes, threshold)
 
 
+#: the signature store: band rows bucketed and sorted on (band, bh),
+#: beside plain-parquet ``postings`` and ``sizes``; the defaults are the
+#: recipe assumed for a marker that predates persisted params
+SIG_STORE = storectl.StoreSpec(
+    "signature store",
+    "sig-v1",
+    {"k": 3, "num_perm": 64, "bands": 16, "n_buckets": 16},
+    (storectl.Layout("bands", ("band", "bh")),),
+)
+
+
+def _add_sig_state(
+    build: storectl.Build, state: tuple[DataFrame, DataFrame, DataFrame]
+) -> None:
+    """Write a (sizes, postings, band_rows) state into a store build. The
+    postings must be checkpointed, so the three writes never replay the
+    work that produced them."""
+    sizes, postings, band_rows = state
+    build.add("postings", postings)
+    build.add("sizes", sizes)
+    build.add("bands", band_rows)
+
+
 def write_signature_store(
     df: DataFrame,
     path: str,
@@ -977,8 +999,6 @@ def write_signature_store(
     bands: int = 16,
     n_buckets: int = 16,
     build_key: str = "sig-v1",
-    keep: int = 1,
-    retain_s: float = storectl.RETAIN_SECONDS,
 ) -> None:
     """Persist a corpus's LSH state once so later increments probe it
     with ZERO corpus-side recompute:
@@ -995,79 +1015,14 @@ def write_signature_store(
 
     The signature coefficients are fixed-seed (:func:`_minhash_coeffs`),
     so signatures computed at probe time match the stored ones. The
-    recipe (k, num_perm, bands, n_buckets) is persisted in the version
-    marker: probes/appends/compactions self-configure from it, and
-    explicitly passed values that mismatch it raise
-    (``storectl.resolve_params``) instead of silently under-recalling
-    with wrong-bucket signatures (round-9 verdict #6).
-
-    Publication is atomic and cross-process safe (``sources.storectl``):
-    all three artifacts stage in a private build dir and go live only
-    when the CURRENT pointer flips, so a probe concurrent with a rebuild
-    reads the old or the new COMPLETE store — never 0 rows."""
+    recipe (k, num_perm, bands, n_buckets) is recorded in the version,
+    so probes, appends and compactions inherit it (``storectl``)."""
     params = {"k": k, "num_perm": num_perm, "bands": bands,
               "n_buckets": n_buckets}
-    _publish_sig_store(
-        df.sparkSession, path.rstrip("/"), table,
-        batch_lsh_state(df, id_col, text_col, k, num_perm, bands),
-        n_buckets, build_key, keep, retain_s, params,
-    )
-
-
-def _publish_sig_store(
-    spark, root: str, table: str,
-    state: tuple[DataFrame, DataFrame, DataFrame],
-    n_buckets: int, build_key: str, keep: int, retain_s: float,
-    params: dict | None,
-) -> None:
-    """The tail of a full (re)build: write postings, sizes and the band
-    rows bucketed and sorted on (band, bh) into a private build dir,
-    publish it as the live version, and register the bucketed table.
-    The postings must be checkpointed, so the three writes never
-    replay the work that produced them."""
-    sizes, postings, band_rows = state
-    build = storectl.new_build_dir(root)
-    postings.write.mode("overwrite").parquet(build + "/postings")
-    sizes.write.mode("overwrite").parquet(build + "/sizes")
-    storectl.write_bucketed(
-        band_rows, build + "/bands", ["band", "bh"], ["band", "bh"], n_buckets
-    )
-    ver = storectl.publish(
-        root, build, build_key, keep=keep, retain_s=retain_s, params=params
-    )
-    storectl.register_bucketed(
-        spark, table, ver + "/bands", ["band", "bh"], ["band", "bh"], n_buckets
-    )
-
-
-#: legacy recipe assumed for stores whose marker predates persisted params
-_SIG_DEFAULTS = {"k": 3, "num_perm": 64, "bands": 16, "n_buckets": 16}
-
-
-_UNSET = object()
-
-
-def _resolve_sig_params(
-    root: str, k, num_perm, bands, n_buckets, stored=_UNSET
-) -> tuple[int, int, int, int, dict | None]:
-    """Resolved (k, num_perm, bands, n_buckets, persistable): the last
-    element is what a republishing path (append/compact) may stamp into
-    the new version marker — None on a legacy params-less store with
-    omitted args, where the resolved values are assumptions, not the
-    store's recorded recipe (storectl.persistable_params).
-
-    ``stored``: pass ``storectl.params_of(ver)`` when the caller has
-    already resolved a version dir, so recipe and data come from ONE
-    CURRENT read (a concurrent rebuild between two separate reads would
-    pair one version's recipe with another's files)."""
-    if stored is _UNSET:
-        stored = storectl.current_params(root)
-    requested = {
-        "k": k, "num_perm": num_perm, "bands": bands, "n_buckets": n_buckets
-    }
-    p = storectl.resolve_params(stored, requested, _SIG_DEFAULTS)
-    persist = storectl.persistable_params(stored, requested, p)
-    return p["k"], p["num_perm"], p["bands"], p["n_buckets"], persist
+    state = batch_lsh_state(df, id_col, text_col, k, num_perm, bands)
+    with storectl.rebuild(path.rstrip("/"), SIG_STORE, params, build_key) as b:
+        _add_sig_state(b, state)
+    SIG_STORE.register(df.sparkSession, table, b.version)
 
 
 def append_signature_store(
@@ -1080,9 +1035,7 @@ def append_signature_store(
     num_perm: int | None = None,
     bands: int | None = None,
     n_buckets: int | None = None,
-    batch_state: tuple[DataFrame, DataFrame, DataFrame] | None = None,
-    keep: int = 1,
-    retain_s: float = storectl.RETAIN_SECONDS,
+    batch_state: tuple[dict, tuple[DataFrame, ...]] | None = None,
     *,
     fold: tuple[str, int] | None = None,
 ) -> None:
@@ -1099,61 +1052,38 @@ def append_signature_store(
     anti-join supersedes the stored copy); any OTHER probe that pairs
     against the duplicated doc double-counts shingle intersections and
     fans out the sizes join — inflated (up to divide-by-zero) Jaccard —
-    until the store is compacted with :func:`write_signature_store`.
+    until the store is compacted (:func:`compact_signature_store`).
     This is the LSM trade: cheap monotone appends daily, one compaction
-    when a duplicate slips in or bloat warrants it. The streaming sink
-    (``run_streaming_dedup_against_store``) passes ``fold``, the
-    ``(query_key, batch_id)`` stamp :func:`storectl.publish` records in
-    the same version, so a replayed micro-batch skips the second append.
+    when a duplicate slips in or bloat warrants it.
 
-    ``batch_state``: a precomputed :func:`batch_lsh_state` triple — pass
-    it when the caller already probed with the same batch so the
-    shingle/minhash/band work is not repeated. The signature recipe is
-    inherited from the store's version marker (explicit mismatches
-    raise) — a batch banded under a different recipe would poison the
-    index with incomparable rows."""
-    root = path.rstrip("/")
-    k, num_perm, bands, n_buckets, persist = _resolve_sig_params(
-        root, k, num_perm, bands, n_buckets
-    )
-    if batch_state is None:
-        batch_state = batch_lsh_state(
-            batch, id_col, text_col, k, num_perm, bands
-        )
-    sizes, postings, band_rows = batch_state
-    # atomic append: hardlink-clone the live version (metadata only),
-    # add the batch's files to the clone, publish as a new version —
-    # readers of the old version are undisturbed until the pointer flips.
-    # The whole clone→append→publish runs under the store's append lock,
-    # so concurrent appenders serialize and both batches land (publish's
-    # expect_base check backstops a bypassed lock by failing loudly).
-    with storectl.append_lock(root):
-        build, cur = storectl.clone_current(root)
-        postings.write.mode("append").parquet(build + "/postings")
-        sizes.write.mode("append").parquet(build + "/sizes")
-        storectl.append_bucketed(
-            band_rows, build + "/bands", ["band", "bh"], ["band", "bh"],
-            n_buckets,
-        )
-        meta = storectl.current_meta(root) or {}
-        ver = storectl.publish(
-            root,
-            build,
-            meta.get("build_key", "sig-v1"),
-            keep=keep,
-            retain_s=retain_s,
-            expect_base=os.path.basename(cur),
-            params=persist,
-            fold=fold,
-        )
-    storectl.register_bucketed(
-        batch.sparkSession,
-        table,
-        ver + "/bands",
-        ["band", "bh"],
-        ["band", "bh"],
-        n_buckets,
-    )
+    The batch is banded under the recipe of the version the append
+    clones. ``batch_state``: ``(recipe, (sizes, postings, band_rows))``,
+    a :func:`batch_lsh_state` the caller already computed (the streaming
+    sink probes with it first) and the ``k``, ``num_perm`` and ``bands``
+    it was banded under. If the cloned version's recipe differs — a
+    rebuild published since the caller read it — the append raises
+    :class:`~scipi_spark.sources.storectl.StoreConflictError` instead of
+    mixing incomparable band rows into the index. ``fold``: the
+    streaming sink's ``(query_key, batch_id)`` stamp."""
+    requested = {"k": k, "num_perm": num_perm, "bands": bands,
+                 "n_buckets": n_buckets}
+    with storectl.append(
+        path.rstrip("/"), SIG_STORE, requested, fold=fold
+    ) as b:
+        p = b.params
+        if batch_state is None:
+            state = batch_lsh_state(
+                batch, id_col, text_col, p["k"], p["num_perm"], p["bands"]
+            )
+        else:
+            recipe, state = batch_state
+            if any(recipe[key] != p[key] for key in ("k", "num_perm", "bands")):
+                raise storectl.StoreConflictError(
+                    f"batch state banded under {recipe!r}, but the store "
+                    f"at {path!r} now holds recipe {p!r}; recompute it"
+                )
+        _add_sig_state(b, state)
+    SIG_STORE.register(batch.sparkSession, table, b.version)
 
 
 def compact_signature_store(
@@ -1164,8 +1094,6 @@ def compact_signature_store(
     bands: int | None = None,
     n_buckets: int | None = None,
     build_key: str | None = None,
-    keep: int = 1,
-    retain_s: float = storectl.RETAIN_SECONDS,
 ) -> None:
     """Rebuild the signature store from its own postings with duplicate
     rows dropped — the repair for a crash-replayed append or a
@@ -1174,39 +1102,27 @@ def compact_signature_store(
     of them), so one ``distinct()`` over (doc, sh) and a rewrite of the
     three derived artifacts restores exact probe semantics. The original
     text is never touched — compaction cost is proportional to the
-    store's hashed postings, not the corpus.
-
-    The deduped postings are materialized (localCheckpoint) BEFORE the
-    overwrite so the write never reads the files it replaces. The
-    streaming sinks' fold records carry over (``storectl.publish``):
-    compaction keeps which batches are incorporated, it only removes
-    row-level duplication. The signature recipe is inherited from the
-    store's version marker (explicit mismatches raise) — recompacting
-    under different coefficients would orphan every probe."""
+    store's hashed postings, not the corpus. The deduped postings are
+    checkpointed before the rebuild writes."""
     root = path.rstrip("/")
-    cur = storectl.current_dir(root)
-    if cur is None:
-        raise FileNotFoundError(f"no published signature store under {root!r}")
-    # recipe and postings from the SAME version
-    _k, num_perm, bands, n_buckets, persist = _resolve_sig_params(
-        root, None, num_perm, bands, n_buckets, stored=storectl.params_of(cur)
+    cur = storectl.open_store(
+        root, SIG_STORE,
+        {"num_perm": num_perm, "bands": bands, "n_buckets": n_buckets},
     )
     postings = (
-        spark.read.parquet(cur + "/postings")
+        spark.read.parquet(cur.path("postings"))
         .distinct()
         .localCheckpoint(eager=True)
     )
     sizes = postings.groupBy("doc").agg(
         F.count(F.lit(1)).cast("long").alias("n_sh")
     )
-    if build_key is None:
-        meta = storectl.current_meta(root) or {}
-        build_key = meta.get("build_key", "sig-v1")
-    _publish_sig_store(
-        spark, root, table,
-        (sizes, postings, _lsh_band_rows(postings, num_perm, bands)),
-        n_buckets, build_key, keep, retain_s, persist,
+    band_rows = _lsh_band_rows(
+        postings, cur.params["num_perm"], cur.params["bands"]
     )
+    with storectl.rebuild(root, SIG_STORE, build_key=build_key, base=cur) as b:
+        _add_sig_state(b, (sizes, postings, band_rows))
+    SIG_STORE.register(spark, table, b.version)
 
 
 def minhash_lsh_increment_from_store(
@@ -1231,7 +1147,8 @@ def minhash_lsh_increment_from_store(
     side, and the verify reads only the stored postings. The signature
     recipe self-configures from the store's version marker; explicitly
     passed values that mismatch it raise instead of probing the wrong
-    buckets (round-9 verdict #6).
+    buckets. ``batch_state``: a :func:`batch_lsh_state` of ``batch``
+    banded under the store's recipe.
 
     Plan shape: two probe joins (batch vs the bucketed store, batch vs
     itself) whose raw pairs take one ``distinct``; the batch's ids are
@@ -1241,32 +1158,24 @@ def minhash_lsh_increment_from_store(
     band table), so no parquet schema-inference job runs. A probe of a
     40-document batch that computes its own state runs 12 Spark jobs
     on local[4]."""
-    root = path.rstrip("/")
-    # one CURRENT read: recipe and registered data from the SAME version
-    ver = storectl.current_dir(root)
-    if ver is None:
-        raise FileNotFoundError(
-            f"no published signature store under {root!r} — "
-            "write_signature_store first"
-        )
-    k, num_perm, bands, n_buckets, _persist = _resolve_sig_params(
-        root, k, num_perm, bands, n_buckets, stored=storectl.params_of(ver)
+    ver = storectl.open_store(
+        path.rstrip("/"), SIG_STORE,
+        {"k": k, "num_perm": num_perm, "bands": bands, "n_buckets": n_buckets},
     )
-    storectl.register_bucketed(
-        spark, table, ver + "/bands", ["band", "bh"], ["band", "bh"], n_buckets
-    )
+    SIG_STORE.register(spark, table, ver)
     corpus_bands = spark.table(table)
     doc = corpus_bands.schema["doc"].dataType.simpleString()
     corpus_postings = spark.read.schema(f"doc {doc}, sh bigint").parquet(
-        ver + "/postings"
+        ver.path("postings")
     )
     corpus_sizes = spark.read.schema(f"doc {doc}, n_sh bigint").parquet(
-        ver + "/sizes"
+        ver.path("sizes")
     )
 
     if batch_state is None:
+        p = ver.params
         b_sizes, b_postings, b_bands = batch_lsh_state(
-            batch, id_col, text_col, k, num_perm, bands
+            batch, id_col, text_col, p["k"], p["num_perm"], p["bands"]
         )
         # read by both probe joins below
         b_bands = b_bands.localCheckpoint(eager=True)

@@ -46,7 +46,6 @@ two previously separate entities.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -299,37 +298,18 @@ def entity_ids(
 # Persisted entity store: incremental ER (round-10 verdict #4)
 # ---------------------------------------------------------------------------
 
-#: store recipe defaults. ``block_cap`` uses 0 for "uncapped" and
-#: ``two_keys`` 0/1 for the second blocking pass because
-#: ``storectl.resolve_params`` treats a requested None as "inherit the
-#: stored value" — None/False could never be requested explicitly.
-_ER_DEFAULTS = {
-    "threshold": 0.5,
-    "block_cap": 0,
-    "two_keys": 0,
-    "n_buckets": 16,
-}
-
-
-def _resolve_er_params(
-    stored: dict | None, threshold, block_cap, two_keys, n_buckets
-) -> tuple[dict, dict | None]:
-    """(resolved, persistable): reconcile caller args with ONE version's
-    persisted recipe. Callers pass ``storectl.params_of(ver)`` for the
-    version dir they resolved (never a second independent CURRENT read)
-    — reading params and data from two separate CURRENT resolutions is
-    the TOCTOU a concurrent rebuild with a different recipe exploits
-    (the round-10 knn_from_store fix, applied here from the start).
-    ``persistable`` is what a republishing path may stamp into the new
-    marker (``storectl.persistable_params``)."""
-    requested = {
-        "threshold": threshold,
-        "block_cap": block_cap,
-        "two_keys": two_keys,
-        "n_buckets": n_buckets,
-    }
-    resolved = storectl.resolve_params(stored, requested, _ER_DEFAULTS)
-    return resolved, storectl.persistable_params(stored, requested, resolved)
+#: the entity store: block rows bucketed and sorted on blk, beside the
+#: plain-parquet ``entities`` (non-root assignments) and ``ids``. Recipe
+#: defaults: ``block_cap`` uses 0 for "uncapped" and ``two_keys`` 0/1
+#: for the second blocking pass because ``storectl.resolve_params``
+#: treats a requested None as "inherit the stored value" — None/False
+#: could never be requested explicitly.
+ER_STORE = storectl.StoreSpec(
+    "entity store",
+    "er-v1",
+    {"threshold": 0.5, "block_cap": 0, "two_keys": 0, "n_buckets": 16},
+    (storectl.Layout("blocks", ("blk",)),),
+)
 
 
 def write_entity_store(
@@ -343,8 +323,6 @@ def write_entity_store(
     two_keys: int = 0,
     n_buckets: int = 16,
     build_key: str = "er-v1",
-    keep: int = 1,
-    retain_s: float = storectl.RETAIN_SECONDS,
 ) -> None:
     """Persist a corpus's ER state once so later record batches resolve
     against it with ZERO corpus-side recompute — the structured-record
@@ -365,51 +343,35 @@ def write_entity_store(
       so a full (rec_id, entity_id) assignment can be reconstructed.
 
     The matching recipe (threshold, block_cap [0 = uncapped], two_keys
-    [0/1: last-token second blocking pass], n_buckets) is persisted in
-    the version marker: probes and folds self-configure from it, and
-    explicitly passed values that mismatch raise
-    (``storectl.resolve_params``) — a probe under a different recipe
-    would silently resolve against the wrong candidate set.
-
-    Publication is atomic and cross-process safe (``sources.storectl``)."""
+    [0/1: last-token second blocking pass], n_buckets) is recorded in
+    the version: probes and folds inherit it, and explicitly passed
+    values that mismatch raise — a probe under a different recipe
+    would silently resolve against the wrong candidate set."""
     params = {
         "threshold": threshold,
         "block_cap": block_cap,
         "two_keys": two_keys,
         "n_buckets": n_buckets,
     }
-    spark = df.sparkSession
-    root = path.rstrip("/")
-    build = storectl.new_build_dir(root)
     cap = block_cap or None
-    rows = _block_rows(df, id_col, name_col, bool(two_keys), cap)
-    storectl.write_bucketed(rows, build + "/blocks", ["blk"], ["blk"], n_buckets)
-    ents = entity_ids(
-        df,
-        match_pairs(
-            df, id_col, name_col, threshold, cap, bool(two_keys)
-        ),
-        id_col,
-    )
-    ents.filter(F.col("entity_id") != F.col("rec_id")).write.mode(
-        "overwrite"
-    ).parquet(build + "/entities")
-    df.select(F.col(id_col).cast("long").alias("rec_id")).write.mode(
-        "overwrite"
-    ).parquet(build + "/ids")
-    ver = storectl.publish(
-        root, build, build_key, keep=keep, retain_s=retain_s, params=params
-    )
-    storectl.register_bucketed(
-        spark, table, ver + "/blocks", ["blk"], ["blk"], n_buckets
-    )
+    with storectl.rebuild(path.rstrip("/"), ER_STORE, params, build_key) as b:
+        b.add("blocks", _block_rows(df, id_col, name_col, bool(two_keys), cap))
+        ents = entity_ids(
+            df,
+            match_pairs(
+                df, id_col, name_col, threshold, cap, bool(two_keys)
+            ),
+            id_col,
+        )
+        b.add("entities", ents.filter(F.col("entity_id") != F.col("rec_id")))
+        b.add("ids", df.select(F.col(id_col).cast("long").alias("rec_id")))
+    ER_STORE.register(df.sparkSession, table, b.version)
 
 
 def _er_probe(
     spark,
-    ver: str,
+    ver: storectl.Version,
     batch: DataFrame,
-    params: dict,
     table: str,
     id_col: str,
     name_col: str,
@@ -463,9 +425,9 @@ def _er_probe(
     (equivalence pytest-pinned)."""
     from scipi_spark.operators import graph
 
-    threshold = params["threshold"]
-    cap = params["block_cap"] or None
-    two = bool(params["two_keys"])
+    threshold = ver.params["threshold"]
+    cap = ver.params["block_cap"] or None
+    two = bool(ver.params["two_keys"])
 
     batch_rows = _block_rows(batch, id_col, name_col, two, None).select(
         F.col("blk"), F.col("rid").alias("brid"), F.col("w").alias("bw")
@@ -494,7 +456,7 @@ def _er_probe(
         batch_rows = batch_rows.join(F.broadcast(kept), "blk", "semi")
     batch_rows = batch_rows.localCheckpoint(eager=True)
 
-    nonroot = spark.read.parquet(ver + "/entities")
+    nonroot = spark.read.parquet(ver.path("entities"))
 
     # batch vs corpus: candidates share a block key; scored with the
     # identical Jaccard the one-shot path uses
@@ -577,7 +539,7 @@ def _er_probe(
     # identity matches resolve it to its own stored entity) — one
     # narrow long column, the cheapest distinct there is
     all_ids = (
-        spark.read.parquet(ver + "/ids").unionByName(batch_ids).distinct()
+        spark.read.parquet(ver.path("ids")).unionByName(batch_ids).distinct()
     )
     assignment = all_ids.join(new_nonroot, "rec_id", "left").select(
         "rec_id",
@@ -610,24 +572,14 @@ def er_increment_from_store(
     the stored entity assignment. The matching recipe self-configures
     from the store's version marker; explicitly passed values that
     mismatch it raise."""
-    root = path.rstrip("/")
-    # resolve the version ONCE and read the recipe from ITS marker — a
-    # concurrent rebuild between a params read and a separate CURRENT
-    # read would register the new files under the old bucket count
-    ver = storectl.current_dir(root)
-    if ver is None:
-        raise FileNotFoundError(
-            f"no published entity store under {root!r} — "
-            "write_entity_store first"
-        )
-    params, _persist = _resolve_er_params(
-        storectl.params_of(ver), threshold, block_cap, two_keys, n_buckets
+    ver = storectl.open_store(
+        path.rstrip("/"), ER_STORE,
+        {"threshold": threshold, "block_cap": block_cap,
+         "two_keys": two_keys, "n_buckets": n_buckets},
     )
-    storectl.register_bucketed(
-        spark, table, ver + "/blocks", ["blk"], ["blk"], params["n_buckets"]
-    )
+    ER_STORE.register(spark, table, ver)
     _rows, _nonroot, assignment = _er_probe(
-        spark, ver, batch, params, table, id_col, name_col
+        spark, ver, batch, table, id_col, name_col
     )
     return assignment
 
@@ -642,8 +594,6 @@ def append_entity_store(
     block_cap: int | None = None,
     two_keys: int | None = None,
     n_buckets: int | None = None,
-    keep: int = 1,
-    retain_s: float = storectl.RETAIN_SECONDS,
     *,
     fold: tuple[str, int] | None = None,
 ) -> DataFrame:
@@ -662,69 +612,36 @@ def append_entity_store(
     RAISES instead of persisting a split clustering.
 
     Append-only contract: batch record ids must be new (see
-    :func:`_er_probe`). Atomicity and concurrency as in every store
-    family: clone -> append/rewrite -> publish under ``append_lock``,
-    with ``expect_base`` backstopping a bypassed lock. ``fold``: the
-    streaming sink's ``(query_key, batch_id)`` stamp, recorded in the
-    published version (``storectl.publish``).
+    :func:`_er_probe`). The batch is probed against the version the
+    append clones, under its recipe. ``fold``: the streaming sink's
+    ``(query_key, batch_id)`` stamp.
 
     Returns the folded full (rec_id, entity_id) assignment (the same
     DataFrame :func:`er_increment_from_store` would produce), so a
     caller doing probe + fold — the streaming sink — blocks and scores
     the batch exactly once."""
     spark = batch.sparkSession
-    root = path.rstrip("/")
-    with storectl.append_lock(root):
-        build, cur = storectl.clone_current(root)
-        # recipe from the CLONED version's own marker, resolved under
-        # the lock — a rebuild landing between an early resolve and the
-        # clone would otherwise fold the batch under the old recipe
-        params, persist = _resolve_er_params(
-            storectl.params_of(cur), threshold, block_cap, two_keys,
-            n_buckets,
-        )
-        storectl.register_bucketed(
-            spark, table, cur + "/blocks", ["blk"], ["blk"], params["n_buckets"]
-        )
+    requested = {"threshold": threshold, "block_cap": block_cap,
+                 "two_keys": two_keys, "n_buckets": n_buckets}
+    with storectl.append(path.rstrip("/"), ER_STORE, requested, fold=fold) as b:
+        ER_STORE.register(spark, table, b.base)
         # strict=True: a non-converged closure must abort the fold, not
         # persist a silently split clustering that would corrupt every
-        # later probe (round-11 advice)
+        # later probe
         batch_rows, new_nonroot, assignment = _er_probe(
-            spark, cur, batch, params, table, id_col, name_col, strict=True
+            spark, b.base, batch, table, id_col, name_col, strict=True
         )
         assignment = assignment.localCheckpoint(eager=True)
-        storectl.append_bucketed(
+        b.add(
+            "blocks",
             batch_rows.select(
                 "blk", F.col("brid").alias("rid"), F.col("bw").alias("w")
             ),
-            build + "/blocks",
-            ["blk"],
-            ["blk"],
-            params["n_buckets"],
         )
-        batch.select(
-            F.col(id_col).cast("long").alias("rec_id")
-        ).write.mode("append").parquet(build + "/ids")
-        # entities is derived folded state, not an append log: clear the
-        # cloned copy's files and write the new assignment in its place
-        import shutil
-
-        shutil.rmtree(build + "/entities", ignore_errors=True)
-        new_nonroot.write.mode("overwrite").parquet(build + "/entities")
-        meta = storectl.meta_of(cur) or {}
-        ver = storectl.publish(
-            root,
-            build,
-            meta.get("build_key", "er-v1"),
-            keep=keep,
-            retain_s=retain_s,
-            expect_base=os.path.basename(cur),
-            params=persist,
-            fold=fold,
-        )
-    storectl.register_bucketed(
-        spark, table, ver + "/blocks", ["blk"], ["blk"], params["n_buckets"]
-    )
+        b.add("ids", batch.select(F.col(id_col).cast("long").alias("rec_id")))
+        # entities is derived folded state, not an append log
+        b.replace("entities", new_nonroot)
+    ER_STORE.register(spark, table, b.version)
     return assignment
 
 
@@ -734,57 +651,36 @@ def compact_entity_store(
     table: str = "er_store_blocks",
     n_buckets: int | None = None,
     build_key: str | None = None,
-    keep: int = 1,
-    retain_s: float = storectl.RETAIN_SECONDS,
 ) -> None:
     """Rewrite the store's three artifacts with duplicate rows dropped —
-    the repair for a re-ingested record id (the LSM maintenance every
-    store family here carries; ``dedup.compact_signature_store`` /
-    ``similarity.compact_ann_store`` are the siblings). Probe
-    CORRECTNESS survives duplicated block rows without this (the
-    candidate join dedups (brid, rid) pairs), so compaction here is a
-    space/probe-cost repair plus the id-universe fix: a replayed
-    id-append would double-count records in
-    :func:`entity_store_assignment` joins. One distinct per artifact,
-    proportional to the store, never re-matching the corpus; the entity
-    assignment itself is folded state and carries over unchanged.
-    Publishes atomically as a new version; the recipe is inherited from
-    the marker (explicit n_buckets mismatch raises)."""
+    the repair for a re-ingested record id. Probe CORRECTNESS survives
+    duplicated block rows without this (the candidate join dedups
+    (brid, rid) pairs), so compaction here is a space/probe-cost repair
+    plus the id-universe fix: a replayed id-append would double-count
+    records in :func:`entity_store_assignment` joins. One distinct per
+    artifact, proportional to the store, never re-matching the corpus;
+    the entity assignment itself is folded state and carries over
+    unchanged."""
     root = path.rstrip("/")
-    cur = storectl.current_dir(root)
-    if cur is None:
-        raise FileNotFoundError(f"no published entity store under {root!r}")
-    params, persist = _resolve_er_params(
-        storectl.params_of(cur), None, None, None, n_buckets
-    )
+    cur = storectl.open_store(root, ER_STORE, {"n_buckets": n_buckets})
     blocks = (
-        spark.read.parquet(cur + "/blocks")
+        spark.read.parquet(cur.path("blocks"))
         .dropDuplicates(["blk", "rid"])
         .localCheckpoint(eager=True)
     )
-    ids = spark.read.parquet(cur + "/ids").distinct().localCheckpoint(
+    ids = spark.read.parquet(cur.path("ids")).distinct().localCheckpoint(
         eager=True
     )
     nonroot = (
-        spark.read.parquet(cur + "/entities")
+        spark.read.parquet(cur.path("entities"))
         .dropDuplicates(["rec_id"])
         .localCheckpoint(eager=True)
     )
-    build = storectl.new_build_dir(root)
-    storectl.write_bucketed(
-        blocks, build + "/blocks", ["blk"], ["blk"], params["n_buckets"]
-    )
-    ids.write.mode("overwrite").parquet(build + "/ids")
-    nonroot.write.mode("overwrite").parquet(build + "/entities")
-    if build_key is None:
-        meta = storectl.meta_of(cur) or {}
-        build_key = meta.get("build_key", "er-v1")
-    ver = storectl.publish(
-        root, build, build_key, keep=keep, retain_s=retain_s, params=persist
-    )
-    storectl.register_bucketed(
-        spark, table, ver + "/blocks", ["blk"], ["blk"], params["n_buckets"]
-    )
+    with storectl.rebuild(root, ER_STORE, build_key=build_key, base=cur) as b:
+        b.add("blocks", blocks)
+        b.add("ids", ids)
+        b.add("entities", nonroot)
+    ER_STORE.register(spark, table, b.version)
 
 
 def entity_store_assignment(
@@ -793,12 +689,9 @@ def entity_store_assignment(
     """The store's CURRENT full (rec_id, entity_id) assignment — id
     universe left-joined with the non-root rows (a record absent from
     ``entities`` is its own entity)."""
-    root = path.rstrip("/")
-    ver = storectl.current_dir(root)
-    if ver is None:
-        raise FileNotFoundError(f"no published entity store under {root!r}")
-    ids = spark.read.parquet(ver + "/ids")
-    nonroot = spark.read.parquet(ver + "/entities")
+    ver = storectl.open_store(path.rstrip("/"), ER_STORE)
+    ids = spark.read.parquet(ver.path("ids"))
+    nonroot = spark.read.parquet(ver.path("entities"))
     return ids.join(nonroot, "rec_id", "left").select(
         "rec_id",
         F.coalesce("entity_id", "rec_id").cast("long").alias("entity_id"),

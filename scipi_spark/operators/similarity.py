@@ -20,7 +20,6 @@ bit-identical to the DuckDB oracle's ``list_inner_product`` on DOUBLE[].
 
 from __future__ import annotations
 
-import os
 import random
 
 import pandas as pd
@@ -222,6 +221,18 @@ _ANN_PARAMS: dict = {}
 #: params (pre-round-10 stores)
 _ANN_DEFAULTS = {"bits": 6, "tables": 8, "dim": 64, "seed": 42, "n_buckets": 16}
 
+#: the ANN store: signature rows bucketed and sorted on (t, sig), and
+#: the vectors on vec_id (table ``<table>_vectors``)
+ANN_STORE = storectl.StoreSpec(
+    "ANN store",
+    "ann-v1",
+    _ANN_DEFAULTS,
+    (
+        storectl.Layout("sigs", ("t", "sig")),
+        storectl.Layout("vectors", ("vec_id",), suffix="_vectors"),
+    ),
+)
+
 
 def hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
     """Deterministic Gaussian random hyperplanes (driver-side literals —
@@ -410,6 +421,57 @@ def embedding_norm_screen(
     return embeddings.select(*cols).withColumn("ok", ok)
 
 
+def _signed(vectors: DataFrame, p: dict) -> DataFrame:
+    """(vec_id, e, sigs): ``vectors`` signed with the fixed-seed planes of
+    recipe ``p``, checkpointed — the sigs and vectors writes both read
+    it."""
+    planes = [
+        hyperplanes(p["dim"], p["bits"], p["seed"] + 7919 * t)
+        for t in range(p["tables"])
+    ]
+    sigs_udf = make_signatures_udf(planes)
+    return vectors.withColumn("sigs", sigs_udf(F.col("e"))).localCheckpoint(
+        eager=True
+    )
+
+
+def _spread_signed(embeddings: DataFrame, id_col: str, vec_col: str, p: dict):
+    """:func:`_signed` over a spread copy of ``embeddings``; the copy is
+    released once the signed rows are checkpointed. A recipe with
+    ``bits`` None gets it from the row count first (:func:`auto_bits`)."""
+    spread = _spread(embeddings)
+    vectors = spread.select(
+        F.col(id_col).alias("vec_id"), _as_double(vec_col).alias("e")
+    )
+    if p["bits"] is None:
+        # checkpoint BEFORE counting so the signing pass reads the
+        # materialized frame instead of re-scanning the raw input
+        vectors = vectors.localCheckpoint(eager=True)
+        p["bits"] = auto_bits(vectors.count())
+    signed = _signed(vectors, p)
+    if spread is not embeddings:
+        spread.unpersist()
+    return signed
+
+
+def _add_ann(build: storectl.Build, signed: DataFrame) -> None:
+    sigs = signed.select("vec_id", F.posexplode("sigs").alias("t", "sig"))
+    build.add("sigs", sigs)
+    build.add("vectors", signed.select("vec_id", "e"))
+
+
+def _bind(spark, table: str, version: storectl.Version) -> None:
+    """Register ``version``'s tables under ``table`` and remember the
+    recipe it records for probes by table name. A legacy (params-less)
+    version drops the entry, so it cannot inherit a recipe recorded for
+    a different store once bound to this name."""
+    if version.stored:
+        _ANN_PARAMS[table] = version.stored
+    else:
+        _ANN_PARAMS.pop(table, None)
+    ANN_STORE.register(spark, table, version)
+
+
 def write_ann_store(
     embeddings: DataFrame,
     path: str,
@@ -422,8 +484,6 @@ def write_ann_store(
     seed: int = 42,
     n_buckets: int = 16,
     build_key: str = "ann-v1",
-    keep: int = 1,
-    retain_s: float = storectl.RETAIN_SECONDS,
 ) -> None:
     """Persist a corpus's hyperplane-LSH ANN state once so later query
     batches probe it with ZERO corpus-side recompute — the vector-store
@@ -441,73 +501,17 @@ def write_ann_store(
     match the stored ones; every query batch is then O(|batch| x bucket
     occupancy) instead of re-hashing the corpus per search.
 
-    Publication is atomic and cross-process safe (``sources.storectl``):
-    both tables stage in a private build dir, and readers — this process
-    or any other — resolve the store through the CURRENT pointer, so a
-    probe concurrent with a rebuild sees the old or the new COMPLETE
-    store, never a half-written one.
-
     ``bits=None`` (the default) AUTO-SIZES the hyperplane count from the
     corpus cardinality (:func:`auto_bits`) so bucket occupancy stays
     bounded as the store grows. Whatever recipe is used — auto or
-    explicit — is persisted in the version marker; probes and
-    appends self-configure from it, and explicitly mismatched values
-    raise (``storectl.resolve_params``)."""
-    base0 = _spread(embeddings).select(
-        F.col(id_col).alias("vec_id"), _as_double(vec_col).alias("e")
-    )
-    if bits is None:
-        # checkpoint BEFORE counting so the signing pass below reads the
-        # materialized frame instead of re-scanning the raw input
-        base0 = base0.localCheckpoint(eager=True)
-        bits = auto_bits(base0.count())
-    params = {
-        "bits": bits,
-        "tables": tables,
-        "dim": dim,
-        "seed": seed,
-        "n_buckets": n_buckets,
-    }
-    all_planes = [hyperplanes(dim, bits, seed + 7919 * t) for t in range(tables)]
-    sigs_udf = make_signatures_udf(all_planes)
-    base = base0.withColumn("sigs", sigs_udf(F.col("e"))).localCheckpoint(
-        eager=True
-    )
-    root = path.rstrip("/")
-    build = storectl.new_build_dir(root)
-    storectl.write_bucketed(
-        base.select("vec_id", F.posexplode("sigs").alias("t", "sig")),
-        build + "/sigs",
-        ["t", "sig"],
-        ["t", "sig"],
-        n_buckets,
-    )
-    storectl.write_bucketed(
-        base.select("vec_id", "e"),
-        build + "/vectors",
-        ["vec_id"],
-        ["vec_id"],
-        n_buckets,
-    )
-    ver = storectl.publish(
-        root, build, build_key, keep=keep, retain_s=retain_s, params=params
-    )
-    _ANN_PARAMS[table] = params
-    _register_ann(embeddings.sparkSession, table, ver, n_buckets)
-
-
-def _register_ann(spark, table: str, ver: str, n_buckets: int) -> None:
-    storectl.register_bucketed(
-        spark, table, ver + "/sigs", ["t", "sig"], ["t", "sig"], n_buckets
-    )
-    storectl.register_bucketed(
-        spark,
-        table + "_vectors",
-        ver + "/vectors",
-        ["vec_id"],
-        ["vec_id"],
-        n_buckets,
-    )
+    explicit — is recorded in the version; probes and appends inherit
+    it (``storectl``)."""
+    params = {"bits": bits, "tables": tables, "dim": dim, "seed": seed,
+              "n_buckets": n_buckets}
+    signed = _spread_signed(embeddings, id_col, vec_col, params)
+    with storectl.rebuild(path.rstrip("/"), ANN_STORE, params, build_key) as b:
+        _add_ann(b, signed)
+    _bind(embeddings.sparkSession, table, b.version)
 
 
 def open_ann_store(
@@ -528,39 +532,15 @@ def open_ann_store(
     ``storectl.list_versions`` instead of CURRENT — time travel over the
     immutable version history (e.g. probe the pre-append index while the
     appended one serves live traffic)."""
-    ver = (
-        version_dir
-        if version_dir is not None
-        else storectl.current_dir(path.rstrip("/"), build_key)
-    )
-    if ver is None:
+    try:
+        ver = storectl.open_store(
+            path.rstrip("/"), ANN_STORE, {"n_buckets": n_buckets},
+            version_dir=version_dir, build_key=build_key,
+        )
+    except FileNotFoundError:
         return None
-    stored = storectl.params_of(ver)
-    # an explicitly passed n_buckets that mismatches the store's recorded
-    # value must raise like every sibling path (write/append/compact/
-    # probe route through resolve_params) — silently registering the
-    # bucketed tables with the wrong count would make every probe's
-    # bucket-join read the wrong files (round-10 advice #2). Resolve
-    # BEFORE touching _ANN_PARAMS: a raise after the cache write would
-    # leave this table's previous registration paired with the NEW
-    # store's recipe — the wrong-planes probe the cache hygiene below
-    # exists to prevent.
-    n_buckets = storectl.resolve_params(
-        stored,
-        {"n_buckets": n_buckets},
-        {"n_buckets": _ANN_DEFAULTS["n_buckets"]},
-    )["n_buckets"]
-    if stored:
-        _ANN_PARAMS[table] = stored
-    else:
-        # a legacy (pre-params) store must not inherit a recipe recorded
-        # for a DIFFERENT store previously bound to this table name — a
-        # stale entry would silently sign probes with the wrong planes
-        _ANN_PARAMS.pop(table, None)
-    _register_ann(spark, table, ver, n_buckets)
-    return ver
-
-
+    _bind(spark, table, ver)
+    return ver.dir
 
 
 def append_ann_store(
@@ -574,93 +554,28 @@ def append_ann_store(
     dim: int | None = None,
     seed: int | None = None,
     n_buckets: int | None = None,
-    keep: int = 1,
-    retain_s: float = storectl.RETAIN_SECONDS,
     *,
     fold: tuple[str, int] | None = None,
 ) -> None:
     """Fold a new embedding batch into an existing ANN store: signature
     rows and vectors append under the SAME bucket specs, so the probe's
     shuffle-free scan property is preserved (each append adds per-bucket
-    files, it never re-shuffles the store).
-
-    The hash recipe (bits/tables/dim/seed/n_buckets) is INHERITED from
-    the store's version marker — appending under a different recipe
-    would mix incompatible signatures into one table, so explicitly
-    passed values that mismatch the marker raise
-    (``storectl.resolve_params``).
+    files, it never re-shuffles the store). The batch is signed under
+    the recipe of the version the append clones (explicit mismatches
+    raise).
 
     Append-only contract (the LSM trade, as in
     ``dedup.append_signature_store``): callers MUST feed vec_ids not
     already stored. A duplicated id leaves its vector row in the store
     twice; the scoring join then duplicates that candidate's scored rows
     and the per-query top-k window under-fills with distinct neighbors —
-    repair with :func:`compact_ann_store` (one ``distinct()`` over the
-    stored vectors, then a rewrite of both derived tables).
-
-    Atomicity: the append hardlink-clones the current version (metadata
-    only — no data bytes copy), adds the batch's files to the clone, and
-    publishes it as a NEW version; concurrent readers keep the old
-    complete version until the pointer flips. ``fold``: the streaming
-    sink's ``(query_key, batch_id)`` stamp, recorded in that version
-    (``storectl.publish``)."""
-    root = path.rstrip("/")
-    stored = storectl.current_params(root)
+    repair with :func:`compact_ann_store`. ``fold``: the streaming
+    sink's ``(query_key, batch_id)`` stamp."""
     requested = {"bits": bits, "tables": tables, "dim": dim, "seed": seed,
                  "n_buckets": n_buckets}
-    params = storectl.resolve_params(stored, requested, _ANN_DEFAULTS)
-    # legacy params-less store + omitted args: the resolved recipe is an
-    # ASSUMPTION — republishing it as the store's recorded recipe would
-    # later reject explicit-correct probes (round-10 advice #3)
-    persist = storectl.persistable_params(stored, requested, params)
-    bits, tables, dim, seed, n_buckets = (
-        params["bits"], params["tables"], params["dim"], params["seed"],
-        params["n_buckets"],
-    )
-    all_planes = [hyperplanes(dim, bits, seed + 7919 * t) for t in range(tables)]
-    sigs_udf = make_signatures_udf(all_planes)
-    base = (
-        _spread(embeddings)
-        .select(F.col(id_col).alias("vec_id"), _as_double(vec_col).alias("e"))
-        .withColumn("sigs", sigs_udf(F.col("e")))
-        .localCheckpoint(eager=True)
-    )
-    # serialized across processes: concurrent appenders queue on the
-    # store's append lock so both batches land; publish's expect_base
-    # check turns a bypassed lock into a loud StoreConflictError instead
-    # of a silently dropped batch
-    with storectl.append_lock(root):
-        build, cur = storectl.clone_current(root)
-        storectl.append_bucketed(
-            base.select("vec_id", F.posexplode("sigs").alias("t", "sig")),
-            build + "/sigs",
-            ["t", "sig"],
-            ["t", "sig"],
-            n_buckets,
-        )
-        storectl.append_bucketed(
-            base.select("vec_id", "e"),
-            build + "/vectors",
-            ["vec_id"],
-            ["vec_id"],
-            n_buckets,
-        )
-        meta = storectl.current_meta(root) or {}
-        ver = storectl.publish(
-            root,
-            build,
-            meta.get("build_key", "ann-v1"),
-            keep=keep,
-            retain_s=retain_s,
-            expect_base=os.path.basename(cur),
-            params=persist,
-            fold=fold,
-        )
-    if persist is not None:
-        _ANN_PARAMS[table] = persist
-    else:
-        _ANN_PARAMS.pop(table, None)  # assumed recipe: don't record it
-    _register_ann(embeddings.sparkSession, table, ver, n_buckets)
+    with storectl.append(path.rstrip("/"), ANN_STORE, requested, fold=fold) as b:
+        _add_ann(b, _spread_signed(embeddings, id_col, vec_col, b.params))
+    _bind(embeddings.sparkSession, table, b.version)
 
 
 def compact_ann_store(
@@ -673,8 +588,6 @@ def compact_ann_store(
     seed: int | None = None,
     n_buckets: int | None = None,
     build_key: str | None = None,
-    keep: int = 1,
-    retain_s: float = storectl.RETAIN_SECONDS,
 ) -> None:
     """Rebuild the ANN store from its own stored vectors with duplicate
     ids dropped — the repair for a crash-replayed append. The vectors
@@ -683,65 +596,24 @@ def compact_ann_store(
     bucketed tables restores exact probe semantics; raw upstream
     embeddings are never touched. Among duplicate rows for one id the
     kept row is arbitrary — the append contract means they are replays
-    of the same vector.
-
-    Compaction builds a brand-new version from the live version's
-    vectors and publishes it atomically — the live store never degrades
-    mid-repair, and a compactor crash leaves the old version intact.
-    ``build_key`` (default: inherited from the live version) stamps the
-    published marker so callers can gate on "repaired" state. The hash
-    recipe is inherited from the marker exactly as in
-    :func:`append_ann_store` (explicit mismatches raise) — a compaction
-    under different planes would orphan every probe."""
+    of the same vector. ``build_key`` (default: inherited from the live
+    version) stamps the published marker so callers can gate on
+    "repaired" state."""
     root = path.rstrip("/")
-    stored = storectl.current_params(root)
-    requested = {"bits": bits, "tables": tables, "dim": dim, "seed": seed,
-                 "n_buckets": n_buckets}
-    params = storectl.resolve_params(stored, requested, _ANN_DEFAULTS)
-    persist = storectl.persistable_params(stored, requested, params)
-    bits, tables, dim, seed, n_buckets = (
-        params["bits"], params["tables"], params["dim"], params["seed"],
-        params["n_buckets"],
+    cur = storectl.open_store(
+        root, ANN_STORE,
+        {"bits": bits, "tables": tables, "dim": dim, "seed": seed,
+         "n_buckets": n_buckets},
     )
-    cur = storectl.current_dir(root)
-    if cur is None:
-        raise FileNotFoundError(f"no published ANN store under {root!r}")
     vectors = (
-        spark.read.parquet(cur + "/vectors")
+        spark.read.parquet(cur.path("vectors"))
         .dropDuplicates(["vec_id"])
         .localCheckpoint(eager=True)
     )
-    all_planes = [hyperplanes(dim, bits, seed + 7919 * t) for t in range(tables)]
-    sigs_udf = make_signatures_udf(all_planes)
-    signed = vectors.withColumn("sigs", sigs_udf(F.col("e"))).localCheckpoint(
-        eager=True
-    )
-    build = storectl.new_build_dir(root)
-    storectl.write_bucketed(
-        signed.select("vec_id", F.posexplode("sigs").alias("t", "sig")),
-        build + "/sigs",
-        ["t", "sig"],
-        ["t", "sig"],
-        n_buckets,
-    )
-    storectl.write_bucketed(
-        signed.select("vec_id", "e"),
-        build + "/vectors",
-        ["vec_id"],
-        ["vec_id"],
-        n_buckets,
-    )
-    if build_key is None:
-        meta = storectl.current_meta(root) or {}
-        build_key = meta.get("build_key", "ann-v1")
-    ver = storectl.publish(
-        root, build, build_key, keep=keep, retain_s=retain_s, params=persist
-    )
-    if persist is not None:
-        _ANN_PARAMS[table] = persist
-    else:
-        _ANN_PARAMS.pop(table, None)  # assumed recipe: don't record it
-    _register_ann(spark, table, ver, n_buckets)
+    signed = _signed(vectors, cur.params)
+    with storectl.rebuild(root, ANN_STORE, build_key=build_key, base=cur) as b:
+        _add_ann(b, signed)
+    _bind(spark, table, b.version)
 
 
 def knn_from_store(
@@ -780,40 +652,22 @@ def knn_from_store(
     explicitly passed values that mismatch the store's recipe raise
     (round-9 verdict #1)."""
     spark = queries.sparkSession
-    # Resolve the version dir ONCE and read params from THAT version:
-    # reading current_params and then letting open_ann_store re-resolve
-    # CURRENT separately is a TOCTOU — a concurrent republish with a
-    # different auto-sized recipe between the two reads would sign the
-    # queries with stale planes against the new store, the silent
-    # under-recall this self-configuration exists to prevent (round-10
-    # advice #1). Params and registered data now come from one version.
-    ver = None
+    requested = {"bits": bits, "tables": tables, "dim": dim, "seed": seed,
+                 "n_buckets": n_buckets}
     if path is not None:
-        ver = storectl.current_dir(path.rstrip("/"))
-        if ver is None:
-            raise FileNotFoundError(
-                f"no published ANN store under {path!r} — write_ann_store first"
-            )
-        stored = storectl.params_of(ver)
+        # recipe and registered data from ONE CURRENT read: a republish
+        # with a different auto-sized recipe between two reads would sign
+        # the queries with stale planes against the new store
+        ver = storectl.open_store(path.rstrip("/"), ANN_STORE, requested)
+        _bind(spark, table, ver)
+        params = ver.params
     else:
-        stored = _ANN_PARAMS.get(table)
-    params = storectl.resolve_params(
-        stored,
-        {"bits": bits, "tables": tables, "dim": dim, "seed": seed,
-         "n_buckets": n_buckets},
-        _ANN_DEFAULTS,
-    )
+        params = storectl.resolve_params(
+            _ANN_PARAMS.get(table), requested, _ANN_DEFAULTS
+        )
     bits, tables, dim, seed = (
         params["bits"], params["tables"], params["dim"], params["seed"]
     )
-    if path is not None:
-        open_ann_store(
-            spark,
-            path,
-            table=table,
-            n_buckets=params["n_buckets"],
-            version_dir=ver,
-        )
     all_planes = [hyperplanes(dim, bits, seed + 7919 * t) for t in range(tables)]
     sigs_udf = make_signatures_udf(all_planes)
     q = (

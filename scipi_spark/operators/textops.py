@@ -11,6 +11,7 @@ column pruning (only ``text`` is read).
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -710,6 +711,13 @@ def tfidf_top_terms(
     )
 
 
+def _bm25_tokens(text_col: str) -> Column:
+    """The BM25 tokenization: lowercase alphanumeric runs."""
+    return F.filter(
+        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"), lambda t: t != ""
+    )
+
+
 def bm25_search(
     df: DataFrame,
     query_terms: list[str],
@@ -730,13 +738,7 @@ def bm25_search(
     global top-k (orderBy + limit = TakeOrdered, no full sort)."""
     q = [t for t in query_terms if t]
     terms = df.select(
-        F.col(id_col),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-                lambda t: t != "",
-            )
-        ).alias("term"),
+        F.col(id_col), F.explode(_bm25_tokens(text_col)).alias("term")
     ).filter(F.col("term").isin(q))
     # tf feeds BOTH dfreq and the scoring join; lens feeds BOTH the
     # avgdl aggregate and the scoring join — materialize each or the
@@ -749,13 +751,7 @@ def bm25_search(
     )
 
     lens = df.select(
-        F.col(id_col),
-        F.size(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-                lambda t: t != "",
-            )
-        ).cast("long").alias("dl"),
+        F.col(id_col), F.size(_bm25_tokens(text_col)).cast("long").alias("dl")
     ).localCheckpoint(eager=True)
     stats = lens.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
@@ -786,6 +782,37 @@ def bm25_search(
     )
 
 
+#: the BM25 index: (term, doc, tf) postings bucketed and sorted on term,
+#: beside plain-parquet ``doclen`` and ``stats``
+BM25_STORE = storectl.StoreSpec(
+    "text index", "bm25-v1", {"n_buckets": 16},
+    (storectl.Layout("postings", ("term",)),),
+)
+
+
+def _add_bm25_docs(
+    build: storectl.Build, df: DataFrame, id_col: str, text_col: str
+) -> DataFrame:
+    """Add ``df``'s (term, doc, tf) postings and (doc, dl) lengths to a
+    store build; returns the lengths."""
+    toks = _bm25_tokens(text_col)
+    terms = df.select(F.col(id_col).alias("doc"), F.explode(toks).alias("term"))
+    tf = terms.groupBy("term", "doc").agg(F.count(F.lit(1)).alias("tf"))
+    build.add("postings", tf)
+    lens = df.select(
+        F.col(id_col).alias("doc"), F.size(toks).cast("long").alias("dl")
+    )
+    build.add("doclen", lens)
+    return lens
+
+
+def _doclen_stats(lens: DataFrame) -> DataFrame:
+    """The 1-row (n, avgdl) corpus statistics of (doc, dl) lengths."""
+    return lens.agg(
+        F.count(F.lit(1)).cast("double").alias("n"), F.avg("dl").alias("avgdl")
+    )
+
+
 def write_text_index_store(
     df: DataFrame,
     path: str,
@@ -794,8 +821,6 @@ def write_text_index_store(
     text_col: str = "text",
     n_buckets: int = 16,
     build_key: str = "bm25-v1",
-    keep: int = 1,
-    retain_s: float = storectl.RETAIN_SECONDS,
 ) -> None:
     """Persist the corpus's BM25 state once so later searches probe it
     with ZERO corpus-side recompute (the search-index twin of
@@ -812,33 +837,12 @@ def write_text_index_store(
     Tokenization is byte-identical to :func:`bm25_search`, so
     :func:`bm25_from_store` returns the same scores (equivalence is
     pytest-pinned)."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"), lambda t: t != ""
-    )
-    root = path.rstrip("/")
-    build = storectl.new_build_dir(root)
-    terms = df.select(F.col(id_col).alias("doc"), F.explode(toks).alias("term"))
-    storectl.write_bucketed(
-        terms.groupBy("term", "doc").agg(F.count(F.lit(1)).alias("tf")),
-        build + "/postings",
-        ["term"],
-        ["term"],
-        n_buckets,
-    )
-    lens = df.select(
-        F.col(id_col).alias("doc"), F.size(toks).cast("long").alias("dl")
-    )
-    lens.write.mode("overwrite").parquet(build + "/doclen")
-    lens.agg(
-        F.count(F.lit(1)).cast("double").alias("n"), F.avg("dl").alias("avgdl")
-    ).write.mode("overwrite").parquet(build + "/stats")
-    ver = storectl.publish(
-        root, build, build_key, keep=keep, retain_s=retain_s,
-        params={"n_buckets": n_buckets},
-    )
-    storectl.register_bucketed(
-        df.sparkSession, table, ver + "/postings", ["term"], ["term"], n_buckets
-    )
+    with storectl.rebuild(
+        path.rstrip("/"), BM25_STORE, {"n_buckets": n_buckets}, build_key
+    ) as b:
+        lens = _add_bm25_docs(b, df, id_col, text_col)
+        b.add("stats", _doclen_stats(lens))
+    BM25_STORE.register(df.sparkSession, table, b.version)
 
 
 def append_text_index_store(
@@ -848,14 +852,10 @@ def append_text_index_store(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_buckets: int | None = None,
-    keep: int = 1,
-    retain_s: float = storectl.RETAIN_SECONDS,
     *,
     fold: tuple[str, int] | None = None,
 ) -> None:
-    """Fold a new document batch into an existing BM25 index — the
-    last persisted store family to gain the incremental shape (dedup
-    signatures, ANN vectors, entity store, SCD2 dimension all fold):
+    """Fold a new document batch into an existing BM25 index:
 
     - the batch's (term, doc, tf) postings APPEND to the bucketed
       postings table under the same bucket spec, so search's
@@ -871,72 +871,22 @@ def append_text_index_store(
 
     Append-only contract: batch doc ids must be new (a replayed id
     would double its postings and inflate its tf); the repair is a
-    :func:`write_text_index_store` rebuild. The bucket count is
-    inherited from the version marker (explicit mismatches raise);
-    atomicity via clone -> append -> publish under ``append_lock`` with
-    ``expect_base``, like every sibling store. ``fold``: the streaming
-    sink's ``(query_key, batch_id)`` stamp, recorded in the published
-    version (``storectl.publish``)."""
+    :func:`write_text_index_store` rebuild. ``fold``: the streaming
+    sink's ``(query_key, batch_id)`` stamp."""
     spark = batch.sparkSession
-    root = path.rstrip("/")
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"), lambda t: t != ""
-    )
-    with storectl.append_lock(root):
-        build, cur = storectl.clone_current(root)
-        # recipe from the CLONED version's own marker, under the lock
-        nb = storectl.resolve_params(
-            storectl.params_of(cur),
-            {"n_buckets": n_buckets},
-            {"n_buckets": 16},
-        )["n_buckets"]
-        terms = batch.select(
-            F.col(id_col).alias("doc"), F.explode(toks).alias("term")
-        )
-        storectl.append_bucketed(
-            terms.groupBy("term", "doc").agg(F.count(F.lit(1)).alias("tf")),
-            build + "/postings",
-            ["term"],
-            ["term"],
-            nb,
-        )
-        lens = batch.select(
-            F.col(id_col).alias("doc"), F.size(toks).cast("long").alias("dl")
-        )
-        lens.write.mode("append").parquet(build + "/doclen")
-        # stats derive from doclen: recompute over the merged table
-        # (sum/count of longs — exact, order-independent) and REPLACE
-        # the cloned copy. Materialize first: the write must not read
-        # the files it replaces.
-        merged = (
-            spark.read.parquet(build + "/doclen")
-            .agg(
-                F.count(F.lit(1)).cast("double").alias("n"),
-                F.avg("dl").alias("avgdl"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        import shutil
-
-        shutil.rmtree(build + "/stats", ignore_errors=True)
-        merged.write.mode("overwrite").parquet(build + "/stats")
-        meta = storectl.meta_of(cur) or {}
-        ver = storectl.publish(
-            root,
-            build,
-            meta.get("build_key", "bm25-v1"),
-            keep=keep,
-            retain_s=retain_s,
-            expect_base=os.path.basename(cur),
-            params=storectl.persistable_params(
-                storectl.params_of(cur), {"n_buckets": n_buckets},
-                {"n_buckets": nb},
+    with storectl.append(
+        path.rstrip("/"), BM25_STORE, {"n_buckets": n_buckets}, fold=fold
+    ) as b:
+        _add_bm25_docs(b, batch, id_col, text_col)
+        # stats over the merged doclen, materialized first: the write
+        # must not read the files it replaces
+        b.replace(
+            "stats",
+            _doclen_stats(spark.read.parquet(b.path("doclen"))).localCheckpoint(
+                eager=True
             ),
-            fold=fold,
         )
-    storectl.register_bucketed(
-        spark, table, ver + "/postings", ["term"], ["term"], nb
-    )
+    BM25_STORE.register(spark, table, b.version)
 
 
 def bm25_from_store(
@@ -960,22 +910,14 @@ def bm25_from_store(
     resolved version's marker (one CURRENT read — recipe and data from
     the same version); explicit mismatches raise."""
     q = [t for t in query_terms if t]
-    ver = storectl.current_dir(path.rstrip("/"))
-    if ver is None:
-        raise FileNotFoundError(
-            f"no published text index under {path!r} — "
-            "write_text_index_store first"
-        )
-    n_buckets = storectl.resolve_params(
-        storectl.params_of(ver), {"n_buckets": n_buckets}, {"n_buckets": 16}
-    )["n_buckets"]
-    storectl.register_bucketed(
-        spark, table, ver + "/postings", ["term"], ["term"], n_buckets
+    ver = storectl.open_store(
+        path.rstrip("/"), BM25_STORE, {"n_buckets": n_buckets}
     )
+    BM25_STORE.register(spark, table, ver)
     tf = spark.table(table).filter(F.col("term").isin(q))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("df"))
-    lens = spark.read.parquet(ver + "/doclen")
-    stats = spark.read.parquet(ver + "/stats")
+    lens = spark.read.parquet(ver.path("doclen"))
+    stats = spark.read.parquet(ver.path("stats"))
 
     idf = F.log(
         F.lit(1.0)
@@ -1224,6 +1166,34 @@ def dsir_importance(
     return scored
 
 
+#: the bigram LM store: (w1, w2, c2) counts bucketed and sorted on
+#: (w1, w2), (w1, c1) context counts on w1 (table ``<table>_ctx``), the
+#: vocabulary set on its token (never registered under the family's
+#: name) and the plain-parquet 1-row ``vocab`` size
+LM_STORE = storectl.StoreSpec(
+    "LM store", "lm-v1", {"n_buckets": 16},
+    (
+        storectl.Layout("bigrams", ("w1", "w2")),
+        storectl.Layout("ctx", ("w1",), suffix="_ctx"),
+        storectl.Layout("vocab_toks", ("w",), suffix=None),
+    ),
+)
+
+
+def _add_lm_counts(build: storectl.Build, bi: DataFrame) -> None:
+    """Add the (w1, w2, c2) and (w1, c1) counts of exploded bigrams."""
+    n = F.count(F.lit(1)).cast("long")
+    build.add("bigrams", bi.groupBy("w1", "w2").agg(n.alias("c2")))
+    build.add("ctx", bi.groupBy("w1").agg(n.alias("c1")))
+
+
+def _vocab_size(spark, build: storectl.Build) -> DataFrame:
+    """The 1-row vocabulary size V of the build's ``vocab_toks``."""
+    return spark.read.parquet(build.path("vocab_toks")).agg(
+        F.count(F.lit(1)).cast("double").alias("v")
+    )
+
+
 def write_lm_store(
     df: DataFrame,
     path: str,
@@ -1232,13 +1202,9 @@ def write_lm_store(
     text_col: str = "text",
     n_buckets: int = 16,
     build_key: str = "lm-v1",
-    keep: int = 1,
-    retain_s: float = storectl.RETAIN_SECONDS,
 ) -> None:
     """Persist the Laplace-smoothed bigram LM ONCE so later batches are
-    perplexity-scored with zero training-corpus recompute — the model
-    store completing the persisted-state family (minhash signature
-    store, graph edge store, BM25 text index, ANN vector store). The
+    perplexity-scored with zero training-corpus recompute. The
     production shape of the perplexity filter: the reference model is
     trained on a curated corpus one time; every crawl increment is
     scored against it (CCNet trains KenLM on Wikipedia once for exactly
@@ -1251,55 +1217,31 @@ def write_lm_store(
       on w1, same property for the context join;
     - ``<path>/vocab`` — the 1-row vocabulary size V."""
     bi = _doc_bigrams(df, id_col, text_col).localCheckpoint(eager=True)
-    root = path.rstrip("/")
-    build = storectl.new_build_dir(root)
-    storectl.write_bucketed(
-        bi.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("c2")),
-        build + "/bigrams",
-        ["w1", "w2"],
-        ["w1", "w2"],
-        n_buckets,
-    )
-    storectl.write_bucketed(
-        bi.groupBy("w1").agg(F.count(F.lit(1)).cast("long").alias("c1")),
-        build + "/ctx",
-        ["w1"],
-        ["w1"],
-        n_buckets,
-    )
-    # the vocabulary SET (not just its size) is persisted, bucketed on
-    # the token: V = |vocab| folds exactly on append (new tokens = the
-    # batch's distinct tokens anti-joined against this table, store
-    # side Exchange-free), which keeps every Laplace denominator — and
-    # therefore every score — bit-identical to a from-scratch rebuild
-    storectl.write_bucketed(
-        df.select(F.explode(tokens(text_col)).alias("w")).distinct(),
-        build + "/vocab_toks",
-        ["w"],
-        ["w"],
-        n_buckets,
-    )
-    df.sparkSession.read.parquet(build + "/vocab_toks").agg(
-        F.count(F.lit(1)).cast("double").alias("v")
-    ).write.mode("overwrite").parquet(build + "/vocab")
-    ver = storectl.publish(
-        root,
-        build,
-        build_key,
-        keep=keep,
-        retain_s=retain_s,
-        params={"n_buckets": n_buckets, "delta_appends": 0},
-    )
-    _register_lm(df.sparkSession, table, ver, n_buckets)
+    with storectl.rebuild(
+        path.rstrip("/"), LM_STORE,
+        {"n_buckets": n_buckets, "delta_appends": 0}, build_key,
+    ) as b:
+        _add_lm_counts(b, bi)
+        # the vocabulary SET (not just its size) is persisted, bucketed on
+        # the token: V = |vocab| folds exactly on append (new tokens = the
+        # batch's distinct tokens anti-joined against this table, store
+        # side Exchange-free), which keeps every Laplace denominator — and
+        # therefore every score — bit-identical to a from-scratch rebuild
+        b.add(
+            "vocab_toks",
+            df.select(F.explode(tokens(text_col)).alias("w")).distinct(),
+        )
+        b.add("vocab", _vocab_size(df.sparkSession, b))
+    LM_STORE.register(df.sparkSession, table, b.version)
 
 
-def _register_lm(spark, table: str, ver: str, n_buckets: int) -> None:
-    storectl.register_bucketed(
-        spark, table, ver + "/bigrams", ["w1", "w2"], ["w1", "w2"], n_buckets
-    )
-    storectl.register_bucketed(
-        spark, table + "_ctx", ver + "/ctx", ["w1"], ["w1"], n_buckets
-    )
+def _vocab_table(spark, vocab_toks: str, n_buckets: int) -> str:
+    """Register the vocabulary set at ``vocab_toks`` under a throwaway
+    table name, bucketed on the token, and return the name; the caller
+    drops it."""
+    vt = f"lm_vocab_{uuid.uuid4().hex[:12]}"
+    storectl.register_bucketed(spark, vt, vocab_toks, ["w"], ["w"], n_buckets)
+    return vt
 
 
 def append_lm_store(
@@ -1309,15 +1251,11 @@ def append_lm_store(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_buckets: int | None = None,
-    keep: int = 1,
-    retain_s: float = storectl.RETAIN_SECONDS,
 ) -> None:
-    """Fold a new document batch into a persisted bigram LM — the
-    reference-model store's incremental shape (round-12; every other
-    persisted family here folds): Kneser-Ney/Laplace inputs are exact
-    LONG counts, so the folded model is bit-identical to a
-    from-scratch :func:`write_lm_store` over the combined corpus
-    (equivalence pytest-pinned):
+    """Fold a new document batch into a persisted bigram LM:
+    Kneser-Ney/Laplace inputs are exact LONG counts, so the folded model
+    is bit-identical to a from-scratch :func:`write_lm_store` over the
+    combined corpus (equivalence pytest-pinned):
 
     - the batch's partial (w1, w2, c2) and (w1, c1) counts APPEND
       under the stores' bucket specs — O(batch) I/O, the LSM
@@ -1334,54 +1272,25 @@ def append_lm_store(
     Scores legitimately CHANGE on append: counts and V are corpus
     statistics — that is LM semantics, not drift. Append-only
     contract: batch doc ids must be NEW (a replayed batch would double
-    its n-gram counts; the streaming-sink guard is a per-batch fold
-    marker, the repair a :func:`write_lm_store` rebuild). Stores
-    written before the fold shape existed lack ``vocab_toks`` and
-    raise (rebuild once with :func:`write_lm_store`). Atomicity via
-    clone -> append -> publish under ``append_lock`` with
-    ``expect_base``, like every sibling store."""
+    its n-gram counts; the repair is a :func:`write_lm_store`
+    rebuild). Stores written before the fold shape existed lack
+    ``vocab_toks`` and raise (rebuild once with :func:`write_lm_store`)."""
     spark = batch.sparkSession
-    root = path.rstrip("/")
-    with storectl.append_lock(root):
-        build, cur = storectl.clone_current(root)
-        # recipe from the CLONED version's own marker, under the lock
-        stored = storectl.params_of(cur)
-        resolved = storectl.resolve_params(
-            stored, {"n_buckets": n_buckets}, {"n_buckets": 16}
-        )
-        nb = resolved["n_buckets"]
-        if not os.path.isdir(build + "/vocab_toks"):
+    with storectl.append(
+        path.rstrip("/"), LM_STORE, {"n_buckets": n_buckets}
+    ) as b:
+        if not os.path.isdir(b.path("vocab_toks")):
             raise FileNotFoundError(
-                f"the LM store under {root!r} predates the fold shape "
+                f"the LM store under {path!r} predates the fold shape "
                 "(no vocab_toks table) — V cannot be folded exactly; "
                 "rebuild it once with write_lm_store"
             )
         bi = _doc_bigrams(batch, id_col, text_col).localCheckpoint(eager=True)
-        storectl.append_bucketed(
-            bi.groupBy("w1", "w2").agg(
-                F.count(F.lit(1)).cast("long").alias("c2")
-            ),
-            build + "/bigrams",
-            ["w1", "w2"],
-            ["w1", "w2"],
-            nb,
-        )
-        storectl.append_bucketed(
-            bi.groupBy("w1").agg(F.count(F.lit(1)).cast("long").alias("c1")),
-            build + "/ctx",
-            ["w1"],
-            ["w1"],
-            nb,
-        )
+        _add_lm_counts(b, bi)
         # vocabulary fold: batch-distinct tokens not already stored.
         # Materialize BEFORE appending — the anti-join reads the very
         # directory the append writes into.
-        import uuid
-
-        vt = f"lm_append_vt_{uuid.uuid4().hex[:12]}"
-        storectl.register_bucketed(
-            spark, vt, build + "/vocab_toks", ["w"], ["w"], nb
-        )
+        vt = _vocab_table(spark, b.path("vocab_toks"), b.params["n_buckets"])
         try:
             new_toks = (
                 batch.select(F.explode(tokens(text_col)).alias("w"))
@@ -1391,36 +1300,17 @@ def append_lm_store(
             )
             n_new = new_toks.count()
             if n_new:
-                storectl.append_bucketed(
-                    new_toks, build + "/vocab_toks", ["w"], ["w"], nb
-                )
+                b.add("vocab_toks", new_toks)
         finally:
             spark.sql(f"DROP TABLE IF EXISTS {vt}")
-        old_v = spark.read.parquet(build + "/vocab").collect()[0]["v"]
-        import shutil
-
-        shutil.rmtree(build + "/vocab", ignore_errors=True)
-        spark.createDataFrame(
-            [(float(old_v) + n_new,)], "v double"
-        ).write.mode("overwrite").parquet(build + "/vocab")
-        params = dict(
-            storectl.persistable_params(
-                stored, {"n_buckets": n_buckets}, resolved
-            )
-            or {}
+        old_v = spark.read.parquet(b.path("vocab")).collect()[0]["v"]
+        b.replace(
+            "vocab",
+            spark.createDataFrame([(float(old_v) + n_new,)], "v double"),
         )
-        params["delta_appends"] = (stored or {}).get("delta_appends", 0) + 1
-        meta = storectl.meta_of(cur) or {}
-        ver = storectl.publish(
-            root,
-            build,
-            meta.get("build_key", "lm-v1"),
-            keep=keep,
-            retain_s=retain_s,
-            expect_base=os.path.basename(cur),
-            params=params,
-        )
-    _register_lm(spark, table, ver, nb)
+        stored = b.base.stored or {}
+        b.extra["delta_appends"] = stored.get("delta_appends", 0) + 1
+    LM_STORE.register(spark, table, b.version)
 
 
 def compact_lm_store(
@@ -1429,75 +1319,33 @@ def compact_lm_store(
     table: str = "lm_store_bigrams",
     n_buckets: int | None = None,
     build_key: str | None = None,
-    keep: int = 1,
-    retain_s: float = storectl.RETAIN_SECONDS,
 ) -> None:
     """Rewrite an appended LM store with partial count rows merged —
     one row per n-gram key again, delta counter reset, so scoring
-    reads the counts direct with no merge aggregate
-    (``community.compact_graph_store`` et al. are the siblings). Sums
-    of LONG counts recombine exactly; the vocabulary set dedups (a
+    reads the counts direct with no merge aggregate. Sums of LONG
+    counts recombine exactly; the vocabulary set dedups (a
     crash-replayed append is the only duplicate source) and the 1-row
-    V rewrites from it. Publishes atomically as a new version; recipe
-    inherited from the marker (explicit mismatches raise)."""
+    V rewrites from it."""
     root = path.rstrip("/")
-    cur = storectl.current_dir(root)
-    if cur is None:
-        raise FileNotFoundError(f"no published LM store under {root!r}")
-    stored = storectl.params_of(cur)
-    resolved = storectl.resolve_params(
-        stored, {"n_buckets": n_buckets}, {"n_buckets": 16}
-    )
-    nb = resolved["n_buckets"]
-    _register_lm(spark, table, cur, nb)
-    import uuid
-
-    vt = f"lm_compact_vt_{uuid.uuid4().hex[:12]}"
-    storectl.register_bucketed(
-        spark, vt, cur + "/vocab_toks", ["w"], ["w"], nb
-    )
-    try:
-        build = storectl.new_build_dir(root)
-        storectl.write_bucketed(
-            spark.table(table)
-            .groupBy("w1", "w2")
-            .agg(F.sum("c2").alias("c2")),
-            build + "/bigrams",
-            ["w1", "w2"],
-            ["w1", "w2"],
-            nb,
-        )
-        storectl.write_bucketed(
-            spark.table(table + "_ctx")
-            .groupBy("w1")
-            .agg(F.sum("c1").alias("c1")),
-            build + "/ctx",
-            ["w1"],
-            ["w1"],
-            nb,
-        )
-        storectl.write_bucketed(
-            spark.table(vt).distinct(), build + "/vocab_toks", ["w"], ["w"], nb
-        )
-        spark.read.parquet(build + "/vocab_toks").agg(
-            F.count(F.lit(1)).cast("double").alias("v")
-        ).write.mode("overwrite").parquet(build + "/vocab")
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {vt}")
-    params = dict(
-        storectl.persistable_params(
-            stored, {"n_buckets": n_buckets}, resolved
-        )
-        or {}
-    )
-    params["delta_appends"] = 0
-    if build_key is None:
-        meta = storectl.meta_of(cur) or {}
-        build_key = meta.get("build_key", "lm-v1")
-    ver = storectl.publish(
-        root, build, build_key, keep=keep, retain_s=retain_s, params=params
-    )
-    _register_lm(spark, table, ver, nb)
+    cur = storectl.open_store(root, LM_STORE, {"n_buckets": n_buckets})
+    LM_STORE.register(spark, table, cur)
+    with storectl.rebuild(root, LM_STORE, build_key=build_key, base=cur) as b:
+        vt = _vocab_table(spark, cur.path("vocab_toks"), cur.params["n_buckets"])
+        try:
+            b.add(
+                "bigrams",
+                spark.table(table).groupBy("w1", "w2").agg(F.sum("c2").alias("c2")),
+            )
+            b.add(
+                "ctx",
+                spark.table(table + "_ctx").groupBy("w1").agg(F.sum("c1").alias("c1")),
+            )
+            b.add("vocab_toks", spark.table(vt).distinct())
+            b.add("vocab", _vocab_size(spark, b))
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {vt}")
+        b.extra["delta_appends"] = 0
+    LM_STORE.register(spark, table, b.version)
 
 
 def score_from_lm_store(
@@ -1525,23 +1373,17 @@ def score_from_lm_store(
     bit-identical to the compacted (or rebuilt) store's. Output is
     (doc_id, n_bigrams, xent)."""
     spark = batch.sparkSession
-    ver = storectl.current_dir(path.rstrip("/"))
-    if ver is None:
-        raise FileNotFoundError(
-            f"no published LM store under {path!r} — write_lm_store first"
-        )
-    stored = storectl.params_of(ver)
-    nb = storectl.resolve_params(
-        stored, {"n_buckets": n_buckets}, {"n_buckets": 16}
-    )["n_buckets"]
-    _register_lm(spark, table, ver, nb)
+    ver = storectl.open_store(
+        path.rstrip("/"), LM_STORE, {"n_buckets": n_buckets}
+    )
+    LM_STORE.register(spark, table, ver)
     bi = _doc_bigrams(batch, id_col, text_col)
     bc = spark.table(table)
     uc = spark.table(table + "_ctx")
-    if (stored or {}).get("delta_appends", 0):
+    if (ver.stored or {}).get("delta_appends", 0):
         bc = bc.groupBy("w1", "w2").agg(F.sum("c2").alias("c2"))
         uc = uc.groupBy("w1").agg(F.sum("c1").alias("c1"))
-    vrow = spark.read.parquet(ver + "/vocab")
+    vrow = spark.read.parquet(ver.path("vocab"))
     logp = F.log(
         (F.coalesce(F.col("c2"), F.lit(0)) + F.lit(1.0))
         / (F.coalesce(F.col("c1"), F.lit(0)) + F.col("v"))

@@ -1,20 +1,10 @@
-"""Atomic, cross-process-safe publication for the persisted stores.
+"""The one lifecycle of every persisted store: open, rebuild, append.
 
-Every persisted store in the engine (minhash signature store, ANN
-vector store, BM25 text index, bigram LM store, LPA graph edge store)
-used to publish via ``mode("overwrite").saveAsTable`` straight into its
-live path, guarded only by a process-local flag. That is correct for a
-single sequential process but silently wrong under concurrency: a
-second engine process probing DURING a rebuild lists a half-written (or
-just-cleared) directory and returns a 0-row result with no error, and a
-writer crash mid-overwrite leaves the store permanently half-written
-(round-7 verdict #1, reproduced live by the judge).
-
-This module gives every store the layout a real multi-session
-deployment needs — immutable versions plus an atomic pointer, the same
-commit model as Iceberg/Delta's manifest swap, reduced to POSIX
-primitives because the only metadata a bucketed-parquet store needs is
-"which directory":
+The signature (``dedup``), ANN (``similarity``), BM25 and bigram LM
+(``textops``), entity (``linkage``), graph and label (``community``)
+stores all keep their state here as immutable versions plus an atomic
+pointer, the commit model of Iceberg/Delta's manifest swap reduced to
+POSIX primitives:
 
     <root>/
       CURRENT                    # text file: name of the live version
@@ -23,19 +13,42 @@ primitives because the only metadata a bucketed-parquet store needs is
         bands/ postings/ ...     # the family's artifacts
       v_000002_99f0e1d2/
 
+A family declares its shape once, as a :class:`StoreSpec`: its default
+build key, the recipe assumed for a marker without params, and its
+bucketed :class:`Layout` s (artifact, bucket and sort columns, catalog
+table suffix). It then goes through three entry points and nothing else:
+
+- :func:`open_store` — one CURRENT read gives the live version dir and
+  its recipe, resolved against the caller's explicit values
+  (:func:`resolve_params`: a mismatch raises, since a mis-paired probe
+  silently under-recalls). ``FileNotFoundError`` when nothing is
+  published.
+- :func:`rebuild` — a fresh build dir, published on a clean exit. A
+  compaction is a rebuild that takes its build key and recipe from the
+  version it opened.
+- :func:`append` — under :func:`append_lock`, clone the live version
+  (hardlinks, no data bytes move) and resolve the recipe from the
+  CLONED version's marker, so a rebuild that published before the lock
+  can never pair its recipe with the batch. On a clean exit it
+  publishes with the clone's persistable recipe (:func:`persistable_params`)
+  plus the family's own keys (e.g. ``delta_appends``), the inherited
+  build key, ``expect_base`` and the streaming ``fold`` stamp.
+
+:meth:`StoreSpec.register` points the family's catalog tables at a
+version (:func:`register_bucketed`), so a probe scans the store's
+buckets with no Exchange on the store side.
+
 Invariants:
   - a version directory is referenced by CURRENT only after every
     artifact AND the ``_STORE_COMPLETE`` marker are fully written;
   - CURRENT is replaced with ``os.replace`` (atomic on POSIX), so any
     reader resolves either the old or the new complete version — never
     a partial one and never 0 rows;
-  - versions are immutable: appends hardlink-clone the current version
-    (metadata-only copy) and publish a NEW version, so in-flight readers
-    of the old version are undisturbed;
-  - the marker records a caller-supplied ``build_key`` (parameters +
-    input identity), so a process reuses an on-disk store only when it
-    was built with the same recipe — this replaces the process-local
-    "already written" flag with cross-process on-disk truth.
+  - versions are immutable: an append publishes a NEW version, so
+    in-flight readers of the old one are undisturbed;
+  - the marker records the ``build_key``, so a process reuses an
+    on-disk store only when it was built with the same recipe, and the
+    recipe itself (``params``), so probes self-configure;
   - the marker also maps each streaming query that folds into the store
     to the last batch id it folded (``folds``, stamped by
     ``publish(fold=...)`` and read by :func:`folded_batch`), so a
@@ -44,16 +57,12 @@ Invariants:
 
 Concurrency contract: any number of READERS run against any number of
 writers; two concurrent REBUILDS both publish complete versions and the
-last pointer flip wins (idempotent rebuilds make that harmless).
-Concurrent APPENDS are serialized by :func:`append_lock` (an
-``O_CREAT|O_EXCL`` lock file with stale-lock takeover) — every append
-path in the engine takes it, so two simultaneous appends of different
-batches BOTH land (two-process-proven in tests/test_storectl.py). As a
-second line of defense :func:`publish` accepts ``expect_base`` (the
-version the append cloned from) and refuses the pointer flip with
-:class:`StoreConflictError` when CURRENT moved under the build — a
-violated single-writer assumption fails loudly instead of silently
-dropping a batch.
+last pointer flip wins. Concurrent APPENDS serialize on the
+``O_CREAT|O_EXCL`` lock file of :func:`append_lock` (stale-lock
+takeover), so two simultaneous appends of different batches BOTH land
+(two-process-proven in tests/test_storectl.py). :func:`publish`'s
+``expect_base`` backstops a bypassed lock: it refuses the pointer flip
+with :class:`StoreConflictError` when CURRENT moved under the build.
 
 Retention contract (GC of superseded versions, at publish time): a
 version directory is deleted only when ALL of
@@ -64,8 +73,7 @@ version directory is deleted only when ALL of
   (3) it carries no pin — :func:`pin_version` drops a ``_PINNED_*``
       marker file that GC honors unconditionally, so a time-travel
       snapshot held across many publishes survives until
-      :func:`unpin_version` (pins are the reader-visible part of the
-      contract; ``keep``/``retain_s`` are writer-side heuristics).
+      :func:`unpin_version`.
 Orphaned ``.build_*`` staging dirs (crashed writers) can never become
 visible, so publish also sweeps any whose newest file is older than
 ``retain_s``.
@@ -73,14 +81,12 @@ visible, so publish also sweeps any whose newest file is older than
 On a cluster the same layout works on any filesystem with atomic rename
 (HDFS); on S3 the CURRENT pointer would move to a conditional-PUT object
 or a real table format — the reader/writer protocol here is unchanged.
-
-Reference precedent for concurrent-safe shared state:
-``src/scripts/cassandraDB:9-22`` (upsert-safe Cassandra sinks).
 """
 
 from __future__ import annotations
 
 import contextlib
+import dataclasses
 import json
 import os
 import re
@@ -133,9 +139,8 @@ def append_lock(
     than ``stale_s`` belongs to a crashed writer: it is unlinked and the
     create retried (the unlink+O_EXCL pair means exactly one taker wins).
 
-    Every append path in the engine wraps clone→append→publish in this,
-    which closes the lost-update race the r8 contract only documented:
-    two concurrent appends now run back-to-back and BOTH batches land."""
+    :func:`append` holds it around clone → append → publish, so two
+    concurrent appends run back-to-back and BOTH batches land."""
     os.makedirs(root, exist_ok=True)
     lock = os.path.join(root, "_APPEND_LOCK")
     deadline = time.time() + timeout_s
@@ -307,8 +312,8 @@ def publish(
     bands, bucket count, ...) — persisted in the version marker so
     probes SELF-CONFIGURE from the store instead of trusting the caller
     to re-supply matching values (a mis-paired probe silently
-    under-recalls; see :func:`resolve_params`). Append/compact paths
-    carry the live version's params forward via :func:`current_meta`.
+    under-recalls; see :func:`resolve_params`). :func:`append` and a
+    compacting :func:`rebuild` carry the base version's params forward.
 
     ``fold``: ``(query_key, batch_id)``, set by a streaming sink whose
     micro-batch this version folds in. The marker's ``folds`` map is the
@@ -411,8 +416,7 @@ def list_versions(root: str) -> list[str]:
 
 
 def current_meta(root: str) -> dict | None:
-    """The live version's marker json, or None — used by append paths to
-    carry the original build_key forward into the version they publish."""
+    """The live version's marker json, or None."""
     return _current(root)[1]
 
 
@@ -715,3 +719,233 @@ def register_bucketed(
         return
     _create_bucketed_ddl(spark, table, data_dir, bucket_cols, sort_cols, n_buckets)
     _REGISTERED[table] = data_dir
+
+
+# ---------------------------------------------------------------------------
+# The store lifecycle: open, rebuild, append
+# ---------------------------------------------------------------------------
+
+
+@dataclasses.dataclass(frozen=True)
+class Layout:
+    """One bucketed artifact of a store family: its directory inside a
+    version, the columns it is bucketed and sorted on (every family
+    sorts on its bucket columns, so a probe's equi-join on them needs
+    neither an Exchange nor a Sort on the store side), and the suffix
+    its catalog table adds to the family's table name (``None``: never
+    registered)."""
+
+    artifact: str
+    cols: tuple[str, ...]
+    suffix: str | None = ""
+
+
+@dataclasses.dataclass(frozen=True)
+class StoreSpec:
+    """What a store family declares once: its name in errors, the build
+    key of a version whose marker records none, the recipe assumed for a
+    marker without params (:func:`resolve_params`), and its bucketed
+    layouts. Every recipe has ``n_buckets``."""
+
+    kind: str
+    build_key: str
+    defaults: dict
+    layouts: tuple[Layout, ...]
+
+    def layout(self, artifact: str) -> Layout | None:
+        return next((x for x in self.layouts if x.artifact == artifact), None)
+
+    def register(self, spark, table: str, version: "Version") -> None:
+        """Point ``table`` (plus each layout's suffix) at ``version``'s
+        bucketed artifacts (:func:`register_bucketed`)."""
+        for x in self.layouts:
+            if x.suffix is not None:
+                register_bucketed(
+                    spark,
+                    table + x.suffix,
+                    version.path(x.artifact),
+                    list(x.cols),
+                    list(x.cols),
+                    version.params["n_buckets"],
+                )
+
+
+@dataclasses.dataclass(frozen=True)
+class Version:
+    """A complete store version: its directory, its marker, and the
+    recipe resolved from the marker against the caller's ``requested``
+    values."""
+
+    dir: str
+    meta: dict
+    params: dict
+    requested: dict
+
+    @property
+    def stored(self) -> dict | None:
+        """The recipe the marker records, or None (a legacy store)."""
+        return self.meta.get("params")
+
+    def path(self, artifact: str) -> str:
+        return f"{self.dir}/{artifact}"
+
+    def persistable(self) -> dict | None:
+        """What a version derived from this one may record as its recipe
+        (:func:`persistable_params`)."""
+        return persistable_params(self.stored, self.requested, self.params)
+
+
+def _version(
+    d: str, meta: dict, spec: StoreSpec, requested: dict | None
+) -> Version:
+    requested = requested or {}
+    params = resolve_params(meta.get("params"), requested, spec.defaults)
+    return Version(d, meta, params, requested)
+
+
+def open_store(
+    root: str,
+    spec: StoreSpec,
+    requested: dict | None = None,
+    version_dir: str | None = None,
+    build_key: str | None = None,
+) -> Version:
+    """The live version of the store at ``root``, from one CURRENT read,
+    with its recipe resolved against ``requested`` (explicit mismatches
+    raise). Raises ``FileNotFoundError`` when no version is published or
+    ``build_key`` is given and the live version's differs.
+    ``version_dir`` opens that version instead of CURRENT (time
+    travel over :func:`list_versions`)."""
+    if version_dir is None:
+        d, meta = _current(root)
+    else:
+        d, meta = version_dir, meta_of(version_dir) or {}
+    if d is None or build_key is not None and meta.get("build_key") != build_key:
+        raise FileNotFoundError(f"no published {spec.kind} under {root!r}")
+    return _version(d, meta, spec, requested)
+
+
+class Build:
+    """A private build directory that a :func:`rebuild` or :func:`append`
+    publishes on exit. ``params`` is the recipe to build under;
+    ``base`` the version it derives from (None for a fresh rebuild);
+    ``extra`` the family's own marker keys (e.g. ``delta_appends``),
+    recorded on top of the inherited recipe; ``version`` the published
+    :class:`Version`, once the block has exited."""
+
+    def __init__(
+        self,
+        spec: StoreSpec,
+        build_dir: str,
+        params: dict,
+        base: Version | None,
+        appending: bool,
+    ):
+        self.spec, self.dir = spec, build_dir
+        self.params, self.base = params, base
+        self.extra: dict = {}
+        self.version: Version | None = None
+        self._appending = appending
+
+    def path(self, artifact: str) -> str:
+        return f"{self.dir}/{artifact}"
+
+    def add(self, artifact: str, df) -> None:
+        """Write ``df`` into ``artifact``: appended to the cloned files in
+        an append, the whole artifact in a rebuild. Bucketed and sorted
+        as the family's layout declares, plain parquet otherwise."""
+        self._write(artifact, df, self._appending)
+
+    def replace(self, artifact: str, df) -> None:
+        """Write ``df`` as the whole of ``artifact``, in place of any
+        cloned copy (derived state, not an append log). ``df`` must not
+        read the files it replaces."""
+        shutil.rmtree(self.path(artifact), ignore_errors=True)
+        self._write(artifact, df, False)
+
+    def _write(self, artifact: str, df, appending: bool) -> None:
+        layout = self.spec.layout(artifact)
+        if layout is None:
+            mode = "append" if appending else "overwrite"
+            df.write.mode(mode).parquet(self.path(artifact))
+            return
+        write = append_bucketed if appending else write_bucketed
+        write(
+            df,
+            self.path(artifact),
+            list(layout.cols),
+            list(layout.cols),
+            self.params["n_buckets"],
+        )
+
+    def _publish(
+        self,
+        root: str,
+        build_key: str,
+        params: dict | None,
+        expect_base: str | None = None,
+        fold: tuple[str, int] | None = None,
+    ) -> None:
+        if self.extra:
+            params = {**(params or {}), **self.extra}
+        final = publish(
+            root, self.dir, build_key,
+            expect_base=expect_base, params=params, fold=fold,
+        )
+        requested = self.base.requested if self.base else {}
+        meta = meta_of(final) or {}
+        self.version = Version(final, meta, self.params, requested)
+
+
+@contextlib.contextmanager
+def rebuild(
+    root: str,
+    spec: StoreSpec,
+    params: dict | None = None,
+    build_key: str | None = None,
+    base: Version | None = None,
+):
+    """Build a new version from scratch in a fresh build dir and publish
+    it when the block exits cleanly. A fresh build records ``params``. A
+    compaction passes ``base``, the version it read: the new version
+    records the base's recipe (:meth:`Version.persistable`) and its
+    build key unless ``build_key`` is given."""
+    if base is None:
+        build = Build(spec, new_build_dir(root), params, None, False)
+        recorded, key = params, build_key or spec.build_key
+    else:
+        build = Build(spec, new_build_dir(root), base.params, base, False)
+        recorded = base.persistable()
+        key = build_key or base.meta.get("build_key", spec.build_key)
+    yield build
+    build._publish(root, key, recorded)
+
+
+@contextlib.contextmanager
+def append(
+    root: str,
+    spec: StoreSpec,
+    requested: dict | None = None,
+    build_key: str | None = None,
+    fold: tuple[str, int] | None = None,
+):
+    """Fold a batch into the live version: under :func:`append_lock`,
+    clone it (:func:`clone_current`) and resolve the recipe from the
+    CLONED version's marker, so a rebuild that published before the lock
+    cannot pair its recipe with the batch. The :class:`Build` yielded
+    holds that recipe and the clone (``base``); on a clean exit it
+    publishes with ``expect_base`` set to the clone, the base's
+    persistable recipe plus ``extra``, its build key (unless
+    ``build_key`` is given) and ``fold``."""
+    with append_lock(root):
+        build_dir, cur = clone_current(root)
+        base = _version(cur, meta_of(cur) or {}, spec, requested)
+        build = Build(spec, build_dir, base.params, base, True)
+        yield build
+        build._publish(
+            root,
+            build_key or base.meta.get("build_key", spec.build_key),
+            base.persistable(),
+            expect_base=os.path.basename(cur),
+            fold=fold,
+        )

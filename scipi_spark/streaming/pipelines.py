@@ -260,9 +260,9 @@ def _start_store_fold(
     ``<out_path>/batch_id=N``, in the order its family needs.
 
     Replay contract (``foreachBatch`` is at-least-once): ``stamp`` is
-    ``(checkpoint_path, batch_id)``, and ``storectl.publish`` records it
-    in the same ``CURRENT`` flip that makes the folded rows live. A batch
-    replayed after that flip finds its record
+    ``(checkpoint_path, batch_id)``, and the append (``storectl.append``)
+    records it in the same ``CURRENT`` flip that makes the folded rows
+    live. A batch replayed after that flip finds its record
     (``storectl.folded_batch``) and gets ``stamp=None``, so it only
     probes; a batch replayed before it folds into the unchanged store.
     Each query keeps its checkpoint path across restarts and no two
@@ -317,33 +317,35 @@ def run_streaming_dedup_against_store(
     the probe and the append. Replay contract: :func:`_start_store_fold`."""
     from scipi_spark.operators import dedup as dedup_ops
 
-    recipe = dict(
-        table=table, id_col=id_col, text_col=text_col,
-        k=k, num_perm=num_perm, bands=bands,
-    )
+    names = dict(table=table, id_col=id_col, text_col=text_col)
 
     def body(batch_df: DataFrame, stamp, emit) -> None:
-        # recipe self-configures from the store marker (explicit
-        # mismatches raise) so the batch state below is banded under
-        # exactly the stored coefficients
-        bk, bnum_perm, bbands, _nb, _persist = dedup_ops._resolve_sig_params(
-            store_path.rstrip("/"), k, num_perm, bands, n_buckets
-        )
+        # the batch state is banded under the live version's recipe; the
+        # probe is held to it explicitly, and the append checks it again
+        # against the version it clones under its lock
+        recipe = storectl.open_store(
+            store_path.rstrip("/"), dedup_ops.SIG_STORE,
+            {"k": k, "num_perm": num_perm, "bands": bands,
+             "n_buckets": n_buckets},
+        ).params
         sizes, postings, band_rows = dedup_ops.batch_lsh_state(
-            batch_df, id_col, text_col, bk, bnum_perm, bbands
+            batch_df, id_col, text_col,
+            recipe["k"], recipe["num_perm"], recipe["bands"],
         )
         # the band rows are read by the probe and again by the append
         state = (sizes, postings, band_rows.localCheckpoint(eager=True))
         emit(
             dedup_ops.minhash_lsh_increment_from_store(
                 batch_df.sparkSession, store_path, batch_df,
-                threshold=threshold, batch_state=state, **recipe,
+                k=recipe["k"], num_perm=recipe["num_perm"],
+                bands=recipe["bands"], threshold=threshold,
+                batch_state=state, **names,
             )
         )
         if stamp:
             dedup_ops.append_signature_store(
                 batch_df, store_path, n_buckets=n_buckets,
-                batch_state=state, fold=stamp, **recipe,
+                batch_state=(recipe, state), fold=stamp, **names,
             )
 
     return _start_store_fold(stream, store_path, out_path, checkpoint_path, body)

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import itertools
 import random
+import re
 from collections import defaultdict
 
 from pyspark.sql import functions as F
@@ -192,6 +193,43 @@ def test_extract_edges_hashed_equivalence(spark):
     assert direct == via_strings
 
 
+def _lambda_depths(expr: str, call: str) -> list[int]:
+    """For each ``call(`` in an expression string, how many
+    ``lambdafunction(`` bodies enclose it."""
+    depths, stack = [], []
+    for m in re.finditer(r"(\w*)\(|\)", expr):
+        if m.group(0) == ")":
+            stack.pop()
+            continue
+        if m.group(1) == call:
+            depths.append(stack.count("lambdafunction"))
+        stack.append(m.group(1))
+    return depths
+
+
+def test_extract_edges_hashes_each_name_once(spark):
+    """With a ``hash_fn`` the author list, title and publisher/venue are
+    hashed once per publication, before any pair is formed: the
+    generator holds three hash calls, and none sits inside the
+    co-author lambda or any lambda body but the one that hashes an
+    array's elements."""
+    df = comm.extract_edges(_pubs(spark), hash_fn=F.xxhash64)
+
+    def nodes(node):
+        yield node
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from nodes(kids.apply(i))
+
+    plan = df._jdf.queryExecution().optimizedPlan()
+    generators = [
+        n.generator().toString() for n in nodes(plan) if n.nodeName() == "Generate"
+    ]
+    assert len(generators) == 1, generators
+    depths = _lambda_depths(generators[0], "xxhash64")
+    assert sorted(depths) == [0, 1, 1], (depths, generators[0])
+
+
 def _edges_py(rows):
     """The reference's edge ``flatMap`` (``ScipiBatchCommunity.java:
     411-462``) over (title, publisher, venue, authors, ...) rows."""
@@ -294,7 +332,7 @@ def test_aggregate_undirected_self_loops(spark):
 
 
 def test_lpa_endpoint_seed_matches_vertex_seed(spark):
-    """vertices=None + restore_names=False must produce the same
+    """vertices=None must produce the same
     community-size histogram as the named path (every vertex here has an
     edge, so no isolated-vertex divergence)."""
     pubs = _pubs(spark)
@@ -312,7 +350,6 @@ def test_lpa_endpoint_seed_matches_vertex_seed(spark):
         iterations=3,
         delta=0.5,
         mirrored=mirrored,
-        restore_names=False,
     )
     hist = lambda df: sorted(
         r["count"]
@@ -358,7 +395,6 @@ def test_graph_store_lpa_matches_direct(spark, tmp_path):
             iterations=3,
             delta=0.5,
             mirrored=mirrored,
-            restore_names=False,
         )
         assert sorted(map(tuple, store_lpa.collect())) == sorted(
             map(tuple, direct.collect())
@@ -597,9 +633,7 @@ def test_lpa_needs_a_mirrored_table_without_vertices():
     import pytest
 
     with pytest.raises(ValueError, match="pre-built mirrored edge table"):
-        comm.community_detection(None, None, restore_names=False)
-    with pytest.raises(ValueError, match="pre-built mirrored edge table"):
-        comm.community_detection(None, None, mirrored=object())
+        comm.community_detection(None, None)
 
 
 def test_lpa_writes_no_session_conf(spark, tmp_path, monkeypatch):

@@ -407,6 +407,33 @@ def test_ann_store_append_matches_oneshot(spark, tmp_path):
     assert any(v >= 400 for (_, v, _) in inc)
 
 
+def test_ann_store_paths_release_their_spread_copy(spark, tmp_path):
+    """A write and an append each spread their narrow input and release
+    the spread copy once the signed rows are checkpointed, so the
+    session caches neither input's copy afterwards."""
+    from pyspark.sql import functions as F
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    old = emb.filter(F.col("vec_id") < 400)
+    new = emb.filter(F.col("vec_id") >= 400)
+    target = spark.sparkContext.defaultParallelism
+    assert old.rdd.getNumPartitions() < target
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    try:
+        sim.write_ann_store(
+            old, str(tmp_path / "ann"), table="annstore_spread", bits=6, tables=4
+        )
+        sim.append_ann_store(new, str(tmp_path / "ann"), table="annstore_spread")
+        held = [
+            cache.lookupCachedData(b.repartition(target)._jdf).isDefined()
+            for b in (old, new)
+        ]
+        assert held == [False, False]
+    finally:
+        for t in ("annstore_spread", "annstore_spread_vectors"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_compact_ann_store_repairs_duplicate_append(spark, tmp_path):
     """A crash-replayed append stores a vector twice: the scoring join
     then duplicates that candidate's scored rows and the top-k window

@@ -625,3 +625,101 @@ def test_fold_records_carry_forward(spark, tmp_path):
         assert storectl.folded_batch(root, "q3") == -1
     finally:
         spark.sql("DROP TABLE IF EXISTS t_fold_carry")
+
+
+def _rebuild_before_clone(monkeypatch, rebuild):
+    """Make ``rebuild()`` publish a new version just before the next
+    append clones CURRENT: the window between reading a store's recipe
+    and taking its append lock."""
+    clone = storectl.clone_current
+    pending = [rebuild]
+
+    def racing_clone(root):
+        if pending:
+            pending.pop()()
+        return clone(root)
+
+    monkeypatch.setattr(storectl, "clone_current", racing_clone)
+
+
+def test_signature_append_bands_under_the_cloned_recipe(
+    spark, tmp_path, monkeypatch
+):
+    """A rebuild with another recipe (num_perm=32, bands=8) publishes
+    just before an append takes its lock. The append bands its batch
+    under the recipe of the version it clones, so every band id in the
+    published store is below 8. A batch state the caller computed under
+    the old recipe is refused with StoreConflictError, and nothing is
+    published."""
+    from pyspark.sql import functions as F
+
+    from scipi_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    corpus = docs.filter(F.col("doc_id") < 100)
+    batch = docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 130))
+    root, table = str(tmp_path / "sig"), "t_sig_race"
+
+    def rebuild():
+        dedup.write_signature_store(
+            corpus, root, table=table, num_perm=32, bands=8
+        )
+
+    try:
+        dedup.write_signature_store(corpus, root, table=table)
+        _rebuild_before_clone(monkeypatch, rebuild)
+        dedup.append_signature_store(batch, root, table=table)
+        cur = storectl.current_dir(root)
+        bands = spark.read.parquet(cur + "/bands")
+        assert bands.agg(F.max("band")).first()[0] < 8
+        assert bands.filter(F.col("doc") >= 100).count() > 0
+        sizes = spark.read.parquet(cur + "/sizes")
+        assert sizes.filter(F.col("doc") >= 100).count() == 30
+
+        # a state banded under the 64/16 recipe, then a rebuild at 32/8
+        dedup.write_signature_store(corpus, root, table=table)
+        recipe = storectl.open_store(root, dedup.SIG_STORE).params
+        state = dedup.batch_lsh_state(
+            batch, k=recipe["k"], num_perm=recipe["num_perm"],
+            bands=recipe["bands"],
+        )
+        _rebuild_before_clone(monkeypatch, rebuild)
+        with pytest.raises(storectl.StoreConflictError):
+            dedup.append_signature_store(
+                batch, root, table=table, batch_state=(recipe, state)
+            )
+        cur = storectl.current_dir(root)
+        assert storectl.params_of(cur)["bands"] == 8
+        n_docs = spark.read.parquet(cur + "/sizes").count()
+        assert n_docs == corpus.count()
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_ann_append_signs_under_the_cloned_recipe(spark, tmp_path, monkeypatch):
+    """The ANN twin: a rebuild with 4 hash tables instead of 8 publishes
+    just before an append takes its lock, and the appended signature
+    rows come from the cloned version's 4 tables."""
+    from pyspark.sql import functions as F
+
+    from scipi_spark.operators import similarity
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    old = emb.filter(F.col("vec_id") < 400)
+    new = emb.filter(F.col("vec_id") >= 400)
+    root, table = str(tmp_path / "ann"), "t_ann_race"
+
+    def rebuild():
+        similarity.write_ann_store(old, root, table=table, bits=6, tables=4)
+
+    try:
+        similarity.write_ann_store(old, root, table=table, bits=6, tables=8)
+        _rebuild_before_clone(monkeypatch, rebuild)
+        similarity.append_ann_store(new, root, table=table)
+        sigs = spark.read.parquet(storectl.current_dir(root) + "/sigs")
+        assert sigs.agg(F.max("t")).first()[0] == 3
+        n_new = sigs.filter(F.col("vec_id") >= 400).select("vec_id").distinct()
+        assert n_new.count() == new.count()
+    finally:
+        for t in (table, table + "_vectors"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
