@@ -15,7 +15,11 @@ unchanged over real publication corpora (see ``tests/test_ingest.py``).
 
 from __future__ import annotations
 
+import glob
 import os
+import tempfile
+import time
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -88,72 +92,28 @@ def _q_v1(spark, sf_dir):
     return analytics.authorship_pattern_table(ap, cutoff=V1_CUTOFF)
 
 
-# Synthetic raw-JSON fixtures, persisted per sf_dir: the ingest entries
-# measure the PARSE+VALIDATE operator, and re-serializing the analog
-# corpus to JSON lines on every invocation (to_json over 115k rows at
-# sf0.1) was ~40% of the entry's warm cost — fixture construction, not
-# operator work (round-3 verdict #6: p1_p5_ingest_oag was the round's one
-# bench regression and its most expensive headliner). The reference reads
-# raw JSON that already exists on disk/Kafka; caching the fixture matches
-# that shape. Same pattern as _CENTROID_CACHE / the LPA label caches.
-_RAW_JSON_CACHE: dict = {}
-
-#: Per-cache entry cap for the session fixture caches below. A real
-#: session touches <= 3 SF dirs, so 6 (x a handful of purposes per cache
-#: key) is pure headroom; the cap exists so a synthetic many-SF loop
-#: (or a long-lived service reusing this module) cannot grow the driver
-#: heap without bound (round-4 verdict #8).
-_CACHE_CAP = 6
-
-
-def _cache_put(cache: dict, key, value, cap: int = _CACHE_CAP):
-    """Insert-with-eviction for the session fixture caches. Dicts are
-    insertion-ordered, so past the cap the OLDEST item is dropped
-    (FIFO — the access pattern is per-SF phases, so true LRU buys
-    nothing) and any persisted DataFrames it held are unpersisted."""
-    cache[key] = value
-    while len(cache) > cap:
-        old_key = next(iter(cache))
-        old = cache.pop(old_key)
-        vals = old if isinstance(old, tuple) else (old,)
-        for v in vals:
-            unp = getattr(v, "unpersist", None)
-            if callable(unp):
-                try:
-                    unp()
-                except Exception:
-                    pass
-    return value
-
-
 def _poisoned_oag_raw(spark, sf_dir):
     """Raw OAG JSON lines with deterministic poison: orderkey % 7 == 0 →
     lang='fr' (fails rule 1), % 11 == 0 → 3-char year (fails rule 6)."""
-    key = ("oag", sf_dir)
-    if key not in _RAW_JSON_CACHE:
-        pubs = publications_analog(spark, sf_dir)
-        okey = F.col("doi").cast("long")
-        raw = pubs.select(
-            F.to_json(
-                F.struct(
-                    F.col("doi"),
-                    F.col("title"),
-                    F.col("publisher"),
-                    F.col("venue"),
-                    F.when(okey % 7 == 0, "fr").otherwise("en").alias("lang"),
-                    F.when(okey % 11 == 0, "20x").otherwise(F.col("year")).alias("year"),
-                    F.col("keywords"),
-                    F.transform(
-                        F.col("authors"), lambda a: F.struct(a.alias("name"))
-                    ).alias("authors"),
-                    F.col("fos"),
-                )
-            ).alias("value")
-        )
-        _cache_put(_RAW_JSON_CACHE, key, raw.persist())
-    out = _RAW_JSON_CACHE[key]
-    out.persist()  # re-register after an external clearCache()
-    return out
+    pubs = publications_analog(spark, sf_dir)
+    okey = F.col("doi").cast("long")
+    return pubs.select(
+        F.to_json(
+            F.struct(
+                F.col("doi"),
+                F.col("title"),
+                F.col("publisher"),
+                F.col("venue"),
+                F.when(okey % 7 == 0, "fr").otherwise("en").alias("lang"),
+                F.when(okey % 11 == 0, "20x").otherwise(F.col("year")).alias("year"),
+                F.col("keywords"),
+                F.transform(
+                    F.col("authors"), lambda a: F.struct(a.alias("name"))
+                ).alias("authors"),
+                F.col("fos"),
+            )
+        ).alias("value")
+    )
 
 
 def _q_ingest_oag(spark, sf_dir):
@@ -183,37 +143,30 @@ def _q_p5_reject_audit(spark, sf_dir):
     )
 
 
+def _poisoned_dblp(spark, sf_dir):
+    """DBLP-shaped records (key/conference/plain-string authors,
+    ``ScipiStream.java:379-462`` shape) over the poisoned analog corpus,
+    shared by the JSON and the XML chunk fixtures so the two S9
+    transports share one oracle. Poison: orderkey % 7 == 0 gets a
+    symbols-only title (cleans to NULL -> dropped by rule 3), % 11 == 0
+    a 3-char year (rule 6)."""
+    pubs = publications_analog(spark, sf_dir)
+    okey = F.col("doi").cast("long")
+    return pubs.select(
+        F.concat(F.lit("d"), F.col("doi")).alias("key"),
+        F.when(okey % 7 == 0, "###").otherwise(F.col("title")).alias("title"),
+        F.when(okey % 11 == 0, "20x").otherwise(F.col("year")).alias("year"),
+        F.col("venue").alias("conference"),
+        F.col("publisher"),
+        F.col("authors"),
+    )
+
+
 def _poisoned_dblp_raw(spark, sf_dir):
-    """Raw DBLP JSON fixture (key/conference/plain-string authors,
-    ``ScipiStream.java:379-462`` shape) over the poisoned analog
-    corpus, persisted once per (app, sf_dir) — shared by the DBLP
-    ingest entry and the P6 union entry. Poison: orderkey % 7 == 0
-    gets a symbols-only title (cleans to NULL -> dropped by rule 3),
-    % 11 == 0 a 3-char year (rule 6)."""
-    key = ("dblp", sf_dir)
-    if key not in _RAW_JSON_CACHE:
-        pubs = publications_analog(spark, sf_dir)
-        okey = F.col("doi").cast("long")
-        raw = pubs.select(
-            F.to_json(
-                F.struct(
-                    F.concat(F.lit("d"), F.col("doi")).alias("key"),
-                    F.when(okey % 7 == 0, "###").otherwise(F.col("title")).alias(
-                        "title"
-                    ),
-                    F.when(okey % 11 == 0, "20x").otherwise(F.col("year")).alias(
-                        "year"
-                    ),
-                    F.col("venue").alias("conference"),
-                    F.col("publisher"),
-                    F.col("authors"),
-                )
-            ).alias("value")
-        )
-        _cache_put(_RAW_JSON_CACHE, key, raw.persist())
-    raw = _RAW_JSON_CACHE[key]
-    raw.persist()  # re-register after an external clearCache()
-    return raw
+    """:func:`_poisoned_dblp` as raw JSON lines, shared by the DBLP
+    ingest entry and the P6 union entry."""
+    recs = _poisoned_dblp(spark, sf_dir)
+    return recs.select(F.to_json(F.struct(*recs.columns)).alias("value"))
 
 
 def _q_ingest_dblp(spark, sf_dir):
@@ -249,50 +202,42 @@ def _q_p6_union_ingest(spark, sf_dir):
     return analytics.keyword_count(ingest.union_sources(oag, dblp))
 
 
+#: the XML chunk set of :func:`_xml_chunks_fixture`: plain files in the
+#: version directory, no catalog table
+XML_CHUNKS = storectl.StoreSpec("XML chunk set", "xmlchunks-v2", {}, ())
+
+
 def _xml_chunks_fixture(spark, sf_dir) -> str:
-    """Write the poisoned DBLP analog corpus as record-boundary-split XML
-    chunk files (Spark's XML writer, one task per partition — no driver
-    collect; ``sources/io.py:write_dblp_xml_chunks``) and return the
-    chunk glob. Same poison rules as the JSON fixture so the two S9
-    transports share one oracle.
+    """Write the poisoned DBLP analog corpus (:func:`_poisoned_dblp`) as
+    record-boundary-split XML chunk files (Spark's XML writer, one task
+    per partition — no driver collect; ``sources/io.py:
+    write_dblp_xml_chunks``) and return the chunk glob.
 
-    Published through storectl like the persisted stores: chunks stage
-    in a private build dir and go live via the atomic CURRENT pointer,
-    so a concurrent verification process never globs a half-written (or
-    just-rmtree'd) chunk set, and an empty write fails loudly instead of
-    retrying."""
-    import glob as _glob
-
+    Published through ``storectl.rebuild`` like the persisted stores:
+    chunks stage in a private build dir and go live via the atomic
+    CURRENT pointer, so a concurrent verification process never globs a
+    half-written chunk set, and an empty write fails loudly instead of
+    publishing."""
     sfname = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     root = _store_root("xml_chunks_" + sfname.replace(".", "_"))
-    bkey = "xmlchunks-v2"
-    ver = storectl.current_dir(root, bkey)
+    ver = storectl.current_dir(root, XML_CHUNKS.build_key)
     if ver is None:
-        pubs = publications_analog(spark, sf_dir)
-        okey = F.col("doi").cast("long")
-        raw = pubs.select(
-            F.concat(F.lit("d"), F.col("doi")).alias("key"),
-            F.when(okey % 7 == 0, "###").otherwise(F.col("title")).alias(
-                "title"
-            ),
-            F.when(okey % 11 == 0, "20x").otherwise(F.col("year")).alias(
-                "year"
-            ),
-            F.col("venue").alias("conference"),
-            F.col("publisher"),
-            F.col("authors"),
-        )
-        build = storectl.new_build_dir(root)
-        io.write_dblp_xml_chunks(raw, build, records_per_chunk=2000)
-        # an empty frame still leaves one zero-byte part file
-        if not any(
-            os.path.getsize(p) for p in _glob.glob(os.path.join(build, "*.xml"))
-        ):
-            raise RuntimeError(
-                f"write_dblp_xml_chunks produced no records under "
-                f"{build!r} — empty input frame or unwritable directory"
+        with storectl.rebuild(root, XML_CHUNKS) as build:
+            io.write_dblp_xml_chunks(
+                _poisoned_dblp(spark, sf_dir), build.dir,
+                records_per_chunk=2000,
             )
-        ver = storectl.publish(root, build, bkey)
+            # an empty frame still leaves one zero-byte part file
+            if not any(
+                os.path.getsize(p)
+                for p in glob.glob(os.path.join(build.dir, "*.xml"))
+            ):
+                raise RuntimeError(
+                    f"write_dblp_xml_chunks produced no records under "
+                    f"{build.dir!r} — empty input frame or unwritable "
+                    "directory"
+                )
+        ver = build.version.dir
     return os.path.join(ver, "*.xml")
 
 
@@ -548,12 +493,6 @@ def _q_dedup_increment(spark, sf_dir):
     )
 
 
-# The process-local store-flag cache (_SIG_STORE_CACHE) is GONE as of r8:
-# every "is this store written?" check now reads the on-disk
-# storectl completeness marker (build_key-matched), which is correct
-# across processes and crashes — the flag cache was the round-7 race.
-
-
 def _store_root(store_name: str) -> str:
     """Root directory for a persisted store. ``SPARK_GRAFT_STORE_DIR``
     overrides the repo-relative default so concurrent judge/builder
@@ -684,9 +623,6 @@ def _q_lm_store_append(spark, sf_dir):
     one shot. The production shape of keeping a CCNet-style reference
     model current as curated data accrues, without retraining from
     scratch. Store in a fresh temp dir per run (folding mutates it)."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     cutoff = docs.agg(
         F.floor(F.expr("percentile(doc_id, 0.8)")).cast("long").alias("c")
@@ -695,18 +631,17 @@ def _q_lm_store_append(spark, sf_dir):
     batch = docs.filter(F.col("doc_id") >= cutoff)
     slice_a = corpus.filter(F.col("doc_id") % 2 == 0)
     slice_b = corpus.filter(F.col("doc_id") % 2 == 1)
-    d = _tempfile.mkdtemp(prefix="scipi_lm_append_")
-    table = "lm_app_" + os.path.basename(d)[-8:]
-    try:
-        textops.write_lm_store(slice_a, f"{d}/lm", table=table)
-        textops.append_lm_store(slice_b, f"{d}/lm", table=table)
-        out = textops.score_from_lm_store(
-            batch, f"{d}/lm", table=table
-        ).localCheckpoint(eager=True)
-    finally:
-        for t in (table, table + "_ctx"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-        _shutil.rmtree(d, ignore_errors=True)
+    with tempfile.TemporaryDirectory(prefix="scipi_lm_append_") as d:
+        table = "lm_app_" + os.path.basename(d)[-8:]
+        try:
+            textops.write_lm_store(slice_a, f"{d}/lm", table=table)
+            textops.append_lm_store(slice_b, f"{d}/lm", table=table)
+            out = textops.score_from_lm_store(
+                batch, f"{d}/lm", table=table
+            ).localCheckpoint(eager=True)
+        finally:
+            for t in (table, table + "_ctx"):
+                spark.sql(f"DROP TABLE IF EXISTS {t}")
     return out
 
 
@@ -747,11 +682,6 @@ def _q_knn_ivfpq(spark, sf_dir):
         F.transform("embedding", lambda x: x.cast("double")).alias("e"),
     )
     both = ed.unionByName(similarity.perturbed_copies(ed))
-    key = ("ivfpq-cent", sf_dir, 8, 3)
-    if key not in _CENTROID_CACHE:
-        _cache_put(_CENTROID_CACHE, key, similarity.spherical_kmeans(
-            both, 8, 3, vec_col="e"
-        ))
     return similarity.knn_cosine_ivfpq(
         both,
         query_ids=[0, 1, 2, 3, 4],
@@ -762,7 +692,6 @@ def _q_knn_ivfpq(spark, sf_dir):
         ksub=16,
         rerank=10,
         vec_col="e",
-        centroids=_CENTROID_CACHE[key],
     )
 
 
@@ -781,12 +710,6 @@ def _q_quantize_embeddings(spark, sf_dir):
     return similarity.quantize_embeddings_stats(emb)
 
 
-# Deterministically-trained k-means quantizers, keyed by (purpose,
-# sf_dir, k, iters). numpy arrays on the driver (k x dim doubles), so
-# unlike the DataFrame caches they survive clearCache() for free.
-_CENTROID_CACHE: dict = {}
-
-
 def _q_dedup_semantic(spark, sf_dir):
     """SemDeDup-style semantic dedup over embeddings with planted
     duplicates (same deterministic perturbation as emb_neardup_planted:
@@ -802,24 +725,8 @@ def _q_dedup_semantic(spark, sf_dir):
         F.transform("embedding", lambda x: x.cast("double")).alias("e"),
     )
     both = ed.unionByName(similarity.perturbed_copies(ed))
-    # The coarse quantizer is fitted ONCE per (sf, params) and reused —
-    # the production SemDeDup shape (a daily dedup run trains the
-    # quantizer once, then every batch reuses it). Training is
-    # deterministic (seed-free first-k init, fixed Lloyd rounds), so the
-    # cached centroids are bit-identical to a retrain; correctness is
-    # unaffected and re-invocations skip 4 driver-roundtrip jobs.
-    key = ("semantic", sf_dir, 16, 3)
-    if key not in _CENTROID_CACHE:
-        _cache_put(_CENTROID_CACHE, key, similarity.spherical_kmeans(
-            both, 16, 3, vec_col="e"
-        ))
     return similarity.semantic_dedup(
-        both,
-        threshold=0.95,
-        n_centroids=16,
-        nprobe=2,
-        vec_col="e",
-        centroids=_CENTROID_CACHE[key],
+        both, threshold=0.95, n_centroids=16, nprobe=2, vec_col="e"
     )
 
 
@@ -866,78 +773,25 @@ COSINE_KEYWORDS = ["spark query engine", "window table scan", "fast value"]
 COSINE_THRESHOLD = 0.25
 
 
-_GRAPH_PUBS_CACHE: dict = {}
-
-
 def _graph_pubs(spark, sf_dir):
-    """Publications analog narrowed to what the graph entries read — title
-    (= 'order'+orderkey, unique so the heterogeneous graph doesn't collapse
-    onto 5 priority strings), publisher, venue, authors — persisted once
-    per (app, sf_dir).
-
-    Deliberately NOT the full :func:`publications_analog`: keywords/fos
-    cost a part broadcast join plus two more collect_set aggregations that
-    no vertex/edge extraction ever reads — dead weight that measured ~2x
-    on the cold LPA path's dominant phase (analog materialization)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _GRAPH_PUBS_CACHE:
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderstatus", "o_orderpriority"
-        )
-        authors = (
-            load_table(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_suppkey")
-            .groupBy("l_orderkey")
-            .agg(
-                F.array_sort(
-                    F.collect_set(F.col("l_suppkey").cast("string"))
-                ).alias("authors")
-            )
-        )
-        out = (
-            orders.join(authors, orders.o_orderkey == authors.l_orderkey)
-            .select(
-                F.concat(
-                    F.lit("order"), F.col("o_orderkey").cast("string")
-                ).alias("title"),
-                F.col("o_orderstatus").alias("publisher"),
-                F.col("o_orderpriority").alias("venue"),
-                "authors",
-            )
-            .persist()
-        )
-        _cache_put(_GRAPH_PUBS_CACHE, key, out)
-    out = _GRAPH_PUBS_CACHE[key]
-    sl = out.storageLevel
-    if not (sl.useMemory or sl.useDisk):
-        out.persist()  # re-register after an external clearCache()
-    return out
-
-
-_GRAPH_CACHE: dict = {}
+    """The publications analog narrowed to what the graph entries read:
+    title (= 'order' + orderkey, unique so the heterogeneous graph does
+    not collapse onto 5 priority strings), publisher, venue, authors. A
+    projection of :func:`publications_analog`'s persisted copy."""
+    return publications_analog(spark, sf_dir).select(
+        F.concat(F.lit("order"), F.col("doi")).alias("title"),
+        "publisher",
+        "venue",
+        "authors",
+    )
 
 
 def _graph_vertices_edges(spark, sf_dir):
-    """Extracted co-authorship graph, persisted once per (app, sf_dir).
-
-    Each relation is one ``inline`` pass over the publications
-    (``community.extract_vertices`` / ``extract_edges``); the persist
-    keeps a repeated c2/c4 call from re-running that extraction."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _GRAPH_CACHE:
-        pubs = _graph_pubs(spark, sf_dir)
-        _cache_put(_GRAPH_CACHE, key, (
-            community.extract_vertices(pubs).persist(),
-            community.extract_edges(pubs).persist(),
-        ))
-    v, e = _GRAPH_CACHE[key]
-    # re-register after an external clearCache() (the bench isolates
-    # headliners this way) — otherwise every scan recomputes uncached
-    for df in (v, e):
-        sl = df.storageLevel
-        if not (sl.useMemory or sl.useDisk):
-            df.persist()
-    return v, e
+    """The extracted co-authorship graph: each relation is one
+    ``inline`` pass over the publications
+    (``community.extract_vertices`` / ``extract_edges``)."""
+    pubs = _graph_pubs(spark, sf_dir)
+    return community.extract_vertices(pubs), community.extract_edges(pubs)
 
 
 def _q_assoc_cosine(spark, sf_dir):
@@ -977,71 +831,27 @@ def _q_community_edges(spark, sf_dir):
     return edges.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("cnt"))
 
 
-_LPA_EDGE_CACHE: dict = {}
-_LPA_LABELS_CACHE: dict = {}
-
-
-def _graph_lpa_mirrored(spark, sf_dir):
-    """Pre-aggregated mirrored LPA edge table
-    (:func:`community.aggregate_undirected` over portable-hashed
-    ``extract_edges``), repartitioned on ``src`` with the session's
-    partition count and persisted once per (app, sf_dir).
-
-    Built from a FRESH ``extract_edges`` plan over the cached analog — not
-    from the persisted raw-edge handle — so a cold LPA call materializes
-    only longs-only aggregated pairs and never writes the string-named
-    |E|-multiset cache (that stays a c4/c16-raw-edge-only cost)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LPA_EDGE_CACHE:
-        pubs = _graph_pubs(spark, sf_dir)
-        # portable md5-prefix hash (not xxhash64): LPA labels ARE vertex
-        # hashes, so a cross-engine-replicable hash makes the organic
-        # 5-superstep fixpoint checkable by the DuckDB oracle (the same
-        # unrolled supersteps in SQL) instead of rows-only
-        from scipi_spark.operators.dedup import _portable_feature_hash
-
-        mirrored = (
-            community.aggregate_undirected(
-                community.extract_edges(pubs, hash_fn=_portable_feature_hash)
-            )
-            .repartition(F.col("src"))
-            .persist()
-        )
-        _cache_put(_LPA_EDGE_CACHE, key, mirrored)
-    mirrored = _LPA_EDGE_CACHE[key]
-    sl = mirrored.storageLevel
-    if not (sl.useMemory or sl.useDisk):
-        mirrored.persist()  # re-register after an external clearCache()
-    return mirrored
-
-
 def _lpa_labels(spark, sf_dir):
-    """(id, label) from the 5-superstep LPA, persisted once per (app,
-    sf_dir): c8 and c16 both project from it, and the loop's checkpoint
-    barriers make the re-persist recompute shallow.
+    """(id, label) from the 5-superstep LPA over the portable-hashed
+    co-authorship edges. Portable md5-prefix hash, not xxhash64: LPA
+    labels ARE vertex hashes, so a cross-engine-replicable hash makes the
+    organic fixpoint checkable by the DuckDB oracle (the same unrolled
+    supersteps in SQL) instead of rows-only.
 
-    Runs with ``vertices=None``: both consumers are
+    Runs with ``vertices=None``: both consumers (c8 and c16) are
     size-thresholded aggregates, so hashed ids are as good as names
     (label values are identical either way) and isolated vertices —
     singleton communities, below every threshold — may be dropped. This
     keeps the vertex-table materialization and the hash->name join off
-    the LPA cold path entirely."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LPA_LABELS_CACHE:
-        labels = community.community_detection(
-            vertices=None,
-            edges=None,
-            iterations=5,
-            delta=0.5,
-            mirrored=_graph_lpa_mirrored(spark, sf_dir),
-            portable_rounding=True,
-        )
-        _cache_put(_LPA_LABELS_CACHE, key, labels.persist())
-    out = _LPA_LABELS_CACHE[key]
-    sl = out.storageLevel
-    if not (sl.useMemory or sl.useDisk):
-        out.persist()
-    return out
+    the LPA path entirely."""
+    from scipi_spark.operators.dedup import _portable_feature_hash
+
+    edges = community.extract_edges(
+        _graph_pubs(spark, sf_dir), hash_fn=_portable_feature_hash
+    )
+    return community.community_detection(
+        None, edges, iterations=5, delta=0.5, portable_rounding=True
+    )
 
 
 def _q_community_lpa(spark, sf_dir):
@@ -1073,11 +883,11 @@ def _q_c8_store_lpa(spark, sf_dir):
     sfname = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     table = "graph_store_lpa_" + sfname.replace(".", "_")
     path = _store_root(table)
-    mirrored = _graph_lpa_mirrored(spark, sf_dir)
     bkey = "graph-v1:lpa-portable"
     if storectl.current_dir(path, bkey) is None:
         community.write_graph_store(
-            None, path, table=table, mirrored=mirrored, build_key=bkey
+            None, path, table=table, build_key=bkey,
+            mirrored=_portable_mirrored(_graph_pubs(spark, sf_dir)),
         )
     labels = community.community_detection_from_store(
         spark,
@@ -1141,33 +951,29 @@ def _q_graph_store_append(spark, sf_dir):
     checkpoints every superstep, so the returned labels outlive the
     cleanup. Bench shape: the chain runs at prime time (cold); the
     store-LPA warm cost is ``c8_store_lpa``'s number."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     agg_a, agg_b = _graph_split_mirrored(spark, sf_dir)
-    d = _tempfile.mkdtemp(prefix="scipi_graph_append_")
-    table = "graph_app_" + os.path.basename(d)[-8:]
-    try:
-        community.write_graph_store(
-            None, f"{d}/graph", table=table, mirrored=agg_a
-        )
-        community.append_graph_store(
-            None, f"{d}/graph", table=table, mirrored=agg_b
-        )
-        labels = community.community_detection_from_store(
-            spark,
-            table=table,
-            iterations=5,
-            delta=0.5,
-            portable_rounding=True,
-            path=f"{d}/graph",
-        )
-        out = community.community_sizes(labels, min_size=30).localCheckpoint(
-            eager=True
-        )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        _shutil.rmtree(d, ignore_errors=True)
+    with tempfile.TemporaryDirectory(prefix="scipi_graph_append_") as d:
+        table = "graph_app_" + os.path.basename(d)[-8:]
+        try:
+            community.write_graph_store(
+                None, f"{d}/graph", table=table, mirrored=agg_a
+            )
+            community.append_graph_store(
+                None, f"{d}/graph", table=table, mirrored=agg_b
+            )
+            labels = community.community_detection_from_store(
+                spark,
+                table=table,
+                iterations=5,
+                delta=0.5,
+                portable_rounding=True,
+                path=f"{d}/graph",
+            )
+            out = community.community_sizes(labels, min_size=30).localCheckpoint(
+                eager=True
+            )
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {table}")
     return out
 
 
@@ -1181,34 +987,30 @@ def _q_graph_store_compact(spark, sf_dir):
     DIRECT (no merge-on-read) yet produces the identical labels: same
     unrolled-fixpoint oracle as ``c8_community_lpa``. Store in a fresh
     temp dir per run (the chain mutates it twice)."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     agg_a, agg_b = _graph_split_mirrored(spark, sf_dir)
-    d = _tempfile.mkdtemp(prefix="scipi_graph_compact_")
-    table = "graph_cmp_" + os.path.basename(d)[-8:]
-    try:
-        community.write_graph_store(
-            None, f"{d}/graph", table=table, mirrored=agg_a
-        )
-        community.append_graph_store(
-            None, f"{d}/graph", table=table, mirrored=agg_b
-        )
-        community.compact_graph_store(spark, f"{d}/graph", table=table)
-        labels = community.community_detection_from_store(
-            spark,
-            table=table,
-            iterations=5,
-            delta=0.5,
-            portable_rounding=True,
-            path=f"{d}/graph",
-        )
-        out = community.community_sizes(labels, min_size=30).localCheckpoint(
-            eager=True
-        )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        _shutil.rmtree(d, ignore_errors=True)
+    with tempfile.TemporaryDirectory(prefix="scipi_graph_compact_") as d:
+        table = "graph_cmp_" + os.path.basename(d)[-8:]
+        try:
+            community.write_graph_store(
+                None, f"{d}/graph", table=table, mirrored=agg_a
+            )
+            community.append_graph_store(
+                None, f"{d}/graph", table=table, mirrored=agg_b
+            )
+            community.compact_graph_store(spark, f"{d}/graph", table=table)
+            labels = community.community_detection_from_store(
+                spark,
+                table=table,
+                iterations=5,
+                delta=0.5,
+                portable_rounding=True,
+                path=f"{d}/graph",
+            )
+            out = community.community_sizes(labels, min_size=30).localCheckpoint(
+                eager=True
+            )
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {table}")
     return out
 
 
@@ -1230,41 +1032,37 @@ def _q_graph_store_relabel(spark, sf_dir):
     tests/test_community.py::test_label_store_incremental_relabel on a
     disjoint-community fixture with a stats out-param. Store in a
     fresh temp dir per run (both stores mutate)."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     agg_a, agg_b = _graph_split_mirrored(spark, sf_dir)
-    d = _tempfile.mkdtemp(prefix="scipi_graph_relabel_")
-    tg = "graph_rlg_" + os.path.basename(d)[-8:]
-    tl = "graph_rll_" + os.path.basename(d)[-8:]
-    try:
-        community.write_graph_store(
-            None, f"{d}/graph", table=tg, mirrored=agg_a
-        )
-        community.write_label_store(
-            spark,
-            f"{d}/graph",
-            f"{d}/labels",
-            graph_table=tg,
-            table=tl,
-            iterations=5,
-            delta=0.5,
-            portable_rounding=True,
-        )
-        community.append_graph_store(
-            None, f"{d}/graph", table=tg, mirrored=agg_b
-        )
-        folded = community.refresh_label_store(
-            spark, f"{d}/graph", f"{d}/labels", agg_b,
-            graph_table=tg, table=tl,
-        )
-        out = community.community_sizes(folded, min_size=30).localCheckpoint(
-            eager=True
-        )
-    finally:
-        for t in (tg, tl):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-        _shutil.rmtree(d, ignore_errors=True)
+    with tempfile.TemporaryDirectory(prefix="scipi_graph_relabel_") as d:
+        tg = "graph_rlg_" + os.path.basename(d)[-8:]
+        tl = "graph_rll_" + os.path.basename(d)[-8:]
+        try:
+            community.write_graph_store(
+                None, f"{d}/graph", table=tg, mirrored=agg_a
+            )
+            community.write_label_store(
+                spark,
+                f"{d}/graph",
+                f"{d}/labels",
+                graph_table=tg,
+                table=tl,
+                iterations=5,
+                delta=0.5,
+                portable_rounding=True,
+            )
+            community.append_graph_store(
+                None, f"{d}/graph", table=tg, mirrored=agg_b
+            )
+            folded = community.refresh_label_store(
+                spark, f"{d}/graph", f"{d}/labels", agg_b,
+                graph_table=tg, table=tl,
+            )
+            out = community.community_sizes(folded, min_size=30).localCheckpoint(
+                eager=True
+            )
+        finally:
+            for t in (tg, tl):
+                spark.sql(f"DROP TABLE IF EXISTS {t}")
     return out
 
 
@@ -1282,9 +1080,6 @@ def _q_stream_graph_store_fold(spark, sf_dir):
     LPA over it shares ``c8_community_lpa``'s unrolled SQL fixpoint
     oracle verbatim. Store in a fresh temp dir per run (folding
     mutates it)."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from scipi_spark.operators.dedup import _portable_feature_hash
     from scipi_spark.streaming.pipelines import run_streaming_graph_store_fold
 
@@ -1294,45 +1089,34 @@ def _q_stream_graph_store_fold(spark, sf_dir):
     quad = F.pmod(F.xxhash64("title"), F.lit(4))
     b1 = pubs_b.filter(quad == 1)
     b2 = pubs_b.filter(quad == 3)
-    d = _tempfile.mkdtemp(prefix="scipi_graph_stream_")
-    table = "graph_sfold_" + os.path.basename(d)[-8:]
-    try:
-        community.write_graph_store(
-            None, f"{d}/graph", table=table, mirrored=_portable_mirrored(pubs_a)
-        )
-        b1.coalesce(1).write.parquet(f"{d}/src")
-        b2.coalesce(1).write.mode("append").parquet(f"{d}/src")
-        stream = (
-            spark.readStream.schema(pubs_a.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{d}/src")
-        )
-        q = run_streaming_graph_store_fold(
-            stream,
-            f"{d}/graph",
-            f"{d}/out",
-            f"{d}/ckpt",
-            table=table,
-            hash_fn=_portable_feature_hash,
-        )
+    with tempfile.TemporaryDirectory(prefix="scipi_graph_stream_") as d:
+        table = "graph_sfold_" + os.path.basename(d)[-8:]
         try:
-            q.processAllAvailable()
+            community.write_graph_store(
+                None, f"{d}/graph", table=table, mirrored=_portable_mirrored(pubs_a)
+            )
+            stream = _replay_stream(spark, [b1, b2], f"{d}/src")
+            _drain(run_streaming_graph_store_fold(
+                stream,
+                f"{d}/graph",
+                f"{d}/out",
+                f"{d}/ckpt",
+                table=table,
+                hash_fn=_portable_feature_hash,
+            ))
+            labels = community.community_detection_from_store(
+                spark,
+                table=table,
+                iterations=5,
+                delta=0.5,
+                portable_rounding=True,
+                path=f"{d}/graph",
+            )
+            out = community.community_sizes(labels, min_size=30).localCheckpoint(
+                eager=True
+            )
         finally:
-            q.stop()
-        labels = community.community_detection_from_store(
-            spark,
-            table=table,
-            iterations=5,
-            delta=0.5,
-            portable_rounding=True,
-            path=f"{d}/graph",
-        )
-        out = community.community_sizes(labels, min_size=30).localCheckpoint(
-            eager=True
-        )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        _shutil.rmtree(d, ignore_errors=True)
+            spark.sql(f"DROP TABLE IF EXISTS {table}")
     return out
 
 
@@ -1360,8 +1144,6 @@ def _run_stream_aggregation(spark, sf_dir, which: str):
     parse+validate (P1+P5) into the stateless keyed upsert sink (S6),
     which folds each micro-batch's batch-twin aggregate into the stored
     table; returns the converged result table."""
-    import tempfile
-
     from scipi_spark.streaming import (
         read_publications_stream,
         run_aggregation_upsert,
@@ -1385,22 +1167,12 @@ def _run_stream_aggregation(spark, sf_dir, which: str):
             )
         ).alias("value")
     )
-    d = tempfile.mkdtemp(prefix="scipi_stream_entry_")
-    src, out, ckpt = f"{d}/src", f"{d}/out", f"{d}/ckpt"
-    raw.coalesce(2).write.mode("overwrite").text(src)
-    stream = read_publications_stream(spark, src, max_files_per_trigger=1)
-    q = run_aggregation_upsert(spark, stream, which, out, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # materialize the sink before dropping the whole replay dir (src +
-    # ckpt + out) — the result must not lazily re-read deleted files
-    import shutil
-
-    result = spark.read.parquet(out).localCheckpoint(eager=True)
-    shutil.rmtree(d, ignore_errors=True)
-    return result
+    with tempfile.TemporaryDirectory(prefix="scipi_stream_entry_") as d:
+        src, out, ckpt = f"{d}/src", f"{d}/out", f"{d}/ckpt"
+        raw.coalesce(2).write.mode("overwrite").text(src)
+        stream = read_publications_stream(spark, src, max_files_per_trigger=1)
+        _drain(run_aggregation_upsert(spark, stream, which, out, ckpt))
+        return spark.read.parquet(out).localCheckpoint(eager=True)
 
 
 def _q_stream_keyword_count(spark, sf_dir):
@@ -1421,70 +1193,72 @@ def _q_stream_yrwise_dist(spark, sf_dir):
     return _run_stream_aggregation(spark, sf_dir, "yrwise_dist")
 
 
-#: replay source/checkpoint tempdirs awaiting cleanup — each streaming
-#: gate registers its mkdtemp here and calls :func:`_materialize_and_sweep`
-#: on its final table, so a run leaves nothing on disk (round-9 advice:
-#: the gates leaked two parquet files per run). THREAD-LOCAL (round-10
-#: advice #4): a process-global list made every sweep drain every gate's
-#: registered dirs — correct only while gates ran strictly sequentially;
-#: a concurrent/threaded gate execution would have deleted another
-#: gate's live replay source or checkpoint mid-stream. Per-thread lists
-#: mean a gate can only ever sweep dirs its own (sequential) thread
-#: registered, i.e. its own.
-import threading as _threading
-
-_REPLAY_LOCAL = _threading.local()
+def _drain(q) -> None:
+    """Run a started streaming query until its source is drained, then
+    stop it."""
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
 
-def _register_replay_dir(d: str) -> str:
-    dirs = getattr(_REPLAY_LOCAL, "dirs", None)
-    if dirs is None:
-        dirs = _REPLAY_LOCAL.dirs = []
-    dirs.append(d)
-    return d
+def _drain_to_memory(df: DataFrame, mode: str) -> DataFrame:
+    """Run the streaming ``df`` into a memory sink in output ``mode``
+    until its source is drained; return the sink's rows, locally
+    checkpointed, so they outlive the caller's replay directory."""
+    name = f"stream_{uuid.uuid4().hex[:8]}"
+    _drain(
+        df.writeStream.outputMode(mode).format("memory").queryName(name).start()
+    )
+    return df.sparkSession.table(name).localCheckpoint(eager=True)
 
 
-def _materialize_and_sweep(df):
-    """Eagerly materialize a streaming gate's result (localCheckpoint —
-    the rows must not be lazily re-read from files about to vanish),
-    then delete the replay tempdirs THIS thread's gate registered."""
-    import shutil
+def _replay_stream(spark, frames, src_dir):
+    """Write ``frames`` as one parquet file each under ``src_dir`` and
+    return a ``maxFilesPerTrigger=1`` stream of them, so frame ``i`` is
+    micro-batch ``i``. FileStreamSource replays oldest mtime first and
+    back-to-back writes can tie on mtime granularity, so each file gets
+    a strictly later mtime than the one before."""
+    base = time.time()
+    stamped: set[str] = set()
+    for i, b in enumerate(frames):
+        b.coalesce(1).write.mode("append" if i else "overwrite").parquet(
+            src_dir
+        )
+        for f in glob.glob(os.path.join(src_dir, "part-*.parquet")):
+            if f not in stamped:
+                os.utime(f, (base + 10 * i, base + 10 * i))
+                stamped.add(f)
+    return (
+        spark.readStream.schema(frames[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+    )
 
-    out = df.localCheckpoint(eager=True)
-    dirs = getattr(_REPLAY_LOCAL, "dirs", None) or []
-    while dirs:
-        shutil.rmtree(dirs.pop(), ignore_errors=True)
-    return out
+
+def _parity(df, col):
+    """``df`` split on ``col`` parity: the two micro-batches of a replay
+    whose groups must merge state across batches (the rows of any group
+    land in both)."""
+    return [df.filter(F.col(col) % 2 == 0), df.filter(F.col(col) % 2 == 1)]
 
 
-def _events_replay_stream(spark, sf_dir):
-    """The events table replayed as a 2-micro-batch parquet file stream
-    (split on event_id parity, so every aggregation's state must merge
-    across batches — the rows of any (window, type) or user group land in
-    BOTH files). The tempdir is registered for the caller's
-    ``_materialize_and_sweep`` pass."""
-    import tempfile
-
+def _events(spark, sf_dir):
     from scipi_spark.sources.tables import load_events
 
-    ev = load_events(spark, sf_dir).select(
+    return load_events(spark, sf_dir).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    d = tempfile.mkdtemp(prefix="scipi_stream_events_")
-    _register_replay_dir(d)
-    src = f"{d}/src"
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src)
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    # event-time watermarks require TIMESTAMP (LTZ); the parquet ts is
-    # NTZ, so cast here (session tz is UTC — the rendered values the
-    # oracle compares are unchanged)
-    return (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def _events_replay_stream(spark, frames, d):
+    """Event ``frames`` (of :func:`_events`) replayed under ``d`` by
+    :func:`_replay_stream`, ``ts`` cast to TIMESTAMP: event-time
+    watermarks require TIMESTAMP (LTZ) and the parquet ts is NTZ (session
+    tz is UTC, so the rendered values the oracle compares are
+    unchanged)."""
+    return _replay_stream(spark, frames, f"{d}/src").withColumn(
+        "ts", F.col("ts").cast("timestamp")
     )
 
 
@@ -1500,41 +1274,23 @@ def _q_stream_media_decode(spark, sf_dir):
     replays the generating formulas and aggregates per format — a
     decode drift OR a dropped/duplicated micro-batch row breaks the
     integer-exact sums."""
-    import tempfile
-    import uuid
-
     from scipi_spark.streaming.pipelines import media_decode_rollup
 
     assets = _media_real_assets(spark, sf_dir)
-    d = tempfile.mkdtemp(prefix="scipi_stream_media_")
-    src = f"{d}/src"
-    assets.filter(F.col("asset_id") % 2 == 0).coalesce(1).write.parquet(src)
-    assets.filter(F.col("asset_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    stream = (
-        spark.readStream.schema(
-            "asset_id long, format string, payload binary"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    with tempfile.TemporaryDirectory(prefix="scipi_stream_media_") as d:
+        stream = _replay_stream(spark, _parity(assets, "asset_id"), f"{d}/src")
+        return _drain_to_memory(media_decode_rollup(stream), "complete")
+
+
+def _window_rows(df):
+    return df.select(
+        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias(
+            "window_start"
+        ),
+        "event_type",
+        "n_events",
+        "sum_value",
     )
-    agg = media_decode_rollup(stream)
-    name = f"stream_media_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # materialize the memory table, then drop the replay source dir —
-    # the gates otherwise leak two parquet files per run (round-9 advice)
-    _register_replay_dir(d)
-    return _materialize_and_sweep(spark.table(name))
 
 
 def _q_stream_tumbling_windows(spark, sf_dir):
@@ -1545,30 +1301,13 @@ def _q_stream_tumbling_windows(spark, sf_dir):
     previously pytest-only. Every window's rows straddle both batches
     (parity split), so the converged table proves cross-batch window
     state merge; oracle = the batch hourly rollup."""
-    import uuid
-
     from scipi_spark.streaming.pipelines import tumbling_window_counts
 
-    agg = tumbling_window_counts(_events_replay_stream(spark, sf_dir))
-    name = f"stream_win_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return _materialize_and_sweep(spark.table(name)).select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias(
-            "window_start"
-        ),
-        "event_type",
-        "n_events",
-        "sum_value",
-    )
+    with tempfile.TemporaryDirectory(prefix="scipi_stream_events_") as d:
+        frames = _parity(_events(spark, sf_dir), "event_id")
+        stream = _events_replay_stream(spark, frames, d)
+        out = _drain_to_memory(tumbling_window_counts(stream), "complete")
+    return _window_rows(out)
 
 
 def _q_stream_watermark_finalize(spark, sf_dir):
@@ -1584,17 +1323,9 @@ def _q_stream_watermark_finalize(spark, sf_dir):
     row-count/hash both break. Oracle = the batch hourly aggregate of
     the non-straggler rows over exactly the finalized windows
     (window_end <= max_ts - 30 min)."""
-    import glob as _glob
-    import tempfile
-    import time as _time
-    import uuid
-
-    from scipi_spark.sources.tables import load_events
     from scipi_spark.streaming.pipelines import tumbling_window_counts
 
-    ev = load_events(spark, sf_dir).select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
+    ev = _events(spark, sf_dir)
     first_hour = ev.agg(
         F.date_trunc("hour", F.min("ts")).alias("h")
     )  # 1-row aggregate, broadcast back — the whitelisted corpus-stats idiom
@@ -1602,53 +1333,14 @@ def _q_stream_watermark_finalize(spark, sf_dir):
         F.broadcast(first_hour),
         F.date_trunc("hour", F.col("ts")) == F.col("h"),
     ).drop("h")
-
-    d = tempfile.mkdtemp(prefix="scipi_stream_wm_")
-    _register_replay_dir(d)
-    src = f"{d}/src"
-    batches = [
-        ev.filter(F.col("event_id") % 2 == 0),
-        ev.filter(F.col("event_id") % 2 == 1),
-        stragglers,
-    ]
-    # FileStreamSource replays oldest-mtime first; pin the batch order
-    # explicitly (same fix as the pytest twin: back-to-back writes can
-    # tie on mtime granularity and reorder micro-batches)
-    base = _time.time()
-    stamped: set[str] = set()
-    for i, b in enumerate(batches):
-        b.coalesce(1).write.mode("append" if i else "overwrite").parquet(src)
-        for f in _glob.glob(os.path.join(src, "part-*.parquet")):
-            if f not in stamped:
-                os.utime(f, (base + 10 * i, base + 10 * i))
-                stamped.add(f)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    agg = tumbling_window_counts(stream, window="1 hour", watermark="30 minutes")
-    name = f"stream_wm_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return _materialize_and_sweep(spark.table(name)).select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias(
-            "window_start"
-        ),
-        "event_type",
-        "n_events",
-        "sum_value",
-    )
+    frames = _parity(ev, "event_id") + [stragglers]
+    with tempfile.TemporaryDirectory(prefix="scipi_stream_wm_") as d:
+        stream = _events_replay_stream(spark, frames, d)
+        agg = tumbling_window_counts(
+            stream, window="1 hour", watermark="30 minutes"
+        )
+        out = _drain_to_memory(agg, "append")
+    return _window_rows(out)
 
 
 def _q_stream_user_stats(spark, sf_dir):
@@ -1658,28 +1350,17 @@ def _q_stream_user_stats(spark, sf_dir):
     2-batch replay emits one updated row per user per micro-batch;
     ``n_events`` is strictly increasing per user, so the converged state
     is the max-``n_events`` row. Must equal the batch per-user aggregate."""
-    import uuid
+    from pyspark.sql import Window as _W
 
     from scipi_spark.streaming.pipelines import stateful_user_stats
 
-    out = stateful_user_stats(_events_replay_stream(spark, sf_dir))
-    name = f"stream_ustats_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    from pyspark.sql import Window as _W
-
+    with tempfile.TemporaryDirectory(prefix="scipi_stream_events_") as d:
+        frames = _parity(_events(spark, sf_dir), "event_id")
+        stream = _events_replay_stream(spark, frames, d)
+        tbl = _drain_to_memory(stateful_user_stats(stream), "update")
     # converged row = max n_events per user (strictly increasing across
     # micro-batches); a per-user window avoids self-joining the memory
     # sink view (whose plan can't be deduplicated for a self-join)
-    tbl = _materialize_and_sweep(spark.table(name))
     w = _W.partitionBy("user_id").orderBy(F.desc("n_events"))
     tbl = (
         tbl.withColumn("__rn", F.row_number().over(w))
@@ -1703,23 +1384,13 @@ def _q_stream_session_windows(spark, sf_dir):
     pieces the state store must merge. Complete-mode convergence must
     equal batch sessionization — shares the gaps-and-islands oracle of
     the batch twin verbatim."""
-    import uuid
-
     from scipi_spark.streaming.pipelines import session_window_stats
 
-    out = session_window_stats(_events_replay_stream(spark, sf_dir))
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return _materialize_and_sweep(spark.table(name)).select(
+    with tempfile.TemporaryDirectory(prefix="scipi_stream_events_") as d:
+        frames = _parity(_events(spark, sf_dir), "event_id")
+        stream = _events_replay_stream(spark, frames, d)
+        out = _drain_to_memory(session_window_stats(stream), "complete")
+    return out.select(
         F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias(
             "session_start"
         ),
@@ -1995,9 +1666,6 @@ def _q_sink_roundtrip(spark, sf_dir):
     mangled escape, or one mis-bucketed shard anywhere in
     write->files->read breaks the hash. Shard groups ARE per-file groups
     (one file per shard, pytest-pinned)."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from scipi_spark.sources.io import read_csv, write_csv, write_training_shards
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2009,8 +1677,7 @@ def _q_sink_roundtrip(spark, sf_dir):
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    base = _tempfile.mkdtemp(prefix="scipi_sink_rt_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="scipi_sink_rt_") as base:
         write_csv(proj, base + "/csv")
         write_training_shards(proj, base + "/shards", n_shards=4)
         back_csv = read_csv(
@@ -2042,8 +1709,6 @@ def _q_sink_roundtrip(spark, sf_dir):
         # the temp files must outlive the returned (lazy) plan: pin the
         # aggregates eagerly, then the sink dir can go
         out = out.localCheckpoint(eager=True)
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
     return out
 
 
@@ -2058,9 +1723,6 @@ def _q_multi_format_roundtrip(spark, sf_dir):
     with the same row/id/length/content-hash sums. The oracle computes
     identical aggregates straight from the parquet view — one lost row
     or one mangled escape in either format family breaks the hash."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from scipi_spark.sources.io import (
         read_jsonl_typed,
         read_orc,
@@ -2077,8 +1739,7 @@ def _q_multi_format_roundtrip(spark, sf_dir):
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    base = _tempfile.mkdtemp(prefix="scipi_fmt_rt_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="scipi_fmt_rt_") as base:
         write_orc(proj, base + "/orc")
         write_jsonl(proj, base + "/jsonl")
         back_orc = read_orc(spark, base + "/orc")
@@ -2105,8 +1766,6 @@ def _q_multi_format_roundtrip(spark, sf_dir):
 
         out = _fmt_agg(back_orc, "orc").unionByName(_fmt_agg(back_js, "jsonl"))
         out = out.localCheckpoint(eager=True)  # pin before the dir goes
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
     return out
 
 
@@ -2124,16 +1783,12 @@ def _q_sorted_scan_prune(spark, sf_dir):
     from the events view under the same predicate, so a row lost or
     duplicated by the repartitionByRange exchange, or a boundary row
     misfiled by the sort, breaks the hash."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from scipi_spark.sources.io import write_range_sorted
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    base = _tempfile.mkdtemp(prefix="scipi_sorted_prune_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="scipi_sorted_prune_") as base:
         write_range_sorted(ev, base + "/byvalue", "value")
         back = spark.read.parquet(base + "/byvalue").filter(
             (F.col("value") >= 10.0) & (F.col("value") < 20.0)
@@ -2148,8 +1803,6 @@ def _q_sorted_scan_prune(spark, sf_dir):
             )
         )
         out = out.localCheckpoint(eager=True)  # pin before the dir goes
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
     return out
 
 
@@ -2170,16 +1823,12 @@ def _q_zorder_scan_prune(spark, sf_dir):
     aggregates from the events view under the same predicate, so a row
     lost/duplicated by the exchange or misplaced by the curve breaks
     the hash."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from scipi_spark.sources.io import write_zordered
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    base = _tempfile.mkdtemp(prefix="scipi_zorder_prune_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="scipi_zorder_prune_") as base:
         write_zordered(ev, base + "/z", ["user_id", "value"])
         back = spark.read.parquet(base + "/z").filter(
             (F.col("user_id") >= 100) & (F.col("user_id") < 200)
@@ -2195,8 +1844,6 @@ def _q_zorder_scan_prune(spark, sf_dir):
             )
         )
         out = out.localCheckpoint(eager=True)  # pin before the dir goes
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
     return out
 
 
@@ -2485,49 +2132,34 @@ def _q_stream_er_store_probe(spark, sf_dir):
     converged store assignment equals the one-shot closure; oracle =
     the same closed-form planted truth. Store in a fresh temp dir per
     run (folding mutates it)."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from scipi_spark.operators import linkage
     from scipi_spark.streaming.pipelines import run_streaming_er_against_store
 
     recs = _er_records(spark, sf_dir)
     corpus = recs.filter(F.col("rec_id") < 1_000_000)
     dups = recs.filter(F.col("rec_id") >= 1_000_000)
-    b1 = dups.filter(F.col("rec_id") % 2 == 0)
-    b2 = dups.filter(F.col("rec_id") % 2 == 1)
-    d = _tempfile.mkdtemp(prefix="scipi_er_stream_")
-    table = "er_sgate_" + os.path.basename(d)[-8:]
-    try:
-        linkage.write_entity_store(
-            corpus, f"{d}/store", table=table, threshold=0.5
-        )
-        b1.coalesce(1).write.parquet(f"{d}/src")
-        b2.coalesce(1).write.mode("append").parquet(f"{d}/src")
-        stream = (
-            spark.readStream.schema(corpus.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{d}/src")
-        )
-        q = run_streaming_er_against_store(
-            stream, f"{d}/store", f"{d}/out", f"{d}/ckpt", table=table
-        )
+    b1, b2 = _parity(dups, "rec_id")
+    with tempfile.TemporaryDirectory(prefix="scipi_er_stream_") as d:
+        table = "er_sgate_" + os.path.basename(d)[-8:]
         try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = (
-            linkage.entity_store_assignment(spark, f"{d}/store")
-            .groupBy("entity_id")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_members"),
-                F.sum("rec_id").cast("long").alias("sum_ids"),
+            linkage.write_entity_store(
+                corpus, f"{d}/store", table=table, threshold=0.5
             )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        _shutil.rmtree(d, ignore_errors=True)
+            stream = _replay_stream(spark, [b1, b2], f"{d}/src")
+            _drain(run_streaming_er_against_store(
+                stream, f"{d}/store", f"{d}/out", f"{d}/ckpt", table=table
+            ))
+            out = (
+                linkage.entity_store_assignment(spark, f"{d}/store")
+                .groupBy("entity_id")
+                .agg(
+                    F.count(F.lit(1)).cast("long").alias("n_members"),
+                    F.sum("rec_id").cast("long").alias("sum_ids"),
+                )
+                .localCheckpoint(eager=True)
+            )
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {table}")
     return out
 
 
@@ -2535,59 +2167,33 @@ def _q_stream_scd2(spark, sf_dir):
     """SCD2 as CONTINUOUS dimension maintenance (round-10 — the
     streaming x SCD2 x versioned-store cross): the same customer-
     segment updates as ``scd2_customer_history``, split at the median
-    timestamp into 2 mtime-ordered micro-batches and folded through a
-    ``foreachBatch`` sink that reads the CURRENT dimension version,
-    applies ``store.scd2_apply``, and publishes the result as a NEW
-    version through storectl's atomic pointer (readers never see a
-    half-merged dimension; a crashed fold leaves the old version
-    intact). Because batches are timestamp-ordered, the incremental
-    fold is associative with the one-shot merge — the converged
-    dimension must hash-match the SAME oracle as the batch entry,
-    so a version lost, a boundary interval misclosed, or a cross-batch
-    no-op not collapsing all break it."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    from scipi_spark.sources.store import scd2_apply
+    timestamp into 2 mtime-ordered micro-batches and folded by the SCD2
+    store sink (``pipelines.run_streaming_scd2_fold``): each batch
+    applies ``store.scd2_apply`` to the live dimension version and
+    publishes the result as the next version through
+    ``storectl.append`` (readers never see a half-merged dimension; a
+    crashed fold leaves the old version intact, and a replayed batch
+    only probes). Because batches are timestamp-ordered, the
+    incremental fold is associative with the one-shot merge — the
+    converged dimension must hash-match the SAME oracle as the batch
+    entry, so a version lost, a boundary interval misclosed, or a
+    cross-batch no-op not collapsing all break it."""
+    from scipi_spark.sources.store import read_scd2_store, write_scd2_store
+    from scipi_spark.streaming.pipelines import run_streaming_scd2_fold
 
     dim0, updates = _scd2_fixture(spark, sf_dir)
     cut = updates.agg(
         F.expr("percentile(ts, 0.5)").cast("long").alias("c")
     ).collect()[0]["c"]  # 1-row scalar: the batch boundary
-    d = _tempfile.mkdtemp(prefix="scipi_stream_scd2_")
-    _register_replay_dir(d)
-    root = f"{d}/dim"
-    build = storectl.new_build_dir(root)
-    dim0.write.parquet(build + "/dim")
-    storectl.publish(root, build, "scd2-v1")
-
-    def fold(batch_df, _batch_id):
-        cur = storectl.current_dir(root)
-        dim = spark.read.parquet(cur + "/dim")
-        merged = scd2_apply(dim, batch_df, "k", ["segment"]).localCheckpoint(
-            eager=True
-        )
-        nxt = storectl.new_build_dir(root)
-        merged.write.parquet(nxt + "/dim")
-        storectl.publish(root, nxt, "scd2-v1")
-
-    stream = _stream_two_batches(
-        spark,
-        [updates.filter(F.col("ts") < cut), updates.filter(F.col("ts") >= cut)],
-        f"{d}/src",
-    )
-    q = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", f"{d}/ckpt")
-        .foreachBatch(fold)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    hist = spark.read.parquet(storectl.current_dir(root) + "/dim")
-    return _materialize_and_sweep(_scd2_rollup(hist))
+    batches = [updates.filter(F.col("ts") < cut), updates.filter(F.col("ts") >= cut)]
+    with tempfile.TemporaryDirectory(prefix="scipi_stream_scd2_") as d:
+        write_scd2_store(dim0, f"{d}/dim")
+        _drain(run_streaming_scd2_fold(
+            _replay_stream(spark, batches, f"{d}/src"),
+            f"{d}/dim", f"{d}/out", f"{d}/ckpt", "k", ["segment"],
+        ))
+        hist = read_scd2_store(spark, f"{d}/dim")
+        return _scd2_rollup(hist).localCheckpoint(eager=True)
 
 
 def _q_partition_pruned_scan(spark, sf_dir):
@@ -2603,14 +2209,10 @@ def _q_partition_pruned_scan(spark, sf_dir):
     the min source, so a row leaking across partition directories — or
     a partition value mangled by the directory encoding — breaks the
     hash."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from scipi_spark.sources.io import write_hive_partitioned
 
     docs = load_table(spark, sf_dir, "documents")
-    base = _tempfile.mkdtemp(prefix="scipi_part_prune_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="scipi_part_prune_") as base:
         write_hive_partitioned(
             docs.select("doc_id", "text", "source"), base + "/bysource",
             "source",
@@ -2635,8 +2237,6 @@ def _q_partition_pruned_scan(spark, sf_dir):
             .select(F.lit(target).alias("source"), "*")
         )
         out = out.localCheckpoint(eager=True)  # pin before the dir goes
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
     return out
 
 
@@ -3040,9 +2640,6 @@ def _q_stream_dedup(spark, sf_dir):
     2-micro-batch JSONL stream; first-arrival-per-fingerprint rows are
     appended to a memory sink. The converged fingerprint set must equal
     batch DISTINCT over the original corpus (copies share fingerprints)."""
-    import tempfile
-    import uuid
-
     from scipi_spark.operators.textops import fingerprint
     from scipi_spark.streaming import streaming_dedup
 
@@ -3053,65 +2650,26 @@ def _q_stream_dedup(spark, sf_dir):
     raw = docs.unionByName(dups).select(
         F.to_json(F.struct("doc_id", "text")).alias("value")
     )
-    d = tempfile.mkdtemp(prefix="scipi_stream_dedup_")
-    _register_replay_dir(d)
-    src = f"{d}/src"
-    raw.coalesce(2).write.mode("overwrite").text(src)
-    stream = (
-        spark.readStream.option("maxFilesPerTrigger", 1)
-        .text(src)
-        .select(
-            F.from_json("value", "doc_id long, text string").alias("j")
+    with tempfile.TemporaryDirectory(prefix="scipi_stream_dedup_") as d:
+        src = f"{d}/src"
+        raw.coalesce(2).write.mode("overwrite").text(src)
+        stream = (
+            spark.readStream.option("maxFilesPerTrigger", 1)
+            .text(src)
+            .select(
+                F.from_json("value", "doc_id long, text string").alias("j")
+            )
+            .select(
+                "j.doc_id",
+                fingerprint("j.text").alias("fp"),
+                # deterministic synthetic event time (the corpus has none)
+                F.timestamp_seconds(
+                    F.lit(1_700_000_000) + F.col("j.doc_id") % 997
+                ).alias("ts"),
+            )
         )
-        .select(
-            "j.doc_id",
-            fingerprint("j.text").alias("fp"),
-            # deterministic synthetic event time (the corpus has none)
-            F.timestamp_seconds(
-                F.lit(1_700_000_000) + F.col("j.doc_id") % 997
-            ).alias("ts"),
-        )
-    )
-    deduped = streaming_dedup(stream, ["fp"], ts_col="ts", delay="1 hour")
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        deduped.select("fp")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return _materialize_and_sweep(spark.table(name)).select("fp")
-
-
-def _stream_two_batches(spark, frames, src_dir):
-    """Write ``frames`` as one parquet file each under ``src_dir`` with
-    STRICTLY increasing mtimes (FileStreamSource replays oldest-mtime
-    first; back-to-back writes tie on mtime granularity and reorder
-    micro-batches — the rule every replay entry follows) and return a
-    maxFilesPerTrigger=1 stream of them."""
-    import glob as _glob
-    import time as _time
-
-    base = _time.time()
-    stamped: set[str] = set()
-    for i, b in enumerate(frames):
-        b.coalesce(1).write.mode("append" if i else "overwrite").parquet(
-            src_dir
-        )
-        for f in _glob.glob(os.path.join(src_dir, "part-*.parquet")):
-            if f not in stamped:
-                os.utime(f, (base + 10 * i, base + 10 * i))
-                stamped.add(f)
-    return (
-        spark.readStream.schema(frames[0].schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
+        deduped = streaming_dedup(stream, ["fp"], ts_col="ts", delay="1 hour")
+        return _drain_to_memory(deduped.select("fp"), "append")
 
 
 def _q_ann_store_time_travel(spark, sf_dir):
@@ -3127,60 +2685,56 @@ def _q_ann_store_time_travel(spark, sf_dir):
     the snapshot-isolation semantics of the store are verified, not just
     its mechanics. The table-format snapshot-read pattern (Iceberg
     ``VERSION AS OF``) on POSIX primitives."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
     cuts = emb.agg(
         F.floor(F.expr("percentile(vec_id, 0.8)")).cast("long").alias("c8"),
         F.floor(F.expr("percentile(vec_id, 0.9)")).cast("long").alias("c9"),
     ).collect()[0]
     c8, c9 = cuts["c8"], cuts["c9"]
-    d = _tempfile.mkdtemp(prefix="scipi_ann_tt_")
-    suffix = os.path.basename(d)[-8:]
-    t_v1, t_cur = "ann_tt_v1_" + suffix, "ann_tt_cur_" + suffix
-    try:
-        store = f"{d}/store"
-        similarity.write_ann_store(
-            emb.filter(F.col("vec_id") < c8), store, table=t_cur,
-            bits=6, tables=16,
-        )
-        similarity.append_ann_store(
-            emb.filter((F.col("vec_id") >= c8) & (F.col("vec_id") < c9)),
-            store, table=t_cur, bits=6, tables=16,
-        )
-        versions = storectl.list_versions(store)
-        similarity.open_ann_store(
-            spark, store, table=t_v1, version_dir=versions[0]
-        )
-        probe = emb.filter(
-            (F.col("vec_id") >= c9) & (F.col("vec_id") % 7 == 0)
-        )
-        hits_v1 = similarity.knn_from_store(
-            probe, table=t_v1, k=5, bits=6, tables=16
-        )
-        hits_cur = similarity.knn_from_store(
-            probe, table=t_cur, k=5, bits=6, tables=16
-        )
-        out = (
-            hits_v1.select(
-                F.lit("v1").alias("snapshot"), "query_id", "vec_id", "cosine"
+    with tempfile.TemporaryDirectory(prefix="scipi_ann_tt_") as d:
+        suffix = os.path.basename(d)[-8:]
+        t_v1, t_cur = "ann_tt_v1_" + suffix, "ann_tt_cur_" + suffix
+        try:
+            store = f"{d}/store"
+            similarity.write_ann_store(
+                emb.filter(F.col("vec_id") < c8), store, table=t_cur,
+                bits=6, tables=16,
             )
-            .unionByName(
-                hits_cur.select(
-                    F.lit("current").alias("snapshot"),
-                    "query_id",
-                    "vec_id",
-                    "cosine",
+            similarity.append_ann_store(
+                emb.filter((F.col("vec_id") >= c8) & (F.col("vec_id") < c9)),
+                store, table=t_cur, bits=6, tables=16,
+            )
+            versions = storectl.list_versions(store)
+            similarity.open_ann_store(
+                spark, store, table=t_v1, version_dir=versions[0]
+            )
+            probe = emb.filter(
+                (F.col("vec_id") >= c9) & (F.col("vec_id") % 7 == 0)
+            )
+            hits_v1 = similarity.knn_from_store(
+                probe, table=t_v1, k=5, bits=6, tables=16
+            )
+            hits_cur = similarity.knn_from_store(
+                probe, table=t_cur, k=5, bits=6, tables=16
+            )
+            out = (
+                hits_v1.select(
+                    F.lit("v1").alias("snapshot"), "query_id", "vec_id", "cosine"
                 )
+                .unionByName(
+                    hits_cur.select(
+                        F.lit("current").alias("snapshot"),
+                        "query_id",
+                        "vec_id",
+                        "cosine",
+                    )
+                )
+                .localCheckpoint(eager=True)
             )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        for t in (t_v1, t_cur):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            spark.sql(f"DROP TABLE IF EXISTS {t}_vectors")
-        _shutil.rmtree(d, ignore_errors=True)
+        finally:
+            for t in (t_v1, t_cur):
+                spark.sql(f"DROP TABLE IF EXISTS {t}")
+                spark.sql(f"DROP TABLE IF EXISTS {t}_vectors")
     return out
 
 
@@ -3199,9 +2753,6 @@ def _q_stream_ann_store_probe(spark, sf_dir):
     hits are the query_id % 7 == 0 slice. The store is built in a fresh
     temp dir each run: folding MUTATES it, so a folded store must never
     be reused as the pristine corpus index."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from scipi_spark.streaming.pipelines import run_streaming_ann_against_store
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -3214,39 +2765,34 @@ def _q_stream_ann_store_probe(spark, sf_dir):
     b1 = emb.filter((F.col("vec_id") >= c8) & (F.col("vec_id") < c9))
     b2 = emb.filter(F.col("vec_id") >= c9)
 
-    d = _tempfile.mkdtemp(prefix="scipi_stream_annstore_")
-    table = "ann_stream_" + os.path.basename(d)[-8:]
-    try:
-        similarity.write_ann_store(
-            corpus, f"{d}/store", table=table, bits=6, tables=16
-        )
-        stream = _stream_two_batches(spark, [b1, b2], f"{d}/src")
-        q = run_streaming_ann_against_store(
-            stream,
-            f"{d}/store",
-            f"{d}/out",
-            f"{d}/ckpt",
-            table=table,
-            k=5,
-            bits=6,
-            tables=16,
-        )
+    with tempfile.TemporaryDirectory(prefix="scipi_stream_annstore_") as d:
+        table = "ann_stream_" + os.path.basename(d)[-8:]
         try:
-            q.processAllAvailable()
+            similarity.write_ann_store(
+                corpus, f"{d}/store", table=table, bits=6, tables=16
+            )
+            stream = _replay_stream(spark, [b1, b2], f"{d}/src")
+            _drain(run_streaming_ann_against_store(
+                stream,
+                f"{d}/store",
+                f"{d}/out",
+                f"{d}/ckpt",
+                table=table,
+                k=5,
+                bits=6,
+                tables=16,
+            ))
+            hits = (
+                spark.read.parquet(f"{d}/out")
+                .filter(F.col("query_id") % 7 == 0)
+                .select("query_id", "vec_id", "cosine")
+                .localCheckpoint(eager=True)
+            )
         finally:
-            q.stop()
-        hits = (
-            spark.read.parquet(f"{d}/out")
-            .filter(F.col("query_id") % 7 == 0)
-            .select("query_id", "vec_id", "cosine")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        # per-call unique catalog names would otherwise accumulate in a
-        # long-lived session (hits are checkpointed — drop is safe)
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"DROP TABLE IF EXISTS {table}_vectors")
-        _shutil.rmtree(d, ignore_errors=True)
+            # per-call unique catalog names would otherwise accumulate in a
+            # long-lived session (hits are checkpointed — drop is safe)
+            spark.sql(f"DROP TABLE IF EXISTS {table}")
+            spark.sql(f"DROP TABLE IF EXISTS {table}_vectors")
     return hits
 
 
@@ -3262,9 +2808,6 @@ def _q_stream_dedup_store_probe(spark, sf_dir):
     (pytest-pinned), so the oracle IS ``dedup_increment``'s exact-
     Jaccard SQL, shared verbatim. Store in a fresh temp dir per run
     (folding mutates it)."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from scipi_spark.streaming.pipelines import (
         run_streaming_dedup_against_store,
     )
@@ -3281,37 +2824,32 @@ def _q_stream_dedup_store_probe(spark, sf_dir):
     ).select("doc_id", "text")
     b2 = docs.filter(F.col("doc_id") >= c9).select("doc_id", "text")
 
-    d = _tempfile.mkdtemp(prefix="scipi_stream_sigstore_")
-    table = "sig_stream_" + os.path.basename(d)[-8:]
-    try:
-        dedup.write_signature_store(
-            corpus, f"{d}/store", table=table, k=3, num_perm=64, bands=16
-        )
-        stream = _stream_two_batches(spark, [b1, b2], f"{d}/src")
-        q = run_streaming_dedup_against_store(
-            stream,
-            f"{d}/store",
-            f"{d}/out",
-            f"{d}/ckpt",
-            table=table,
-            k=3,
-            num_perm=64,
-            bands=16,
-            threshold=0.3,
-        )
+    with tempfile.TemporaryDirectory(prefix="scipi_stream_sigstore_") as d:
+        table = "sig_stream_" + os.path.basename(d)[-8:]
         try:
-            q.processAllAvailable()
+            dedup.write_signature_store(
+                corpus, f"{d}/store", table=table, k=3, num_perm=64, bands=16
+            )
+            stream = _replay_stream(spark, [b1, b2], f"{d}/src")
+            _drain(run_streaming_dedup_against_store(
+                stream,
+                f"{d}/store",
+                f"{d}/out",
+                f"{d}/ckpt",
+                table=table,
+                k=3,
+                num_perm=64,
+                bands=16,
+                threshold=0.3,
+            ))
+            pairs = (
+                spark.read.parquet(f"{d}/out")
+                .select("doc_a", "doc_b", "jaccard")
+                .distinct()
+                .localCheckpoint(eager=True)
+            )
         finally:
-            q.stop()
-        pairs = (
-            spark.read.parquet(f"{d}/out")
-            .select("doc_a", "doc_b", "jaccard")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        _shutil.rmtree(d, ignore_errors=True)
+            spark.sql(f"DROP TABLE IF EXISTS {table}")
     return pairs
 
 
@@ -3992,15 +3530,6 @@ def _q_knn_pq(spark, sf_dir):
         F.transform("embedding", lambda x: x.cast("double")).alias("e"),
     )
     both = ed.unionByName(similarity.perturbed_copies(ed))
-    # quantizer trained ONCE per (sf, params) and reused — the production
-    # ANN shape (same argument and cache as dedup_semantic's k-means);
-    # training is deterministic, so cached codebooks are bit-identical
-    # to a retrain and correctness is unaffected.
-    key = ("pq", sf_dir, 8, 16, 3)
-    if key not in _CENTROID_CACHE:
-        _cache_put(_CENTROID_CACHE, key, similarity.pq_codebooks(
-            both, m=8, ksub=16, iters=3, id_col="vec_id", vec_col="e"
-        ))
     return similarity.knn_cosine_pq(
         both,
         query_ids=[0, 1, 2, 3, 4],
@@ -4009,7 +3538,6 @@ def _q_knn_pq(spark, sf_dir):
         ksub=16,
         rerank=10,
         vec_col="e",
-        codebooks=_CENTROID_CACHE[key],
     )
 
 
@@ -4173,9 +3701,6 @@ def _q_bm25_store_append(spark, sf_dir):
     the full corpus), and the search result therefore hash-matches
     ``text_bm25``'s oracle over ALL documents. Store in a fresh temp
     dir per run (folding mutates it)."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from scipi_spark.operators import textops
 
     docs = load_table(spark, sf_dir, "documents")
@@ -4184,17 +3709,16 @@ def _q_bm25_store_append(spark, sf_dir):
     ).collect()[0]["c"]
     corpus = docs.filter(F.col("doc_id") < cutoff)
     batch = docs.filter(F.col("doc_id") >= cutoff)
-    d = _tempfile.mkdtemp(prefix="scipi_bm25_append_")
-    table = "bm25_app_" + os.path.basename(d)[-8:]
-    try:
-        textops.write_text_index_store(corpus, f"{d}/idx", table=table)
-        textops.append_text_index_store(batch, f"{d}/idx", table=table)
-        out = textops.bm25_from_store(
-            spark, f"{d}/idx", BM25_QUERY, table=table, topk=10
-        ).localCheckpoint(eager=True)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        _shutil.rmtree(d, ignore_errors=True)
+    with tempfile.TemporaryDirectory(prefix="scipi_bm25_append_") as d:
+        table = "bm25_app_" + os.path.basename(d)[-8:]
+        try:
+            textops.write_text_index_store(corpus, f"{d}/idx", table=table)
+            textops.append_text_index_store(batch, f"{d}/idx", table=table)
+            out = textops.bm25_from_store(
+                spark, f"{d}/idx", BM25_QUERY, table=table, topk=10
+            ).localCheckpoint(eager=True)
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {table}")
     return out
 
 
@@ -4210,9 +3734,6 @@ def _q_stream_bm25_store_fold(spark, sf_dir):
     over ALL documents (stats recompute exactly — sum/count of longs),
     so the final search hash-matches ``text_bm25``'s full-corpus
     oracle. Store in a fresh temp dir per run (folding mutates it)."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from scipi_spark.operators import textops
     from scipi_spark.streaming.pipelines import run_streaming_text_index_fold
 
@@ -4222,34 +3743,22 @@ def _q_stream_bm25_store_fold(spark, sf_dir):
     ).collect()[0]["c"]
     corpus = docs.filter(F.col("doc_id") < cutoff).select("doc_id", "text")
     rest = docs.filter(F.col("doc_id") >= cutoff).select("doc_id", "text")
-    b1 = rest.filter(F.col("doc_id") % 2 == 0)
-    b2 = rest.filter(F.col("doc_id") % 2 == 1)
-    d = _tempfile.mkdtemp(prefix="scipi_bm25_stream_")
-    table = "bm25_sgate_" + os.path.basename(d)[-8:]
-    try:
-        textops.write_text_index_store(corpus, f"{d}/idx", table=table)
-        b1.coalesce(1).write.parquet(f"{d}/src")
-        b2.coalesce(1).write.mode("append").parquet(f"{d}/src")
-        stream = (
-            spark.readStream.schema(corpus.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{d}/src")
-        )
-        q = run_streaming_text_index_fold(
-            stream, f"{d}/idx", f"{d}/out", f"{d}/ckpt", BM25_QUERY,
-            table=table, topk=10,
-        )
+    b1, b2 = _parity(rest, "doc_id")
+    with tempfile.TemporaryDirectory(prefix="scipi_bm25_stream_") as d:
+        table = "bm25_sgate_" + os.path.basename(d)[-8:]
         try:
-            q.processAllAvailable()
+            textops.write_text_index_store(corpus, f"{d}/idx", table=table)
+            stream = _replay_stream(spark, [b1, b2], f"{d}/src")
+            _drain(run_streaming_text_index_fold(
+                stream, f"{d}/idx", f"{d}/out", f"{d}/ckpt", BM25_QUERY,
+                table=table, topk=10,
+            ))
+            # the converged index serves the oracle-matched result
+            out = textops.bm25_from_store(
+                spark, f"{d}/idx", BM25_QUERY, table=table, topk=10
+            ).localCheckpoint(eager=True)
         finally:
-            q.stop()
-        # the converged index serves the oracle-matched result
-        out = textops.bm25_from_store(
-            spark, f"{d}/idx", BM25_QUERY, table=table, topk=10
-        ).localCheckpoint(eager=True)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        _shutil.rmtree(d, ignore_errors=True)
+            spark.sql(f"DROP TABLE IF EXISTS {table}")
     return out
 
 
@@ -4413,8 +3922,6 @@ def _q_c16_strength(spark, sf_dir):
     return community.community_strength(sizes)
 
 
-_PLANTED_CACHE: dict = {}
-
 # Planted-partition twin for the iterative LPA machinery: 50 disjoint
 # 5-cliques built deterministically from the smallest 250 orderkeys.
 # On disjoint cliques Flink-semantics LPA provably converges (by
@@ -4428,38 +3935,30 @@ PLANTED_C = 50
 
 
 def _planted_labels(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PLANTED_CACHE:
-        from pyspark.sql import Window
+    from pyspark.sql import Window
 
-        orders = load_table(spark, sf_dir, "orders")
-        keys = (
-            orders.select(F.col("o_orderkey").cast("long").alias("k"))
-            .orderBy("k")
-            .limit(PLANTED_N)
-        )
-        mem = keys.withColumn(
-            "rn", F.row_number().over(Window.orderBy("k")) - 1
-        ).select(
-            F.concat(F.lit("v"), F.col("k")).alias("id"),
-            (F.col("rn") % PLANTED_C).alias("g"),
-        )
-        a = mem.select("g", F.col("id").alias("src"))
-        b = mem.select("g", F.col("id").alias("dst"))
-        edges = (
-            a.join(b, "g")
-            .filter(F.col("src") < F.col("dst"))
-            .select("src", "dst", F.lit(1.0).alias("weight"))
-        )
-        labels = community.community_detection(
-            mem.select("id"), edges, iterations=5, delta=0.5
-        )
-        _cache_put(_PLANTED_CACHE, key, labels.persist())
-    out = _PLANTED_CACHE[key]
-    sl = out.storageLevel
-    if not (sl.useMemory or sl.useDisk):
-        out.persist()  # re-register after an external clearCache()
-    return out
+    orders = load_table(spark, sf_dir, "orders")
+    keys = (
+        orders.select(F.col("o_orderkey").cast("long").alias("k"))
+        .orderBy("k")
+        .limit(PLANTED_N)
+    )
+    mem = keys.withColumn(
+        "rn", F.row_number().over(Window.orderBy("k")) - 1
+    ).select(
+        F.concat(F.lit("v"), F.col("k")).alias("id"),
+        (F.col("rn") % PLANTED_C).alias("g"),
+    )
+    a = mem.select("g", F.col("id").alias("src"))
+    b = mem.select("g", F.col("id").alias("dst"))
+    edges = (
+        a.join(b, "g")
+        .filter(F.col("src") < F.col("dst"))
+        .select("src", "dst", F.lit(1.0).alias("weight"))
+    )
+    return community.community_detection(
+        mem.select("id"), edges, iterations=5, delta=0.5
+    )
 
 
 def _q_c8_lpa_planted(spark, sf_dir):

@@ -241,23 +241,6 @@ def hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(bits)]
 
 
-def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Packed sign-bit signature of the vector against each hyperplane.
-
-    Column-expression form — used for single-table blocking; for many
-    tables prefer :func:`make_signatures_udf` (one Arrow-batched matmul
-    instead of tables*bits*dim py4j-built literals, which costs seconds
-    of driver-side plan construction)."""
-    sig = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(v) for v in p])
-        bit = F.when(dot(vec, plane) >= 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        sig = sig.bitwiseOR(F.shiftleft(bit, i))
-    return sig
-
-
 def make_signatures_udf(all_planes: list[list[list[float]]]):
     """Vectorized multi-table signature kernel: one (n, dim) x (dim, L*b)
     matmul per Arrow batch, packed into one long per table. Sign bits at
@@ -282,6 +265,17 @@ def make_signatures_udf(all_planes: list[list[list[float]]]):
         return pd.Series(list(packed))
 
     return sigs
+
+
+
+def table_signatures_udf(dim: int, bits: int, tables: int, seed: int):
+    """The signature kernel of a ``tables``-table hyperplane LSH: table
+    ``t`` draws its planes with :func:`hyperplanes` from ``seed + 7919 *
+    t``. Every build and probe signs through this one recipe, so a store
+    probe's signatures match the build's."""
+    return make_signatures_udf(
+        [hyperplanes(dim, bits, seed + 7919 * t) for t in range(tables)]
+    )
 
 
 def knn_lsh(
@@ -324,8 +318,7 @@ def knn_lsh(
     construction, while the corpus is the 100 TB side — without the hint
     the optimizer broadcast the CORPUS (BuildRight over the exploded
     signature table), which inverts at scale."""
-    all_planes = [hyperplanes(dim, bits, seed + 7919 * t) for t in range(tables)]
-    sigs_udf = make_signatures_udf(all_planes)
+    sigs_udf = table_signatures_udf(dim, bits, tables, seed)
     sc = embeddings.sparkSession.sparkContext
     src = embeddings
     if src.rdd.getNumPartitions() < sc.defaultParallelism:
@@ -425,11 +418,7 @@ def _signed(vectors: DataFrame, p: dict) -> DataFrame:
     """(vec_id, e, sigs): ``vectors`` signed with the fixed-seed planes of
     recipe ``p``, checkpointed — the sigs and vectors writes both read
     it."""
-    planes = [
-        hyperplanes(p["dim"], p["bits"], p["seed"] + 7919 * t)
-        for t in range(p["tables"])
-    ]
-    sigs_udf = make_signatures_udf(planes)
+    sigs_udf = table_signatures_udf(p["dim"], p["bits"], p["tables"], p["seed"])
     return vectors.withColumn("sigs", sigs_udf(F.col("e"))).localCheckpoint(
         eager=True
     )
@@ -668,8 +657,7 @@ def knn_from_store(
     bits, tables, dim, seed = (
         params["bits"], params["tables"], params["dim"], params["seed"]
     )
-    all_planes = [hyperplanes(dim, bits, seed + 7919 * t) for t in range(tables)]
-    sigs_udf = make_signatures_udf(all_planes)
+    sigs_udf = table_signatures_udf(dim, bits, tables, seed)
     q = (
         _with_nrm(
             queries.select(
@@ -767,8 +755,7 @@ def knn_join(
     if bits is None:
         n = base.count()
         bits = max(4, int(math.ceil(math.log2(max(n, 128) / 64.0))))
-    all_planes = [hyperplanes(dim, bits, seed + 7919 * t) for t in range(tables)]
-    sigs_udf = make_signatures_udf(all_planes)
+    sigs_udf = table_signatures_udf(dim, bits, tables, seed)
     sigs = (
         base.select("vec_id", sigs_udf(F.col("e")).alias("sigs"))
         .select("vec_id", F.posexplode("sigs").alias("t", "sig"))
@@ -1124,10 +1111,7 @@ def cosine_neardup_pairs(
         F.col(id_col).alias("vec_id"), _as_double(vec_col).alias("e")
     )
     if bits is not None:
-        all_planes = [
-            hyperplanes(dim, bits, seed + 7919 * t) for t in range(tables)
-        ]
-        sigs_udf = make_signatures_udf(all_planes)
+        sigs_udf = table_signatures_udf(dim, bits, tables, seed)
         # both sides of the candidate self-join read sigs — materialize
         # once or the Arrow signature UDF (the expensive stage) executes
         # twice (self-join sides never share subplans)

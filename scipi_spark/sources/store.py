@@ -6,12 +6,23 @@ yields the LATEST record per (doi, title).
 Here the store is parquet + a compaction view: ``latest_publications``
 dedups by key keeping the max surrogate id — one window (or max_by
 aggregate) over the key partitioning, the standard lakehouse
-last-write-wins read."""
+last-write-wins read.
+
+The type-2 sibling keeps attribute history: :func:`scd2_apply` merges a
+batch of updates into a dimension of validity intervals, and the
+dimension persists as a storectl store (:data:`SCD2_STORE`) that the
+streaming fold ``pipelines.run_streaming_scd2_fold`` appends to."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from scipi_spark.sources import storectl
+
+#: The SCD2 dimension store: one plain-parquet ``dim`` artifact holding
+#: ``(key, attrs..., valid_from, valid_to, is_current)``.
+SCD2_STORE = storectl.StoreSpec("SCD2 dimension store", "scd2-v1", {}, ())
 
 
 def latest_publications(pubs: DataFrame, id_col: str = "id") -> DataFrame:
@@ -89,3 +100,17 @@ def scd2_apply(
     return versions.unionByName(
         closed.select(key, *attrs, "valid_from", "valid_to", "is_current")
     )
+
+
+def write_scd2_store(dim: DataFrame, path: str) -> None:
+    """Publish ``dim`` as a fresh version of the SCD2 dimension store at
+    ``path``."""
+    with storectl.rebuild(path.rstrip("/"), SCD2_STORE) as build:
+        build.add("dim", dim)
+
+
+def read_scd2_store(spark, path: str) -> DataFrame:
+    """The live version's dimension (``FileNotFoundError`` when nothing
+    is published)."""
+    ver = storectl.open_store(path.rstrip("/"), SCD2_STORE)
+    return spark.read.parquet(ver.path("dim"))

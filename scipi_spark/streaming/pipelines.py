@@ -255,8 +255,8 @@ def _start_store_fold(
 
     ``body(batch_df, stamp, emit)`` runs on each non-empty micro-batch,
     locally checkpointed so its probe and its fold read it once. It
-    passes ``stamp`` as the ``fold`` argument of its store's ``append_*``
-    and hands its result to ``emit``, which overwrites
+    passes ``stamp`` as the ``fold`` argument of its store's append
+    (``storectl.append``) and hands its result to ``emit``, which overwrites
     ``<out_path>/batch_id=N``, in the order its family needs.
 
     Replay contract (``foreachBatch`` is at-least-once): ``stamp`` is
@@ -562,6 +562,49 @@ def run_streaming_graph_store_fold(
                 F.sum("w_sum").alias("total_weight"),
             )
         )
+
+    return _start_store_fold(stream, store_path, out_path, checkpoint_path, body)
+
+
+def run_streaming_scd2_fold(
+    stream: DataFrame,
+    store_path: str,
+    out_path: str,
+    checkpoint_path: str,
+    key: str,
+    attrs: list[str],
+    ts_col: str = "ts",
+):
+    """Continuous type-2 dimension maintenance against the persisted
+    dimension store (``store.SCD2_STORE``): each micro-batch of
+    timestamped attribute updates (1) FOLDS into the dimension —
+    ``store.scd2_apply`` over the cloned version, which replaces its
+    ``dim`` artifact in the version ``storectl.append`` publishes — then
+    (2) writes the current rows of the keys it touched to the parquet
+    sink. Timestamp-ordered batches fold associatively, so the converged
+    dimension equals one ``scd2_apply`` over every update.
+
+    Replay contract: :func:`_start_store_fold`. A second fold of a batch
+    is not a no-op (an update that closed a row closes its copy again,
+    leaving the closed row twice), so a replayed batch only probes."""
+    from scipi_spark.sources.store import (
+        SCD2_STORE,
+        read_scd2_store,
+        scd2_apply,
+    )
+
+    root = store_path.rstrip("/")
+
+    def body(batch_df: DataFrame, stamp, emit) -> None:
+        spark = batch_df.sparkSession
+        if stamp:
+            with storectl.append(root, SCD2_STORE, fold=stamp) as build:
+                dim = spark.read.parquet(build.base.path("dim"))
+                build.replace(
+                    "dim", scd2_apply(dim, batch_df, key, attrs, ts_col)
+                )
+        touched = batch_df.select(key).distinct()
+        emit(read_scd2_store(spark, root).filter("is_current").join(touched, key))
 
     return _start_store_fold(stream, store_path, out_path, checkpoint_path, body)
 

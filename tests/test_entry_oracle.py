@@ -4,6 +4,9 @@ the plan the compare executed for scale anti-patterns."""
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import pytest
 
 import __spark_entry__ as entrymod
@@ -21,9 +24,17 @@ def test_entry_smoke(spark):
     assert len(df.schema.fields) > 0
 
 
+def _scipi_temp_dirs() -> set[str]:
+    tmp = tempfile.gettempdir()
+    return {n for n in os.listdir(tmp) if n.startswith("scipi_")}
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, name):
+    before = _scipi_temp_dirs()
     df = QUERIES[name](spark, SF_ORACLE)
+    # an entry removes every scratch directory it made
+    assert _scipi_temp_dirs() <= before, _scipi_temp_dirs() - before
     if name not in ORACLES:
         # non-SQL-expressible: rows-only check (mirrors driver's weak check)
         assert df.count() >= 0
@@ -59,45 +70,6 @@ def test_coverage_totals_match_registry():
     assert int(r.group(1)) == len(QUERIES), (
         f"README says {r.group(1)} entries, registry has {len(QUERIES)}"
     )
-
-
-def test_session_caches_are_bounded():
-    """Round-4 verdict #8 / round-5 carry: the per-session fixture caches
-    must stay bounded under a synthetic many-SF loop, and evicted values
-    must be unpersisted (DataFrame handles would otherwise pin executor
-    storage forever in a long-lived service)."""
-
-    class FakeDF:
-        def __init__(self):
-            self.unpersisted = False
-
-        def unpersist(self):
-            self.unpersisted = True
-
-    cache: dict = {}
-    dfs = [FakeDF() for _ in range(20)]
-    for i, df in enumerate(dfs):
-        entrymod._cache_put(cache, ("app", f"sf{i}"), df)
-    assert len(cache) == entrymod._CACHE_CAP
-    # oldest evicted and unpersisted; newest retained and still persisted
-    n_evicted = 20 - entrymod._CACHE_CAP
-    assert all(df.unpersisted for df in dfs[:n_evicted])
-    assert all(not df.unpersisted for df in dfs[n_evicted:])
-    assert ("app", "sf19") in cache
-
-    # tuple values: every member unpersisted on eviction
-    cache2: dict = {}
-    pair = (FakeDF(), FakeDF())
-    entrymod._cache_put(cache2, "old", pair)
-    for i in range(entrymod._CACHE_CAP):
-        entrymod._cache_put(cache2, f"new{i}", FakeDF())
-    assert all(df.unpersisted for df in pair)
-
-    # flag values (store-written markers) evict without error
-    cache3: dict = {}
-    for i in range(entrymod._CACHE_CAP + 3):
-        entrymod._cache_put(cache3, i, True)
-    assert len(cache3) == entrymod._CACHE_CAP
 
 
 def test_registry_count_matches_pinned():

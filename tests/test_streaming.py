@@ -905,12 +905,71 @@ def _graph_case(spark, tmp_path):
     )
 
 
+def _scd2_case(spark, tmp_path):
+    """Timestamped updates folded into the SCD2 dimension store: the
+    converged dimension equals one ``scd2_apply`` over every update, and
+    the last batch's sink rows are the current rows of the keys it
+    touched. Batch 1 changes key 1 twice, so a second fold of it would
+    leave the closed row (1, C, 5, 7) twice."""
+    from scipi_spark.sources.store import (
+        read_scd2_store,
+        scd2_apply,
+        write_scd2_store,
+    )
+    from scipi_spark.streaming.pipelines import run_streaming_scd2_fold
+
+    dim0 = spark.createDataFrame(
+        [(1, "A", 1, None, True), (2, "X", 1, None, True)],
+        "k long, segment string, valid_from long, valid_to long, "
+        "is_current boolean",
+    )
+    upd = "k long, segment string, ts long"
+    b1 = spark.createDataFrame([(1, "B", 3), (2, "X", 4)], upd)
+    b2 = spark.createDataFrame([(1, "C", 5), (1, "D", 7), (3, "Z", 6)], upd)
+    store = str(tmp_path / "dim")
+    src = str(tmp_path / "src")
+    write_scd2_store(dim0, store)
+    _write_batches(src, b1, b2)
+
+    def start(stream, out, ckpt):
+        return run_streaming_scd2_fold(
+            stream, store, out, ckpt, "k", ["segment"]
+        )
+
+    def check(out):
+        want = sorted(
+            map(tuple, scd2_apply(
+                dim0, b1.unionByName(b2), "k", ["segment"]
+            ).collect()),
+            key=str,
+        )
+        assert want == sorted([
+            (1, "A", 1, 3, False), (1, "B", 3, 5, False),
+            (1, "C", 5, 7, False), (1, "D", 7, None, True),
+            (2, "X", 1, None, True), (3, "Z", 6, None, True),
+        ], key=str)
+        got = map(tuple, read_scd2_store(spark, store).collect())
+        assert sorted(got, key=str) == want
+        last = spark.read.parquet(out).filter("batch_id = 1").collect()
+        assert sorted((r["k"], r["segment"]) for r in last) == [
+            (1, "D"), (3, "Z")
+        ]
+
+    def assert_unique(ver):
+        _assert_no_duplicate(
+            spark.read.parquet(ver + "/dim"), ["k", "valid_from"]
+        )
+
+    return _StoreCase(spark, store, src, start, check, assert_unique, [])
+
+
 STORE_CASES = {
     "dedup": _dedup_case,
     "ann": _ann_case,
     "er": _er_case,
     "bm25": _bm25_case,
     "graph": _graph_case,
+    "scd2": _scd2_case,
 }
 
 

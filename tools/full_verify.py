@@ -17,16 +17,10 @@ os.chdir(REPO)
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tests"))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
 import __spark_entry__ as e  # noqa: E402
+from scipi_spark.session import get_spark  # noqa: E402
 
-spark = (
-    SparkSession.builder.master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
+spark = get_spark(app_name="scipi-spark-full-verify")
 spark.sparkContext.setLogLevel("ERROR")
 
 qs, osql = e.queries(), e.oracle_sql()

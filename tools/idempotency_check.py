@@ -1,16 +1,14 @@
 """Double-invocation idempotency sweep: every queries() entry runs twice
-in one session and must return identical rows -- catches cache-dependent
-second-invocation bugs (session stores, persisted fixtures) that the
-single-shot oracle sweep cannot see. Writes per-entry lines + a final
-"BAD: [...]" to stdout. Usage: python3 tools/idempotency_check.py"""
+in one session and must return identical rows -- catches second-invocation
+bugs (an on-disk store that the second call reuses) that the oracle sweep
+cannot see. Writes per-entry lines + a final "BAD: [...]" to stdout.
+Usage: python3 tools/idempotency_check.py"""
 import os, sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 os.chdir(REPO); sys.path.insert(0, REPO)
-from pyspark.sql import SparkSession
 import __spark_entry__ as e
-spark = (SparkSession.builder.master('local[8]')
-         .config('spark.sql.shuffle.partitions','8')
-         .config('spark.ui.enabled','false').getOrCreate())
+from scipi_spark.session import get_spark
+spark = get_spark(app_name='scipi-spark-idempotency-check')
 spark.sparkContext.setLogLevel('ERROR')
 qs = e.queries()
 bad = []
