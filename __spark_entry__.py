@@ -515,8 +515,6 @@ def _q_dedup_store_increment(spark, sf_dir):
     dedup at 100 TB: the store is built once, every increment is
     O(|batch| x bucket occupancy). Output is identical to
     ``dedup_increment`` (same oracle; equivalence pytest-pinned)."""
-    import os as _os
-
     docs = load_table(spark, sf_dir, "documents")
     cutoff = docs.agg(
         F.floor(F.expr("percentile(doc_id, 0.8)")).cast("long").alias("c")
@@ -550,8 +548,6 @@ def _q_dedup_store_compact(spark, sf_dir):
     SAME oracle as ``dedup_increment`` proves the repair restores exact
     probe semantics; the corruption without the repair is pinned by
     ``test_compact_signature_store_repairs_duplicate_append``."""
-    import os as _os
-
     docs = load_table(spark, sf_dir, "documents")
     cutoff = docs.agg(
         F.floor(F.expr("percentile(doc_id, 0.8)")).cast("long").alias("c")
@@ -592,8 +588,6 @@ def _q_lm_store_score(spark, sf_dir):
     unseen n-grams hit the Laplace floor via left-join coalesce. The
     production shape of the perplexity filter: train the reference model
     once, score every crawl increment."""
-    import os as _os
-
     docs = load_table(spark, sf_dir, "documents")
     cutoff = docs.agg(
         F.floor(F.expr("percentile(doc_id, 0.8)")).cast("long").alias("c")
@@ -878,8 +872,6 @@ def _q_c8_store_lpa(spark, sf_dir):
     ``c8_community_lpa`` — the store path is proven end-to-end, not just
     plan-shaped. The vector/BM25/LM store family's graph twin, driver-
     gated at last (it was pytest-only through round 5)."""
-    import os as _os
-
     sfname = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     table = "graph_store_lpa_" + sfname.replace(".", "_")
     path = _store_root(table)
@@ -3677,8 +3669,6 @@ def _q_bm25_store_search(spark, sf_dir):
     query terms' postings plus one narrow doclen scan. Same scores, same
     oracle as ``text_bm25``; the production shape of serving keyword
     search over a 100 TB corpus."""
-    import os as _os
-
     from scipi_spark.operators import textops
 
     sfname = sf_dir.rstrip("/").rsplit("/", 1)[-1]
@@ -4117,8 +4107,6 @@ def _q_knn_store_search(spark, sf_dir):
     16 tables + 1-bit multiprobe is 1.0 on the test embeddings, so the
     brute-force SQL oracle verifies the whole auto-sized store path
     end-to-end."""
-    import os as _os
-
     emb = load_table(spark, sf_dir, "embeddings")
     sfname = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     table = "ann_store_sigs_" + sfname.replace(".", "_")

@@ -573,7 +573,6 @@ def run_streaming_scd2_fold(
     checkpoint_path: str,
     key: str,
     attrs: list[str],
-    ts_col: str = "ts",
 ):
     """Continuous type-2 dimension maintenance against the persisted
     dimension store (``store.SCD2_STORE``): each micro-batch of
@@ -600,9 +599,7 @@ def run_streaming_scd2_fold(
         if stamp:
             with storectl.append(root, SCD2_STORE, fold=stamp) as build:
                 dim = spark.read.parquet(build.base.path("dim"))
-                build.replace(
-                    "dim", scd2_apply(dim, batch_df, key, attrs, ts_col)
-                )
+                build.replace("dim", scd2_apply(dim, batch_df, key, attrs))
         touched = batch_df.select(key).distinct()
         emit(read_scd2_store(spark, root).filter("is_current").join(touched, key))
 

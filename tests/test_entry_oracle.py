@@ -24,17 +24,15 @@ def test_entry_smoke(spark):
     assert len(df.schema.fields) > 0
 
 
-def _scipi_temp_dirs() -> set[str]:
-    tmp = tempfile.gettempdir()
-    return {n for n in os.listdir(tmp) if n.startswith("scipi_")}
-
-
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(spark, name):
-    before = _scipi_temp_dirs()
+def test_query_matches_oracle(spark, name, tmp_path, monkeypatch):
+    # a private temp dir per entry, so another process's scratch dirs
+    # cannot be mistaken for this entry's
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     df = QUERIES[name](spark, SF_ORACLE)
     # an entry removes every scratch directory it made
-    assert _scipi_temp_dirs() <= before, _scipi_temp_dirs() - before
+    leaked = [n for n in os.listdir(tmp_path) if n.startswith("scipi_")]
+    assert not leaked, leaked
     if name not in ORACLES:
         # non-SQL-expressible: rows-only check (mirrors driver's weak check)
         assert df.count() >= 0

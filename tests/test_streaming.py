@@ -4,9 +4,11 @@ groupBy answers; windowed extensions match their batch twins."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import random
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -494,8 +496,17 @@ class _StoreCase:
 
 
 def _write_batches(src, *batches):
+    """One parquet file per batch under ``src``, each with a strictly
+    later mtime than the one before: FileStreamSource replays oldest
+    mtime first, and back-to-back writes can tie on mtime granularity."""
+    base = time.time()
+    stamped: set[str] = set()
     for i, b in enumerate(batches):
         b.coalesce(1).write.mode("append" if i else "error").parquet(src)
+        for f in glob.glob(os.path.join(src, "part-*.parquet")):
+            if f not in stamped:
+                os.utime(f, (base + 10 * i, base + 10 * i))
+                stamped.add(f)
 
 
 def _assert_no_duplicate(df, cols):
