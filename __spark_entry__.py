@@ -204,7 +204,7 @@ def _q_p6_union_ingest(spark, sf_dir):
 
 #: the XML chunk set of :func:`_xml_chunks_fixture`: plain files in the
 #: version directory, no catalog table
-XML_CHUNKS = storectl.StoreSpec("XML chunk set", "xmlchunks-v2", {}, ())
+XML_CHUNKS = storectl.StoreSpec("XML chunk set", "xmlchunks-v2")
 
 
 def _xml_chunks_fixture(spark, sf_dir) -> str:

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from scipi_spark.operators.sampling import salted_bucket
+
 
 # ---------------------------------------------------------------------------
 # P7/P8 — keyword & field-of-study occurrence counts
@@ -72,16 +74,7 @@ def count_min_sketch(
     exploded = items.select(
         F.col(key_col).alias("key"), F.explode(rows).alias("d")
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("key"), F.lit(":"), F.col("d").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % width
-    )
+    bucket = salted_bucket("key", "d", width)
     return (
         exploded.select("d", bucket.alias("bucket"))
         .groupBy("d", "bucket")
@@ -103,16 +96,7 @@ def cms_estimate(
     probe = keys.select(
         F.col(key_col).alias("key"), F.explode(rows).alias("d")
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("key"), F.lit(":"), F.col("d").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % width
-    )
+    bucket = salted_bucket("key", "d", width)
     return (
         probe.select("key", "d", bucket.alias("bucket"))
         .join(F.broadcast(sketch), ["d", "bucket"], "left")
@@ -134,18 +118,7 @@ def bloom_build(
     filter bit-identically. The membership primitive for join pruning
     and decontamination pre-screens at 100 TB: ship kilobits, not keys."""
     rows = F.array(*[F.lit(d) for d in range(k_hashes)])
-    bit = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("key"), F.lit(":"), F.col("d").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % m_bits
-    )
+    bit = salted_bucket("key", "d", m_bits)
     return (
         items.select(F.col(key_col).alias("key"), F.explode(rows).alias("d"))
         .select(bit.alias("bit"))
@@ -165,18 +138,7 @@ def bloom_might_contain(
     positives at the classic (1-e^{-kn/m})^k rate. The bit set (<= m_bits
     rows) broadcasts; the probe never shuffles the corpus."""
     rows = F.array(*[F.lit(d) for d in range(k_hashes)])
-    bit = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("key"), F.lit(":"), F.col("d").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % m_bits
-    )
+    bit = salted_bucket("key", "d", m_bits)
     probe = probes.select(
         F.col(key_col).alias("key"), F.explode(rows).alias("d")
     ).select("key", bit.alias("bit"))

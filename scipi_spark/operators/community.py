@@ -263,18 +263,13 @@ def aggregate_undirected(edges: DataFrame) -> DataFrame:
 #: the graph store: the aggregated mirrored LPA relation bucketed and
 #: sorted on ``src``
 GRAPH_STORE = storectl.StoreSpec(
-    "graph store", "graph-v1", {"n_buckets": 16},
-    (storectl.Layout("edges", ("src",)),),
+    "graph store", "graph-v1", (storectl.Layout("edges", ("src",)),)
 )
 
 #: the label store: (id, label, comp) bucketed and sorted on ``id``,
 #: with the LPA recipe it was computed under
 LABEL_STORE = storectl.StoreSpec(
-    "label store",
-    "labels-v1",
-    {"n_buckets": 16, "iterations": 10, "delta": 0.5,
-     "portable_rounding": 0, "cc_max_iterations": 50},
-    (storectl.Layout("labels", ("id",)),),
+    "label store", "labels-v1", (storectl.Layout("labels", ("id",)),)
 )
 
 
@@ -327,7 +322,7 @@ def merge_delta_edges(mirrored: DataFrame) -> DataFrame:
 
 def _delta_appends(version: storectl.Version) -> int:
     """Appends folded into ``version`` since its last full build."""
-    return (version.stored or {}).get("delta_appends", 0)
+    return version.params["delta_appends"]
 
 
 def append_graph_store(
@@ -363,7 +358,8 @@ def append_graph_store(
     the streaming sink's ``(query_key, batch_id)`` stamp."""
     rel = aggregate_undirected(edges) if mirrored is None else mirrored
     with storectl.append(
-        path.rstrip("/"), GRAPH_STORE, {"n_buckets": n_buckets},
+        path.rstrip("/"), GRAPH_STORE,
+        {"n_buckets": n_buckets, "delta_appends": None},
         build_key=build_key, fold=fold,
     ) as b:
         b.add("edges", rel)
@@ -408,7 +404,8 @@ def _open_graph_store(
     (:func:`merge_delta_edges`) when the version marker records
     appends."""
     ver = storectl.open_store(
-        path.rstrip("/"), GRAPH_STORE, {"n_buckets": n_buckets}
+        path.rstrip("/"), GRAPH_STORE,
+        {"n_buckets": n_buckets, "delta_appends": None},
     )
     GRAPH_STORE.register(spark, table, ver)
     mirrored = spark.table(table)
@@ -520,7 +517,11 @@ def refresh_label_store(
     ``stats``: pass a dict to receive {"touched_comps", "sub_edges",
     "total_edges"} — the reuse evidence (sub_edges < total_edges means
     untouched components really were skipped, pytest-pinned)."""
-    with storectl.append(path.rstrip("/"), LABEL_STORE) as b:
+    with storectl.append(
+        path.rstrip("/"), LABEL_STORE,
+        {"n_buckets": None, "iterations": None, "delta": None,
+         "portable_rounding": None, "cc_max_iterations": None},
+    ) as b:
         p = b.params
         LABEL_STORE.register(spark, table, b.base)
         stored = spark.table(table)

@@ -966,13 +966,9 @@ def cross_corpus_neardup(
 
 
 #: the signature store: band rows bucketed and sorted on (band, bh),
-#: beside plain-parquet ``postings`` and ``sizes``; the defaults are the
-#: recipe assumed for a marker that predates persisted params
+#: beside plain-parquet ``postings`` and ``sizes``
 SIG_STORE = storectl.StoreSpec(
-    "signature store",
-    "sig-v1",
-    {"k": 3, "num_perm": 64, "bands": 16, "n_buckets": 16},
-    (storectl.Layout("bands", ("band", "bh")),),
+    "signature store", "sig-v1", (storectl.Layout("bands", ("band", "bh")),)
 )
 
 

@@ -299,16 +299,13 @@ def entity_ids(
 # ---------------------------------------------------------------------------
 
 #: the entity store: block rows bucketed and sorted on blk, beside the
-#: plain-parquet ``entities`` (non-root assignments) and ``ids``. Recipe
-#: defaults: ``block_cap`` uses 0 for "uncapped" and ``two_keys`` 0/1
+#: plain-parquet ``entities`` (non-root assignments) and ``ids``. Its
+#: recipe records ``block_cap`` 0 for "uncapped" and ``two_keys`` 0/1
 #: for the second blocking pass because ``storectl.resolve_params``
-#: treats a requested None as "inherit the stored value" — None/False
+#: treats a requested None as "inherit the recorded value" — None/False
 #: could never be requested explicitly.
 ER_STORE = storectl.StoreSpec(
-    "entity store",
-    "er-v1",
-    {"threshold": 0.5, "block_cap": 0, "two_keys": 0, "n_buckets": 16},
-    (storectl.Layout("blocks", ("blk",)),),
+    "entity store", "er-v1", (storectl.Layout("blocks", ("blk",)),)
 )
 
 

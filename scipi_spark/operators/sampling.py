@@ -22,12 +22,26 @@ from pyspark.sql import functions as F
 N_BUCKETS = 10_000
 
 
+def _md5_bucket(s: Column, buckets: int) -> Column:
+    h = F.conv(F.substring(F.md5(s), 1, 8), 16, 10)
+    return h.cast("long") % buckets
+
+
 def hash_bucket(col: Column | str, buckets: int = N_BUCKETS) -> Column:
     """Stable bucket in [0, buckets) from the md5 of the key's string
     form (portable across engines and runs)."""
     c = F.col(col) if isinstance(col, str) else col
-    h = F.conv(F.substring(F.md5(c.cast("string")), 1, 8), 16, 10)
-    return (h.cast("long") % buckets).alias("bucket")
+    return _md5_bucket(c.cast("string"), buckets).alias("bucket")
+
+
+def salted_bucket(key: str, salt: str, buckets: int) -> Column:
+    """Bucket in [0, buckets) of column ``key`` under integer column
+    ``salt``: the md5 bucket of ``key || ':' || salt``. One salt per
+    hash row of a count-min sketch or per hash function of a Bloom
+    filter; the SQL oracles replay it as
+    ``conv(substring(md5(key || ':' || d), 1, 8), 16, 10) % m``."""
+    s = F.concat(F.col(key), F.lit(":"), F.col(salt).cast("string"))
+    return _md5_bucket(s, buckets)
 
 
 def dataset_split(

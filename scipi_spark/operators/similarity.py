@@ -213,20 +213,15 @@ def auto_bits(
 
 #: build recipe of ANN stores written/opened by THIS process, keyed by
 #: catalog table name — lets :func:`knn_from_store` self-configure when
-#: probed via ``table`` alone (no ``path``); cross-process probes resolve
-#: the same dict from the version marker instead.
+#: probed via ``table`` alone (no ``path``); cross-process probes read
+#: the recipe from the version marker instead.
 _ANN_PARAMS: dict = {}
-
-#: legacy recipe assumed for stores whose marker predates persisted
-#: params (pre-round-10 stores)
-_ANN_DEFAULTS = {"bits": 6, "tables": 8, "dim": 64, "seed": 42, "n_buckets": 16}
 
 #: the ANN store: signature rows bucketed and sorted on (t, sig), and
 #: the vectors on vec_id (table ``<table>_vectors``)
 ANN_STORE = storectl.StoreSpec(
     "ANN store",
     "ann-v1",
-    _ANN_DEFAULTS,
     (
         storectl.Layout("sigs", ("t", "sig")),
         storectl.Layout("vectors", ("vec_id",), suffix="_vectors"),
@@ -451,13 +446,8 @@ def _add_ann(build: storectl.Build, signed: DataFrame) -> None:
 
 def _bind(spark, table: str, version: storectl.Version) -> None:
     """Register ``version``'s tables under ``table`` and remember the
-    recipe it records for probes by table name. A legacy (params-less)
-    version drops the entry, so it cannot inherit a recipe recorded for
-    a different store once bound to this name."""
-    if version.stored:
-        _ANN_PARAMS[table] = version.stored
-    else:
-        _ANN_PARAMS.pop(table, None)
+    recipe it records for probes by table name."""
+    _ANN_PARAMS[table] = version.params
     ANN_STORE.register(spark, table, version)
 
 
@@ -635,7 +625,8 @@ def knn_from_store(
 
     The plane recipe (bits/tables/dim/seed) SELF-CONFIGURES from the
     store — the version marker when ``path`` is given, else the recipe
-    recorded when this process wrote/opened ``table``. A probe signed
+    recorded when this process wrote/opened ``table`` (``ValueError``
+    when it never bound ``table``). A probe signed
     under different planes never errors on its own (its signatures just
     land in the wrong buckets and recall silently collapses), so
     explicitly passed values that mismatch the store's recipe raise
@@ -650,9 +641,12 @@ def knn_from_store(
         ver = storectl.open_store(path.rstrip("/"), ANN_STORE, requested)
         _bind(spark, table, ver)
         params = ver.params
+    elif table in _ANN_PARAMS:
+        params = storectl.resolve_params(_ANN_PARAMS[table], requested, table)
     else:
-        params = storectl.resolve_params(
-            _ANN_PARAMS.get(table), requested, _ANN_DEFAULTS
+        raise ValueError(
+            f"no ANN store is bound to table {table!r} in this process; "
+            "pass path= or open it with open_ann_store first"
         )
     bits, tables, dim, seed = (
         params["bits"], params["tables"], params["dim"], params["seed"]

@@ -422,24 +422,14 @@ def decontaminate_bloom(
 
     Returns (id, n_flagged_grams) for flagged docs only."""
     from scipi_spark.operators.analytics import bloom_build
+    from scipi_spark.operators.sampling import salted_bucket
 
     eval_grams = eval_docs.select(
         F.explode(word_shingles(text_col, k)).alias("key")
     )
     bloom = bloom_build(eval_grams, "key", m_bits=m_bits, k_hashes=k_hashes)
     salts = F.array(*[F.lit(d) for d in range(k_hashes)])
-    bit = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("g"), F.lit(":"), F.col("d").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % m_bits
-    )
+    bit = salted_bucket("g", "d", m_bits)
     probe = (
         train.select(
             F.col(id_col), F.explode(word_shingles(text_col, k)).alias("g")
@@ -785,8 +775,7 @@ def bm25_search(
 #: the BM25 index: (term, doc, tf) postings bucketed and sorted on term,
 #: beside plain-parquet ``doclen`` and ``stats``
 BM25_STORE = storectl.StoreSpec(
-    "text index", "bm25-v1", {"n_buckets": 16},
-    (storectl.Layout("postings", ("term",)),),
+    "text index", "bm25-v1", (storectl.Layout("postings", ("term",)),)
 )
 
 
@@ -1171,7 +1160,8 @@ def dsir_importance(
 #: vocabulary set on its token (never registered under the family's
 #: name) and the plain-parquet 1-row ``vocab`` size
 LM_STORE = storectl.StoreSpec(
-    "LM store", "lm-v1", {"n_buckets": 16},
+    "LM store",
+    "lm-v1",
     (
         storectl.Layout("bigrams", ("w1", "w2")),
         storectl.Layout("ctx", ("w1",), suffix="_ctx"),
@@ -1277,7 +1267,8 @@ def append_lm_store(
     ``vocab_toks`` and raise (rebuild once with :func:`write_lm_store`)."""
     spark = batch.sparkSession
     with storectl.append(
-        path.rstrip("/"), LM_STORE, {"n_buckets": n_buckets}
+        path.rstrip("/"), LM_STORE,
+        {"n_buckets": n_buckets, "delta_appends": None},
     ) as b:
         if not os.path.isdir(b.path("vocab_toks")):
             raise FileNotFoundError(
@@ -1308,8 +1299,7 @@ def append_lm_store(
             "vocab",
             spark.createDataFrame([(float(old_v) + n_new,)], "v double"),
         )
-        stored = b.base.stored or {}
-        b.extra["delta_appends"] = stored.get("delta_appends", 0) + 1
+        b.extra["delta_appends"] = b.params["delta_appends"] + 1
     LM_STORE.register(spark, table, b.version)
 
 
@@ -1374,13 +1364,14 @@ def score_from_lm_store(
     (doc_id, n_bigrams, xent)."""
     spark = batch.sparkSession
     ver = storectl.open_store(
-        path.rstrip("/"), LM_STORE, {"n_buckets": n_buckets}
+        path.rstrip("/"), LM_STORE,
+        {"n_buckets": n_buckets, "delta_appends": None},
     )
     LM_STORE.register(spark, table, ver)
     bi = _doc_bigrams(batch, id_col, text_col)
     bc = spark.table(table)
     uc = spark.table(table + "_ctx")
-    if (ver.stored or {}).get("delta_appends", 0):
+    if ver.params["delta_appends"]:
         bc = bc.groupBy("w1", "w2").agg(F.sum("c2").alias("c2"))
         uc = uc.groupBy("w1").agg(F.sum("c1").alias("c1"))
     vrow = spark.read.parquet(ver.path("vocab"))

@@ -22,7 +22,7 @@ from scipi_spark.sources import storectl
 
 #: The SCD2 dimension store: one plain-parquet ``dim`` artifact holding
 #: ``(key, attrs..., valid_from, valid_to, is_current)``.
-SCD2_STORE = storectl.StoreSpec("SCD2 dimension store", "scd2-v1", {}, ())
+SCD2_STORE = storectl.StoreSpec("SCD2 dimension store", "scd2-v1")
 
 
 def latest_publications(pubs: DataFrame, id_col: str = "id") -> DataFrame:

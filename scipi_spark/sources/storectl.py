@@ -13,15 +13,17 @@ POSIX primitives:
         bands/ postings/ ...     # the family's artifacts
       v_000002_99f0e1d2/
 
-A family declares its shape once, as a :class:`StoreSpec`: its default
-build key, the recipe assumed for a marker without params, and its
-bucketed :class:`Layout` s (artifact, bucket and sort columns, catalog
-table suffix). It then goes through three entry points and nothing else:
+A family declares its shape once, as a :class:`StoreSpec`: its name,
+its build key and its bucketed :class:`Layout` s (artifact, bucket and
+sort columns, catalog table suffix). Its default recipe lives in the
+signature of its ``write_*`` function and nowhere else. It then goes
+through three entry points and nothing else:
 
 - :func:`open_store` — one CURRENT read gives the live version dir and
-  its recipe, resolved against the caller's explicit values
-  (:func:`resolve_params`: a mismatch raises, since a mis-paired probe
-  silently under-recalls). ``FileNotFoundError`` when nothing is
+  the recipe its marker records, checked against the caller's explicit
+  values (:func:`resolve_params`: a mismatch raises, since a mis-paired
+  probe silently under-recalls, and a key the marker lacks raises, since
+  the store must then be rebuilt). ``FileNotFoundError`` when nothing is
   published.
 - :func:`rebuild` — a fresh build dir, published on a clean exit. A
   compaction is a rebuild that takes its build key and recipe from the
@@ -30,13 +32,25 @@ table suffix). It then goes through three entry points and nothing else:
   (hardlinks, no data bytes move) and resolve the recipe from the
   CLONED version's marker, so a rebuild that published before the lock
   can never pair its recipe with the batch. On a clean exit it
-  publishes with the clone's persistable recipe (:func:`persistable_params`)
-  plus the family's own keys (e.g. ``delta_appends``), the inherited
-  build key, ``expect_base`` and the streaming ``fold`` stamp.
+  publishes with the clone's recipe plus the family's own keys (e.g.
+  ``delta_appends``), the inherited build key, ``expect_base`` and the
+  streaming ``fold`` stamp.
 
 :meth:`StoreSpec.register` points the family's catalog tables at a
 version (:func:`register_bucketed`), so a probe scans the store's
-buckets with no Exchange on the store side.
+buckets with no Exchange on the store side. Every bucketed artifact
+carries its column DDL in a ``_SCHEMA`` file, so registration is pure
+catalog DDL.
+
+One marker format, ``_STORE_COMPLETE``::
+
+    {"build_key": "sig-v1", "layout": 1,
+     "params": {"k": 3, "num_perm": 64, "bands": 16, "n_buckets": 16},
+     "folds": {"<query key>": <last folded batch id>}}
+
+``params`` is absent for a store with no recipe (the SCD2 dimension,
+the XML chunk set) and reads as the empty recipe; ``folds`` is absent
+until a streaming query folds into the store.
 
 Invariants:
   - a version directory is referenced by CURRENT only after every
@@ -66,17 +80,18 @@ with :class:`StoreConflictError` when CURRENT moved under the build.
 
 Retention contract (GC of superseded versions, at publish time): a
 version directory is deleted only when ALL of
-  (1) it is beyond the newest ``keep`` predecessors of the new version,
-  (2) its marker is older than ``retain_s`` seconds (default
-      :data:`RETAIN_SECONDS` — the MVCC horizon protecting in-flight
-      readers that resolved a version just before the flip), and
+  (1) it is beyond the newest :data:`KEEP` predecessors of the new
+      version,
+  (2) its marker is older than :data:`RETAIN_SECONDS` — the MVCC
+      horizon protecting in-flight readers that resolved a version just
+      before the flip, and
   (3) it carries no pin — :func:`pin_version` drops a ``_PINNED_*``
       marker file that GC honors unconditionally, so a time-travel
       snapshot held across many publishes survives until
       :func:`unpin_version`.
 Orphaned ``.build_*`` staging dirs (crashed writers) can never become
 visible, so publish also sweeps any whose newest file is older than
-``retain_s``.
+:data:`RETAIN_SECONDS`.
 
 On a cluster the same layout works on any filesystem with atomic rename
 (HDFS); on S3 the CURRENT pointer would move to a conditional-PUT object
@@ -184,9 +199,9 @@ def pin_version(version_dir: str, token: str = "pin") -> str:
     """Drop a ``_PINNED_<token>`` marker in ``version_dir`` so publish's
     GC never deletes it — the safety a time-travel reader needs to hold a
     ``list_versions`` snapshot across an unbounded number of publishes
-    (``keep``/``retain_s`` alone only bound GC in time, not against a
-    long analysis session). Returns the marker path. Idempotent; pins
-    are never cloned into descendant versions."""
+    (:data:`KEEP`/:data:`RETAIN_SECONDS` alone only bound GC in time,
+    not against a long analysis session). Returns the marker path.
+    Idempotent; pins are never cloned into descendant versions."""
     if not os.path.exists(os.path.join(version_dir, MARKER)):
         raise FileNotFoundError(
             f"{version_dir!r} is not a complete store version"
@@ -199,7 +214,7 @@ def pin_version(version_dir: str, token: str = "pin") -> str:
 
 def unpin_version(version_dir: str, token: str = "pin") -> None:
     """Remove a :func:`pin_version` marker; the version becomes GC-
-    eligible again under the normal keep+retention rules."""
+    eligible again under the normal keep and retention rules."""
     with contextlib.suppress(FileNotFoundError):
         os.unlink(os.path.join(version_dir, f"_PINNED_{token}"))
 
@@ -254,11 +269,14 @@ def clone_current(root: str) -> tuple[str, str]:
 #: miniature). A reader that resolved a version just before a flip keeps
 #: valid files for at least this long; deleting sooner makes its catalog
 #: table silently read an empty location (observed as a 0-row probe when
-#: a rebuild loop outpaced count-based GC). ``keep`` and ``retain_s``
-#: compose as AND (a version survives while EITHER protects it), and a
+#: a rebuild loop outpaced count-based GC). It and :data:`KEEP` compose
+#: as AND (a version survives while EITHER protects it), and a
 #: ``_PINNED_*`` marker (:func:`pin_version`) overrides both — the full
 #: contract is in the module docstring's "Retention contract".
 RETAIN_SECONDS = 600.0
+
+#: superseded versions GC always keeps: the live version's predecessor
+KEEP = 1
 
 
 def _newest_mtime(d: str) -> float:
@@ -281,8 +299,6 @@ def publish(
     root: str,
     build_dir: str,
     build_key: str,
-    keep: int = 1,
-    retain_s: float = RETAIN_SECONDS,
     expect_base: str | None = None,
     params: dict | None = None,
     fold: tuple[str, int] | None = None,
@@ -303,17 +319,19 @@ def publish(
     instead (loud failure; under :func:`append_lock` this cannot fire).
 
     GC (superseded versions): deleted only when beyond the newest
-    ``keep`` predecessors AND older than ``retain_s`` AND not pinned —
-    see the module docstring's "Retention contract". Orphaned
-    ``.build_*`` dirs idle longer than ``retain_s`` are also swept (they
-    can never become visible, so age-based removal is safe).
+    :data:`KEEP` predecessors AND older than :data:`RETAIN_SECONDS` AND
+    not pinned — see the module docstring's "Retention contract".
+    Orphaned ``.build_*`` dirs idle longer than :data:`RETAIN_SECONDS`
+    are also swept (they can never become visible, so age-based removal
+    is safe).
 
     ``params``: the store's build recipe (hash bits/tables, minhash
     bands, bucket count, ...) — persisted in the version marker so
     probes SELF-CONFIGURE from the store instead of trusting the caller
     to re-supply matching values (a mis-paired probe silently
-    under-recalls; see :func:`resolve_params`). :func:`append` and a
-    compacting :func:`rebuild` carry the base version's params forward.
+    under-recalls; see :func:`resolve_params`). An empty or None recipe
+    is not recorded. :func:`append` and a compacting :func:`rebuild`
+    carry the base version's params forward.
 
     ``fold``: ``(query_key, batch_id)``, set by a streaming sink whose
     micro-batch this version folds in. The marker's ``folds`` map is the
@@ -329,7 +347,7 @@ def publish(
                 "concurrent writer published; re-clone under append_lock"
             )
     marker: dict = {"build_key": build_key, "layout": 1}
-    if params is not None:
+    if params:
         marker["params"] = params
     folds = dict((cur_meta or {}).get("folds", {}))
     if fold is not None:
@@ -347,8 +365,8 @@ def publish(
     with open(tmp, "w", encoding="utf-8") as fh:
         fh.write(os.path.basename(final))
     os.replace(tmp, os.path.join(root, "CURRENT"))
-    horizon = time.time() - retain_s
-    for name in _versions(root)[: -(keep + 1)]:
+    horizon = time.time() - RETAIN_SECONDS
+    for name in _versions(root)[: -(KEEP + 1)]:
         d = os.path.join(root, name)
         if _is_pinned(d):
             continue
@@ -359,7 +377,7 @@ def publish(
         if marker_mtime < horizon:
             shutil.rmtree(d, ignore_errors=True)
     # crashed writers leak .build_* staging dirs (nothing else deletes
-    # them); invisible by construction, so quiet-for-retain_s == dead
+    # them); invisible by construction, so quiet past the horizon == dead
     try:
         stale_builds = [
             nm for nm in os.listdir(root) if nm.startswith(".build_")
@@ -415,31 +433,18 @@ def list_versions(root: str) -> list[str]:
     return out
 
 
-def current_meta(root: str) -> dict | None:
-    """The live version's marker json, or None."""
-    return _current(root)[1]
-
-
-def current_params(root: str) -> dict | None:
-    """The live version's persisted build recipe (``publish(params=...)``),
-    or None for stores written before params were recorded."""
-    meta = current_meta(root)
-    return meta.get("params") if meta else None
-
-
 def folded_batch(root: str, query_key: str) -> int:
     """Id of the last batch of streaming query ``query_key`` that the live
     version holds (``publish(fold=(query_key, batch_id))``), or -1."""
-    meta = current_meta(root) or {}
+    meta = _current(root)[1] or {}
     return meta.get("folds", {}).get(query_key, -1)
 
 
 def meta_of(version_dir: str) -> dict | None:
-    """The marker json of ONE version dir — the version-pinned variant
-    of :func:`current_meta`, for callers that already resolved a version
-    and must not re-read CURRENT (a concurrent republish between the two
-    reads would pair one version's data with another's metadata).
-    storectl owns the marker format; callers must not parse it."""
+    """The marker json of ONE version dir, or None — for callers that
+    already resolved a version and must not re-read CURRENT (a
+    concurrent republish between the two reads would pair one version's
+    data with another's metadata)."""
     try:
         with open(os.path.join(version_dir, MARKER), encoding="utf-8") as fh:
             return json.load(fh)
@@ -447,74 +452,30 @@ def meta_of(version_dir: str) -> dict | None:
         return None
 
 
-def params_of(version_dir: str) -> dict | None:
-    """The persisted build recipe of ONE version dir — the time-travel
-    variant of :func:`current_params` (which only sees the version
-    CURRENT points at). storectl owns the marker format; callers must
-    not parse it themselves."""
-    meta = meta_of(version_dir)
-    return meta.get("params") if meta else None
-
-
-def resolve_params(
-    stored: dict | None, requested: dict, defaults: dict
-) -> dict:
-    """Reconcile a probe/append call's parameters with a store's
-    persisted build recipe. For each key in ``defaults``:
-
-    - requested value ``None``  -> inherit the stored value (the
-      self-configuring path), falling back to ``defaults`` for legacy
-      stores whose marker predates params;
-    - requested value set AND the store recorded a DIFFERENT value ->
-      ``ValueError``. A mis-paired probe (wrong bits/bands/seed) does
-      not error on its own — it silently under-recalls because the
-      freshly-hashed signatures land in the wrong buckets — so the
-      mismatch must fail LOUDLY here;
-    - requested value set, store has no recorded value -> trust the
-      caller (legacy store).
-    """
-    stored = stored or {}
-    out = {}
-    for key, dflt in defaults.items():
-        req = requested.get(key)
-        if req is None:
-            out[key] = stored.get(key, dflt)
-        elif key in stored and stored[key] != req:
+def resolve_params(stored: dict, requested: dict, root: str) -> dict:
+    """Check a probe/append call's parameters against the recipe the
+    store at ``root`` records, and return that recipe. Every key of
+    ``requested`` must be recorded: a store without it predates its
+    family's recipe and is refused with ``ValueError`` (rebuild it).
+    A requested value of ``None`` inherits the recorded one (the
+    self-configuring path); any other value must equal it, else
+    ``ValueError`` — a mis-paired probe (wrong bits/bands/seed) does not
+    error on its own, it silently under-recalls because the freshly
+    hashed signatures land in the wrong buckets."""
+    for key, req in requested.items():
+        if key not in stored:
+            raise ValueError(
+                f"the store at {root!r} records no {key!r} in its recipe "
+                f"{stored!r}; rebuild the store"
+            )
+        if req is not None and stored[key] != req:
             raise ValueError(
                 f"store param mismatch: {key}={req!r} requested but the "
                 f"store was built with {key}={stored[key]!r} — a "
                 "mis-paired probe would silently under-recall; omit the "
                 "argument to inherit the store's recipe"
             )
-        else:
-            out[key] = req
-    return out
-
-
-def persistable_params(
-    stored: dict | None, requested: dict, resolved: dict
-) -> dict | None:
-    """What an append/compact may stamp into the version marker it
-    republishes: the subset of ``resolved`` that is AUTHORITATIVE —
-    each key either recorded by the store or explicitly supplied by the
-    caller. Keys that resolved from DEFAULTS alone are ASSUMPTIONS, not
-    knowledge: if the store was actually built with different explicit
-    values, persisting the assumption would republish it under the
-    wrong recipe and make every subsequent explicit-CORRECT probe raise
-    as 'mismatched' (round-10 advice #3). The subset (not
-    all-or-nothing) matters when a family grows a NEW recipe key: an
-    existing marker has every old key but not the new one, and an
-    append must carry the recorded knowledge forward rather than
-    downgrade the store to params-less. Returns None when nothing is
-    authoritative — the republished marker stays params-less, like the
-    legacy store it came from."""
-    stored = stored or {}
-    auth = {
-        k: v
-        for k, v in resolved.items()
-        if k in stored or requested.get(k) is not None
-    }
-    return auth or None
+    return stored
 
 
 def write_bucketed(
@@ -590,29 +551,16 @@ def _create_bucketed_ddl(
 ) -> None:
     if not _TABLE_RE.match(table):
         raise ValueError(f"invalid store table identifier: {table!r}")
-    cols = None
     try:
         with open(
             os.path.join(data_dir, SCHEMA_FILE), encoding="utf-8"
         ) as fh:
-            cols = json.load(fh).get("cols_sql")
-    except (OSError, ValueError):
-        pass  # pre-r9 store layout — fall back to footer inference
-    if not cols:
-        schema = spark.read.parquet(data_dir).schema
-        cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-        )
-        # self-upgrade a pre-r9 store: cache the inferred DDL beside the
-        # data so the NEXT process registers without the inference job
-        # (additive metadata only — the data files stay immutable)
-        try:
-            with open(
-                os.path.join(data_dir, SCHEMA_FILE), "w", encoding="utf-8"
-            ) as fh:
-                json.dump({"cols_sql": cols}, fh)
-        except OSError:
-            pass  # read-only store roots still register fine every time
+            cols = json.load(fh)["cols_sql"]
+    except FileNotFoundError:
+        raise FileNotFoundError(
+            f"bucketed artifact {data_dir!r} has no {SCHEMA_FILE} file; "
+            "rebuild the store"
+        ) from None
     bc = ", ".join(f"`{c}`" for c in bucket_cols)
     sc = ", ".join(f"`{c}`" for c in sort_cols)
     # LOCATION is a SQL string literal: double embedded single quotes so
@@ -677,7 +625,7 @@ def fsck(root: str) -> dict:
     ordinals = [int(n[2:8]) for n in all_vdirs]
     if len(set(ordinals)) != len(ordinals):
         issues.append(f"duplicate version ordinals: {sorted(ordinals)}")
-    cur_dir = current_dir(root)
+    cur_dir, meta = _current(root)
     cur = os.path.basename(cur_dir) if cur_dir else None
     if "CURRENT" not in names:
         issues.append("no CURRENT pointer (store reads as absent)")
@@ -686,7 +634,6 @@ def fsck(root: str) -> dict:
             "CURRENT is dangling (points at a missing or incomplete "
             "version — store reads as absent; rebuild or re-publish)"
         )
-    meta = current_meta(root)
     return {
         "current": cur,
         "current_ok": cur is not None,
@@ -743,14 +690,13 @@ class Layout:
 @dataclasses.dataclass(frozen=True)
 class StoreSpec:
     """What a store family declares once: its name in errors, the build
-    key of a version whose marker records none, the recipe assumed for a
-    marker without params (:func:`resolve_params`), and its bucketed
-    layouts. Every recipe has ``n_buckets``."""
+    key a fresh :func:`rebuild` records when the caller gives none, and
+    its bucketed layouts. The recipe of a family with layouts has
+    ``n_buckets``."""
 
     kind: str
     build_key: str
-    defaults: dict
-    layouts: tuple[Layout, ...]
+    layouts: tuple[Layout, ...] = ()
 
     def layout(self, artifact: str) -> Layout | None:
         return next((x for x in self.layouts if x.artifact == artifact), None)
@@ -772,35 +718,18 @@ class StoreSpec:
 
 @dataclasses.dataclass(frozen=True)
 class Version:
-    """A complete store version: its directory, its marker, and the
-    recipe resolved from the marker against the caller's ``requested``
-    values."""
+    """A complete store version: its directory and its marker."""
 
     dir: str
     meta: dict
-    params: dict
-    requested: dict
 
     @property
-    def stored(self) -> dict | None:
-        """The recipe the marker records, or None (a legacy store)."""
-        return self.meta.get("params")
+    def params(self) -> dict:
+        """The recipe the marker records (empty when it records none)."""
+        return self.meta.get("params", {})
 
     def path(self, artifact: str) -> str:
         return f"{self.dir}/{artifact}"
-
-    def persistable(self) -> dict | None:
-        """What a version derived from this one may record as its recipe
-        (:func:`persistable_params`)."""
-        return persistable_params(self.stored, self.requested, self.params)
-
-
-def _version(
-    d: str, meta: dict, spec: StoreSpec, requested: dict | None
-) -> Version:
-    requested = requested or {}
-    params = resolve_params(meta.get("params"), requested, spec.defaults)
-    return Version(d, meta, params, requested)
 
 
 def open_store(
@@ -811,33 +740,35 @@ def open_store(
     build_key: str | None = None,
 ) -> Version:
     """The live version of the store at ``root``, from one CURRENT read,
-    with its recipe resolved against ``requested`` (explicit mismatches
-    raise). Raises ``FileNotFoundError`` when no version is published or
-    ``build_key`` is given and the live version's differs.
-    ``version_dir`` opens that version instead of CURRENT (time
-    travel over :func:`list_versions`)."""
+    its recorded recipe checked against ``requested``
+    (:func:`resolve_params`). Raises ``FileNotFoundError`` when no
+    version is published or ``build_key`` is given and the live
+    version's differs. ``version_dir`` opens that version instead of
+    CURRENT (time travel over :func:`list_versions`)."""
     if version_dir is None:
         d, meta = _current(root)
     else:
         d, meta = version_dir, meta_of(version_dir) or {}
     if d is None or build_key is not None and meta.get("build_key") != build_key:
         raise FileNotFoundError(f"no published {spec.kind} under {root!r}")
-    return _version(d, meta, spec, requested)
+    version = Version(d, meta)
+    resolve_params(version.params, requested or {}, root)
+    return version
 
 
 class Build:
     """A private build directory that a :func:`rebuild` or :func:`append`
-    publishes on exit. ``params`` is the recipe to build under;
-    ``base`` the version it derives from (None for a fresh rebuild);
-    ``extra`` the family's own marker keys (e.g. ``delta_appends``),
-    recorded on top of the inherited recipe; ``version`` the published
-    :class:`Version`, once the block has exited."""
+    publishes on exit. ``params`` is the recipe to build under, recorded
+    in the published marker; ``base`` the version it derives from (None
+    for a fresh rebuild); ``extra`` the family's own marker keys (e.g.
+    ``delta_appends``), recorded on top of ``params``; ``version`` the
+    published :class:`Version`, once the block has exited."""
 
     def __init__(
         self,
         spec: StoreSpec,
         build_dir: str,
-        params: dict,
+        params: dict | None,
         base: Version | None,
         appending: bool,
     ):
@@ -882,19 +813,14 @@ class Build:
         self,
         root: str,
         build_key: str,
-        params: dict | None,
         expect_base: str | None = None,
         fold: tuple[str, int] | None = None,
     ) -> None:
-        if self.extra:
-            params = {**(params or {}), **self.extra}
         final = publish(
-            root, self.dir, build_key,
-            expect_base=expect_base, params=params, fold=fold,
+            root, self.dir, build_key, expect_base=expect_base,
+            params={**(self.params or {}), **self.extra}, fold=fold,
         )
-        requested = self.base.requested if self.base else {}
-        meta = meta_of(final) or {}
-        self.version = Version(final, meta, self.params, requested)
+        self.version = Version(final, meta_of(final) or {})
 
 
 @contextlib.contextmanager
@@ -908,17 +834,16 @@ def rebuild(
     """Build a new version from scratch in a fresh build dir and publish
     it when the block exits cleanly. A fresh build records ``params``. A
     compaction passes ``base``, the version it read: the new version
-    records the base's recipe (:meth:`Version.persistable`) and its
-    build key unless ``build_key`` is given."""
+    records the base's recipe and its build key unless ``build_key`` is
+    given."""
     if base is None:
         build = Build(spec, new_build_dir(root), params, None, False)
-        recorded, key = params, build_key or spec.build_key
+        key = build_key or spec.build_key
     else:
         build = Build(spec, new_build_dir(root), base.params, base, False)
-        recorded = base.persistable()
-        key = build_key or base.meta.get("build_key", spec.build_key)
+        key = build_key or base.meta["build_key"]
     yield build
-    build._publish(root, key, recorded)
+    build._publish(root, key)
 
 
 @contextlib.contextmanager
@@ -930,22 +855,22 @@ def append(
     fold: tuple[str, int] | None = None,
 ):
     """Fold a batch into the live version: under :func:`append_lock`,
-    clone it (:func:`clone_current`) and resolve the recipe from the
-    CLONED version's marker, so a rebuild that published before the lock
-    cannot pair its recipe with the batch. The :class:`Build` yielded
-    holds that recipe and the clone (``base``); on a clean exit it
-    publishes with ``expect_base`` set to the clone, the base's
-    persistable recipe plus ``extra``, its build key (unless
+    clone it (:func:`clone_current`) and check ``requested`` against the
+    CLONED version's recipe (:func:`resolve_params`), so a rebuild that
+    published before the lock cannot pair its recipe with the batch.
+    The :class:`Build` yielded holds that recipe and the clone
+    (``base``); on a clean exit it publishes with ``expect_base`` set to
+    the clone, the base's recipe plus ``extra``, its build key (unless
     ``build_key`` is given) and ``fold``."""
     with append_lock(root):
         build_dir, cur = clone_current(root)
-        base = _version(cur, meta_of(cur) or {}, spec, requested)
+        base = Version(cur, meta_of(cur) or {})
+        resolve_params(base.params, requested or {}, root)
         build = Build(spec, build_dir, base.params, base, True)
         yield build
         build._publish(
             root,
-            build_key or base.meta.get("build_key", spec.build_key),
-            base.persistable(),
+            build_key or base.meta["build_key"],
             expect_base=os.path.basename(cur),
             fold=fold,
         )

@@ -548,8 +548,8 @@ def test_graph_store_append_fold_matches_rebuild(spark, tmp_path):
         # unchanged, and the next from_store call reads it direct
         comm.compact_graph_store(spark, root, table="t_gs_app")
         assert sorted(map(tuple, spark.table("t_gs_app").collect())) == rebuilt
-        ver = storectl.current_dir(root)
-        assert (storectl.params_of(ver) or {}).get("delta_appends") == 0
+        ver = storectl.open_store(root, comm.GRAPH_STORE)
+        assert ver.params["delta_appends"] == 0
         lpa_compacted = comm.community_detection_from_store(
             spark, table="t_gs_app", iterations=3, delta=0.5, path=root
         )

@@ -331,7 +331,7 @@ def test_compact_entity_store_repairs_replayed_append(spark, tmp_path):
         ids.write.mode("append").parquet(build + "/ids")
         storectl.publish(
             root, build, "er-v1", expect_base=os.path.basename(cur),
-            params=storectl.current_params(root),
+            params=storectl.open_store(root, linkage.ER_STORE).params,
         )
     poisoned = linkage.entity_store_assignment(spark, root).count()
     assert poisoned == 2 * len(clean_assign)  # the corruption is real

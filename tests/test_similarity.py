@@ -492,7 +492,7 @@ def test_ann_store_params_persist_and_self_configure(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
     root = str(tmp_path / "ann")
     sim.write_ann_store(emb, root, table="annstore_params", bits=5, tables=4)
-    assert storectl.current_params(root) == {
+    assert storectl.open_store(root, sim.ANN_STORE).params == {
         "bits": 5, "tables": 4, "dim": 64, "seed": 42, "n_buckets": 16,
     }
     queries = emb.filter(F.col("vec_id").isin([0, 1]))
@@ -546,7 +546,7 @@ def test_ann_store_auto_bits_sizing(spark, tmp_path):
     sim.write_ann_store(emb, root, table="annstore_auto", tables=16)
     from scipi_spark.sources import storectl
 
-    params = storectl.current_params(root)
+    params = storectl.open_store(root, sim.ANN_STORE).params
     assert params["bits"] == sim.auto_bits(emb.count())
     qids = [0, 1, 2]
     queries = emb.filter(F.col("vec_id").isin(qids))
@@ -605,38 +605,6 @@ def test_ivfpq_planted_regime_and_pruning(spark):
     assert len(wk) == len(qids) * (2 * n - 1)  # all-cells = whole corpus
 
 
-def test_open_legacy_store_clears_stale_table_params(spark, tmp_path):
-    """Round-10 review fix: opening a LEGACY store (marker predates
-    params) under a table name previously bound to a params-bearing
-    store must drop the stale recipe — a probe signed with the old
-    store's planes against the new store's buckets would silently
-    under-recall."""
-    import json
-    import os
-
-    from scipi_spark.sources import storectl
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    for t in ("annstore_stale", "annstore_stale_vectors"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    root_a = str(tmp_path / "a")
-    sim.write_ann_store(emb, root_a, table="annstore_stale", bits=9, tables=4)
-    assert sim._ANN_PARAMS["annstore_stale"]["bits"] == 9
-
-    # build a second store and strip its marker params -> legacy shape
-    root_b = str(tmp_path / "b")
-    sim.write_ann_store(emb, root_b, table="annstore_b", bits=6, tables=4)
-    ver = storectl.current_dir(root_b)
-    mpath = os.path.join(ver, storectl.MARKER)
-    meta = json.load(open(mpath))
-    meta.pop("params")
-    json.dump(meta, open(mpath, "w"))
-    assert storectl.params_of(ver) is None
-
-    sim.open_ann_store(spark, root_b, table="annstore_stale")
-    assert "annstore_stale" not in sim._ANN_PARAMS
-
-
 def test_open_ann_store_explicit_bucket_mismatch_raises(spark, tmp_path):
     """Round-10 advice #2: an explicitly passed n_buckets that
     mismatches the store's recorded value must raise like every sibling
@@ -659,43 +627,12 @@ def test_open_ann_store_explicit_bucket_mismatch_raises(spark, tmp_path):
     assert sim.open_ann_store(spark, root, table="annstore_nb") is not None
 
 
-def test_legacy_ann_append_does_not_stamp_assumed_params(spark, tmp_path):
-    """Round-10 advice #3, ANN flavor: append/compact on a params-less
-    legacy store with omitted args must republish a params-less marker
-    (the resolved defaults are assumptions, not the store's recipe)."""
-    import json
-    import os
+def test_knn_from_store_refuses_an_unbound_table(spark):
+    """A probe by table name alone needs the recipe this process
+    recorded when it wrote or opened that table; with none it raises
+    instead of signing the queries under assumed planes."""
+    import pytest
 
-    from scipi_spark.sources import storectl
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    corpus = emb.filter("vec_id % 4 != 0")
-    batch = emb.filter("vec_id % 4 = 0")
-    root = str(tmp_path / "s")
-    for t in ("annstore_leg", "annstore_leg_vectors"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    sim.write_ann_store(corpus, root, table="annstore_leg")
-    mpath = os.path.join(storectl.current_dir(root), storectl.MARKER)
-    meta = json.load(open(mpath))
-    stamped = meta.pop("params")
-    json.dump(meta, open(mpath, "w"))
-    assert storectl.current_params(root) is None
-
-    # the append must hash under the SAME recipe the store was built
-    # with for the data to stay coherent; defaults match here by
-    # construction (auto-sizing of bits depends only on corpus size
-    # which straddles no threshold between corpus and corpus+batch)
-    sim.append_ann_store(batch, root, table="annstore_leg",
-                         bits=stamped["bits"], tables=stamped["tables"],
-                         dim=stamped["dim"], seed=stamped["seed"],
-                         n_buckets=stamped["n_buckets"])
-    # FULL explicit args are caller knowledge -> stamped back
-    assert storectl.current_params(root) == stamped
-
-    # strip again, then append with args omitted -> stays params-less
-    mpath = os.path.join(storectl.current_dir(root), storectl.MARKER)
-    meta = json.load(open(mpath))
-    meta.pop("params")
-    json.dump(meta, open(mpath, "w"))
-    sim.compact_ann_store(spark, root, table="annstore_leg")
-    assert storectl.current_params(root) is None
+    queries = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    with pytest.raises(ValueError, match="no ANN store is bound"):
+        sim.knn_from_store(queries, table="annstore_never_bound", k=5)

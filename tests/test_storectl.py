@@ -30,13 +30,16 @@ from conftest import REPO, SF_SMOKE
 from scipi_spark.sources import storectl
 
 
-def _write_dummy_version(root, build_key="k1", payload="a", retain_s=None):
+#: a store family with no recipe and no bucketed artifact
+_DUMMY = storectl.StoreSpec("test store", "k1")
+
+
+def _write_dummy_version(root, build_key="k1", payload="a", params=None):
     build = storectl.new_build_dir(str(root))
     os.makedirs(os.path.join(build, "data"), exist_ok=True)
     with open(os.path.join(build, "data", "f.txt"), "w") as fh:
         fh.write(payload)
-    kw = {} if retain_s is None else {"retain_s": retain_s}
-    return storectl.publish(str(root), build, build_key, **kw)
+    return storectl.publish(str(root), build, build_key, params=params)
 
 
 def test_publish_and_resolve(tmp_path):
@@ -47,8 +50,7 @@ def test_publish_and_resolve(tmp_path):
     assert storectl.current_dir(str(root), "k1") == ver
     # different recipe -> treated as absent (forces rebuild)
     assert storectl.current_dir(str(root), "other") is None
-    meta = storectl.current_meta(str(root))
-    assert meta["build_key"] == "k1"
+    assert storectl.open_store(str(root), _DUMMY).meta["build_key"] == "k1"
 
 
 def test_unpublished_build_is_invisible(tmp_path):
@@ -76,12 +78,16 @@ def test_missing_marker_reads_as_absent(tmp_path):
     assert storectl.current_dir(str(root)) is None
 
 
-def test_publish_gc_keeps_predecessor_and_retention_window(tmp_path):
+def test_publish_gc_keeps_predecessor_and_retention_window(
+    tmp_path, monkeypatch
+):
     root = tmp_path / "store"
-    # retain_s=0: GC is purely count-based -> oldest goes immediately
-    v1 = _write_dummy_version(root, "k", "one", retain_s=0)
-    v2 = _write_dummy_version(root, "k", "two", retain_s=0)
-    v3 = _write_dummy_version(root, "k", "three", retain_s=0)
+    # no retention window: GC is purely count-based -> oldest goes
+    # immediately
+    monkeypatch.setattr(storectl, "RETAIN_SECONDS", 0)
+    v1 = _write_dummy_version(root, "k", "one")
+    v2 = _write_dummy_version(root, "k", "two")
+    v3 = _write_dummy_version(root, "k", "three")
     assert storectl.current_dir(str(root)) == v3
     assert os.path.isdir(v2)  # predecessor retained for in-flight readers
     assert not os.path.isdir(v1)  # beyond keep AND beyond retention
@@ -248,24 +254,24 @@ def test_ann_version_pinning_snapshot_isolation(spark, tmp_path):
     assert after != before  # CURRENT sees the appended vectors
 
 
-def test_pinned_version_survives_gc_past_retention(tmp_path):
+def test_pinned_version_survives_gc_past_retention(tmp_path, monkeypatch):
     """Round-8 verdict #4: a pinned time-travel snapshot must survive
     publishes past BOTH the keep count and the retention window; unpin
     restores normal GC eligibility."""
     root = tmp_path / "store"
-    v1 = _write_dummy_version(root, "k", "one", retain_s=0)
+    monkeypatch.setattr(storectl, "RETAIN_SECONDS", 0)
+    v1 = _write_dummy_version(root, "k", "one")
     storectl.pin_version(v1)
-    later = [
-        _write_dummy_version(root, "k", str(i), retain_s=0) for i in range(4)
-    ]
-    # v1 is 5 publishes old with retain_s=0 (keep=1): only the pin holds it
+    later = [_write_dummy_version(root, "k", str(i)) for i in range(4)]
+    # v1 is 5 publishes old with no retention window (KEEP=1): only the
+    # pin holds it
     assert os.path.isdir(v1)
     with open(os.path.join(v1, "data", "f.txt")) as fh:
         assert fh.read() == "one"
     # unpinned intermediates are gone (beyond keep, beyond retention)
     assert not os.path.isdir(later[0]) and not os.path.isdir(later[1])
     storectl.unpin_version(v1)
-    _write_dummy_version(root, "k", "last", retain_s=0)
+    _write_dummy_version(root, "k", "last")
     assert not os.path.isdir(v1)  # GC-eligible again after unpin
 
 
@@ -390,9 +396,7 @@ def test_store_root_with_single_quote_registers(spark, tmp_path):
 def test_schema_file_written_and_registration_avoids_inference(spark, tmp_path):
     """write_bucketed drops a _SCHEMA sidecar so register_bucketed is
     pure DDL (no parquet-footer inference job per registration — the
-    round-8 verdict's suspected knn_store_search probe-path cost);
-    registration still works via fallback when the sidecar is absent
-    (pre-r9 store layouts)."""
+    round-8 verdict's suspected knn_store_search probe-path cost)."""
     data_dir = str(tmp_path / "data")
     df = spark.range(0, 20).selectExpr(
         "id AS k", "CAST(id AS DOUBLE) AS x", "CAST(id AS STRING) AS s"
@@ -411,16 +415,23 @@ def test_schema_file_written_and_registration_avoids_inference(spark, tmp_path):
         ]
     finally:
         spark.sql("DROP TABLE IF EXISTS schema_cache_t")
-    # fallback: no sidecar -> footer inference still registers correctly
-    os.remove(sidecar)
-    storectl._REGISTERED.pop("schema_cache_fb", None)
-    storectl.register_bucketed(
-        spark, "schema_cache_fb", data_dir, ["k"], ["k"], 4
-    )
-    try:
-        assert spark.table("schema_cache_fb").count() == 20
-    finally:
-        spark.sql("DROP TABLE IF EXISTS schema_cache_fb")
+
+
+def test_bucketed_artifact_without_schema_file_is_refused(spark, tmp_path):
+    """A bucketed artifact with no _SCHEMA sidecar is refused by
+    register_bucketed with a FileNotFoundError naming its directory; no
+    footer inference registers it behind the caller's back."""
+    data_dir = str(tmp_path / "data")
+    df = spark.range(0, 20).selectExpr("id AS k", "id * 2 AS v")
+    storectl.write_bucketed(df, data_dir, ["k"], ["k"], 4)
+    os.remove(os.path.join(data_dir, storectl.SCHEMA_FILE))
+    with pytest.raises(FileNotFoundError, match="_SCHEMA") as err:
+        storectl.register_bucketed(
+            spark, "schema_missing_t", data_dir, ["k"], ["k"], 4
+        )
+    assert data_dir in str(err.value)
+    assert not os.path.exists(os.path.join(data_dir, storectl.SCHEMA_FILE))
+    assert not spark.catalog.tableExists("schema_missing_t")
 
 
 _APPENDER_SCRIPT = textwrap.dedent(
@@ -555,45 +566,6 @@ def test_fsck_reports_held_append_lock(tmp_path):
     assert storectl.fsck(root)["lock_held"] is False
 
 
-def test_persistable_params_legacy_vs_authoritative():
-    """Round-10 advice #3: a republishing path (append/compact) may only
-    stamp params into the new marker when the recipe is AUTHORITATIVE —
-    recorded by the store, or fully supplied by the caller. On a legacy
-    params-less store with any key omitted, the resolved values are
-    assumptions and must NOT be persisted (a later explicit-correct
-    probe would raise as 'mismatched')."""
-    dflt = {"k": 3, "bands": 16}
-    stored = {"k": 5, "bands": 8}
-    res_stored = storectl.resolve_params(stored, {"k": None, "bands": None}, dflt)
-    assert storectl.persistable_params(
-        stored, {"k": None, "bands": None}, res_stored
-    ) == {"k": 5, "bands": 8}
-    # legacy store, args omitted -> resolved is assumed defaults: None
-    res_legacy = storectl.resolve_params(None, {"k": None, "bands": None}, dflt)
-    assert storectl.persistable_params(
-        None, {"k": None, "bands": None}, res_legacy
-    ) is None
-    # legacy store, PARTIAL explicit args -> persist exactly the
-    # explicit key; the defaulted key stays an unrecorded assumption
-    res_part = storectl.resolve_params(None, {"k": 7, "bands": None}, dflt)
-    assert storectl.persistable_params(
-        None, {"k": 7, "bands": None}, res_part
-    ) == {"k": 7}
-    # legacy store, FULL explicit args -> caller knowledge: persist
-    res_full = storectl.resolve_params(None, {"k": 7, "bands": 4}, dflt)
-    assert storectl.persistable_params(
-        None, {"k": 7, "bands": 4}, res_full
-    ) == {"k": 7, "bands": 4}
-    # PARTIAL marker (a family grew a new recipe key after this store
-    # was built): the recorded keys carry forward — an append must not
-    # downgrade the store to params-less and lose the mismatch guard
-    old = {"k": 5}
-    res_old = storectl.resolve_params(old, {"k": None, "bands": None}, dflt)
-    assert storectl.persistable_params(
-        old, {"k": None, "bands": None}, res_old
-    ) == {"k": 5}
-
-
 def test_fold_records_carry_forward(spark, tmp_path):
     """``publish(fold=(query_key, batch_id))`` records a streaming query's
     last folded batch in the version marker, and every later publish
@@ -607,18 +579,22 @@ def test_fold_records_carry_forward(spark, tmp_path):
         "src long, dst long, w_sum double, w_max double",
     )
     kw = {"table": "t_fold_carry", "mirrored": rel}
+
+    def folds():
+        return storectl.open_store(root, community.GRAPH_STORE).meta["folds"]
+
     try:
         community.write_graph_store(None, root, **kw)
         assert storectl.folded_batch(root, "q1") == -1
         community.append_graph_store(None, root, fold=("q1", 0), **kw)
-        assert storectl.current_meta(root)["folds"] == {"q1": 0}
+        assert folds() == {"q1": 0}
         community.append_graph_store(None, root, **kw)
-        assert storectl.current_meta(root)["folds"] == {"q1": 0}
+        assert folds() == {"q1": 0}
         community.append_graph_store(None, root, fold=("q2", 3), **kw)
         community.append_graph_store(None, root, fold=("q1", 1), **kw)
-        assert storectl.current_meta(root)["folds"] == {"q1": 1, "q2": 3}
+        assert folds() == {"q1": 1, "q2": 3}
         community.compact_graph_store(spark, root, table="t_fold_carry")
-        assert storectl.current_meta(root)["folds"] == {"q1": 1, "q2": 3}
+        assert folds() == {"q1": 1, "q2": 3}
         community.write_graph_store(None, root, **kw)
         assert storectl.folded_batch(root, "q1") == 1
         assert storectl.folded_batch(root, "q2") == 3
@@ -689,7 +665,9 @@ def test_signature_append_bands_under_the_cloned_recipe(
                 batch, root, table=table, batch_state=(recipe, state)
             )
         cur = storectl.current_dir(root)
-        assert storectl.params_of(cur)["bands"] == 8
+        assert storectl.open_store(
+            root, dedup.SIG_STORE, version_dir=cur
+        ).params["bands"] == 8
         n_docs = spark.read.parquet(cur + "/sizes").count()
         assert n_docs == corpus.count()
     finally:
@@ -723,3 +701,70 @@ def test_ann_append_signs_under_the_cloned_recipe(spark, tmp_path, monkeypatch):
     finally:
         for t in (table, table + "_vectors"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def _drop_recipe(root):
+    """Rewrite the live version's marker without its recipe, as a writer
+    that recorded none left it. Returns the version dir."""
+    cur = storectl.current_dir(root)
+    path = os.path.join(cur, storectl.MARKER)
+    with open(path) as fh:
+        meta = json.load(fh)
+    del meta["params"]
+    with open(path, "w") as fh:
+        json.dump(meta, fh)
+    return cur
+
+
+def test_signature_store_without_recipe_is_refused(spark, tmp_path):
+    """A signature-store version whose marker records no recipe is
+    refused by the probe (``open_store``) and by an append, which
+    publishes nothing: the recipe it was built under (here 32/8, not the
+    64/16 of ``write_signature_store``'s signature) cannot be known, so
+    the store must be rebuilt."""
+    from pyspark.sql import functions as F
+
+    from scipi_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    corpus = docs.filter(F.col("doc_id") < 60)
+    batch = docs.filter((F.col("doc_id") >= 60) & (F.col("doc_id") < 80))
+    root, table = str(tmp_path / "sig"), "t_sig_norecipe"
+    try:
+        dedup.write_signature_store(
+            corpus, root, table=table, num_perm=32, bands=8
+        )
+        cur = _drop_recipe(root)
+        with pytest.raises(ValueError, match="rebuild the store"):
+            dedup.minhash_lsh_increment_from_store(
+                spark, root, batch, table=table
+            )
+        with pytest.raises(ValueError, match="rebuild the store"):
+            dedup.append_signature_store(batch, root, table=table)
+        assert storectl.list_versions(root) == [cur]
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_requested_key_missing_from_the_recipe_is_refused(tmp_path):
+    """A marker that records only part of its family's recipe (here a
+    signature store without ``bands``) is refused when a caller requests
+    the missing key, even as None (inherit): no default stands in for
+    it. The error names the store root."""
+    from scipi_spark.operators import dedup
+
+    root = str(tmp_path / "store")
+    _write_dummy_version(
+        root, "sig-v1", params={"k": 3, "num_perm": 64, "n_buckets": 16}
+    )
+    requested = {"k": None, "num_perm": None, "bands": None}
+    with pytest.raises(ValueError, match="'bands'") as err:
+        storectl.open_store(root, dedup.SIG_STORE, requested)
+    assert root in str(err.value)
+    with pytest.raises(ValueError, match="'bands'"):
+        with storectl.append(root, dedup.SIG_STORE, requested):
+            pass
+    assert len(storectl.list_versions(root)) == 1
+    # the recorded keys alone still resolve
+    ver = storectl.open_store(root, dedup.SIG_STORE, {"k": 3, "num_perm": None})
+    assert ver.params == {"k": 3, "num_perm": 64, "n_buckets": 16}

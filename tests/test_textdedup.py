@@ -594,7 +594,7 @@ def test_minhash_kernel_matches_golden_bits(spark, tmp_path):
     assert stored() == (want_postings, want_bands)
     dedup.compact_signature_store(spark, root, table="sigstore_golden")
     assert stored() == (want_postings, want_bands)
-    assert storectl.current_meta(root)["build_key"] == "sig-v1"
+    assert storectl.open_store(root, dedup.SIG_STORE).meta["build_key"] == "sig-v1"
 
 
 def test_batch_lsh_state_releases_its_spread_copy(spark):
@@ -1785,7 +1785,7 @@ def test_signature_store_params_persist_and_mismatch_raises(spark, tmp_path):
     dedup.write_signature_store(
         corpus, root, table="sigstore_params", k=3, num_perm=32, bands=8,
     )
-    assert storectl.current_params(root) == {
+    assert storectl.open_store(root, dedup.SIG_STORE).params == {
         "k": 3, "num_perm": 32, "bands": 8, "n_buckets": 16,
     }
     # self-configured probe == explicit probe at the stored recipe
@@ -1813,7 +1813,7 @@ def test_signature_store_params_persist_and_mismatch_raises(spark, tmp_path):
     # append inheriting the stored recipe keeps probes green and carries
     # the recipe into the new version's marker
     dedup.append_signature_store(batch, root, table="sigstore_params")
-    assert storectl.current_params(root)["num_perm"] == 32
+    assert storectl.open_store(root, dedup.SIG_STORE).params["num_perm"] == 32
 
 
 def test_kneser_ney_scores_are_finite_and_orderable(spark):
@@ -1836,39 +1836,6 @@ def test_kneser_ney_scores_are_finite_and_orderable(spark):
     # a 1-token doc yields no row
     one = spark.createDataFrame([(1, "solo")], "doc_id long, text string")
     assert textops.kneser_ney_cross_entropy(one).count() == 0
-
-
-def test_legacy_sigstore_append_does_not_stamp_assumed_params(
-    spark, tmp_path
-):
-    """Round-10 advice #3: appending to a LEGACY store (marker without
-    params) with omitted args resolves the recipe from defaults — an
-    ASSUMPTION, not the store's recorded recipe. The republished marker
-    must stay params-less; stamping the assumed defaults would make a
-    later explicit-correct probe raise as 'mismatched'."""
-    import json
-    import os
-
-    from scipi_spark.operators import dedup
-    from scipi_spark.sources import storectl
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    corpus = docs.filter(F.col("doc_id") % 4 != 0)
-    batch = docs.filter(F.col("doc_id") % 4 == 0)
-    spark.sql("DROP TABLE IF EXISTS sigstore_legacy")
-    root = str(tmp_path / "store")
-    # defaults recipe, then strip the marker's params -> legacy shape
-    dedup.write_signature_store(corpus, root, table="sigstore_legacy")
-    mpath = os.path.join(storectl.current_dir(root), storectl.MARKER)
-    meta = json.load(open(mpath))
-    meta.pop("params")
-    json.dump(meta, open(mpath, "w"))
-    assert storectl.current_params(root) is None
-
-    dedup.append_signature_store(batch, root, table="sigstore_legacy")
-    assert storectl.current_params(root) is None  # assumption not stamped
-    dedup.compact_signature_store(spark, root, table="sigstore_legacy")
-    assert storectl.current_params(root) is None
 
 
 def test_append_text_index_matches_full_rebuild(spark, tmp_path):
@@ -1956,10 +1923,10 @@ def test_lm_store_append_fold_matches_rebuild(spark, tmp_path):
         }
         assert folded == rebuilt and folded
         # V folded exactly: 4 stored (aa bb cc dd) + 2 new (ee, zz) = 6
-        ver = storectl.current_dir(str(tmp_path / "lm"))
-        vrow = spark.read.parquet(ver + "/vocab").collect()[0]["v"]
+        ver = storectl.open_store(str(tmp_path / "lm"), textops.LM_STORE)
+        vrow = spark.read.parquet(ver.path("vocab")).collect()[0]["v"]
         assert vrow == 6.0
-        assert (storectl.params_of(ver) or {}).get("delta_appends") == 1
+        assert ver.params["delta_appends"] == 1
 
         with pytest.raises(ValueError, match="param mismatch"):
             textops.append_lm_store(
@@ -1967,8 +1934,8 @@ def test_lm_store_append_fold_matches_rebuild(spark, tmp_path):
             )
 
         textops.compact_lm_store(spark, str(tmp_path / "lm"), table="lmf_app")
-        ver2 = storectl.current_dir(str(tmp_path / "lm"))
-        assert (storectl.params_of(ver2) or {}).get("delta_appends") == 0
+        ver2 = storectl.open_store(str(tmp_path / "lm"), textops.LM_STORE)
+        assert ver2.params["delta_appends"] == 0
         compacted = {
             r["doc_id"]: (r["n_bigrams"], r["xent"])
             for r in textops.score_from_lm_store(
@@ -1981,7 +1948,7 @@ def test_lm_store_append_fold_matches_rebuild(spark, tmp_path):
         assert bc.count() == bc.select("w1", "w2").distinct().count()
 
         # a store whose live version lacks vocab_toks cannot fold
-        shutil.rmtree(ver2 + "/vocab_toks")
+        shutil.rmtree(ver2.path("vocab_toks"))
         with pytest.raises(FileNotFoundError, match="vocab_toks"):
             textops.append_lm_store(
                 slice_b, str(tmp_path / "lm"), table="lmf_app"
